@@ -1,199 +1,79 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line. A short untimed warmup first
-  * — the first query otherwise pays JVM/codegen/parquet-reader init
-  * (~8-10 s) and the numbers stop measuring the queries.
+  * SPARK_GRAFT_SF_DIR, writes the per-query detail to bench_detail.json and
+  * prints ONE JSON line.
+  *
+  * Three full executions per query through `CatalogRunner` (noop sink,
+  * fence before each); the reported time is the MIN of the three. Pass 1
+  * doubles as warmup (JIT, codegen, parquet footers), and the min discards
+  * the one-off GC spikes this box's 2–3× run-to-run swings are made of.
+  * Nothing is cached between passes (the fence unpersists everything), so
+  * the min is a real end-to-end time. A query that failed in any pass
+  * reports -1 and its first reason goes to the detail's `errors`.
   */
 object Bench {
+  val Passes = 3
+  /** Any query whose median-of-passes exceeds this is listed (printed, not
+    * failed: the by-design heavies live over the line), so erosion shows in
+    * the round it happens.
+    */
+  val BudgetSec = 10.0
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // local iteration only (driver never sets it): comma-separated name
-    // prefixes to time just a subset, and an optional repeat count to
-    // separate real cost from run-to-run variance
-    val only: Option[Seq[String]] = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
-    def selected(name: String): Boolean = only.forall(_.exists(name.startsWith))
-    // Bench-private scratch dir for Materialize.toStorage outputs: a
-    // query's scratch is never re-read after the query completes, so the
-    // fence sweeps it below — three passes over the catalog otherwise
-    // leave 3× every iterative operator's per-round scratch on disk for
-    // the whole run (one of the r9 suspects for the graph heavies'
-    // pass-over-pass degradation; round-10's reproduction runs came back
-    // flat, but bounding the growth makes that answer structural, not
-    // environmental). Private dir, NOT the shared default: a concurrent
-    // Verify/ScaleProbe JVM keeps its own scratch untouched.
-    val benchScratch =
-      sys.props("java.io.tmpdir") + s"/graft-bench-scratch-${java.util.UUID.randomUUID()}"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.scratchDir", benchScratch)
-      // 262 queries × several codegen units each ≫ the default 100-entry
-      // janino class cache — at the default, EVERY pass recompiles every
-      // generated class (measured: pass totals 661/563/388 s — the
-      // third pass is the only one that ever ran warm). A catalog-sized
-      // cache makes passes 2-3 read pass 1's compiled classes, which is
-      // what a resident production service does too.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    def sweepScratch(): Unit = {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      Option(new java.io.File(benchScratch).listFiles()).foreach(_.foreach(rm))
-    }
-    // ERROR, not WARN: the driver's log window is ~2000 chars shared by
-    // whatever prints near the metric line; benign WindowExec/AQE WARNs
-    // were crowding the JSON line out of the captured tail (rounds 2-4).
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = CatalogRunner.session(CatalogRunner.privateScratch)
+    // noop write forces EVERY output column — a bare count() would let
+    // Catalyst skip projection work and under-time scan-heavy queries
+    val passes = (1 to Passes).flatMap(_ =>
+      CatalogRunner.run(spark, SparkEntry.queries, sfDir) { (_, df) =>
+        df.write.format("noop").mode("overwrite").save()
+      })
+    val byName = passes.groupBy(_.name).toSeq.sortBy(_._1)
+    def pick(rs: Seq[CatalogRunner.Result])(f: Seq[Double] => Double): Double =
+      if (rs.forall(_.ok)) f(rs.map(_.seconds)) else -1.0
+    val mins = byName.map { case (n, rs) => n -> pick(rs)(_.min) }
+    val medians = byName.map { case (n, rs) => n -> pick(rs)(ts => ts.sorted.apply(ts.size / 2)) }
+    val errors = byName.flatMap { case (n, rs) => rs.flatMap(_.error).headOption.map(n -> _) }
 
-    // noop write forces evaluation of EVERY output column — a bare
-    // count() would let Catalyst skip projection work entirely and
-    // under-time the scan-heavy queries.
-    //
-    // GC fence (untimed) before each query: without it, a heavy
-    // predecessor's broadcast/shuffle debris gets collected INSIDE the
-    // next query's timing — observed inflating sub-second queries to
-    // 10+ s late in the run. Also drop predecessors' persisted RDDs
-    // (partEdges, sketched, q49's successor table): ContextCleaner
-    // reclaims them lazily, and 148 queries' worth of pinned blocks
-    // squeeze storage memory enough to triple late-run timings (g01
-    // measured 5.3 s isolated vs 23.5 s late in a full pass before
-    // this). The sweep is SAFE because every materialized frame keeps
-    // its lineage (graft.Materialize persists, never localCheckpoints):
-    // a swept block recomputes on next use. No operator may memoize a
-    // lineage-truncated frame across invocations.
-    def timedPass(tag: Int): Map[String, Double] =
-      SparkEntry.queries.filter(kv => selected(kv._1)).map { case (name, fn) =>
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        sweepScratch()
-        System.gc()
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
-        // -1 marks a failed query — a swallow-and-time would make a
-        // crash look like a fast run.
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }
-
-    // Three full executions per query; reported time = the MIN of the
-    // three. Pass 1 doubles as warmup (JIT + whole-stage-codegen +
-    // parquet footer caches land there), so passes 2-3 are steady-state
-    // — and taking the min discards the one-off GC spikes this box's
-    // 2–3× run-to-run swings are made of (SCALING.md, round-6
-    // attribution; round-7's bench_detail measured the SAME JVM timing
-    // g01 at 17.2 s and 7.9 s in consecutive passes, which made the
-    // noise band the dominant uncertainty in round-over-round
-    // comparison — a third pass halves the odds a spike survives into
-    // the min). All executions are complete plans over the full input —
-    // nothing is cached between passes (the fence unpersists
-    // everything), so the min is a real end-to-end time, not a
-    // warm-cache artifact. A query that failed in any pass reports -1.
-    // raw per-pass times ride along into bench_detail.json so the min is
-    // auditable (which pass won, how far apart they were)
-    val Passes = 3
-    var passDetail: Map[String, Seq[Double]] = Map.empty
-    val results: Seq[(String, Double)] =
-      if (reps > 1) {
-        // local iteration mode: per-rep times, no min-folding — the
-        // point there is to SEE the variance (one untimed warmup first)
-        SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (_, fn) =>
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        }
-        (1 to reps).flatMap(r => timedPass(r).map { case (n, t) => s"$n#$r" -> t })
-      } else {
-        val ps = (1 to Passes).map(timedPass)
-        passDetail = ps.head.keys.map(n => n -> ps.map(_(n))).toMap
-        SparkEntry.queries.keys.filter(selected).toSeq.sorted.map { n =>
-          val ts = ps.map(_(n))
-          n -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
-        }
-      }
-    // The driver captures only the LAST ~2000 chars of the run log, so the
-    // whole printed JSON line must fit in that window (minus sbt's
-    // ~90-char [success] trailer). The per-query map does NOT fit: at 261
-    // queries even 1-decimal family codes ran ~4 kB and the stored tail
-    // began mid-JSON (parsed=null in 10 of 11 rounds). The printed line
-    // therefore carries ONLY the compact totals + the budget flags
-    // (~200 bytes); the FULL per-query detail (names, per-pass times,
-    // medians, millisecond precision) lives in bench_detail.json in the
-    // working directory.
     def fmt(v: Double, dp: Int): String =
       BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toString
-    val total = if (results.nonEmpty) results.map(_._2).filter(_ >= 0).sum else 0.0
-    // median-of-passes alongside the min (round 8's two same-catalog runs
-    // spread ~8% on min-of-three; the median is noise-visible where the
-    // min hides which pass spiked) — a per-query map in bench_detail and
-    // ONE scalar on the printed line so the driver's window stays safe
-    def medianOf(ts: Seq[Double]): Double =
-      if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(ts.size / 2)
-    val medTotal = results.flatMap { case (n, _) => passDetail.get(n) }
-      .map(medianOf).filter(_ >= 0).sum
-    // Per-query budget flag (round 11): the catalog grows ~10 queries a
-    // round and nine > 5 s queries already carry ~95 s of the median
-    // total — erosion must be visible in the round it happens, not when
-    // the 2× gate finally breaks. Any query whose MEDIAN-of-passes
-    // exceeds BudgetSec is listed (print, not fail: the by-design
-    // heavies g04/e18 live over the line and are documented as such).
-    val BudgetSec = 10.0
-    val overBudget = results.flatMap { case (n, _) =>
-      passDetail.get(n).map(medianOf).filter(m => m > BudgetSec).map(_ => n)
-    }.sorted
-    val overJson =
-      if (passDetail.isEmpty) ""
-      else s""","budget_sec":$BudgetSec,"over_budget":${
-        overBudget.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
-    val fullQs = results.map { case (k, v) => s"\"$k\":" + fmt(v, 3) }.mkString("{", ",", "}")
-    val medQs =
-      if (passDetail.isEmpty) ""
-      else results.map { case (k, _) =>
-        s"\"$k\":" + fmt(passDetail.get(k).map(medianOf).getOrElse(-1.0), 3)
-      }.mkString(""","medians":{""", ",", "}")
-    val passes =
-      if (passDetail.isEmpty) ""
-      else passDetail.toSeq.sortBy(_._1).map { case (k, ts) =>
-        s"\"$k\":[${ts.map(fmt(_, 3)).mkString(",")}]"
-      }.mkString(""","passes":{""", ",", "}")
-    // Subset/rep runs (SPARK_GRAFT_ONLY / SPARK_GRAFT_REPS — local
-    // iteration only) write a SIDE file: the round's full-catalog
-    // bench_detail.json is an evidence artifact, and a later one-query
-    // iteration run must not silently replace it (the verify_summary
-    // clobber lesson, applied to the bench record).
-    val detailName =
-      if (only.isEmpty && reps == 1) "bench_detail.json" else "bench_detail_subset.json"
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => s"${CatalogRunner.json(k)}:$v" }.mkString("{", ",", "}")
+    val total = mins.map(_._2).filter(_ >= 0).sum
+    val medTotal = medians.map(_._2).filter(_ >= 0).sum
+    val overBudget = medians.filter(_._2 > BudgetSec).map(_._1)
+    val overJson = s""","budget_sec":$BudgetSec,"over_budget":${
+      overBudget.map(CatalogRunner.json).mkString("[", ",", "]")}"""
+    // The full per-query detail goes to a file: the metric line is scraped
+    // from only the LAST ~2000 chars of the run log, and a per-query map on the
+    // printed line (~4 kB at 261 queries) pushed its start out of that
+    // window. A SPARK_GRAFT_ONLY subset run writes a side file so it never
+    // replaces the full-catalog record.
+    val detailName = if (CatalogRunner.only.isEmpty) "bench_detail.json" else "bench_detail_subset.json"
+    val passesJson = obj(byName.map { case (n, rs) =>
+      n -> rs.map(r => fmt(if (r.ok) r.seconds else -1.0, 3)).mkString("[", ",", "]")
+    })
+    val errorsJson = obj(errors.map { case (n, e) => n -> CatalogRunner.json(e) })
     java.nio.file.Files.write(java.nio.file.Paths.get(detailName),
-      s"""{"metric":"total","value":${fmt(total, 3)},"median_total":${fmt(medTotal, 3)},"unit":"sec","queries":$fullQs$medQs$passes$overJson,"sf":"$sfDir"}""".getBytes("UTF-8"))
-    // stop() BEFORE the metric println: spark shutdown (and log4j's exit
-    // flush of anything it buffered) must not print after the one JSON
-    // line the driver scrapes from the captured tail. Rounds 2–5 recorded
-    // parsed=null because flushed startup logs landed after the metric.
+      (s"""{"metric":"total","value":${fmt(total, 3)},"median_total":${fmt(medTotal, 3)},"unit":"sec",""" +
+        s""""queries":${obj(mins.map { case (n, v) => n -> fmt(v, 3) })},""" +
+        s""""medians":${obj(medians.map { case (n, v) => n -> fmt(v, 3) })},""" +
+        s""""passes":$passesJson$overJson,"errors":$errorsJson,""" +
+        s""""sf":"$sfDir"}""").getBytes("UTF-8"))
+    // stop() BEFORE the metric println: shutdown logging must not land
+    // after the one line scraped from the tail
     spark.stop()
-    sweepScratch()
-    new java.io.File(benchScratch).delete()
-    // "queries" stays present (the driver's documented shape) but holds
-    // only the SLOWEST handful — bounded at ~300 bytes no matter how the
-    // catalog grows; everything else is in bench_detail.json.
-    // family codes (the prefix before '_') are unique across the catalog
-    // today, but nothing enforces that — a collision would make the JSON
-    // object carry duplicate keys and silently lose a timing to the
-    // parser, so fall back to full names if the selected 12 ever collide
-    // (12 full names still fit the driver's 2000-char window).
-    val slowestRows = results.filter(_._2 >= 0).sortBy(-_._2).take(12)
-    val codes = slowestRows.map(_._1.takeWhile(_ != '_'))
-    val slowest = (if (codes.distinct.size == codes.size) slowestRows.map {
-        case (k, v) => s"\"${k.takeWhile(_ != '_')}\":" + fmt(v, 1)
-      } else slowestRows.map { case (k, v) => s"\"$k\":" + fmt(v, 1) })
-      .mkString("{", ",", "}")
-    val nFailed = results.count(_._2 < 0)
-    println(s"""{"metric":"total","value":${fmt(total, 1)},"median_total":${fmt(medTotal, 1)},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"queries":$slowest$overJson,"sf":"$sfDir"}""")
+    // "queries" holds only the 12 slowest, keyed by family code (the
+    // prefix before '_'), so the line stays ~300 bytes however the catalog
+    // grows; full names are the fallback should two codes ever collide,
+    // since duplicate JSON keys would silently lose a timing
+    val slowest = mins.filter(_._2 >= 0).sortBy(-_._2).take(12)
+    val codes = slowest.map(_._1.takeWhile(_ != '_'))
+    val keys = if (codes.distinct.size == codes.size) codes else slowest.map(_._1)
+    val slowestJson = obj(keys.zip(slowest.map(r => fmt(r._2, 1))))
+    println(s"""{"metric":"total","value":${fmt(total, 1)},"median_total":${fmt(medTotal, 1)},"unit":"sec",""" +
+      s""""n_queries":${mins.size},"n_failed":${mins.count(_._2 < 0)},"queries":$slowestJson$overJson,"sf":"$sfDir"}""")
     Console.out.flush()
   }
 }

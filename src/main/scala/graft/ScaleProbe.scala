@@ -148,14 +148,7 @@ object ScaleProbe {
     require(factor >= 1, s"factor must be >= 1, got $factor")
     require(!tables("embeddings") || factor <= 64,
       s"factor must be in [1, 64] when the embeddings table is built, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = CatalogRunner.session(CatalogRunner.privateScratch)
 
     /** The streaming readers pick their table out of a shared directory by
       * FLAT FILE NAME (`pathGlobFilter=events.parquet`), matching the
@@ -490,26 +483,23 @@ object ScaleProbe {
       // identity audits over index rows, and d08's asymmetric probe:
       // everything index-row-linear, nothing re-pairs old×old)
       "d22_signature_maintenance")
-      // local iteration only: probe just a subset by name prefix
-      .filter(n => sys.env.get("SPARK_GRAFT_ONLY")
-        .forall(_.split(",").exists(n.startsWith)))
-    // warm pass (JIT + codegen + parquet footers), then the timed pass
-    for (pass <- Seq("warm", "timed"); name <- probes) {
-      System.gc() // Bench's GC fence: keep predecessors' debris out of the timing
-      // streaming probes read the flat-file layout (see writeFlat);
-      // "@gated" probes read the gate-preserving documents fixture
-      val qName = name.stripSuffix("@gated")
+    // streaming probes read the flat-file layout (see writeFlat);
+    // "@gated" probes read the gate-preserving documents fixture
+    val probeQueries = probes.map { name =>
       val qDir =
         if (name.endsWith("@gated")) s"$outDir/gated"
         else if (name.startsWith("s")) s"$outDir/stream"
         else outDir
-      val t0 = System.nanoTime()
-      val ok =
-        try { SparkEntry.queries(qName)(spark, qDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => println(s"[probe] $name FAILED: ${e.getMessage}"); false }
-      if (pass == "timed" && ok)
-        println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s at ${factor}x")
+      name -> ((s: SparkSession, _: String) => SparkEntry.queries(name.stripSuffix("@gated"))(s, qDir))
     }
+    // warm pass (JIT + codegen + parquet footers), then the timed pass
+    for (pass <- Seq("warm", "timed"))
+      CatalogRunner.run(spark, probeQueries, outDir) { (_, df) =>
+        df.write.format("noop").mode("overwrite").save()
+      }.foreach { r =>
+        r.error.foreach(e => println(s"[probe] ${r.name} FAILED: $e"))
+        if (pass == "timed" && r.ok) println(f"[probe] ${r.name}: ${r.seconds}%.2f s at ${factor}x")
+      }
     spark.stop()
   }
 }

@@ -1,66 +1,53 @@
 package graft
+
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB compare and manifest.json,
+  * which `tools/check.py` scores so a query that did not run fails the gate.
+  *
+  *   sbt "runMain graft.Verify <sfDir> <outDir>"
+  */
 object Verify {
+  /** Per-query wall budget: the sf0.01 gate must stay cheap, so a query
+    * over it is flagged in the round it regresses.
+    */
+  val BudgetSec = 10.0
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg (local iteration only — the driver passes 2):
-    // comma-separated name prefixes; run just the matching queries
-    val only: Option[Seq[String]] = args.lift(2).map(_.split(",").toSeq)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // catalog-sized codegen class cache (see Bench) — the 261-query
-      // dump recompiles nothing it already compiled
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // Per-query wall budget (the Bench discipline, round 12): the
-    // sf0.01 gate must stay CHEAP — the driver's correctness artifact
-    // arrived empty in r11, most plausibly a driver-side timeout on the
-    // grown catalog — so any query whose dump exceeds the budget is
-    // flagged loudly here, in the round it regresses.
-    val BudgetSec = 10.0
-    var timings = List.empty[(String, Double)]
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        timings ::= (name, (System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    val over = timings.filter(_._2 > BudgetSec).sortBy(-_._2)
-    if (over.nonEmpty) System.err.println(
-      s"[verify] over_budget(${BudgetSec}s): " +
-        over.map { case (n, t) => f"$n=$t%.1fs" }.mkString(", "))
-    System.err.println(
-      f"[verify] ${timings.size} queries dumped in ${timings.map(_._2).sum}%.1f s")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val spark = CatalogRunner.session(CatalogRunner.privateScratch)
+    dump(spark, SparkEntry.queries, sfDir, outDir)
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${CatalogRunner.json(k)}: ${CatalogRunner.json(v)}"
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Writes every selected query to `<outDir>/<name>/` and one
+    * `<outDir>/manifest.json` entry per selected name: status (`ok` or
+    * `failed`), the error's `Class: message`, and seconds.
+    */
+  def dump(spark: SparkSession, queries: Iterable[(String, CatalogRunner.Query)],
+           sfDir: String, outDir: String): Seq[CatalogRunner.Result] = {
+    new java.io.File(outDir).mkdirs()
+    val results = CatalogRunner.run(spark, queries, sfDir) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }
+    results.foreach(r => r.error.foreach(e => System.err.println(s"[verify] ${r.name} failed: $e")))
+    val over = results.filter(_.seconds > BudgetSec).sortBy(-_.seconds)
+    if (over.nonEmpty) System.err.println(s"[verify] over_budget(${BudgetSec}s): " +
+      over.map(r => f"${r.name}=${r.seconds}%.1fs").mkString(", "))
+    System.err.println(f"[verify] ${results.count(_.ok)}/${results.size} queries dumped in " +
+      f"${results.map(_.seconds).sum}%.1f s")
+    val manifest = results.sortBy(_.name).map { r =>
+      val status = if (r.ok) "ok" else "failed"
+      s"${CatalogRunner.json(r.name)}: {\"status\": \"$status\", " +
+        s"\"error\": ${r.error.map(CatalogRunner.json).getOrElse("null")}, \"seconds\": ${r.seconds}}"
+    }.mkString("{\n", ",\n", "\n}\n")
+    Files.writeString(Paths.get(s"$outDir/manifest.json"), manifest)
+    results
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.CatalogRunner
 
 /** Proves the cluster-deployment registration path end to end: a FRESH
   * session built with `spark.sql.extensions=graft.functions.GraftExtensions`
@@ -13,12 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ExtensionsCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = CatalogRunner.session("spark.sql.extensions" -> "graft.functions.GraftExtensions")
     val row = spark.sql(
       """SELECT simhash64(array('alpha', 'beta')) AS sh,
         |  rolling_fingerprint('hello') AS fp,

@@ -3,11 +3,14 @@
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 
-Reads <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs
+Scores every query listed in <verifyOutDir>/manifest.json (written by
+graft.Verify): a query whose status is not "ok", or that left no parquet,
+FAILs with its reason, and a missing manifest fails the whole run. For the
+rest it reads <verifyOutDir>/<name>/ parquet, runs
 <verifyOutDir>/oracle_sql.json in DuckDB against the same sf tables, and
 compares: row count, column names, and exact values (columns sorted by
 name, rows sorted by all columns) — a strictly-stricter stand-in for the
-driver's row/schema/hash check.
+driver's row/schema/hash check. Exits 1 on any failure.
 """
 import sys, json, glob, os
 import duckdb
@@ -47,10 +50,20 @@ def main():
             # testdata tables are single files — handle both
             src = f"{p}/*.parquet" if os.path.isdir(p) else p
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
+    manifest_path = f"{out_dir}/manifest.json"
+    if not os.path.exists(manifest_path):
+        print(f"FAIL  {manifest_path} missing: Verify did not finish, so no query is scored")
+        sys.exit(1)
+    manifest = json.load(open(manifest_path))
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    names = sorted([os.path.basename(d) for d in glob.glob(f"{out_dir}/*") if os.path.isdir(d)])
+    names = sorted(manifest)
     n_pass = n_fail = n_rowsonly = 0
     for name in names:
+        if manifest[name].get("status") != "ok":
+            reason = f"Verify failed: {manifest[name].get('error')}"
+            print(f"FAIL  {name}: {reason}"); n_fail += 1
+            summary["queries"][name] = {"status": "fail", "reason": reason[:200]}
+            continue
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"FAIL  {name}: no spark output"); n_fail += 1
@@ -125,6 +138,8 @@ def main():
     # single-query re-check silently REPLACED the full 262-query record.
     # A subset run now refuses to overwrite a summary that covers more
     # queries and writes a side file instead; a full run still replaces.
+    # The count is of manifest entries, so a query that crashed still
+    # counts toward a full run.
     out_name = "verify_summary.json"
     try:
         prior = json.load(open(out_name))
