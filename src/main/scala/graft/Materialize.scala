@@ -108,14 +108,15 @@ object Materialize {
     * at job scratch space (HDFS/S3) and the stored table doubles as the
     * executor-loss-safe form (the toStorage contract).
     *
-    * The memo key must determine the CONTENT (callers key on the data
-    * directory + fixture name): two sessions in one JVM asking for the
-    * same key share one copy by construction — which makes IMMUTABLE
-    * INPUTS a hard contract: rewriting the source tables at the same
-    * path in a live JVM would silently serve stale fixtures, so a
-    * long-lived resident service must either key its data dirs by
-    * snapshot (the catalog's sf dirs already are immutable) or call
-    * `resetFixtureMemo()` when an input changes.
+    * The memo key is (fixture name, source dir, source fingerprint): two
+    * sessions in one JVM asking for the same fixture of the same source
+    * share one copy. The fingerprint — file count, total bytes and
+    * newest modification time of the files under `dir`, listed through
+    * the Hadoop FileSystem — is taken on every call, so rewriting the
+    * source tables at the same path in a live JVM changes the key and
+    * the next caller rebuilds from the new files instead of reading a
+    * stale copy. A rewrite that keeps all three numbers is not seen;
+    * `resetFixtureMemo()` covers that case.
     *
     * Concurrency: get → build → putIfAbsent, NOT computeIfAbsent.
     * Composite fixtures build their dependency fixtures recursively
@@ -133,8 +134,9 @@ object Materialize {
     */
   private val fixtureMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  def fixture(s: org.apache.spark.sql.SparkSession, key: String)
+  def fixture(s: org.apache.spark.sql.SparkSession, name: String, dir: String)
              (build: => DataFrame): DataFrame = {
+    val key = s"$name|$dir|${sourceFingerprint(s, dir)}"
     val memoized = fixtureMemo.get(key)
     val path =
       if (memoized != null) memoized
@@ -151,12 +153,24 @@ object Materialize {
     s.read.parquet(path)
   }
 
+  /** "count-bytes-mtime" of the files under `dir` (recursive). */
+  private def sourceFingerprint(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val files = root.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(root, true)
+    var (n, bytes, mtime) = (0L, 0L, 0L)
+    while (files.hasNext) {
+      val f = files.next()
+      n += 1; bytes += f.getLen; mtime = math.max(mtime, f.getModificationTime)
+    }
+    s"$n-$bytes-$mtime"
+  }
+
   /** Drop every memoized fixture path so the next caller re-derives from
     * source. The stored parquet stays on disk until the shutdown hook
-    * (another session may still hold a scan of it). For the two callers
-    * that need non-memoized behavior: a resident service whose input
-    * tables changed in place, and specs (PartitionInvarianceSpec) that
-    * must re-run a fixture's DERIVATION pipeline under a second config.
+    * (another session may still hold a scan of it). For specs
+    * (PartitionInvarianceSpec) that must re-run a fixture's DERIVATION
+    * pipeline under a second config, and for an in-place rewrite the
+    * source fingerprint cannot see.
     */
   def resetFixtureMemo(): Unit = fixtureMemo.clear()
 

@@ -620,13 +620,8 @@ object Curation {
     * stay collision-free inside larger oracles.
     */
   private[graft] val duckAlphaCtes: String =
-    """ast AS (
-      |  SELECT source,
-      |    CAST(SUM(len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0))) AS BIGINT)
-      |      AS n_tokens
-      |  FROM documents
-      |  GROUP BY source
-      |  HAVING SUM(len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0))) > 0
+    s"""ast AS (
+      |  $duckSourceTokens
       |), aw AS (
       |  SELECT source, n_tokens,
       |    CAST(floor(sqrt(n_tokens::DOUBLE)) AS BIGINT) AS weight
@@ -734,33 +729,61 @@ object Curation {
     langs.map(l => s"WHEN score_$l = $best THEN '$l'").mkString("CASE ", " ", " ELSE 'und' END")
   }
 
-  private[graft] val scoreExprs: String = TextFunctions.LangMarkers.map { case (lang, ms) =>
+  private val scoreExprs: String = TextFunctions.LangMarkers.map { case (lang, ms) =>
     val markers = ms.map(w => s"'$w'").mkString("[", ", ", "]")
     s"len(list_filter(toks, w -> list_contains($markers, w))) AS score_$lang"
   }.mkString(",\n    ")
 
-  private[graft] val stopList = Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
+  private val stopList = Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
+
+  /** p01's quality scoring as DuckDB CTEs: `t` adds the whitespace
+    * tokens `toks` to every document, `scored` the per-language marker
+    * scores and the stop-word and punctuation ratios.
+    */
+  private val duckScoredCtes: String =
+    s"""t AS (
+       |  SELECT *, ${DuckSql.tokens} AS toks
+       |  FROM documents
+       |), scored AS (
+       |  SELECT *,
+       |    $scoreExprs,
+       |    CASE WHEN len(toks) = 0 THEN 0.0 ELSE
+       |      len(list_filter(toks, w -> list_contains($stopList, w)))::DOUBLE / len(toks)::DOUBLE END AS stop_ratio,
+       |    CASE WHEN len(text) = 0 THEN 0.0 ELSE
+       |      len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))::DOUBLE / len(text)::DOUBLE END AS p_ratio
+       |  FROM t
+       |)""".stripMargin
+
+  /** qualityScore over `scored`'s columns. */
+  private val duckQualityExpr: String =
+    """least(len(text)::DOUBLE / 400.0, 1.0) * 0.4
+      |      + least(stop_ratio * 5.0, 1.0) * 0.3
+      |      + (1.0 - least(p_ratio * 10.0, 1.0)) * 0.3""".stripMargin
+
+  /** duckScoredCtes plus `quality`, each document's score `q` — the
+    * gate p01, p02, p03, s15 and s23 filter on.
+    */
+  private[graft] val duckQualityCtes: String =
+    s"""$duckScoredCtes, quality AS (
+       |  SELECT *,
+       |    $duckQualityExpr AS q
+       |  FROM scored
+       |)""".stripMargin
+
+  /** Body of a per-source token-count CTE `(source, n_tokens)` over the
+    * sources with at least one token (p09's and p12's base).
+    */
+  private lazy val duckSourceTokens: String =
+    s"""SELECT source,
+       |    CAST(SUM(len(${DuckSql.tokens})) AS BIGINT)
+       |      AS n_tokens
+       |  FROM documents
+       |  GROUP BY source
+       |  HAVING SUM(len(${DuckSql.tokens})) > 0""".stripMargin
 
   def oracles: Map[String, String] = Map(
     "p01_curation_pipeline" ->
-      s"""WITH t AS (
-         |  SELECT *, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS toks
-         |  FROM documents
-         |), scored AS (
-         |  SELECT *,
-         |    $scoreExprs,
-         |    CASE WHEN len(toks) = 0 THEN 0.0 ELSE
-         |      len(list_filter(toks, w -> list_contains($stopList, w)))::DOUBLE / len(toks)::DOUBLE END AS stop_ratio,
-         |    CASE WHEN len(text) = 0 THEN 0.0 ELSE
-         |      len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))::DOUBLE / len(text)::DOUBLE END AS p_ratio
-         |  FROM t
-         |), quality AS (
-         |  SELECT *,
-         |    least(len(text)::DOUBLE / 400.0, 1.0) * 0.4
-         |      + least(stop_ratio * 5.0, 1.0) * 0.3
-         |      + (1.0 - least(p_ratio * 10.0, 1.0)) * 0.3 AS q
-         |  FROM scored
-         |), gated AS (
+      s"""WITH $duckQualityCtes, gated AS (
          |  SELECT * FROM quality
          |  WHERE q >= $QualityMin AND ($langCase) = 'en'
          |), exact_kept AS (
@@ -772,13 +795,13 @@ object Curation {
          |  ) WHERE rn = 1
          |), sh AS (
          |  SELECT doc_id,
-         |    list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] for i in range(1, len(toks) - 1)]) AS g
+         |    ${DuckSql.shingles3("toks")} AS g
          |  FROM exact_kept WHERE len(toks) >= 3
          |), losers AS (
          |  SELECT DISTINCT b.doc_id
          |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
          |  WHERE len(a.g) > 0 AND len(b.g) > 0
-         |    AND len(list_intersect(a.g, b.g))::DOUBLE / len(list_distinct(list_concat(a.g, b.g)))::DOUBLE >= $Jac
+         |    AND ${DuckSql.jaccard("a.g", "b.g")} >= $Jac
          |)
          |SELECT doc_id, lang, source, n_chars, q AS quality_score
          |FROM exact_kept
@@ -788,24 +811,7 @@ object Curation {
     // the same quality/lang CTEs as p01, then t08's sampling rule and
     // t11's packing arithmetic verbatim
     "p02_training_mix" ->
-      s"""WITH t AS (
-         |  SELECT *, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS toks
-         |  FROM documents
-         |), scored AS (
-         |  SELECT *,
-         |    $scoreExprs,
-         |    CASE WHEN len(toks) = 0 THEN 0.0 ELSE
-         |      len(list_filter(toks, w -> list_contains($stopList, w)))::DOUBLE / len(toks)::DOUBLE END AS stop_ratio,
-         |    CASE WHEN len(text) = 0 THEN 0.0 ELSE
-         |      len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))::DOUBLE / len(text)::DOUBLE END AS p_ratio
-         |  FROM t
-         |), quality AS (
-         |  SELECT *,
-         |    least(len(text)::DOUBLE / 400.0, 1.0) * 0.4
-         |      + least(stop_ratio * 5.0, 1.0) * 0.3
-         |      + (1.0 - least(p_ratio * 10.0, 1.0)) * 0.3 AS q
-         |  FROM scored
-         |), sampled AS (
+      s"""WITH $duckQualityCtes, sampled AS (
          |  SELECT source, len(toks) AS n_tokens
          |  FROM quality
          |  WHERE q >= $QualityMin AND ($langCase) = 'en'
@@ -827,31 +833,7 @@ object Curation {
     // quality/lang CTEs, d12's window-mass CTEs, e11's cell/verdict
     // CTEs — renamed where names collide), joined on the shared id
     "p03_multimodal_curation" ->
-      s"""WITH t AS (
-         |  SELECT *, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS toks
-         |  FROM documents
-         |), scored AS (
-         |  SELECT *,
-         |    $scoreExprs,
-         |    CASE WHEN len(toks) = 0 THEN 0.0 ELSE
-         |      len(list_filter(toks, w -> list_contains($stopList, w)))::DOUBLE / len(toks)::DOUBLE END AS stop_ratio,
-         |    CASE WHEN len(text) = 0 THEN 0.0 ELSE
-         |      len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))::DOUBLE / len(text)::DOUBLE END AS p_ratio
-         |  FROM t
-         |), quality AS (
-         |  SELECT *,
-         |    least(len(text)::DOUBLE / 400.0, 1.0) * 0.4
-         |      + least(stop_ratio * 5.0, 1.0) * 0.3
-         |      + (1.0 - least(p_ratio * 10.0, 1.0)) * 0.3 AS q
-         |  FROM scored
-         |), wins AS (
-         |  SELECT doc_id,
-         |    unnest([array_to_string(w[i:i+${Dedup.SubstringW - 1}], ' ')
-         |            for i in range(1, len(w) - ${Dedup.SubstringW - 2})]) AS win
-         |  FROM (SELECT doc_id, toks AS w FROM t) WHERE len(w) >= ${Dedup.SubstringW}
-         |), freq AS (
-         |  SELECT win, COUNT(*) AS cnt FROM wins GROUP BY win
-         |), mass AS (
+      s"""WITH $duckQualityCtes, ${Dedup.duckWindowCtes("(SELECT doc_id, toks AS w FROM t)")}, mass AS (
          |  SELECT doc_id,
          |    SUM(CASE WHEN cnt >= 2 THEN 1 ELSE 0 END)::DOUBLE / COUNT(*)::DOUBLE AS dup_frac
          |  FROM wins JOIN freq USING (win) GROUP BY doc_id
@@ -877,37 +859,12 @@ object Curation {
     // proven answer-equal to its banded/blocked Spark form by its own
     // gate row), then d07's recursive min-label closure over the union
     "p04_crossmodal_clusters" ->
-      s"""WITH RECURSIVE t AS (
-         |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-         |  FROM documents
-         |), s AS (
-         |  SELECT doc_id,
-         |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]) AS sh
-         |  FROM t WHERE len(w) >= 3
-         |), tpairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-         |  WHERE len(a.sh) > 0 AND len(b.sh) > 0
-         |    AND len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE >= ${Dedup.JaccardThreshold}
-         |), elig AS (
-         |  SELECT doc_id, text FROM documents WHERE strlen(text) >= ${Multimodal.PhashMinLen}
-         |), bits AS (
-         |  SELECT doc_id, i,
-         |    CASE WHEN ascii(text[(${Multimodal.PhashStride}*i+1)::INT])
-         |           > ascii(text[(${Multimodal.PhashStride}*i+${Multimodal.PhashStride + 1})::INT])
-         |         THEN 1 ELSE 0 END AS bit
-         |  FROM elig, unnest(range(0, ${Multimodal.PhashBits})) AS u(i)
-         |), pbands AS (
-         |  SELECT doc_id, (i // 16)::INT AS b,
-         |    SUM(bit * (1::BIGINT << (i % 16)::INT))::BIGINT AS v
-         |  FROM bits GROUP BY doc_id, (i // 16)::INT
-         |), ph AS (
-         |  SELECT doc_id, list(v ORDER BY b) AS vs FROM pbands GROUP BY doc_id
-         |), ppairs AS (
+      s"""WITH RECURSIVE ${DuckSql.shingleCtes()}, tpairs AS (
+         |  ${DuckSql.nearPairs("s", Dedup.JaccardThreshold)}
+         |), ${Multimodal.duckPhashCtes("pbands", "ph", "u")}, ppairs AS (
          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
          |  FROM ph a JOIN ph b ON a.doc_id < b.doc_id
-         |  WHERE bit_count(xor(a.vs[1], b.vs[1])) + bit_count(xor(a.vs[2], b.vs[2]))
-         |      + bit_count(xor(a.vs[3], b.vs[3])) + bit_count(xor(a.vs[4], b.vs[4]))
+         |  WHERE ${Multimodal.duckHamming("a", "b")}
          |    <= ${Multimodal.PhashHamMax}
          |), ${Similarity.duckSemCtes}, spairs AS (
          |  SELECT lo AS id_a, hi AS id_b
@@ -916,19 +873,7 @@ object Curation {
          |  SELECT id_a, id_b FROM tpairs
          |  UNION SELECT id_a, id_b FROM ppairs
          |  UNION SELECT id_a, id_b FROM spairs
-         |), edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM upairs
-         |  UNION SELECT id_b, id_a FROM upairs
-         |  UNION SELECT id_a, id_a FROM upairs
-         |  UNION SELECT id_b, id_b FROM upairs
-         |), reach AS (
-         |  SELECT src AS doc_id, dst AS reach_id FROM edges
-         |  UNION
-         |  SELECT r.doc_id, e.dst FROM reach r JOIN edges e ON r.reach_id = e.src
-         |), clusters AS (
-         |  SELECT doc_id, MIN(reach_id) AS cluster_id
-         |  FROM reach GROUP BY doc_id
-         |)
+         |), ${Dedup.duckClosureCtes("upairs")}
          |SELECT doc_id, cluster_id,
          |  COUNT(*) OVER (PARTITION BY cluster_id) AS n_members,
          |  doc_id = cluster_id AS keep
@@ -968,12 +913,7 @@ object Curation {
     // whitespace token counts; SUMs cast back to BIGINT
     "p09_epoch_plan" ->
       s"""WITH st AS (
-         |  SELECT source,
-         |    CAST(SUM(len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0))) AS BIGINT)
-         |      AS n_tokens
-         |  FROM documents
-         |  GROUP BY source
-         |  HAVING SUM(len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0))) > 0
+         |  $duckSourceTokens
          |), tg AS (
          |  SELECT CAST((SUM(n_tokens) * $EpochBudgetFactor) // COUNT(*) AS BIGINT) AS target_tokens
          |  FROM st
@@ -1056,9 +996,9 @@ object Curation {
     // side's 64-bit fingerprint is shuffle economy — d02's collision
     // argument); median/mode restated as the same windows
     "p15_dataset_card" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT doc_id, source, lang, n_chars,
-        |    len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS nt,
+        |    len(${DuckSql.tokens}) AS nt,
         |    regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS norm
         |  FROM documents
         |), dup AS (
@@ -1100,7 +1040,7 @@ object Curation {
     "p11_dedup_yield" ->
       s"""${Dedup.duckClusterCtes}, tk AS (
          |  SELECT doc_id, source,
-         |    CAST(len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS BIGINT) AS nt
+         |    CAST(len(${DuckSql.tokens}) AS BIGINT) AS nt
          |  FROM documents
          |), ek AS (
          |  SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text
@@ -1124,17 +1064,7 @@ object Curation {
     // same integer cross-multiplications) and the per-(phase, source)
     // rollup; SUMs cast back to BIGINT
     "p10_curriculum_plan" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS tok
-        |  FROM documents
-        |), freq AS (
-        |  SELECT tok, COUNT(*) AS cf FROM toks GROUP BY tok
-        |), tot AS (
-        |  SELECT length(bin(CAST(SUM(cf) AS BIGINT))) - 1 AS nb FROM freq
-        |), sc AS (
-        |  SELECT t.doc_id, CAST(tot.nb - (length(bin(f.cf)) - 1) AS BIGINT) AS bits, tot.nb
-        |  FROM toks t JOIN freq f USING (tok) CROSS JOIN tot
-        |), perdoc AS (
+      s"""WITH ${TextAnalysis.duckSurprisalCtes}, perdoc AS (
         |  SELECT doc_id, COUNT(*) AS n_tokens, CAST(SUM(bits) AS BIGINT) AS sum_bits,
         |    MAX(nb) AS nb
         |  FROM sc GROUP BY doc_id
@@ -1158,30 +1088,10 @@ object Curation {
     // on raw strings, t06's DuckHash split) composed with the same
     // first-failing-gate CASE chain
     "p07_release_manifest" ->
-      s"""WITH ids AS (
-         |  SELECT doc_id, doc_id AS x FROM documents
-         |), ${DuckHash.xxhash64LongCtes("doc_id")}, sp AS (
-         |  SELECT doc_id,
-         |    CASE WHEN ((hv % 100) + 100) % 100 < 80 THEN 'train'
-         |         WHEN ((hv % 100) + 100) % 100 < 90 THEN 'val' ELSE 'test' END AS split
-         |  FROM hashed
-         |), t AS (
-         |  SELECT *, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS toks
-         |  FROM documents
-         |), scored AS (
-         |  SELECT *,
-         |    $scoreExprs,
-         |    CASE WHEN len(toks) = 0 THEN 0.0 ELSE
-         |      len(list_filter(toks, w -> list_contains($stopList, w)))::DOUBLE / len(toks)::DOUBLE END AS stop_ratio,
-         |    CASE WHEN len(text) = 0 THEN 0.0 ELSE
-         |      len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))::DOUBLE / len(text)::DOUBLE END AS p_ratio
-         |  FROM t
-         |), flags AS (
+      s"""WITH ${TextAnalysis.duckSplitCtes}, $duckScoredCtes, flags AS (
          |  SELECT doc_id, source, text, toks,
          |    doc_id % 97 = 0 AS is_eval,
-         |    least(len(text)::DOUBLE / 400.0, 1.0) * 0.4
-         |      + least(stop_ratio * 5.0, 1.0) * 0.3
-         |      + (1.0 - least(p_ratio * 10.0, 1.0)) * 0.3 >= $QualityMin AS q_ok,
+         |    $duckQualityExpr >= $QualityMin AS q_ok,
          |    ($langCase) = 'en' AS l_ok
          |  FROM scored
          |), pool AS (
@@ -1197,13 +1107,13 @@ object Curation {
          |  SELECT f.* FROM flags f JOIN pooled pl ON pl.doc_id = f.doc_id AND NOT pl.exact_loser
          |), shl AS (
          |  SELECT doc_id,
-         |    list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] for i in range(1, len(toks) - 1)]) AS sh
+         |    ${DuckSql.shingles3("toks")} AS sh
          |  FROM kept1 WHERE len(toks) >= 3
          |), losers AS (
          |  SELECT DISTINCT b.doc_id
          |  FROM shl a JOIN shl b ON a.doc_id < b.doc_id
          |  WHERE len(a.sh) > 0 AND len(b.sh) > 0
-         |    AND len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE >= $Jac
+         |    AND ${DuckSql.jaccard("a.sh", "b.sh")} >= $Jac
          |), g4 AS (
          |  SELECT doc_id,
          |    unnest(list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]
@@ -1240,25 +1150,8 @@ object Curation {
     // pairs, so it also re-certifies d03's recall-1-at-threshold claim
     // on the composed path
     "p06_split_leakage" ->
-      s"""WITH ids AS (
-         |  SELECT doc_id, doc_id AS x FROM documents
-         |), ${DuckHash.xxhash64LongCtes("doc_id")}, sp AS (
-         |  SELECT doc_id,
-         |    CASE WHEN ((hv % 100) + 100) % 100 < 80 THEN 'train'
-         |         WHEN ((hv % 100) + 100) % 100 < 90 THEN 'val' ELSE 'test' END AS split
-         |  FROM hashed
-         |), t AS (
-         |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-         |  FROM documents
-         |), shl AS (
-         |  SELECT doc_id,
-         |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]) AS sh
-         |  FROM t WHERE len(w) >= 3
-         |), pairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM shl a JOIN shl b ON a.doc_id < b.doc_id
-         |  WHERE len(a.sh) > 0 AND len(b.sh) > 0
-         |    AND len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE >= ${Dedup.JaccardThreshold}
+      s"""WITH ${TextAnalysis.duckSplitCtes}, ${DuckSql.shingleCtes("shl")}, pairs AS (
+         |  ${DuckSql.nearPairs("shl", Dedup.JaccardThreshold)}
          |), lab AS (
          |  SELECT least(pa.split, pb.split) AS split_a, greatest(pa.split, pb.split) AS split_b
          |  FROM pairs p JOIN sp pa ON pa.doc_id = p.id_a JOIN sp pb ON pb.doc_id = p.id_b
@@ -1283,17 +1176,7 @@ object Curation {
          |  FROM documents d
          |  JOIN nk ON nk.nt = regexp_replace(lower(d.text), '[^a-z0-9 ]', '', 'g')
          |  WHERE d.doc_id <> nk.keep GROUP BY d.source
-         |), t AS (
-         |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-         |  FROM documents
-         |), wins AS (
-         |  SELECT doc_id,
-         |    unnest([array_to_string(w[i:i+${Dedup.SubstringW - 1}], ' ')
-         |            for i in range(1, len(w) - ${Dedup.SubstringW - 2})]) AS win
-         |  FROM t WHERE len(w) >= ${Dedup.SubstringW}
-         |), freq AS (
-         |  SELECT win, COUNT(*) AS cnt FROM wins GROUP BY win
-         |), dm AS (
+         |), ${DuckSql.tokenCte()}, ${Dedup.duckWindowCtes()}, dm AS (
          |  SELECT w.doc_id, COUNT(*) AS n_windows,
          |    SUM(CASE WHEN cnt >= 2 THEN 1 ELSE 0 END) AS n_dup
          |  FROM wins w JOIN freq USING (win) GROUP BY w.doc_id

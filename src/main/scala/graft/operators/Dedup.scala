@@ -160,11 +160,11 @@ object Dedup {
       s"CASE WHEN v$b > 0 THEN CAST('${BigInt(1) << b}' AS HUGEINT)" +
         s" ELSE CAST(0 AS HUGEINT) END").mkString(" + ")
     s"""tok AS (
-       |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
+       |  SELECT doc_id, ${DuckSql.tokens} AS w
        |  FROM documents
        |), docsh AS MATERIALIZED (
        |  SELECT DISTINCT doc_id,
-       |    unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)])) AS g
+       |    unnest(${DuckSql.shingles3("w")}) AS g
        |  FROM tok WHERE len(w) >= 3
        |), gr AS (
        |  SELECT g AS gid, g FROM (SELECT DISTINCT g FROM docsh)
@@ -273,11 +273,11 @@ object Dedup {
     // tags kept the copies separate for no reason — the content is
     // dir-determined). The `tag` parameter stays for call-site
     // compatibility but the storage is keyed on the data dir alone.
-    val sk = graft.Materialize.fixture(s, s"dx-calibsk|$dir")(shingled(s, dir)
+    val sk = graft.Materialize.fixture(s, "dx-calibsk", dir)(shingled(s, dir)
       .select(col("doc_id"),
         minhash_signature(col("sh"), CalibK).as("sig"),
         sort_array(transform(col("sh"), g => xxhash64(g))).as("hsh")))
-    val cand = graft.Materialize.fixture(s, s"dx-calibcand|$dir") {
+    val cand = graft.Materialize.fixture(s, "dx-calibcand", dir) {
       val ex = sk.select(col("doc_id"), posexplode(col("sig")).as(Seq("j", "mv")))
       val ok = ex.groupBy("j", "mv").agg(count(lit(1)).as("bsz"))
         .filter(col("bsz") <= MaxBucket).select("j", "mv")
@@ -304,7 +304,7 @@ object Dedup {
   // contamination), and each was re-paying the sketch + band + verify
   // chain per query. Built once per process, read as a flat scan.
   private[operators] def nearDupPairs(s: SparkSession, dir: String): DataFrame =
-    graft.Materialize.fixture(s, s"dx-neardup|$dir")(nearDupPairsBuild(s, dir))
+    graft.Materialize.fixture(s, "dx-neardup", dir)(nearDupPairsBuild(s, dir))
 
   /** The un-memoized pipeline — exposed so PlanShapeSpec pins the BUILD
     * plan's shape (equi-join only, band explode present); a consumer's
@@ -325,7 +325,7 @@ object Dedup {
     * Shared by d05 itself and d19's strategy-agreement report.
     */
   private[operators] def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    graft.Materialize.fixture(s, s"dx-simhash|$dir")(simhashPairsBuild(s, dir))
+    graft.Materialize.fixture(s, "dx-simhash", dir)(simhashPairsBuild(s, dir))
 
   private def simhashPairsBuild(s: SparkSession, dir: String): DataFrame = {
     val sh = shingled(s, dir)
@@ -368,7 +368,7 @@ object Dedup {
   // d20, the spectrum) consume the identical clustering, and the CC
   // iteration is the family's most expensive derived step
   private def nearDupClusters(s: SparkSession, dir: String): DataFrame =
-    graft.Materialize.fixture(s, s"dx-dupcc|$dir")(
+    graft.Materialize.fixture(s, "dx-dupcc", dir)(
       connectedComponents(nearDupPairs(s, dir).select(col("id_a"), col("id_b"))))
 
   /** d20 core over a (doc_id, cluster_id) frame and a (doc_id, hsh)
@@ -1254,31 +1254,87 @@ object Dedup {
     * copies before round 9).
     */
   private[operators] val duckClusterCtes: String =
-    """WITH RECURSIVE t AS (
-      |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-      |  FROM documents
-      |), s AS (
-      |  SELECT doc_id,
-      |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]) AS sh
-      |  FROM t WHERE len(w) >= 3
-      |), pairs AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-      |  WHERE len(a.sh) > 0 AND len(b.sh) > 0
-      |    AND len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE >= 0.8
-      |), edges AS (
-      |  SELECT id_a AS src, id_b AS dst FROM pairs
-      |  UNION SELECT id_b, id_a FROM pairs
-      |  UNION SELECT id_a, id_a FROM pairs
-      |  UNION SELECT id_b, id_b FROM pairs
-      |), reach AS (
-      |  SELECT src AS doc_id, dst AS reach_id FROM edges
-      |  UNION
-      |  SELECT r.doc_id, e.dst FROM reach r JOIN edges e ON r.reach_id = e.src
-      |), clusters AS (
-      |  SELECT doc_id, MIN(reach_id) AS cluster_id
-      |  FROM reach GROUP BY doc_id
-      |)""".stripMargin
+    s"""WITH RECURSIVE ${DuckSql.shingleCtes()}, pairs AS (
+      |  ${DuckSql.nearPairs("s", "0.8")}
+      |), ${duckClosureCtes("pairs")}""".stripMargin
+
+  /** d07's min-label closure over an id-pair CTE `<pairs>(id_a, id_b)`:
+    * symmetric and reflexive `edges`, the recursive `reach`, and
+    * `clusters(doc_id, cluster_id)`. Needs WITH RECURSIVE.
+    */
+  private[operators] def duckClosureCtes(pairs: String): String =
+    s"""edges AS (
+       |  SELECT id_a AS src, id_b AS dst FROM $pairs
+       |  UNION SELECT id_b, id_a FROM $pairs
+       |  UNION SELECT id_a, id_a FROM $pairs
+       |  UNION SELECT id_b, id_b FROM $pairs
+       |), reach AS (
+       |  SELECT src AS doc_id, dst AS reach_id FROM edges
+       |  UNION
+       |  SELECT r.doc_id, e.dst FROM reach r JOIN edges e ON r.reach_id = e.src
+       |), clusters AS (
+       |  SELECT doc_id, MIN(reach_id) AS cluster_id
+       |  FROM reach GROUP BY doc_id
+       |)""".stripMargin
+
+  /** d05's banding over duckSimhashCtes' sketches: `bands(doc_id, hu,
+    * band, bkey)`, the four 16-bit bands of each sketch, and
+    * `admitted(band, bkey)`, the buckets of 2..MaxBucket sketches.
+    */
+  private def duckSimhashBandCtes: String = {
+    val bdivs = (0 until 4).map(b =>
+      s"($b, CAST('${BigInt(1) << (16 * b)}' AS HUGEINT))").mkString(",")
+    s"""bands AS (
+       |  SELECT doc_id, hu, band, (hu // bdiv) % 65536 AS bkey
+       |  FROM sh CROSS JOIN (VALUES $bdivs) AS t(band, bdiv)
+       |), admitted AS (
+       |  SELECT band, bkey FROM bands GROUP BY band, bkey
+       |  HAVING COUNT(*) > 1 AND COUNT(*) <= $MaxBucket
+       |)""".stripMargin
+  }
+
+  /** d03's brute-force reference: every id-ordered pair of 3-shingle
+    * sets with Jaccard ≥ `threshold`; `where` is an extra pair predicate
+    * ending in AND. d08 and d09 gate on the same statement.
+    */
+  private def duckBrutePairs(threshold: String, where: String = ""): String =
+    s"""WITH ${DuckSql.shingleCtes()}
+       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |  ${DuckSql.jaccard("a.sh", "b.sh")} AS jaccard
+       |FROM s a JOIN s b ON a.doc_id < b.doc_id
+       |WHERE ${where}len(a.sh) > 0 AND len(b.sh) > 0
+       |  AND ${DuckSql.jaccard("a.sh", "b.sh")} >= $threshold
+       |ORDER BY id_a, id_b""".stripMargin
+
+  /** d12's word windows: `wins(doc_id, win)`, every SubstringW-token
+    * window of the token lists `w` in `from` (docs of at least
+    * SubstringW tokens), and `freq(win, cnt)`, each window's corpus
+    * count. p03 and p05 gate on the same mass.
+    */
+  private[operators] def duckWindowCtes(from: String = "t"): String =
+    s"""wins AS (
+       |  SELECT doc_id,
+       |    unnest([array_to_string(w[i:i+${SubstringW - 1}], ' ')
+       |            for i in range(1, len(w) - ${SubstringW - 2})]) AS win
+       |  FROM $from WHERE len(w) >= $SubstringW
+       |), freq AS (
+       |  SELECT win, COUNT(*) AS cnt FROM wins GROUP BY win
+       |)""".stripMargin
+
+  /** d20/e27's exact-Jaccard domain: `docsh(doc_id, g)` the shingles of
+    * duckClusterCtes' `s`, and `shh(doc_id, hh)` each document's
+    * distinct xxh64 shingle hashes — the engine's hashed-shingle lists.
+    */
+  private[operators] def duckShingleHashCtes: String =
+    s"""docsh AS MATERIALIZED (
+       |  SELECT doc_id, unnest(sh) AS g FROM s
+       |), gr AS (
+       |  SELECT g AS gid, g FROM (SELECT DISTINCT g FROM docsh)
+       |), ${DuckHash.xxh64StrCtes()}, shh AS MATERIALIZED (
+       |  SELECT d.doc_id, list(DISTINCT h.hv) AS hh
+       |  FROM docsh d JOIN gh h ON h.gid = d.g
+       |  GROUP BY d.doc_id
+       |)""".stripMargin
 
   /** d16/d21 shared oracle chain — the calibration SKETCH restated
     * hash-for-hash: xxh64 per distinct shingle (the d05-proven string
@@ -1294,11 +1350,11 @@ object Dedup {
     val keyRows = calibMixKeys.zipWithIndex
       .map { case (k, j) => s"($j, CAST('$k' AS HUGEINT))" }.mkString(", ")
     s"""tok AS (
-       |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
+       |  SELECT doc_id, ${DuckSql.tokens} AS w
        |  FROM documents
        |), shd AS MATERIALIZED (
        |  SELECT doc_id,
-       |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]) AS sh
+       |    ${DuckSql.shingles3("w")} AS sh
        |  FROM tok WHERE len(w) >= 3
        |), docsh AS MATERIALIZED (
        |  SELECT doc_id, unnest(sh) AS g FROM shd
@@ -1375,21 +1431,7 @@ object Dedup {
         |LEFT JOIN pairs p ON p.src_a = sa.source AND p.src_b = sb.source
         |ORDER BY src_a, src_b""".stripMargin,
 
-    "d03_minhash_lsh" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-        |  FROM documents
-        |), s AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]) AS sh
-        |  FROM t WHERE len(w) >= 3
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS jaccard
-        |FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |WHERE len(a.sh) > 0 AND len(b.sh) > 0
-        |  AND len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE >= 0.8
-        |ORDER BY id_a, id_b""".stripMargin,
+    "d03_minhash_lsh" -> duckBrutePairs("0.8"),
 
     // the SKETCH restated hash-for-hash: xxh64 per distinct shingle
     // (the d05-proven string chain), per-hash splitmix64 with the SAME
@@ -1432,14 +1474,7 @@ object Dedup {
     // of them: every point is >= the derived 0.8 geometry's target);
     // drop convention mirrored (DISTINCT higher id)
     "d18_jaccard_sweep" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-        |  FROM documents
-        |), s AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]) AS sh
-        |  FROM t WHERE len(w) >= 3
-        |), pj AS MATERIALIZED (
+      s"""WITH ${DuckSql.shingleCtes()}, pj AS MATERIALIZED (
         |  SELECT b.doc_id AS id_b,
         |    len(list_intersect(a.sh, b.sh))::DOUBLE
         |      / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS j
@@ -1489,7 +1524,7 @@ object Dedup {
          |  SELECT COALESCE(MAX(r) FILTER (WHERE m * $LshMissCeilDen <= $two60), 1) AS rpb
          |  FROM d17_s7
          |), d17_tok AS (
-         |  SELECT list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
+         |  SELECT ${DuckSql.tokens} AS w
          |  FROM documents
          |), d17_n AS (
          |  SELECT COUNT(*) AS n FROM d17_tok WHERE len(w) >= 3
@@ -1506,31 +1541,14 @@ object Dedup {
 
     // brute force over ALL pairs — the exactness claim of the prefix
     // filter is precisely that it equals this quadratic reference.
-    "d09_prefix_filter_join" ->
-      s"""WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-        |  FROM documents
-        |), s AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]) AS sh
-        |  FROM t WHERE len(w) >= 3
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS jaccard
-        |FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |WHERE len(a.sh) > 0 AND len(b.sh) > 0
-        |  AND len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE >= $PrefixJaccard
-        |ORDER BY id_a, id_b""".stripMargin,
+    "d09_prefix_filter_join" -> duckBrutePairs(s"$PrefixJaccard"),
 
     // rare universe = shingles with 2 ≤ df ≤ DfCap, identical on both
     // engines; containment = integer/integer division → exact double
     "d10_containment" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-         |  FROM documents
-         |), s AS (
+      s"""WITH ${DuckSql.tokenCte()}, s AS (
          |  SELECT doc_id,
-         |    unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)])) AS tok
+         |    unnest(${DuckSql.shingles3("w")}) AS tok
          |  FROM t WHERE len(w) >= 3
          |), rare AS (
          |  SELECT doc_id, tok FROM s
@@ -1552,20 +1570,12 @@ object Dedup {
     // block admission (2 ≤ size ≤ MaxBucket) restated count-first, same
     // as the engine's blockedJaccardPairs
     "d04_ngram_jaccard_blocked" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, lang, source,
-         |    list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-         |  FROM documents
-         |), s AS (
-         |  SELECT doc_id, lang, source,
-         |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]) AS sh
-         |  FROM t WHERE len(w) >= 3
-         |), adm AS (
+      s"""WITH ${DuckSql.shingleCtes(cols = "lang, source, ")}, adm AS (
          |  SELECT lang, source FROM s GROUP BY lang, source
          |  HAVING COUNT(*) > 1 AND COUNT(*) <= $MaxBucket
          |)
          |SELECT a.lang, a.source, a.doc_id AS id_a, b.doc_id AS id_b,
-         |  len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS jaccard
+         |  ${DuckSql.jaccard("a.sh", "b.sh")} AS jaccard
          |FROM s a JOIN s b ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
          |JOIN adm ON adm.lang = a.lang AND adm.source = a.source
          |WHERE len(a.sh) > 0 AND len(b.sh) > 0
@@ -1574,21 +1584,7 @@ object Dedup {
 
     // brute-force restricted to pairs involving a new doc: new docs have
     // the larger ids here, so with id_a < id_b the condition is id_b ≥ 400
-    "d08_incremental_dedup" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-        |  FROM documents
-        |), s AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]) AS sh
-        |  FROM t WHERE len(w) >= 3
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS jaccard
-        |FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |WHERE b.doc_id >= 400 AND len(a.sh) > 0 AND len(b.sh) > 0
-        |  AND len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE >= 0.8
-        |ORDER BY id_a, id_b""".stripMargin,
+    "d08_incremental_dedup" -> duckBrutePairs("0.8", "b.doc_id >= 400 AND "),
 
     // brute force over the FINAL corpus (tombstones out), restricted to
     // pairs touching a changed doc (insert or update — the %-rules are
@@ -1599,23 +1595,16 @@ object Dedup {
     "d22_signature_maintenance" ->
       s"""WITH fin AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % $D22Tomb <> 0
-        |), t AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-        |  FROM fin
-        |), s AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]) AS sh
-        |  FROM t WHERE len(w) >= 3
-        |)
+        |), ${DuckSql.shingleCtes(from = "fin")}
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS jaccard,
+        |  ${DuckSql.jaccard("a.sh", "b.sh")} AS jaccard,
         |  CAST(0 AS BIGINT) AS sig_mismatches,
         |  CAST(0 AS BIGINT) AS band_mismatches
         |FROM s a JOIN s b ON a.doc_id < b.doc_id
         |WHERE (a.doc_id % $D22Ins = 0 OR a.doc_id % $D22Upd = 0
         |       OR b.doc_id % $D22Ins = 0 OR b.doc_id % $D22Upd = 0)
         |  AND len(a.sh) > 0 AND len(b.sh) > 0
-        |  AND len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE >= 0.8
+        |  AND ${DuckSql.jaccard("a.sh", "b.sh")} >= 0.8
         |ORDER BY id_a, id_b""".stripMargin,
 
     "d07_dup_clusters" ->
@@ -1652,13 +1641,13 @@ object Dedup {
         |ORDER BY c.doc_id""".stripMargin,
 
     "d06_source_shingle_jaccard" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, source,
-        |    list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
+        |    ${DuckSql.tokens} AS w
         |  FROM documents WHERE lang = 'en'
         |), s AS (
         |  SELECT DISTINCT source,
-        |    unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)])) AS g
+        |    unnest(${DuckSql.shingles3("w")}) AS g
         |  FROM t WHERE len(w) >= 3
         |), sizes AS (
         |  SELECT source, COUNT(*) AS n FROM s GROUP BY source
@@ -1680,16 +1669,8 @@ object Dedup {
     // MaxBucket cap, and the Hamming filter. Votes are 64 columnar SUMs
     // over the (doc, shingle)-hash join (one aggregation pass, no 64×
     // row explosion); the sketch reassembles as Σ 2^b over winning bits.
-    "d05_simhash_pairs" -> {
-      val bdivs = (0 until 4).map(b =>
-        s"($b, CAST('${BigInt(1) << (16 * b)}' AS HUGEINT))").mkString(",")
-      s"""WITH $duckSimhashCtes, bands AS (
-         |  SELECT doc_id, hu, band, (hu // bdiv) % 65536 AS bkey
-         |  FROM sh CROSS JOIN (VALUES $bdivs) AS t(band, bdiv)
-         |), admitted AS (
-         |  SELECT band, bkey FROM bands GROUP BY band, bkey
-         |  HAVING COUNT(*) > 1 AND COUNT(*) <= $MaxBucket
-         |), cand AS (
+    "d05_simhash_pairs" ->
+      s"""WITH $duckSimhashCtes, $duckSimhashBandCtes, cand AS (
          |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.hu AS ha, b.hu AS hb
          |  FROM bands a
          |  JOIN admitted ad ON ad.band = a.band AND ad.bkey = a.bkey
@@ -1699,24 +1680,15 @@ object Dedup {
          |  CAST(bit_count(xor(CAST(ha AS UBIGINT), CAST(hb AS UBIGINT))) AS BIGINT) AS hamming
          |FROM cand
          |WHERE bit_count(xor(CAST(ha AS UBIGINT), CAST(hb AS UBIGINT))) <= 3
-         |ORDER BY id_a, id_b""".stripMargin
-    },
+         |ORDER BY id_a, id_b""".stripMargin,
 
     // both pair sets restated in their at-scale forms (the d05 chain
     // verbatim; the MinHash side as the brute j >= 0.8 equivalence the
     // d03 oracle already relies on), classes by full outer join, stats
     // over the SAME xxh64-hashed shingle domain as the engine (the
     // d16 shh pattern — collision symmetry)
-    "d19_strategy_agreement" -> {
-      val bdivs = (0 until 4).map(b =>
-        s"($b, CAST('${BigInt(1) << (16 * b)}' AS HUGEINT))").mkString(",")
-      s"""WITH $duckSimhashCtes, bands AS (
-         |  SELECT doc_id, hu, band, (hu // bdiv) % 65536 AS bkey
-         |  FROM sh CROSS JOIN (VALUES $bdivs) AS t(band, bdiv)
-         |), admitted AS (
-         |  SELECT band, bkey FROM bands GROUP BY band, bkey
-         |  HAVING COUNT(*) > 1 AND COUNT(*) <= $MaxBucket
-         |), scand AS (
+    "d19_strategy_agreement" ->
+      s"""WITH $duckSimhashCtes, $duckSimhashBandCtes, scand AS (
          |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
          |  FROM bands a
          |  JOIN admitted ad ON ad.band = a.band AND ad.bkey = a.bkey
@@ -1750,23 +1722,14 @@ object Dedup {
          |  MIN(j.jppb) AS min_jaccard_ppb, MAX(j.jppb) AS max_jaccard_ppb
          |FROM cls c JOIN jp j USING (id_a, id_b)
          |GROUP BY c.strategy
-         |ORDER BY c.strategy""".stripMargin
-    },
+         |ORDER BY c.strategy""".stripMargin,
 
     // d07's closure chain verbatim for the clusters, intra-cluster pairs
     // by self-join under the same enumeration cap, exact Jaccard over the
     // SAME xxh64-hashed shingle domain as the engine (the d16 shh
     // pattern), direct/chained split on the shared integer ppb bar
     "d20_cluster_purity" ->
-      s"""$duckClusterCtes, docsh AS MATERIALIZED (
-         |  SELECT doc_id, unnest(sh) AS g FROM s
-         |), gr AS (
-         |  SELECT g AS gid, g FROM (SELECT DISTINCT g FROM docsh)
-         |), ${DuckHash.xxh64StrCtes()}, shh AS MATERIALIZED (
-         |  SELECT d.doc_id, list(DISTINCT h.hv) AS hh
-         |  FROM docsh d JOIN gh h ON h.gid = d.g
-         |  GROUP BY d.doc_id
-         |), sizes AS (
+      s"""$duckClusterCtes, $duckShingleHashCtes, sizes AS (
          |  SELECT cluster_id, COUNT(*) AS csize FROM clusters GROUP BY cluster_id
          |), mem AS (
          |  SELECT c.doc_id, c.cluster_id, z.csize
@@ -1804,17 +1767,7 @@ object Dedup {
     // collision argument as d03's hashed-shingle jaccard); slice w[i:i+W-1]
     // is 1-based inclusive = Spark's slice(w, i+1, W)
     "d12_substring_dup_mass" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-         |  FROM documents
-         |), wins AS (
-         |  SELECT doc_id,
-         |    unnest([array_to_string(w[i:i+${SubstringW - 1}], ' ')
-         |            for i in range(1, len(w) - ${SubstringW - 2})]) AS win
-         |  FROM t WHERE len(w) >= $SubstringW
-         |), freq AS (
-         |  SELECT win, COUNT(*) AS cnt FROM wins GROUP BY win
-         |)
+      s"""WITH ${DuckSql.tokenCte()}, ${duckWindowCtes()}
          |SELECT doc_id, COUNT(*) AS n_windows,
          |  CAST(SUM(CASE WHEN cnt >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_windows,
          |  SUM(CASE WHEN cnt >= 2 THEN 1 ELSE 0 END)::DOUBLE / COUNT(*)::DOUBLE AS dup_frac

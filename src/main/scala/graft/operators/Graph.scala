@@ -77,119 +77,121 @@ object Graph {
     fx(s, dir, "edges")(partPairs(s, dir).distinct())
 
   /** Per-JVM shared-fixture accessor for the co-purchase family (see
-    * partEdges). Keyed on (data dir, fixture name): the key determines
-    * the content, so any session in the JVM may share the copy.
+    * partEdges). Keyed on the fixture name and the data dir (plus
+    * Materialize's fingerprint of its files), so any session in the JVM
+    * may share the copy.
     */
   private def fx(s: SparkSession, dir: String, name: String)
                 (build: => DataFrame): DataFrame =
-    graft.Materialize.fixture(s, s"gx-$name|$dir")(build)
+    graft.Materialize.fixture(s, s"gx-$name", dir)(build)
 
-  /** Shared per-vertex degree table (x, deg) over partEdges. */
+  /** Shared per-vertex degree table: `degrees` of partEdges. */
   private[operators] def degFixture(s: SparkSession, dir: String): DataFrame =
     fx(s, dir, "deg")(degrees(partEdges(s, dir)))
 
-  /** Shared degree-annotated DIRECTED message edges (src, dst, deg) —
-    * each undirected edge both ways, deg = out-degree of src. The input
-    * every Pregel-shaped round in the family joins its state against
-    * (g02/g02b PageRank, g06 assortativity, g08 CC, g11 LPA, g14 PPR,
-    * g15 sampling). Stored once: 2|E| rows × 3 longs.
+  /** Shared `directedMsgs` of partEdges — the input every Pregel-shaped
+    * round in the family joins its state against (g02/g02b PageRank,
+    * g06 assortativity, g08 CC, g11 LPA, g14 PPR, g15 sampling). Stored
+    * once: 2|E| rows × 3 longs.
     */
   private[operators] def msgsFixture(s: SparkSession, dir: String): DataFrame =
-    fx(s, dir, "msgs") {
-      val e = partEdges(s, dir)
-      e.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
-        .join(degFixture(s, dir).select(col("x").as("src"), col("deg")), "src")
-        .select("src", "dst", "deg")
-    }
+    fx(s, dir, "msgs")(directedMsgs(partEdges(s, dir), degFixture(s, dir)))
 
-  /** Shared degree-annotated undirected edges (u, v, du, dv) — the
-    * triangle kernel's input (orientation, adjacency, per-edge degree
-    * columns all derive from it). See degAnnotatedEdges for why the
-    * annotation must be computed once, never per-alias.
-    */
+  /** Shared `degEdges` of partEdges — the triangle kernel's input. */
   private[operators] def degEdgesFixture(s: SparkSession, dir: String): DataFrame =
-    fx(s, dir, "wd") {
-      val deg = degFixture(s, dir)
-      partEdges(s, dir)
-        .join(deg.select(col("x").as("u"), col("deg").as("du")), "u")
-        .join(deg.select(col("x").as("v"), col("deg").as("dv")), "v")
-        .select("u", "v", "du", "dv")
-    }
+    fx(s, dir, "wd")(degEdges(partEdges(s, dir), degFixture(s, dir)))
 
-  /** Shared oriented triangle table (a, b, c) — one row per triangle,
-    * found exactly once on its degree-lowest edge (orientedTrianglesFrom).
-    * g01 counts it, g04 turns it into edge credits, g07 into vertex
-    * credits, g12 decrements supports against it — four queries, one
-    * enumeration (the measured ~4–5 s fixed cost of each, paid once).
+  /** Shared `triangles` of partEdges. g01 counts it, g04 turns it into
+    * edge credits, g07 into vertex credits, g12 decrements supports
+    * against it — four queries, one enumeration (the measured ~4–5 s
+    * fixed cost of each, paid once).
     */
   private[operators] def trisFixture(s: SparkSession, dir: String): DataFrame =
-    fx(s, dir, "tris")(orientedTrianglesFrom(degEdgesFixture(s, dir)))
+    fx(s, dir, "tris")(triangles(degEdgesFixture(s, dir)))
 
-  /** Shared per-edge triangle support (u, v, sup) — trisFixture's three
-    * edge credits per triangle aggregated once and left-joined back onto
-    * the edge set (triangle-free edges carry 0). g04's common-neighbor
-    * counts and g12's round-1 supports are BOTH exactly this table; the
-    * 3|T|-row explode + aggregation is the single most expensive derived
-    * step in the family, so it too is paid once per JVM.
+  /** Shared per-edge triangle `support` of partEdges. g04's
+    * common-neighbor counts and g12's round-1 supports are BOTH exactly
+    * this table; the 3|T|-row explode + aggregation is the single most
+    * expensive derived step in the family, so it too is paid once per
+    * JVM.
     */
   private[operators] def supFixture(s: SparkSession, dir: String): DataFrame =
-    fx(s, dir, "sup") {
-      val credits = trisFixture(s, dir)
-        .select(explode(array(
-          struct(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v")),
-          struct(least(col("a"), col("c")).as("u"), greatest(col("a"), col("c")).as("v")),
-          struct(least(col("b"), col("c")).as("u"), greatest(col("b"), col("c")).as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .groupBy("u", "v").agg(count(lit(1)).as("sup"))
-      partEdges(s, dir).join(credits, Seq("u", "v"), "left")
-        .select(col("u"), col("v"), coalesce(col("sup"), lit(0L)).as("sup"))
-    }
+    fx(s, dir, "sup")(support(partEdges(s, dir), trisFixture(s, dir)))
 
-  private def degrees(e: DataFrame): DataFrame =
+  /** Per-vertex degree (x, deg) of undirected (u < v) edges. */
+  private[graft] def degrees(e: DataFrame): DataFrame =
     e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
       .groupBy("x").agg(count(lit(1)).as("deg"))
 
-  /** g01 core over undirected (u < v) edges — extracted so closed-form
-    * graphs (K4 = 4 triangles, C4 = 0, two sharing an edge = 2) pin the
-    * count exactly and a brute-force triple enumeration cross-checks it.
+  /** Degree-annotated DIRECTED message edges (src, dst, deg): each
+    * undirected edge both ways, deg = the out-degree of src (`deg` is
+    * the `degrees` table of `e`).
+    */
+  private[graft] def directedMsgs(e: DataFrame, deg: DataFrame): DataFrame =
+    e.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
+      .join(deg.select(col("x").as("src"), col("deg")), "src")
+      .select("src", "dst", "deg")
+
+  /** Degree-annotated undirected edges (u, v, du, dv) — orientation,
+    * adjacency and the per-edge degree columns of the triangle family
+    * all derive from it. Annotated ONCE, never per alias: each
+    * differently-aliased degree join is a canonically-distinct subplan
+    * Catalyst will NOT exchange-reuse (measured before the fixture: the
+    * g04 plan re-ran the |2E|-row degree aggregation 6–8 times per
+    * action, ~30 s of task time inside one 17 s query).
+    */
+  private[graft] def degEdges(e: DataFrame, deg: DataFrame): DataFrame =
+    e.join(deg.select(col("x").as("u"), col("deg").as("du")), "u")
+      .join(deg.select(col("x").as("v"), col("deg").as("dv")), "v")
+      .select("u", "v", "du", "dv")
+
+  /** One row (a, b, c) per triangle, each found exactly once on its
+    * degree-lowest edge (a, b) of the `degEdges` frame `wd`.
     *
     * Formulation: adjacency-array intersection, NOT a wedge join. The
     * 2-join version materializes Σ out-deg² wedge rows through a shuffle
     * (measured: 400 M rows and 25× super-linear wall-clock at the 10×
     * probe — it spills long before a cluster would need to shuffle at
     * all). Here each oriented edge (a, b) intersects N⁺(a) with N⁺(b)
-    * IN-ROW: the shuffles carry only the |E| edge rows and |V| adjacency
-    * arrays, and the O(Σ min-deg) intersection work happens inside a
-    * per-row expression. Degree orientation still bounds every array at
-    * O(√E), so no row is ever pathological.
+    * IN-ROW and explodes the intersection: the shuffles carry only the
+    * |E| edge rows and |V| adjacency arrays. Degree orientation bounds
+    * every array at O(√E), so no row is ever pathological. shuffle_hash,
+    * not sort-merge: the probe side carries two O(√E) LONG-array
+    * payloads per row, and sorting those heavy rows is the dominant
+    * 10×-probe cost; hashing builds on the (|V|-row) adjacency side and
+    * streams the edges unsorted.
     */
-  /** Degree-annotated edge frame (u, v, du, dv) — MATERIALIZED once.
-    *
-    * Every triangle-kernel consumer needs per-endpoint degrees in
-    * several places (orientation, the final per-edge join, the wedge
-    * census), and each differently-aliased `degrees(e)` join is a
-    * canonically-distinct subplan Catalyst will NOT exchange-reuse: the
-    * pre-fix g04 plan re-ran the |2E|-row degree aggregation 6–8 times
-    * per action (measured: eight 64-task union+agg passes, ~30 s of task
-    * time inside one 17 s query). Annotating once and deriving
-    * orientation, adjacency, and the final join all from this cached
-    * frame makes the degree agg a once-per-query cost. Size is O(|E|)
-    * rows × 4 longs — the same order as the edge set itself, so anywhere
-    * partEdges' cache fits, this does too.
-    */
-  private[operators] def degAnnotatedEdges(e: DataFrame): DataFrame = {
-    val deg = degrees(e)
-    graft.Materialize(e
-      .join(deg.select(col("x").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("x").as("v"), col("deg").as("dv")), "v"))
+  private[graft] def triangles(wd: DataFrame): DataFrame = {
+    val o = oriented(wd)
+    val adj = orientedAdjacency(o)
+    o.join(adj.select(col("x").as("a"), col("nbrs").as("na")).hint("shuffle_hash"), "a")
+      .join(adj.select(col("x").as("b"), col("nbrs").as("nb")).hint("shuffle_hash"), "b")
+      .select(col("a"), col("b"),
+        explode(graft.functions.ArrayFunctions.sorted_intersect(col("na"), col("nb"))).as("c"))
   }
 
-  /** Degree-orientation of a degAnnotatedEdges frame: (a, b) with a the
-    * (deg, id)-lower endpoint — a narrow select over the cached frame,
-    * so each of its several consumers re-reads cache, never re-joins.
+  /** Per-edge triangle support (u, v, sup) of the edges `e`: the three
+    * edge credits of every `triangles` row, aggregated and left-joined
+    * back onto `e` (triangle-free edges carry 0).
     */
-  private[operators] def orientedFrom(wd: DataFrame): DataFrame = {
+  private[graft] def support(e: DataFrame, tris: DataFrame): DataFrame = {
+    val credits = tris
+      .select(explode(array(
+        struct(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v")),
+        struct(least(col("a"), col("c")).as("u"), greatest(col("a"), col("c")).as("v")),
+        struct(least(col("b"), col("c")).as("u"), greatest(col("b"), col("c")).as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .groupBy("u", "v").agg(count(lit(1)).as("sup"))
+    e.join(credits, Seq("u", "v"), "left")
+      .select(col("u"), col("v"), coalesce(col("sup"), lit(0L)).as("sup"))
+  }
+
+  /** Degree-orientation of a degEdges frame: (a, b) with a the
+    * (deg, id)-lower endpoint — a narrow select, so each of its several
+    * consumers re-reads the input, never re-joins.
+    */
+  private def oriented(wd: DataFrame): DataFrame = {
     val lower = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
     wd.select(
       when(lower, col("u")).otherwise(col("v")).as("a"),
@@ -204,23 +206,17 @@ object Graph {
     * sort_array: pins the partition-dependent collect_list order AND
     * establishes the sorted-input contract of sorted_intersect_count.
     */
-  private[operators] def orientedAdjacency(oriented: DataFrame): DataFrame =
+  private def orientedAdjacency(oriented: DataFrame): DataFrame =
     graft.Materialize(oriented.groupBy(col("a").as("x"))
       .agg(sort_array(collect_list(col("b"))).as("nbrs")))
 
-  private[operators] def triangleStats(e: DataFrame): DataFrame = {
-    val wd = degAnnotatedEdges(e)
-    triangleStatsFrom(wd, orientedTrianglesFrom(wd))
-  }
-
-  /** g01 over pre-built (possibly fixture-shared) frames: wd = the
-    * degree-annotated edges, tris = the oriented triangle rows. The
-    * triangle count is COUNT(*) over tris — identical to the former
-    * inline sorted_intersect_count sum (each exploded row is one unit of
-    * that sum; edges whose higher endpoint has no out-adjacency
-    * contributed 0 there and contribute no rows here).
+  /** g01 core over the degEdges frame `wd` and its `triangles` rows:
+    * the triangle count is COUNT(*) over tris, the vertex/wedge census
+    * comes from wd. Closed-form graphs (K4 = 4 triangles, C4 = 0, two
+    * sharing an edge = 2) pin the count and a brute-force triple
+    * enumeration cross-checks it.
     */
-  private[operators] def triangleStatsFrom(wd: DataFrame, tris: DataFrame): DataFrame = {
+  private[operators] def triangleStats(wd: DataFrame, tris: DataFrame): DataFrame = {
     val tri = tris.agg(count(lit(1)).as("n_triangles"))
     // vertex/wedge census from the annotated frame: each vertex's
     // (x, deg) appears once per incident edge — distinct first, then the
@@ -237,17 +233,8 @@ object Graph {
           .as("clustering_coeff"))
   }
 
-  /** g02 core over undirected (u < v) edges: one integer message round. */
-  private[operators] def pagerankStep(e: DataFrame, topK: Int): DataFrame = {
-    val deg = degrees(e)
-    pagerankStepFromMsgs(
-      e.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
-        .join(deg.select(col("x").as("src"), col("deg")), "src"), topK)
-  }
-
-  /** g02 over the pre-built (src, dst, deg) message edges (msgsFixture). */
-  private[operators] def pagerankStepFromMsgs(msgs: DataFrame, topK: Int): DataFrame =
+  /** g02 core: one integer message round over the directedMsgs rows. */
+  private[operators] def pagerankStep(msgs: DataFrame, topK: Int): DataFrame =
     msgs.select(col("dst"), expr(s"${RankScale}L div deg").as("contrib"))
       .groupBy("dst")
       .agg(sum("contrib").as("rank_num"), count(lit(1)).as("in_deg"))
@@ -273,35 +260,15 @@ object Graph {
     * CONVERGENCE PROFILE as the output — one row per round carrying the
     * total rank movement Σ|r_t − r_{t−1}|, the rank extremes, and the
     * total mass (floor losses drain it slightly each round; the profile
-    * shows that too). The iteration is g02's message round compounded:
-    * the degree-annotated message edges are built ONCE (bfsLevels'
-    * one-time-adjacency discipline) and each round shuffles only the
-    * |V|-row rank table through one join + one hash agg — per-round cost
-    * is flat in rounds and linear in |E|. Driver traffic is 4 audit
-    * scalars per round (the d07/g05 discipline); each round's rank frame
-    * is materialized and the previous round's unpersisted, so lineage
-    * stays one layer deep.
-    */
-  private[operators] def pagerankProfile(e: DataFrame,
-                                         rounds: Int = PageRankRounds): DataFrame = {
-    val deg = degrees(e)
-    // the degree-annotated message edges are built ONCE and consumed
-    // once per round — scratch PARQUET, not cache: at 100× the cached
-    // 2|E|-row frame and each round's shuffle fight over the same
-    // unified memory (measured: round ~6 evicts the cache mid-task and
-    // the executor dies UNABLE_TO_ACQUIRE_MEMORY), while a columnar
-    // scan per round costs disk IO the OS page cache mostly absorbs.
-    // (The catalog entry passes the shared msgsFixture instead — same
-    // content, built once per JVM.)
-    val msgs = e.sparkSession.read.parquet(graft.Materialize.toStoragePath(
-      e.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
-        .join(deg.select(col("x").as("src"), col("deg")), "src"), "pr_msgs"))
-    pagerankProfileFromParts(msgs, deg, rounds)
-  }
-
-  /** g02b over pre-stored message edges (a flat scan — msgsFixture or the
-    * legacy pr_msgs scratch) and the degree table.
+    * shows that too). The iteration is g02's message round compounded
+    * over the directedMsgs rows `msgs` (the catalog passes msgsFixture:
+    * a flat scan built once — stored, not cached, because at 100× a
+    * cached 2|E|-row frame and each round's shuffle fight over the same
+    * unified memory) and the `degrees` table `deg`. Each round shuffles
+    * only the |V|-row rank table through one join + one hash agg —
+    * per-round cost is flat in rounds and linear in |E|. Driver traffic
+    * is 4 audit scalars per round (the d07/g05 discipline); each round's
+    * rank frame is stored, so lineage stays one layer deep.
     *
     * NOTE: an AQE-off child session (Materialize.loopSession) was
     * measured here and does NOT help (7.0-7.1 s → 7.8-8.3 s at sf0.1):
@@ -309,8 +276,8 @@ object Graph {
     * audit jobs themselves, and AQE's small-shuffle coalescing earns
     * its job-bookkeeping back. Kept on the owner session deliberately.
     */
-  private[operators] def pagerankProfileFromParts(msgs: DataFrame, deg: DataFrame,
-                                                  rounds: Int = PageRankRounds): DataFrame = {
+  private[operators] def pagerankProfile(msgs: DataFrame, deg: DataFrame,
+                                         rounds: Int = PageRankRounds): DataFrame = {
     val spark2 = msgs.sparkSession
     import spark2.implicits._
     // Each round's rank table goes to SCRATCH STORAGE, not cache: the
@@ -370,7 +337,7 @@ object Graph {
   val PprRounds = 4
   val PprSeedK = 4
 
-  /** g14 core: personalized PageRank over undirected (u < v) edges — the
+  /** g14 core: personalized PageRank over the directedMsgs rows — the
     * "what's relevant NEAR these seeds" ranking behind related-item
     * panels and seed-expanded curation (pick a few known-good documents,
     * walk the similarity graph, harvest the neighborhood). Identical
@@ -381,9 +348,9 @@ object Graph {
     * rank(v) = [v∈S]·base + (85·Σ_{u→v} floor(rank(u)∕deg(u)))∕100 in
     * floor division — bit-identical across engines, no float drift.
     *
-    * Iterative-state discipline is g02b's verbatim: degree-annotated
-    * message edges built ONCE into scratch parquet, each round's rank
-    * table scratch-carried (plan stays one layer deep; survives executor
+    * Iterative-state discipline is g02b's verbatim: message edges from
+    * one stored frame (msgsFixture), each round's rank table
+    * scratch-carried (plan stays one layer deep; survives executor
     * loss on a real cluster). Per round: one |E|-row join + one hash agg
     * — per-round cost flat in rounds, linear in |E|. Every vertex has
     * deg ≥ 1 on an undirected edge set, so every vertex receives ≥ 1
@@ -391,22 +358,8 @@ object Graph {
     * included — their contributions are 0, their rows persist). Output
     * is the top-20 final ranks: the seed-neighborhood harvest list.
     */
-  private[operators] def pprRanks(e: DataFrame,
+  private[operators] def pprRanks(msgs: DataFrame, deg: DataFrame,
                                   rounds: Int = PprRounds): DataFrame = {
-    val spark = e.sparkSession
-    val deg = degrees(e)
-    val msgs = spark.read.parquet(graft.Materialize.toStoragePath(
-      e.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
-        .join(deg.select(col("x").as("src"), col("deg")), "src"), "ppr_msgs"))
-    pprRanksFromParts(msgs, deg, rounds)
-  }
-
-  /** g14 over pre-stored message edges (msgsFixture / ppr_msgs scratch)
-    * and the degree table.
-    */
-  private[operators] def pprRanksFromParts(msgs: DataFrame, deg: DataFrame,
-                                           rounds: Int = PprRounds): DataFrame = {
     val spark = msgs.sparkSession
     val seedBase = RankScale * (DampDen - DampNum) / DampDen
     // |S| rows — broadcast at every use
@@ -438,8 +391,8 @@ object Graph {
   /** g15: per-vertex neighbor cap (the GraphSAGE-style fan-out bound). */
   val SampleK = 8
 
-  /** g15 core: degree-capped neighbor sampling over undirected (u < v)
-    * edges — the preprocessing every GNN training pipeline and every
+  /** g15 core: degree-capped neighbor sampling over the directedMsgs
+    * rows — the preprocessing every GNN training pipeline and every
     * hub-defensive graph join runs: keep at most SampleK neighbors per
     * vertex, chosen by HASH RANK (xxhash64 of the combined endpoint key),
     * so the "uniform" sample is deterministic, partition-invariant, and
@@ -460,13 +413,7 @@ object Graph {
     * itself (not just its size) under the oracle. One shuffle on src;
     * the window sort is per-vertex; everything after is ≤ 64 bucket rows.
     */
-  private[operators] def neighborSample(e: DataFrame): DataFrame =
-    neighborSampleFromMsgs(
-      e.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(e.select(col("v").as("src"), col("u").as("dst"))))
-
-  /** g15 over pre-built directed neighbor rows (msgsFixture). */
-  private[operators] def neighborSampleFromMsgs(msgs: DataFrame): DataFrame = {
+  private[operators] def neighborSample(msgs: DataFrame): DataFrame = {
     val nb = msgs.select(col("src"), col("dst"))
       .withColumn("hv", expr("xxhash64(src * 100000007L + dst)"))
     val wSrc = Window.partitionBy("src")
@@ -485,30 +432,15 @@ object Graph {
       .orderBy("bucket")
   }
 
-  /** g06 core over undirected (u < v) edges — integer moment sums over
-    * the directed endpoint list plus the closed-form Pearson ratio (see
-    * the query scaladoc for why symmetry eliminates the square root).
+  /** g06 core — integer moment sums over the directed endpoint list plus
+    * the closed-form Pearson ratio (see the query scaladoc for why
+    * symmetry eliminates the square root). The directedMsgs rows `msgs`
+    * carry the source endpoint's degree; one join against the `degrees`
+    * table `deg` supplies the destination's.
     */
-  private[operators] def degreeAssortativity(e: DataFrame): DataFrame = {
-    val deg = degrees(e)
-    degreeAssortativityFromDirected(
-      e.select(col("u").as("i"), col("v").as("j"))
-        .unionAll(e.select(col("v").as("i"), col("u").as("j")))
-        .join(deg.select(col("x").as("i"), col("deg").as("dx")), "i")
-        .join(deg.select(col("x").as("j"), col("deg").as("dy")), "j"))
-  }
-
-  /** g06 from the shared fixtures: msgsFixture already carries the
-    * source-endpoint degree; one join against the degree table supplies
-    * the destination's. Identical directed endpoint list.
-    */
-  private[operators] def degreeAssortativityFromParts(msgs: DataFrame,
-                                                      deg: DataFrame): DataFrame =
-    degreeAssortativityFromDirected(
-      msgs.select(col("src").as("i"), col("dst").as("j"), col("deg").as("dx"))
-        .join(deg.select(col("x").as("j"), col("deg").as("dy")), "j"))
-
-  private def degreeAssortativityFromDirected(directed: DataFrame): DataFrame = {
+  private[operators] def degreeAssortativity(msgs: DataFrame, deg: DataFrame): DataFrame = {
+    val directed = msgs.select(col("src").as("i"), col("dst").as("j"), col("deg").as("dx"))
+      .join(deg.select(col("x").as("j"), col("deg").as("dy")), "j")
     // M·Σxy and (Σx)² overflow int64 at the 10× graph (M ~ 10⁶·Σxy ~
     // 10¹²), so the ratio terms are computed in DECIMAL(38,0) — exact,
     // the same integers DuckDB's HUGEINT carries — and each side casts
@@ -541,7 +473,8 @@ object Graph {
     */
   val CcRounds = 12
 
-  /** g08 core over undirected (u < v) edges — the CONNECTED-COMPONENTS
+  /** g08 core over the directedMsgs rows (any frame carrying (src,
+    * dst) works) and the vertex set `verts(x)` — the CONNECTED-COMPONENTS
     * CONVERGENCE PROFILE by min-label propagation: every vertex starts
     * labeled with its own id; each round it takes the min of its own and
     * its neighbors' labels; the per-round row reports how many labels
@@ -549,8 +482,8 @@ object Graph {
     * becomes exact at convergence), and the label-mass checksum. The
     * connectivity audit of graph curation — "is the co-purchase graph one
     * blob or many islands, and how fast does it mix". Iterative-state
-    * discipline is g02b's verbatim: message edges built once into scratch
-    * parquet, each round's label table materialized to scratch (the
+    * discipline is g02b's verbatim: message edges from one stored frame
+    * (msgsFixture), each round's label table materialized to scratch (the
     * carried frame is referenced twice per round), the previous label
     * rides the contribution shuffle as flagged self rows, driver traffic
     * = 3 audit scalars per round; once a round moves nothing the
@@ -558,21 +491,8 @@ object Graph {
     * point, so their stats are the converged round's verbatim — g05's
     * converged-round rule).
     */
-  private[graft] def ccProfile(e: DataFrame,
-                                   rounds: Int = CcRounds): DataFrame = {
-    val spark = e.sparkSession
-    val msgs = spark.read.parquet(graft.Materialize.toStoragePath(
-      e.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(e.select(col("v").as("src"), col("u").as("dst"))), "cc_msgs"))
-    val verts = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x"))).distinct()
-    ccProfileFromParts(msgs, verts, rounds)
-  }
-
-  /** g08 over pre-stored directed message edges (any frame carrying
-    * (src, dst) — msgsFixture works verbatim) and the vertex set.
-    */
-  private[graft] def ccProfileFromParts(msgs: DataFrame, verts: DataFrame,
-                                        rounds: Int = CcRounds): DataFrame = {
+  private[graft] def ccProfile(msgs: DataFrame, verts: DataFrame,
+                               rounds: Int = CcRounds): DataFrame = {
     val spark = msgs.sparkSession
     import spark.implicits._
     var lab = spark.read.parquet(graft.Materialize.toStoragePath(
@@ -768,9 +688,8 @@ object Graph {
     * after convergence the remaining no-op rows are synthesized without
     * jobs.
     */
-  private[operators] def kCorePeel(e: DataFrame,
-                                   rounds: Int = MaxPeelRounds,
-                                   sharedDeg: Option[DataFrame] = None): DataFrame = {
+  private[operators] def kCorePeel(e: DataFrame, deg: DataFrame,
+                                   rounds: Int = MaxPeelRounds): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     // The survivor DEGREE FRAME is the round's single shuffle, and its one
@@ -790,9 +709,6 @@ object Graph {
     // dependent entry, so unpersisting round r−2's frames invalidated
     // rounds r−1 and r and each subsequent action re-ran the whole
     // anti-join cascade from the source (measured 42 s vs 16 s at sf0.1).
-    def degOf(edges: DataFrame): DataFrame =
-      edges.select(col("u").as("x")).unionAll(edges.select(col("v").as("x")))
-        .groupBy("x").agg(count(lit(1)).as("deg"))
     def audit(deg: DataFrame, k: Long): (Long, Long, Long) = {
       val r = deg.agg(
         count(lit(1)).as("nv"),
@@ -800,16 +716,10 @@ object Graph {
         count(when(col("deg") < k, 1)).as("nweak")).head()
       (r.getLong(0), r.getLong(1) / 2L, r.getLong(2))
     }
-    // sharedDeg (the catalog entry passes degFixture): e is then already
-    // a flat fixture scan and its degree table pre-built — neither round-0
-    // scratch copy is needed, the fixtures ARE that storage.
-    var alive = sharedDeg match {
-      case Some(_) => e.select("u", "v")
-      case None => spark.read.parquet(
-        graft.Materialize.toStoragePath(e.select("u", "v"), "kcore_e0"))
-    }
-    var aliveDeg = sharedDeg.map(_.select("x", "deg")).getOrElse(spark.read.parquet(
-      graft.Materialize.toStoragePath(degOf(alive), "kcore_d0")))
+    // round 0 is the input itself: the catalog passes partEdges and
+    // degFixture, flat fixture scans that ARE the round-0 storage
+    var alive = e.select("u", "v")
+    var aliveDeg = deg.select("x", "deg")
     val (v0, e0, _) = audit(aliveDeg, Long.MaxValue)
     val k = 2L * e0 / v0 + 1L
     // Bootstrap n_weak for round 1 with k now known — a second tiny agg
@@ -832,7 +742,7 @@ object Graph {
         // post-write audit scan job is gone; identical integers.
         val obs = org.apache.spark.sql.Observation()
         val nextDeg = spark.read.parquet(
-          graft.Materialize.toStoragePath(degOf(next).observe(obs,
+          graft.Materialize.toStoragePath(degrees(next).observe(obs,
             count(lit(1)).as("nv"),
             coalesce(sum(col("deg")), lit(0L)).as("sumdeg"),
             count(when(col("deg") < k, 1)).as("nweak")), s"kcore_d$r"))
@@ -878,11 +788,11 @@ object Graph {
   val TrussRounds = 4
 
   /** g12 core: K-TRUSS peel profile — the edge-support analog of g05's
-    * vertex k-core: each round computes per-edge triangle support with
-    * the SAME oriented-intersect kernel the triangle family shares
-    * (degAnnotatedEdges → orientedTrianglesFrom: shuffles carry only
-    * edges and O(√E)-bounded adjacency arrays, never Σdeg² wedge rows),
-    * then removes every edge in fewer than k−2 surviving triangles.
+    * vertex k-core over the `triangles` rows `tris` and their per-edge
+    * `support` table `supports` (the catalog passes trisFixture and
+    * supFixture — the oriented-intersect enumeration the triangle family
+    * shares, never Σdeg² wedge rows): each round removes every edge in
+    * fewer than k−2 surviving triangles.
     * Truss decomposition is the standard cohesion filter a co-purchase
     * graph gets before community mining (Cohen 2008, "Trusses:
     * cohesive subgraphs for social network analysis") — triangles, not
@@ -896,11 +806,9 @@ object Graph {
     * later read is a flat file scan; work per round ∝ the shrinking
     * survivor set).
     */
-  private[operators] def kTrussPeel(e: DataFrame,
-                                    rounds: Int = TrussRounds,
-                                    sharedTris: Option[DataFrame] = None,
-                                    sharedSup: Option[DataFrame] = None): DataFrame = {
-    val spark = e.sparkSession
+  private[operators] def kTrussPeel(tris: DataFrame, supports: DataFrame,
+                                    rounds: Int = TrussRounds): DataFrame = {
+    val spark = tris.sparkSession
     import spark.implicits._
     val minSup = KTrussK - 2L
     // SUPPORT-DECREMENT peel, the real k-truss algorithm: triangles are
@@ -926,19 +834,9 @@ object Graph {
     // oracle restates the peel as full per-layer recounts; the two are
     // equal by the same induction, and the sf0.01 gate + the K4/C5/K5/
     // shared-pair closed forms pin it.
-    // triangle source: the per-JVM shared fixture when the caller holds
-    // one (the catalog entry passes trisFixture — built once, read by
-    // g01/g04/g07/g12 alike), else the inline g01-kernel build. Either
-    // way each per-round read maps (a, b, c) → the three canonical edge
-    // keys in-row — a narrow projection over a flat scan.
-    val triSrc = sharedTris.getOrElse {
-      val wd = degAnnotatedEdges(e.select("u", "v"))
-      val t = spark.read.parquet(graft.Materialize.toStoragePath(
-        orientedTrianglesFrom(wd), "ktruss_tris"))
-      wd.unpersist()
-      t
-    }
-    val tris = triSrc.select(
+    // each per-round read maps (a, b, c) → the three canonical edge keys
+    // in-row — a narrow projection over a flat scan
+    val triKeys = tris.select(
       least(col("a"), col("b")).as("e1u"), greatest(col("a"), col("b")).as("e1v"),
       least(col("a"), col("c")).as("e2u"), greatest(col("a"), col("c")).as("e2v"),
       least(col("b"), col("c")).as("e3u"), greatest(col("b"), col("c")).as("e3v"))
@@ -972,7 +870,7 @@ object Graph {
     // min-degree is 38 at sf0.1 (42 at sf0.01), so the bound at k = 4
     // removes ZERO edges — dense projection graphs don't have the
     // degree-1/2 fringe the bound targets (SCALING.md g12 row).
-    var aliveTris: DataFrame = tris
+    var aliveTris: DataFrame = triKeys
     var converged = false
     var nEdges = 0L
     var nTris = 0L
@@ -996,22 +894,9 @@ object Graph {
       if (converged) (r.toLong, KTrussK, 0L, nEdges, nTris)
       else {
         if (r == 1) {
-          // round-1 full supports: the shared per-edge support fixture
-          // when the caller holds one (supFixture — the identical table
-          // g04 consumes), else the inline credits aggregation.
-          sup = sharedSup.map(_.select("u", "v", "sup")).getOrElse {
-            val credits = tris
-              .select(explode(array(
-                struct(col("e1u").as("u"), col("e1v").as("v")),
-                struct(col("e2u").as("u"), col("e2v").as("v")),
-                struct(col("e3u").as("u"), col("e3v").as("v")))).as("e"))
-              .select(col("e.u").as("u"), col("e.v").as("v"))
-              .groupBy("u", "v").agg(count(lit(1)).as("t"))
-            spark.read.parquet(graft.Materialize.toStoragePath(
-              e.select("u", "v").join(credits, Seq("u", "v"), "left")
-                .select(col("u"), col("v"), coalesce(col("t"), lit(0L)).as("sup")),
-              "ktruss_s1"))
-          }
+          // round-1 full supports: the input table (supFixture in the
+          // catalog — the identical table g04 consumes)
+          sup = supports.select("u", "v", "sup")
         } else {
           // newly-dead triangles: no edge removed before last round
           // (= the carried alive set), >= 1 edge removed last round —
@@ -1176,20 +1061,8 @@ object Graph {
     * scan plans, survives executor loss); the frequency argmax is a
     * min(struct(-cnt, lbl)) — no window sort over the message stream.
     */
-  private[operators] def lpaProfile(e: DataFrame,
+  private[operators] def lpaProfile(msgs: DataFrame, verts: DataFrame,
                                     rounds: Int = LpaRounds): DataFrame = {
-    val spark = e.sparkSession
-    val msgs = spark.read.parquet(graft.Materialize.toStoragePath(
-      e.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(e.select(col("v").as("src"), col("u").as("dst"))), "lpa_msgs"))
-    lpaProfileFromParts(msgs, msgs.select(col("dst").as("x")).distinct(), rounds)
-  }
-
-  /** g11 over pre-stored directed message edges ((src, dst) — msgsFixture
-    * works verbatim) and the vertex set.
-    */
-  private[operators] def lpaProfileFromParts(msgs: DataFrame, verts: DataFrame,
-                                             rounds: Int = LpaRounds): DataFrame = {
     val spark = msgs.sparkSession
     import spark.implicits._
     var lbls = spark.read.parquet(graft.Materialize.toStoragePath(
@@ -1228,78 +1101,16 @@ object Graph {
   }
 
   /** g04 core: per-edge neighborhood Jaccard — link-strength scoring (how
-    * substitutable are two co-purchased parts). |N(u)∩N(v)| for an edge is
+    * substitutable are two co-purchased parts) over the degEdges frame
+    * `wd` and the `support` table `sup`. |N(u)∩N(v)| for an edge is
     * exactly the number of triangles through it, so the common-neighbor
-    * counts come from g01's oriented adjacency-array intersection with the
-    * intersection MATERIALIZED (explode) instead of counted: rows produced
-    * = 3·|triangles| credit rows, never the Σ deg² wedge space, and every
-    * per-row array is degree-oriented (O(√E) bound). Jaccard =
-    * t / (du + dv − t) — one IEEE division of exact longs per edge, so
-    * ordering and values gate exactly.
+    * counts are the triangle supports: 3·|triangles| credit rows, never
+    * the Σ deg² wedge space. sup covers every edge (triangle-free edges
+    * carry 0), so the join is inner. Jaccard = t / (du + dv − t) — one
+    * IEEE division of exact longs per edge, so ordering and values gate
+    * exactly.
     */
-  /** One row per triangle {a, b, c}, each found exactly once on its
-    * degree-lowest edge (a, b) — g01's degree-oriented adjacency-array
-    * intersection with the intersection MATERIALIZED (explode) instead of
-    * counted. Shared by g04 (per-edge credits) and g07 (per-vertex
-    * credits). shuffle_hash, not sort-merge: the probe side carries two
-    * ~O(√E) LONG-array payloads per row, and sorting those heavy rows is
-    * the dominant 10×-probe cost; hashing builds on the (|V|-row)
-    * adjacency side and streams the edges unsorted.
-    */
-  private[operators] def orientedTriangles(e: DataFrame): DataFrame =
-    orientedTrianglesFrom(degAnnotatedEdges(e))
-
-  /** orientedTriangles for a caller that already holds the materialized
-    * degAnnotatedEdges frame (edgeJaccard's final join reuses it — no
-    * second degree derivation anywhere in the plan).
-    */
-  private[operators] def orientedTrianglesFrom(wd: DataFrame): DataFrame = {
-    val oriented = orientedFrom(wd)
-    val adj = orientedAdjacency(oriented)
-    oriented
-      .join(adj.select(col("x").as("a"), col("nbrs").as("na")).hint("shuffle_hash"), "a")
-      .join(adj.select(col("x").as("b"), col("nbrs").as("nb")).hint("shuffle_hash"), "b")
-      .select(col("a"), col("b"),
-        explode(graft.functions.ArrayFunctions.sorted_intersect(col("na"), col("nb"))).as("c"))
-  }
-
-  private[operators] def edgeJaccard(e: DataFrame, topK: Int): DataFrame = {
-    val wd = degAnnotatedEdges(e)
-    edgeJaccardFrom(wd, orientedTrianglesFrom(wd), topK)
-  }
-
-  /** g04 over pre-built (fixture-shared) frames: wd = degree-annotated
-    * edges, tris = the oriented triangle rows.
-    */
-  private[operators] def edgeJaccardFrom(wd: DataFrame, tris: DataFrame,
-                                         topK: Int): DataFrame = {
-    // 3 undirected edge credits per triangle
-    val credits = tris.select(
-      array(
-        struct(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v")),
-        struct(least(col("a"), col("c")).as("u"), greatest(col("a"), col("c")).as("v")),
-        struct(least(col("b"), col("c")).as("u"), greatest(col("b"), col("c")).as("v"))
-      ).as("es"))
-      .select(explode(col("es")).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .groupBy("u", "v").agg(count(lit(1)).as("t"))
-    // the final per-edge degree columns ride the SAME cached annotated
-    // frame — the pre-fix two extra degree joins are gone entirely
-    wd.join(credits, Seq("u", "v"), "left")
-      .select(col("u"), col("v"), coalesce(col("t"), lit(0L)).as("common_nbrs"),
-        col("du").as("deg_u"), col("dv").as("deg_v"))
-      .withColumn("jaccard", col("common_nbrs").cast("double") /
-        (col("deg_u") + col("deg_v") - col("common_nbrs")).cast("double"))
-      .orderBy(col("jaccard").desc, col("u").asc, col("v").asc)
-      .limit(topK)
-  }
-
-  /** g04 from the shared per-edge support table (supFixture) — sup covers
-    * every edge (triangle-free edges carry 0), so the inner join is the
-    * old left-join-with-coalesce verbatim.
-    */
-  private[operators] def edgeJaccardFromSup(wd: DataFrame, sup: DataFrame,
-                                            topK: Int): DataFrame =
+  private[operators] def edgeJaccard(wd: DataFrame, sup: DataFrame, topK: Int): DataFrame =
     wd.join(sup.select("u", "v", "sup"), Seq("u", "v"))
       .select(col("u"), col("v"), col("sup").as("common_nbrs"),
         col("du").as("deg_u"), col("dv").as("deg_v"))
@@ -1309,29 +1120,23 @@ object Graph {
       .limit(topK)
 
   /** g07 core: the LOCAL clustering-coefficient HISTOGRAM — per-vertex
-    * triangle counts from the shared orientedTriangles rows (3 vertex
-    * credits per triangle), bucketed by the integer floor of
-    * 10·cc(v) = (2·t·10) div (deg·(deg−1)) over the deg ≥ 2 vertices
-    * (cc is undefined below that), so the 11-bucket histogram is exact
-    * integer arithmetic end to end — no per-vertex double ever crosses
-    * the gate. Buckets keep the output metadata-sized where the raw
-    * per-vertex frame is |V| rows; zero-triangle vertices land in bucket
-    * 0 via the left join (they are the signal — g01's GLOBAL coefficient
-    * can't see a bimodal local structure, this histogram can).
+    * triangle counts from the `triangles` rows `tris` (3 vertex credits
+    * per triangle), bucketed by the integer floor of
+    * 10·cc(v) = (2·t·10) div (deg·(deg−1)) over the deg ≥ 2 vertices of
+    * the degEdges frame `wd` (cc is undefined below that), so the
+    * 11-bucket histogram is exact integer arithmetic end to end — no
+    * per-vertex double ever crosses the gate. Buckets keep the output
+    * metadata-sized where the raw per-vertex frame is |V| rows;
+    * zero-triangle vertices land in bucket 0 via the left join (they are
+    * the signal — g01's GLOBAL coefficient can't see a bimodal local
+    * structure, this histogram can).
     */
-  private[operators] def localClusteringHistogram(e: DataFrame): DataFrame = {
-    val wd = degAnnotatedEdges(e)
-    localClusteringHistogramFrom(wd, orientedTrianglesFrom(wd))
-  }
-
-  /** g07 over pre-built (fixture-shared) frames — see edgeJaccardFrom. */
-  private[operators] def localClusteringHistogramFrom(wd: DataFrame,
-                                                      tris: DataFrame): DataFrame = {
+  private[operators] def localClusteringHistogram(wd: DataFrame, tris: DataFrame): DataFrame = {
     val tv = tris
       .select(explode(array(col("a"), col("b"), col("c"))).as("z"))
       .groupBy("z").agg(count(lit(1)).as("t"))
-    // per-vertex degree from the cached annotated frame (one distinct,
-    // no second degree agg)
+    // per-vertex degree from the annotated frame (one distinct, no
+    // second degree agg)
     wd.select(col("u").as("x"), col("du").as("deg"))
       .unionAll(wd.select(col("v").as("x"), col("dv").as("deg"))).distinct()
       .filter(col("deg") >= 2)
@@ -1347,18 +1152,18 @@ object Graph {
     // TRIANGLE COUNT + global clustering coefficient. Degree-ordered
     // orientation → every triangle has exactly one source vertex with
     // both out-edges, so each is counted once — by intersecting the two
-    // endpoints' out-adjacency arrays in-row (see triangleStats for why
+    // endpoints' out-adjacency arrays in-row (see triangles for why
     // this beats a wedge join). All integers; the coefficient is one
     // IEEE division of exact longs — bit-identical across engines.
     "g01_triangle_count" -> ((s, dir) =>
-      triangleStatsFrom(degEdgesFixture(s, dir), trisFixture(s, dir))),
+      triangleStats(degEdgesFixture(s, dir), trisFixture(s, dir))),
 
     // One PAGERANK round from the uniform state: every vertex sends
     // floor(RankScale / deg) along each incident edge; rank = exact
     // integer sum of incoming contributions. Two broadcast-or-shuffled
     // hash joins + one hash agg — the shape every BSP/Pregel round
     // lowers to on Spark. Top-25 hubs by rank.
-    "g02_pagerank_step" -> ((s, dir) => pagerankStepFromMsgs(msgsFixture(s, dir), 25)),
+    "g02_pagerank_step" -> ((s, dir) => pagerankStep(msgsFixture(s, dir), 25)),
 
     // PAGERANK TO (TOWARD) CONVERGENCE — g02's round compounded for a
     // fixed 8 damped iterations, surfacing the CONVERGENCE PROFILE
@@ -1370,7 +1175,7 @@ object Graph {
     // the oracle unrolls the same 8 layers (g05's generated-layer
     // pattern).
     "g02b_pagerank_profile" -> ((s, dir) =>
-      pagerankProfileFromParts(msgsFixture(s, dir), degFixture(s, dir))),
+      pagerankProfile(msgsFixture(s, dir), degFixture(s, dir))),
 
     // Single-source BFS level histogram from the busiest part — reach/
     // hop-distance profiling (how many hops cover the catalog from the
@@ -1387,7 +1192,7 @@ object Graph {
     // by materializing g01's oriented intersections (3 credit rows per
     // triangle); all counts exact longs, one division per edge.
     "g04_edge_jaccard" -> ((s, dir) =>
-      edgeJaccardFromSup(degEdgesFixture(s, dir), supFixture(s, dir), 100)),
+      edgeJaccard(degEdgesFixture(s, dir), supFixture(s, dir), 100)),
 
     // K-CORE PEEL PROFILE — the density-filter audit of graph curation:
     // peel vertices below k = mean-degree+1 (data-derived, integer
@@ -1397,7 +1202,7 @@ object Graph {
     // peeling; on this near-regular fixture the cascade collapses the
     // graph — and the profile SHOWS it, which is the audit's job.
     "g05_kcore" -> ((s, dir) =>
-      kCorePeel(partEdges(s, dir), sharedDeg = Some(degFixture(s, dir)))),
+      kCorePeel(partEdges(s, dir), degFixture(s, dir))),
 
     // DEGREE ASSORTATIVITY — do hubs link to hubs (r > 0) or to leaves
     // (r < 0)? The one-number mixing audit a graph-curation pipeline
@@ -1409,7 +1214,7 @@ object Graph {
     // g01 clustering_coeff discipline). One degree join + one agg;
     // work-linear in |E| at any scale.
     "g06_assortativity" -> ((s, dir) =>
-      degreeAssortativityFromParts(msgsFixture(s, dir), degFixture(s, dir))),
+      degreeAssortativity(msgsFixture(s, dir), degFixture(s, dir))),
 
     // LOCAL CLUSTERING HISTOGRAM — the distributional companion to g01's
     // single global coefficient: how many vertices live at each tenth of
@@ -1421,7 +1226,7 @@ object Graph {
     // the wedge space); the bucket floor is integer cross-multiplication,
     // so the whole histogram is hash-exact.
     "g07_local_clustering" -> ((s, dir) =>
-      localClusteringHistogramFrom(degEdgesFixture(s, dir), trisFixture(s, dir))),
+      localClusteringHistogram(degEdgesFixture(s, dir), trisFixture(s, dir))),
 
     // CONNECTED-COMPONENTS CONVERGENCE PROFILE — min-label propagation
     // for 12 fixed rounds: per-round label movement, distinct-label
@@ -1433,7 +1238,7 @@ object Graph {
     // the answer). All integers — 12 compounded min-folds sit under the
     // hash gate against 12 generated MATERIALIZED oracle layers.
     "g08_cc_profile" -> ((s, dir) =>
-      ccProfileFromParts(msgsFixture(s, dir), degFixture(s, dir).select("x"))),
+      ccProfile(msgsFixture(s, dir), degFixture(s, dir).select("x"))),
 
     // DEGREE SPECTRUM — t31's frequency-spectrum audit lifted to the
     // graph: vertices per floor-log2-degree bucket (bitlength integers,
@@ -1443,7 +1248,7 @@ object Graph {
     // salting decisions both assume a heavy-tailed spectrum — this is
     // the audit that shows it. One |V|-row agg after the degree count;
     // everything downstream is ≤ 63 bucket rows.
-    "g09_degree_spectrum" -> ((s, dir) => degreeSpectrumFromDeg(degFixture(s, dir))),
+    "g09_degree_spectrum" -> ((s, dir) => degreeSpectrum(degFixture(s, dir))),
 
     // PROJECTION-COST AUDIT — the planning check run BEFORE building the
     // co-purchase graph: partPairs' cost is Σ_orders k(k−1)/2 (each
@@ -1464,14 +1269,13 @@ object Graph {
     // engines); output is the convergence PROFILE with a modular label
     // checksum pinning the assignment itself. See lpaProfile.
     "g11_lpa_communities" -> ((s, dir) =>
-      lpaProfileFromParts(msgsFixture(s, dir), degFixture(s, dir).select("x"))),
+      lpaProfile(msgsFixture(s, dir), degFixture(s, dir).select("x"))),
 
     // K-TRUSS peel profile: triangle-support cohesion filter (see
     // kTrussPeel). One oriented-intersect triangle pass + one edge-keyed
     // count agg per round, survivors scratch-carried.
     "g12_ktruss" -> ((s, dir) =>
-      kTrussPeel(partEdges(s, dir), sharedTris = Some(trisFixture(s, dir)),
-        sharedSup = Some(supFixture(s, dir)))),
+      kTrussPeel(trisFixture(s, dir), supFixture(s, dir))),
 
     // HITS hubs/authorities on the customer-part bipartite graph (see
     // hitsProfile). Two |E|-row join+agg shuffles per round, max-
@@ -1483,13 +1287,13 @@ object Graph {
     // re-injected at the seeds — the seed-expansion ranking behind
     // related-item panels and known-good-document curation harvests.
     "g14_ppr" -> ((s, dir) =>
-      pprRanksFromParts(msgsFixture(s, dir), degFixture(s, dir))),
+      pprRanks(msgsFixture(s, dir), degFixture(s, dir))),
 
     // Degree-capped neighbor sampling (see neighborSample): the
     // GraphSAGE fan-out bound as a deterministic hash-rank pick, with
     // the per-degree-bucket kept/dropped census and a selection
     // checksum under the hash gate.
-    "g15_neighbor_sample" -> ((s, dir) => neighborSampleFromMsgs(msgsFixture(s, dir)))
+    "g15_neighbor_sample" -> ((s, dir) => neighborSample(msgsFixture(s, dir)))
   )
 
   /** g10 core over (ok, pk) rows — extracted for closed-form baskets. */
@@ -1509,14 +1313,10 @@ object Graph {
       .orderBy("kb")
   }
 
-  /** g09 core over undirected (u < v) edges — extracted for closed-form
-    * graphs (a star's hub/leaf split, K4's single regular bucket).
+  /** g09 core over a `degrees` table — closed-form graphs (a star's
+    * hub/leaf split, K4's single regular bucket) pin it.
     */
-  private[operators] def degreeSpectrum(e: DataFrame): DataFrame =
-    degreeSpectrumFromDeg(degrees(e))
-
-  /** g09 from a pre-built degree table (degFixture). */
-  private[operators] def degreeSpectrumFromDeg(deg: DataFrame): DataFrame = {
+  private[operators] def degreeSpectrum(deg: DataFrame): DataFrame = {
     val tot = deg.agg(count(lit(1)).as("nv"), sum("deg").as("m2"))
     deg.groupBy((length(bin(col("deg"))) - 1).cast("long").as("db"))
       .agg(count(lit(1)).as("n_vertices"), sum("deg").as("deg_mass"),
@@ -1528,6 +1328,45 @@ object Graph {
         (col("deg_mass").cast("double") / col("m2").cast("double")).as("mass_share"))
       .orderBy("db")
   }
+
+  /** g10's basket rows: `li(ok, pk)`, the distinct (order, part) pairs. */
+  private val duckLiCte: String =
+    """li AS (
+      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
+      |)""".stripMargin
+
+  /** duckLiCte plus partEdges restated: `<edges>(u, v)`, u < v. */
+  private def duckEdgeCtes(edges: String = "e", mat: Boolean = true): String =
+    s"""$duckLiCte, $edges AS ${if (mat) "MATERIALIZED " else ""}(
+       |  SELECT DISTINCT a.pk AS u, b.pk AS v
+       |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
+       |)""".stripMargin
+
+  /** `deg(x, deg)`: degFixture over duckEdgeCtes' `e`. */
+  private val duckDegCte: String =
+    """deg AS (
+      |  SELECT x, COUNT(*) AS deg
+      |  FROM (SELECT u AS x FROM e UNION ALL SELECT v AS x FROM e)
+      |  GROUP BY x
+      |)""".stripMargin
+
+  /** duckDegCte plus `o(a, b)`: every edge oriented from its (deg, id)-
+    * lower endpoint — `oriented` restated.
+    */
+  private val duckOrientedCtes: String =
+    s"""$duckDegCte, o AS (
+       |  SELECT CASE WHEN (du.deg, e.u) < (dv.deg, e.v) THEN e.u ELSE e.v END AS a,
+       |         CASE WHEN (du.deg, e.u) < (dv.deg, e.v) THEN e.v ELSE e.u END AS b
+       |  FROM e JOIN deg du ON du.x = e.u JOIN deg dv ON dv.x = e.v
+       |)""".stripMargin
+
+  /** duckEdgeCtes plus `nb(src, dst)`, every edge both ways —
+    * msgsFixture's rows without the degree.
+    */
+  private def duckMsgCtes(edgesMat: Boolean = true, mat: Boolean = true): String =
+    s"""${duckEdgeCtes(mat = edgesMat)}, nb AS ${if (mat) "MATERIALIZED " else ""}(
+       |  SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e
+       |)""".stripMargin
 
   def oracles: Map[String, String] = Map(
     // the peel unrolled to exactly TrussRounds layers: per round the
@@ -1569,12 +1408,7 @@ object Graph {
       }.mkString(",\n")
       val unionAll = (1 to TrussRounds)
         .map(i => s"SELECT * FROM row$i").mkString("\n|", "\n|UNION ALL ", "")
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-         |), te0 AS MATERIALIZED (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-         |),
+      s"""WITH ${duckEdgeCtes("te0")},
          |$layers
          |SELECT * FROM ($unionAll
          |) ORDER BY round""".stripMargin
@@ -1632,14 +1466,7 @@ object Graph {
            |  FROM m$i m LEFT JOIN seeds s ON s.x = m.x
            |)""".stripMargin
       }.mkString(",\n")
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-         |), e AS MATERIALIZED (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-         |), nb AS MATERIALIZED (
-         |  SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e
-         |), deg AS MATERIALIZED (
+      s"""WITH ${duckMsgCtes()}, deg AS MATERIALIZED (
          |  SELECT src AS x, COUNT(*) AS deg FROM nb GROUP BY src
          |), seeds AS MATERIALIZED (
          |  SELECT x, CAST($seedBase AS BIGINT) AS sb FROM deg
@@ -1661,14 +1488,7 @@ object Graph {
     // (p14's machinery) on the same combined key; window + census
     // restated verbatim
     "g15_neighbor_sample" ->
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-         |), e AS MATERIALIZED (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-         |), nb AS (
-         |  SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e
-         |), ids AS (
+      s"""WITH ${duckMsgCtes(true, false)}, ids AS (
          |  SELECT src, dst, CAST(src * 100000007 + dst AS HUGEINT) AS x FROM nb
          |), ${DuckHash.xxhash64LongCtes("src, dst")}, r AS (
          |  SELECT src, dst, hv,
@@ -1719,14 +1539,7 @@ object Graph {
       }.mkString(",\n")
       val unionAll = (1 to LpaRounds).map(i => s"SELECT * FROM row$i")
         .mkString("\n|", "\n|UNION ALL ", "")
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-         |), e AS MATERIALIZED (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-         |), nb AS MATERIALIZED (
-         |  SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e
-         |), l0 AS MATERIALIZED (
+      s"""WITH ${duckMsgCtes()}, l0 AS MATERIALIZED (
          |  SELECT DISTINCT dst AS x, dst AS lbl FROM nb
          |),
          |$layers$unionAll
@@ -1735,9 +1548,7 @@ object Graph {
 
     // the same per-order pair arithmetic; SUMs cast back to BIGINT
     "g10_projection_cost" ->
-      """WITH li AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-        |), sz AS (
+      s"""WITH $duckLiCte, sz AS (
         |  SELECT ok, COUNT(*) AS k FROM li GROUP BY ok
         |), tot AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -1758,12 +1569,7 @@ object Graph {
     // the shared edge CTE + t31's bitlength bucketing; SUMs cast back to
     // BIGINT (dtype-strict rule)
     "g09_degree_spectrum" ->
-      """WITH li AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-        |), e AS MATERIALIZED (
-        |  SELECT DISTINCT a.pk AS u, b.pk AS v
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-        |), deg AS (
+      s"""WITH ${duckEdgeCtes()}, deg AS (
         |  SELECT x, COUNT(*) AS deg
         |  FROM (SELECT u AS x FROM e UNION ALL SELECT v FROM e)
         |  GROUP BY x
@@ -1782,20 +1588,7 @@ object Graph {
         |ORDER BY db""".stripMargin,
 
     "g01_triangle_count" ->
-      """WITH li AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-        |), e AS (
-        |  SELECT DISTINCT a.pk AS u, b.pk AS v
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-        |), deg AS (
-        |  SELECT x, COUNT(*) AS deg
-        |  FROM (SELECT u AS x FROM e UNION ALL SELECT v AS x FROM e)
-        |  GROUP BY x
-        |), o AS (
-        |  SELECT CASE WHEN (du.deg, e.u) < (dv.deg, e.v) THEN e.u ELSE e.v END AS a,
-        |         CASE WHEN (du.deg, e.u) < (dv.deg, e.v) THEN e.v ELSE e.u END AS b
-        |  FROM e JOIN deg du ON du.x = e.u JOIN deg dv ON dv.x = e.v
-        |), wedge AS (
+      s"""WITH ${duckEdgeCtes(mat = false)}, $duckOrientedCtes, wedge AS (
         |  SELECT e1.b AS x, e2.b AS y
         |  FROM o e1 JOIN o e2 ON e1.a = e2.a AND e1.b < e2.b
         |), tri AS (
@@ -1811,16 +1604,7 @@ object Graph {
         |FROM stats, tri""".stripMargin,
 
     "g02_pagerank_step" ->
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-         |), e AS (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-         |), deg AS (
-         |  SELECT x, COUNT(*) AS deg
-         |  FROM (SELECT u AS x FROM e UNION ALL SELECT v AS x FROM e)
-         |  GROUP BY x
-         |), msgs AS (
+      s"""WITH ${duckEdgeCtes(mat = false)}, $duckDegCte, msgs AS (
          |  SELECT m.dst, $RankScale // d.deg AS contrib
          |  FROM (SELECT u AS src, v AS dst FROM e
          |        UNION ALL SELECT v AS src, u AS dst FROM e) m
@@ -1857,14 +1641,7 @@ object Graph {
       }.mkString(",\n")
       val unionAll = (1 to PageRankRounds).map(i => s"SELECT * FROM row$i")
         .mkString("\n|", "\n|UNION ALL ", "")
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-         |), e AS MATERIALIZED (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-         |), nb AS MATERIALIZED (
-         |  SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e
-         |), deg AS MATERIALIZED (
+      s"""WITH ${duckMsgCtes()}, deg AS MATERIALIZED (
          |  SELECT src AS x, COUNT(*) AS deg FROM nb GROUP BY src
          |), r0 AS MATERIALIZED (
          |  SELECT x, CAST($RankScale AS BIGINT) AS rank FROM deg
@@ -1878,14 +1655,7 @@ object Graph {
     // terminates on cycles; MIN(lvl) per vertex = the BFS level whenever
     // the true level < cap (the Spark side throws past the same cap)
     "g03_bfs_levels" ->
-      s"""WITH RECURSIVE li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-         |), e AS (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-         |), nb AS (
-         |  SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e
-         |), deg AS (
+      s"""WITH RECURSIVE ${duckMsgCtes(false, false)}, deg AS (
          |  SELECT src, COUNT(*) AS deg FROM nb GROUP BY src
          |), root AS (
          |  SELECT src FROM deg ORDER BY deg DESC, src ASC LIMIT 1
@@ -1905,14 +1675,7 @@ object Graph {
     // common neighbors restated as the direct two-hop join (oracle-scale
     // only); jaccard = the same single division of exact BIGINTs
     "g04_edge_jaccard" ->
-      """WITH li AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-        |), e AS (
-        |  SELECT DISTINCT a.pk AS u, b.pk AS v
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-        |), nb AS (
-        |  SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e
-        |), deg AS (
+      s"""WITH ${duckMsgCtes(false, false)}, deg AS (
         |  SELECT src AS x, COUNT(*) AS deg FROM nb GROUP BY src
         |), t AS (
         |  SELECT e.u, e.v, COUNT(*) AS common
@@ -1961,12 +1724,7 @@ object Graph {
            |)""".stripMargin
       }.mkString(",\n")
       val unionAll = (1 to MaxPeelRounds).map(i => s"SELECT * FROM row$i").mkString("\n|", "\n|UNION ALL ", "")
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-         |), e0 AS MATERIALIZED (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-         |), kk AS MATERIALIZED (
+      s"""WITH ${duckEdgeCtes("e0")}, kk AS MATERIALIZED (
          |  SELECT 2 * (SELECT COUNT(*) FROM e0)
          |    // (SELECT COUNT(DISTINCT x)
          |        FROM (SELECT u AS x FROM e0 UNION ALL SELECT v FROM e0)) + 1 AS k
@@ -1980,12 +1738,7 @@ object Graph {
     // — the values themselves fit BIGINT, so both engines' doubles come
     // from identical integers
     "g06_assortativity" ->
-      """WITH li AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-        |), e AS MATERIALIZED (
-        |  SELECT DISTINCT a.pk AS u, b.pk AS v
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-        |), nb AS (
+      s"""WITH ${duckEdgeCtes()}, nb AS (
         |  SELECT u AS i, v AS j FROM e UNION ALL SELECT v, u FROM e
         |), deg AS (
         |  SELECT i AS x, COUNT(*) AS deg FROM nb GROUP BY i
@@ -2007,20 +1760,7 @@ object Graph {
     // triangle credits its three vertices once; the bucket floor is the
     // same integer cross-multiplication (2·t·10) // (deg·(deg−1))
     "g07_local_clustering" ->
-      """WITH li AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-        |), e AS MATERIALIZED (
-        |  SELECT DISTINCT a.pk AS u, b.pk AS v
-        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-        |), deg AS (
-        |  SELECT x, COUNT(*) AS deg
-        |  FROM (SELECT u AS x FROM e UNION ALL SELECT v AS x FROM e)
-        |  GROUP BY x
-        |), o AS (
-        |  SELECT CASE WHEN (du.deg, e.u) < (dv.deg, e.v) THEN e.u ELSE e.v END AS a,
-        |         CASE WHEN (du.deg, e.u) < (dv.deg, e.v) THEN e.v ELSE e.u END AS b
-        |  FROM e JOIN deg du ON du.x = e.u JOIN deg dv ON dv.x = e.v
-        |), wedge AS (
+      s"""WITH ${duckEdgeCtes()}, $duckOrientedCtes, wedge AS (
         |  SELECT e1.a AS a, e1.b AS x, e2.b AS y
         |  FROM o e1 JOIN o e2 ON e1.a = e2.a AND e1.b < e2.b
         |), tri AS (
@@ -2064,14 +1804,7 @@ object Graph {
       }.mkString(",\n")
       val unionAll = (1 to CcRounds).map(i => s"SELECT * FROM row$i")
         .mkString("\n|", "\n|UNION ALL ", "")
-      s"""WITH li AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-         |), e AS MATERIALIZED (
-         |  SELECT DISTINCT a.pk AS u, b.pk AS v
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-         |), nb AS MATERIALIZED (
-         |  SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e
-         |), l0 AS MATERIALIZED (
+      s"""WITH ${duckMsgCtes()}, l0 AS MATERIALIZED (
          |  SELECT src AS x, src AS lab FROM nb GROUP BY src
          |),
          |$layers

@@ -403,6 +403,51 @@ object Layout {
       .orderBy("q")
   }
 
+  /** z01's key scaling: `bounds` the part/supplier key ranges, `scaled`
+    * every lineitem with both keys scaled to 16 bits (`xb`, `yb`).
+    */
+  private val duckScaledCtes: String =
+    """bounds AS (
+      |  SELECT MIN(l_partkey) AS pk0, MAX(l_partkey) AS pk1,
+      |         MIN(l_suppkey) AS sk0, MAX(l_suppkey) AS sk1
+      |  FROM lineitem
+      |), scaled AS (
+      |  SELECT l_partkey, l_suppkey,
+      |    (l_partkey - pk0) * 65536 // (pk1 - pk0 + 1) AS xb,
+      |    (l_suppkey - sk0) * 65536 // (sk1 - sk0 + 1) AS yb
+      |  FROM lineitem CROSS JOIN bounds
+      |)""".stripMargin
+
+  /** z03's zone-skipping audit over `zones(<keys>, bucket, n, min/max
+    * keys)` and `bounds`: `probes` the four quarter-range boxes,
+    * `touched` the buckets and rows each probe reads per `keys` group,
+    * `exact(q, rows_matching, rows_total)` the true match counts.
+    */
+  private def duckProbeCtes(keys: String): String =
+    s"""probes AS (
+       |  SELECT q,
+       |    pk0 + (pk1 - pk0 + 1) * q // 4 AS lo_pk,
+       |    pk0 + (pk1 - pk0 + 1) * (q + 1) // 4 - 1 AS hi_pk,
+       |    sk0 + (sk1 - sk0 + 1) * q // 4 AS lo_sk,
+       |    sk0 + (sk1 - sk0 + 1) * (q + 1) // 4 - 1 AS hi_sk
+       |  FROM bounds, unnest(range(0, 4)) AS t(q)
+       |), touched AS (
+       |  SELECT $keys, COUNT(*) AS n_buckets,
+       |    CAST(SUM(CASE WHEN min_pk <= hi_pk AND max_pk >= lo_pk
+       |               AND min_sk <= hi_sk AND max_sk >= lo_sk THEN 1 ELSE 0 END) AS BIGINT) AS n_touched,
+       |    CAST(SUM(CASE WHEN min_pk <= hi_pk AND max_pk >= lo_pk
+       |               AND min_sk <= hi_sk AND max_sk >= lo_sk THEN n ELSE 0 END) AS BIGINT) AS rows_scanned
+       |  FROM zones CROSS JOIN probes
+       |  GROUP BY $keys
+       |), exact AS (
+       |  SELECT q,
+       |    COUNT(CASE WHEN l_partkey BETWEEN lo_pk AND hi_pk
+       |               AND l_suppkey BETWEEN lo_sk AND hi_sk THEN 1 END) AS rows_matching,
+       |    COUNT(*) AS rows_total
+       |  FROM lineitem CROSS JOIN probes
+       |  GROUP BY q
+       |)""".stripMargin
+
   def oracles: Map[String, String] = Map(
     // the whole bloom pipeline restated: DuckHash chain for xxhash64 of
     // the key, the same pmod-before-div bit split, the same relational
@@ -491,29 +536,7 @@ object Layout {
          |    MIN(l_partkey) AS min_pk, MAX(l_partkey) AS max_pk,
          |    MIN(l_suppkey) AS min_sk, MAX(l_suppkey) AS max_sk
          |  FROM lb GROUP BY layout, bucket
-         |), probes AS (
-         |  SELECT q,
-         |    pk0 + (pk1 - pk0 + 1) * q // 4 AS lo_pk,
-         |    pk0 + (pk1 - pk0 + 1) * (q + 1) // 4 - 1 AS hi_pk,
-         |    sk0 + (sk1 - sk0 + 1) * q // 4 AS lo_sk,
-         |    sk0 + (sk1 - sk0 + 1) * (q + 1) // 4 - 1 AS hi_sk
-         |  FROM bounds, unnest(range(0, 4)) AS t(q)
-         |), touched AS (
-         |  SELECT layout, q, COUNT(*) AS n_buckets,
-         |    CAST(SUM(CASE WHEN min_pk <= hi_pk AND max_pk >= lo_pk
-         |               AND min_sk <= hi_sk AND max_sk >= lo_sk THEN 1 ELSE 0 END) AS BIGINT) AS n_touched,
-         |    CAST(SUM(CASE WHEN min_pk <= hi_pk AND max_pk >= lo_pk
-         |               AND min_sk <= hi_sk AND max_sk >= lo_sk THEN n ELSE 0 END) AS BIGINT) AS rows_scanned
-         |  FROM zones CROSS JOIN probes
-         |  GROUP BY layout, q
-         |), exact AS (
-         |  SELECT q,
-         |    COUNT(CASE WHEN l_partkey BETWEEN lo_pk AND hi_pk
-         |               AND l_suppkey BETWEEN lo_sk AND hi_sk THEN 1 END) AS rows_matching,
-         |    COUNT(*) AS rows_total
-         |  FROM lineitem CROSS JOIN probes
-         |  GROUP BY q
-         |), ranked AS (
+         |), ${duckProbeCtes("layout, q")}, ranked AS (
          |  SELECT t.q, t.layout, t.n_buckets, t.n_touched, t.rows_scanned,
          |    e.rows_matching,
          |    t.rows_scanned::DOUBLE / e.rows_total::DOUBLE AS scan_fraction,
@@ -577,16 +600,7 @@ object Layout {
 
     "z01_zorder_layout" -> {
       val z = zExpr("xb", "yb")
-      s"""WITH bounds AS (
-         |  SELECT MIN(l_partkey) AS pk0, MAX(l_partkey) AS pk1,
-         |         MIN(l_suppkey) AS sk0, MAX(l_suppkey) AS sk1
-         |  FROM lineitem
-         |), scaled AS (
-         |  SELECT l_partkey, l_suppkey,
-         |    (l_partkey - pk0) * 65536 // (pk1 - pk0 + 1) AS xb,
-         |    (l_suppkey - sk0) * 65536 // (sk1 - sk0 + 1) AS yb
-         |  FROM lineitem CROSS JOIN bounds
-         |), z AS (
+      s"""WITH $duckScaledCtes, z AS (
          |  SELECT l_partkey, l_suppkey, ($z) AS zval FROM scaled
          |), b AS (
          |  SELECT l_partkey, l_suppkey, zval // $ZBucketDiv AS bucket FROM z
@@ -602,45 +616,14 @@ object Layout {
 
     "z03_zone_skipping" -> {
       val z = zExpr("xb", "yb")
-      s"""WITH bounds AS (
-         |  SELECT MIN(l_partkey) AS pk0, MAX(l_partkey) AS pk1,
-         |         MIN(l_suppkey) AS sk0, MAX(l_suppkey) AS sk1
-         |  FROM lineitem
-         |), scaled AS (
-         |  SELECT l_partkey, l_suppkey,
-         |    (l_partkey - pk0) * 65536 // (pk1 - pk0 + 1) AS xb,
-         |    (l_suppkey - sk0) * 65536 // (sk1 - sk0 + 1) AS yb
-         |  FROM lineitem CROSS JOIN bounds
-         |), b AS (
+      s"""WITH $duckScaledCtes, b AS (
          |  SELECT l_partkey, l_suppkey, ($z) // $ZBucketDiv AS bucket FROM scaled
          |), zones AS (
          |  SELECT bucket, COUNT(*) AS n,
          |    MIN(l_partkey) AS min_pk, MAX(l_partkey) AS max_pk,
          |    MIN(l_suppkey) AS min_sk, MAX(l_suppkey) AS max_sk
          |  FROM b GROUP BY bucket
-         |), probes AS (
-         |  SELECT q,
-         |    pk0 + (pk1 - pk0 + 1) * q // 4 AS lo_pk,
-         |    pk0 + (pk1 - pk0 + 1) * (q + 1) // 4 - 1 AS hi_pk,
-         |    sk0 + (sk1 - sk0 + 1) * q // 4 AS lo_sk,
-         |    sk0 + (sk1 - sk0 + 1) * (q + 1) // 4 - 1 AS hi_sk
-         |  FROM bounds, unnest(range(0, 4)) AS t(q)
-         |), touched AS (
-         |  SELECT q, COUNT(*) AS n_buckets,
-         |    CAST(SUM(CASE WHEN min_pk <= hi_pk AND max_pk >= lo_pk
-         |               AND min_sk <= hi_sk AND max_sk >= lo_sk THEN 1 ELSE 0 END) AS BIGINT) AS n_touched,
-         |    CAST(SUM(CASE WHEN min_pk <= hi_pk AND max_pk >= lo_pk
-         |               AND min_sk <= hi_sk AND max_sk >= lo_sk THEN n ELSE 0 END) AS BIGINT) AS rows_scanned
-         |  FROM zones CROSS JOIN probes
-         |  GROUP BY q
-         |), exact AS (
-         |  SELECT q,
-         |    COUNT(CASE WHEN l_partkey BETWEEN lo_pk AND hi_pk
-         |               AND l_suppkey BETWEEN lo_sk AND hi_sk THEN 1 END) AS rows_matching,
-         |    COUNT(*) AS rows_total
-         |  FROM lineitem CROSS JOIN probes
-         |  GROUP BY q
-         |)
+         |), ${duckProbeCtes("q")}
          |SELECT t.q, n_buckets, n_touched, rows_scanned, rows_matching,
          |  rows_scanned::DOUBLE / rows_total::DOUBLE AS scan_fraction
          |FROM touched t JOIN exact e ON e.q = t.q

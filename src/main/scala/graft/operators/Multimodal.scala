@@ -246,7 +246,7 @@ object Multimodal {
     * banded pair set.
     */
   private[graft] def phashPairsShared(s: SparkSession, dir: String): DataFrame =
-    graft.Materialize.fixture(s, s"mx-phash|$dir")(
+    graft.Materialize.fixture(s, "mx-phash", dir)(
       phashPairs(Tables.documents(s, dir).select(col("doc_id"), col("text"))))
 
   private[operators] def phashPairs(docs: DataFrame): DataFrame = {
@@ -801,6 +801,106 @@ object Multimodal {
     Resized(d.doc_id, d.width, d.height, dw, dh, scale, dw.toLong * dh * d.n_channels)
   }
 
+  /** m08's frame signatures: `c(doc_id, byte, pos)` the bytes of every
+    * non-empty payload, `fr(doc_id, f, sig)` each FrameStride-byte
+    * frame's byte sum.
+    */
+  private val duckFrameSigCtes: String =
+    s"""c AS (
+       |  SELECT doc_id, unnest([ascii(text[i]) for i in range(1, len(text)+1)]) AS byte,
+       |    unnest(range(0, len(text))) AS pos
+       |  FROM documents WHERE strlen(text) > 0
+       |), fr AS (
+       |  SELECT doc_id, pos // $FrameStride AS f, SUM(byte) AS sig
+       |  FROM c GROUP BY doc_id, pos // $FrameStride
+       |)""".stripMargin
+
+  /** m10's shot segmentation over duckFrameSigCtes: `d` flags a cut
+    * frame, `sid` numbers the shots, `sh(doc_id, f, sig, shot_idx, rk)`
+    * ranks each shot's frames by (sig DESC, f ASC). m12 keys videos on
+    * the same keyframes.
+    */
+  private val duckShotCtes: String =
+    s"""$duckFrameSigCtes, d AS (
+       |  SELECT doc_id, f, sig,
+       |    CASE WHEN f > 0 AND abs(sig - LAG(sig) OVER (PARTITION BY doc_id ORDER BY f))
+       |      > $CutThreshold THEN 1 ELSE 0 END AS is_cut
+       |  FROM fr
+       |), sid AS (
+       |  SELECT doc_id, f, sig,
+       |    SUM(is_cut) OVER (PARTITION BY doc_id ORDER BY f) AS shot_idx
+       |  FROM d
+       |), sh AS (
+       |  SELECT doc_id, f, sig, shot_idx,
+       |    ROW_NUMBER() OVER (PARTITION BY doc_id, shot_idx
+       |      ORDER BY sig DESC, f ASC) AS rk
+       |  FROM sid
+       |)""".stripMargin
+
+  /** m07's frame energies: `s` the 16-bit sample indexes `[0, siEnd)` of
+    * payloads of at least `minLen` chars, `v` each sample's value in
+    * frame `si // frameSamples`, `fr(doc_id, f, e<frameCols>)` each
+    * frame's energy.
+    */
+  private def duckAudioFrameCtes(siEnd: String, minLen: String, frameSamples: Int,
+                                 frameCols: String = ""): String =
+    s"""s AS (
+       |  SELECT doc_id, text, unnest(range(0, $siEnd)) AS si
+       |  FROM documents WHERE strlen(text) >= $minLen
+       |), v AS (
+       |  SELECT doc_id, si // $frameSamples AS f,
+       |    (ascii(text[(2*si+1)::INT]) + 256 * ascii(text[(2*si+2)::INT]))::BIGINT AS smp
+       |  FROM s
+       |), fr AS (
+       |  SELECT doc_id, f, SUM(smp * smp) AS e$frameCols
+       |  FROM v GROUP BY doc_id, f
+       |)""".stripMargin
+
+  /** m09's perceptual hash: `elig` the payloads of at least PhashMinLen
+    * chars, `bits(doc_id, i, bit)` the probe comparisons, `<bands>(doc_id,
+    * b, v)` the four 16-bit bands, `<hashes>(doc_id, vs)` the band list.
+    */
+  private[graft] def duckPhashCtes(bands: String = "bands", hashes: String = "h",
+                                   alias: String = "t"): String =
+    s"""elig AS (
+       |  SELECT doc_id, text FROM documents WHERE strlen(text) >= $PhashMinLen
+       |), bits AS (
+       |  SELECT doc_id, i,
+       |    CASE WHEN ascii(text[($PhashStride*i+1)::INT])
+       |           > ascii(text[($PhashStride*i+${PhashStride + 1})::INT])
+       |         THEN 1 ELSE 0 END AS bit
+       |  FROM elig, unnest(range(0, $PhashBits)) AS $alias(i)
+       |), $bands AS (
+       |  SELECT doc_id, (i // 16)::INT AS b,
+       |    SUM(bit * (1::BIGINT << (i % 16)::INT))::BIGINT AS v
+       |  FROM bits GROUP BY doc_id, (i // 16)::INT
+       |), $hashes AS (
+       |  SELECT doc_id, list(v ORDER BY b) AS vs FROM $bands GROUP BY doc_id
+       |)""".stripMargin
+
+  /** Hamming distance of two four-band lists `<a>.vs`, `<b>.vs`. */
+  private[graft] def duckHamming(a: String, b: String): String =
+    s"""bit_count(xor($a.vs[1], $b.vs[1])) + bit_count(xor($a.vs[2], $b.vs[2]))
+       |       + bit_count(xor($a.vs[3], $b.vs[3])) + bit_count(xor($a.vs[4], $b.vs[4]))""".stripMargin
+
+  /** `pairs(doc_a, doc_b, dist)`: every id-ordered pair of `h` rows with
+    * its Hamming distance (m09's and m15's brute-force pairs).
+    */
+  private val duckHamPairsCte: String =
+    s"""pairs AS (
+       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |    CAST(${duckHamming("a", "b")}
+       |      AS BIGINT) AS dist
+       |  FROM h a JOIN h b ON a.doc_id < b.doc_id
+       |)""".stripMargin
+
+  /** m02's rolling fold of the payload's code points, mod 2^64. */
+  private val duckByteFold: String =
+    s"""list_reduce(list_prepend(CAST(0 AS HUGEINT),
+       |      list_transform(list_filter(string_split(text, ''), c -> len(c) > 0),
+       |        c -> CAST(unicode(c) AS HUGEINT))),
+       |      (a, b) -> (a * 1315423911 + b) % ${DuckHash.T})""".stripMargin
+
   def oracles: Map[String, String] = Map(
     "m06_modality_coverage" ->
       """SELECT COALESCE(source, '<no_doc>') AS source,
@@ -819,7 +919,7 @@ object Multimodal {
     "m13_multimodal_pack" ->
       s"""WITH t AS (
          |  SELECT doc_id, source,
-         |    CAST(len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS BIGINT) AS txt_tokens,
+         |    CAST(len(${DuckSql.tokens}) AS BIGINT) AS txt_tokens,
          |    (strlen(text) + ${PatchBytes - 1}) // $PatchBytes AS media_tokens
          |  FROM documents
          |), c AS (
@@ -867,17 +967,7 @@ object Multimodal {
     // same ASCII-fixture precondition as m01 (chars ⇔ bytes); sample si
     // is bytes (2si, 2si+1) = text chars (2si+1, 2si+2) in 1-based DuckDB
     "m07_audio_energy" ->
-      s"""WITH s AS (
-         |  SELECT doc_id, text, unnest(range(0, strlen(text) // 2)) AS si
-         |  FROM documents WHERE strlen(text) >= 2
-         |), v AS (
-         |  SELECT doc_id, si // $AudioFrameSamples AS f,
-         |    (ascii(text[(2*si+1)::INT]) + 256 * ascii(text[(2*si+2)::INT]))::BIGINT AS smp
-         |  FROM s
-         |), fr AS (
-         |  SELECT doc_id, f, SUM(smp * smp) AS e, COUNT(*) AS n
-         |  FROM v GROUP BY doc_id, f
-         |), agg AS (
+      s"""WITH ${duckAudioFrameCtes("strlen(text) // 2", "2", AudioFrameSamples, ", COUNT(*) AS n")}, agg AS (
          |  SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_samples, COUNT(*) AS n_frames,
          |    CAST(SUM(e) AS BIGINT) AS total_energy, CAST(MAX(e) AS BIGINT) AS peak_energy
          |  FROM fr GROUP BY doc_id
@@ -891,17 +981,7 @@ object Multimodal {
     // m07's frame CTEs + the relative gate: loud ⟺ e·4 ≥ doc peak; the
     // kept range is [min loud, max loud] (interior pauses stay)
     "m11_silence_trim" ->
-      s"""WITH s AS (
-         |  SELECT doc_id, text, unnest(range(0, strlen(text) // 2)) AS si
-         |  FROM documents WHERE strlen(text) >= 2
-         |), v AS (
-         |  SELECT doc_id, si // $AudioFrameSamples AS f,
-         |    (ascii(text[(2*si+1)::INT]) + 256 * ascii(text[(2*si+2)::INT]))::BIGINT AS smp
-         |  FROM s
-         |), fr AS (
-         |  SELECT doc_id, f, SUM(smp * smp) AS e
-         |  FROM v GROUP BY doc_id, f
-         |), pk AS (
+      s"""WITH ${duckAudioFrameCtes("strlen(text) // 2", "2", AudioFrameSamples)}, pk AS (
          |  SELECT doc_id, MAX(e) AS peak, COUNT(*) AS nf FROM fr GROUP BY doc_id
          |), loud AS (
          |  SELECT fr.doc_id, MIN(f) AS first_loud, MAX(f) AS last_loud
@@ -926,14 +1006,7 @@ object Multimodal {
     // same ASCII-fixture precondition as m01 (chars ⇔ bytes); frame f
     // covers chars f*stride+1 .. f*stride+stride (1-based, clamped)
     "m08_scene_change" ->
-      s"""WITH c AS (
-         |  SELECT doc_id, unnest([ascii(text[i]) for i in range(1, len(text)+1)]) AS byte,
-         |    unnest(range(0, len(text))) AS pos
-         |  FROM documents WHERE strlen(text) > 0
-         |), fr AS (
-         |  SELECT doc_id, pos // $FrameStride AS f, SUM(byte) AS sig
-         |  FROM c GROUP BY doc_id, pos // $FrameStride
-         |), d AS (
+      s"""WITH $duckFrameSigCtes, d AS (
          |  SELECT doc_id, f, sig,
          |    abs(sig - LAG(sig) OVER (PARTITION BY doc_id ORDER BY f)) AS delta
          |  FROM fr
@@ -952,28 +1025,7 @@ object Multimodal {
     // fragment) → cut flags via LAG → running-sum shot ids → per-shot
     // rollup, keyframe = rank 1 by (sig DESC, f ASC) within the shot
     "m10_shot_summary" ->
-      s"""WITH c AS (
-         |  SELECT doc_id, unnest([ascii(text[i]) for i in range(1, len(text)+1)]) AS byte,
-         |    unnest(range(0, len(text))) AS pos
-         |  FROM documents WHERE strlen(text) > 0
-         |), fr AS (
-         |  SELECT doc_id, pos // $FrameStride AS f, SUM(byte) AS sig
-         |  FROM c GROUP BY doc_id, pos // $FrameStride
-         |), d AS (
-         |  SELECT doc_id, f, sig,
-         |    CASE WHEN f > 0 AND abs(sig - LAG(sig) OVER (PARTITION BY doc_id ORDER BY f))
-         |      > $CutThreshold THEN 1 ELSE 0 END AS is_cut
-         |  FROM fr
-         |), sid AS (
-         |  SELECT doc_id, f, sig,
-         |    SUM(is_cut) OVER (PARTITION BY doc_id ORDER BY f) AS shot_idx
-         |  FROM d
-         |), sh AS (
-         |  SELECT doc_id, f, sig, shot_idx,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id, shot_idx
-         |      ORDER BY sig DESC, f ASC) AS rk
-         |  FROM sid
-         |)
+      s"""WITH $duckShotCtes
          |SELECT doc_id, CAST(shot_idx AS BIGINT) AS shot_idx,
          |  CAST(MIN(f) AS BIGINT) AS start_frame,
          |  COUNT(*) AS n_frames,
@@ -988,28 +1040,7 @@ object Multimodal {
     // df-capped signature join; Jaccard threshold restated as the same
     // integer inequality
     "m12_video_neardup" ->
-      s"""WITH c AS (
-         |  SELECT doc_id, unnest([ascii(text[i]) for i in range(1, len(text)+1)]) AS byte,
-         |    unnest(range(0, len(text))) AS pos
-         |  FROM documents WHERE strlen(text) > 0
-         |), fr AS (
-         |  SELECT doc_id, pos // $FrameStride AS f, SUM(byte) AS sig
-         |  FROM c GROUP BY doc_id, pos // $FrameStride
-         |), d AS (
-         |  SELECT doc_id, f, sig,
-         |    CASE WHEN f > 0 AND abs(sig - LAG(sig) OVER (PARTITION BY doc_id ORDER BY f))
-         |      > $CutThreshold THEN 1 ELSE 0 END AS is_cut
-         |  FROM fr
-         |), sid AS (
-         |  SELECT doc_id, f, sig,
-         |    SUM(is_cut) OVER (PARTITION BY doc_id ORDER BY f) AS shot_idx
-         |  FROM d
-         |), sh AS (
-         |  SELECT doc_id, f, sig, shot_idx,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id, shot_idx
-         |      ORDER BY sig DESC, f ASC) AS rk
-         |  FROM sid
-         |), sigs AS (
+      s"""WITH $duckShotCtes, sigs AS (
          |  SELECT DISTINCT doc_id, CAST(sig AS BIGINT) AS key_sig
          |  FROM sh WHERE rk = 1
          |), df AS (
@@ -1037,21 +1068,7 @@ object Multimodal {
     // scores ALL eligible pairs brute-force and keeps Hamming ≤ HamMax —
     // the banded join is answer-invisible by the pigeonhole bound.
     "m09_phash_neardup" ->
-      s"""WITH elig AS (
-         |  SELECT doc_id, text FROM documents WHERE strlen(text) >= $PhashMinLen
-         |), bits AS (
-         |  SELECT doc_id, i,
-         |    CASE WHEN ascii(text[($PhashStride*i+1)::INT])
-         |           > ascii(text[($PhashStride*i+${PhashStride + 1})::INT])
-         |         THEN 1 ELSE 0 END AS bit
-         |  FROM elig, unnest(range(0, $PhashBits)) AS t(i)
-         |), bands AS (
-         |  SELECT doc_id, (i // 16)::INT AS b,
-         |    SUM(bit * (1::BIGINT << (i % 16)::INT))::BIGINT AS v
-         |  FROM bits GROUP BY doc_id, (i // 16)::INT
-         |), h AS (
-         |  SELECT doc_id, list(v ORDER BY b) AS vs FROM bands GROUP BY doc_id
-         |), pairs AS (
+      s"""WITH ${duckPhashCtes()}, pairs AS (
          |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          |    CAST(bit_count(xor(a.vs[1], b.vs[1])) + bit_count(xor(a.vs[2], b.vs[2]))
          |       + bit_count(xor(a.vs[3], b.vs[3])) + bit_count(xor(a.vs[4], b.vs[4]))
@@ -1067,18 +1084,8 @@ object Multimodal {
     // dist ≤ 3 < 4 bands pigeonholes one band equal, so the engine's
     // banded candidate set IS the thresholded pair set)
     "m15_audio_neardup" ->
-      s"""WITH s AS (
-         |  SELECT doc_id, text,
-         |    unnest(range(0, ${(AudioFpBits + 1) * AudioFpFrameSamples})) AS si
-         |  FROM documents WHERE strlen(text) >= $AudioFpMinLen
-         |), v AS (
-         |  SELECT doc_id, si // $AudioFpFrameSamples AS f,
-         |    (ascii(text[(2*si+1)::INT]) + 256 * ascii(text[(2*si+2)::INT]))::BIGINT AS smp
-         |  FROM s
-         |), fr AS (
-         |  SELECT doc_id, f, SUM(smp * smp) AS e
-         |  FROM v GROUP BY doc_id, f
-         |), bits AS (
+      s"""WITH ${duckAudioFrameCtes(((AudioFpBits + 1) * AudioFpFrameSamples).toString,
+                                                AudioFpMinLen.toString, AudioFpFrameSamples)}, bits AS (
          |  SELECT doc_id, f AS i,
          |    CASE WHEN e > LEAD(e) OVER (PARTITION BY doc_id ORDER BY f)
          |         THEN 1 ELSE 0 END AS bit
@@ -1089,13 +1096,7 @@ object Multimodal {
          |  FROM bits WHERE i < $AudioFpBits GROUP BY doc_id, (i // 8)::INT
          |), h AS (
          |  SELECT doc_id, list(bv ORDER BY b) AS vs FROM bands GROUP BY doc_id
-         |), pairs AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    CAST(bit_count(xor(a.vs[1], b.vs[1])) + bit_count(xor(a.vs[2], b.vs[2]))
-         |       + bit_count(xor(a.vs[3], b.vs[3])) + bit_count(xor(a.vs[4], b.vs[4]))
-         |      AS BIGINT) AS dist
-         |  FROM h a JOIN h b ON a.doc_id < b.doc_id
-         |)
+         |), ${duckHamPairsCte}
          |SELECT doc_a, doc_b, dist FROM pairs
          |WHERE dist <= $AudioFpHamMax
          |ORDER BY doc_a, doc_b""".stripMargin,
@@ -1104,21 +1105,7 @@ object Multimodal {
     // candidate set, not brute pairs — the spectrum is a property of the
     // index) plus the exact probe-byte agreement per pair
     "m14_phash_margin" ->
-      s"""WITH elig AS (
-         |  SELECT doc_id, text FROM documents WHERE strlen(text) >= $PhashMinLen
-         |), bits AS (
-         |  SELECT doc_id, i,
-         |    CASE WHEN ascii(text[($PhashStride*i+1)::INT])
-         |           > ascii(text[($PhashStride*i+${PhashStride + 1})::INT])
-         |         THEN 1 ELSE 0 END AS bit
-         |  FROM elig, unnest(range(0, $PhashBits)) AS t(i)
-         |), bands AS (
-         |  SELECT doc_id, (i // 16)::INT AS b,
-         |    SUM(bit * (1::BIGINT << (i % 16)::INT))::BIGINT AS v
-         |  FROM bits GROUP BY doc_id, (i // 16)::INT
-         |), h AS (
-         |  SELECT doc_id, list(v ORDER BY b) AS vs FROM bands GROUP BY doc_id
-         |), pr AS (
+      s"""WITH ${duckPhashCtes()}, pr AS (
          |  SELECT doc_id,
          |    [ascii(text[($PhashStride*i+1)::INT]) for i in range(0, ${PhashBits + 1})] AS p
          |  FROM elig
@@ -1128,8 +1115,7 @@ object Multimodal {
          |    ON a.b = b2.b AND a.v = b2.v AND a.doc_id < b2.doc_id
          |), scored AS (
          |  SELECT
-         |    CAST(bit_count(xor(ha.vs[1], hb.vs[1])) + bit_count(xor(ha.vs[2], hb.vs[2]))
-         |       + bit_count(xor(ha.vs[3], hb.vs[3])) + bit_count(xor(ha.vs[4], hb.vs[4]))
+         |    CAST(${duckHamming("ha", "hb")}
          |      AS BIGINT) AS dist,
          |    CAST(list_sum([CASE WHEN pa.p[i] = pb.p[i] THEN 1 ELSE 0 END
          |                   for i in range(1, ${PhashBits + 2})]) AS BIGINT) AS agr
@@ -1167,10 +1153,7 @@ object Multimodal {
     "m02_fake_decode" ->
       s"""WITH f0 AS (
          |  SELECT doc_id, CAST(strlen(text) AS HUGEINT) AS nb,
-         |    list_reduce(list_prepend(CAST(0 AS HUGEINT),
-         |      list_transform(list_filter(string_split(text, ''), c -> len(c) > 0),
-         |        c -> CAST(unicode(c) AS HUGEINT))),
-         |      (a, b) -> (a * 1315423911 + b) % ${DuckHash.T}) AS f
+         |    $duckByteFold AS f
          |  FROM documents
          |), ids AS (
          |  SELECT doc_id, nb, t.slot AS slot, (f + t.slot) % ${DuckHash.T} AS x
@@ -1199,10 +1182,7 @@ object Multimodal {
     "m03_resize_plan" ->
       s"""WITH f0 AS (
          |  SELECT doc_id,
-         |    list_reduce(list_prepend(CAST(0 AS HUGEINT),
-         |      list_transform(list_filter(string_split(text, ''), c -> len(c) > 0),
-         |        c -> CAST(unicode(c) AS HUGEINT))),
-         |      (a, b) -> (a * 1315423911 + b) % ${DuckHash.T}) AS f
+         |    $duckByteFold AS f
          |  FROM documents
          |), ids AS (
          |  SELECT doc_id, t.slot AS slot, (f + t.slot) % ${DuckHash.T} AS x

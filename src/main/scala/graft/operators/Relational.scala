@@ -1186,6 +1186,21 @@ object Relational {
       .orderBy("l_returnflag", "l_linestatus")
   }
 
+  /** v02's version chain: `ch` the change events on second-truncated
+    * time, `v` each with the next change's time as `valid_to`. v04, v05
+    * and v07 read their history off the same chain.
+    */
+  private val duckVersionCtes: String =
+    """ch AS (
+      |  SELECT user_id, event_id, event_type, "value",
+      |    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec
+      |  FROM events
+      |), v AS (
+      |  SELECT *, LEAD(ts_sec) OVER (
+      |    PARTITION BY user_id ORDER BY ts_sec, event_id) AS valid_to
+      |  FROM ch
+      |)""".stripMargin
+
   def oracles: Map[String, String] = Map(
     // the maintenance identity IS the oracle: merged partial states must
     // equal the full recompute (decimal sums are associative, so exact)
@@ -1202,15 +1217,7 @@ object Relational {
     // same two windows over the same (user, change-order) key; ties are
     // impossible (event_id unique), so both engines chain identically
     "v02_scd2_history" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_id, event_type, "value",
-        |    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec
-        |  FROM events
-        |), v AS (
-        |  SELECT *, LEAD(ts_sec) OVER (
-        |    PARTITION BY user_id ORDER BY ts_sec, event_id) AS valid_to
-        |  FROM ch
-        |)
+      s"""WITH $duckVersionCtes
         |SELECT user_id,
         |  ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_sec, event_id) AS version_seq,
         |  event_type AS state, "value", ts_sec AS valid_from, valid_to,
@@ -1220,15 +1227,7 @@ object Relational {
 
     // v02's history restated + the interval-covers-T filter
     "v04_asof_snapshot" ->
-      s"""WITH ch AS (
-         |  SELECT user_id, event_id, event_type, "value",
-         |    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec
-         |  FROM events
-         |), v AS (
-         |  SELECT *, LEAD(ts_sec) OVER (
-         |    PARTITION BY user_id ORDER BY ts_sec, event_id) AS valid_to
-         |  FROM ch
-         |), hist AS (
+      s"""WITH $duckVersionCtes, hist AS (
          |  SELECT user_id,
          |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_sec, event_id) AS version_seq,
          |    event_type AS state, "value", ts_sec AS valid_from, valid_to
@@ -1242,15 +1241,7 @@ object Relational {
 
     // two as-of reads of the same restated history, joined and classified
     "v05_snapshot_diff" ->
-      s"""WITH ch AS (
-         |  SELECT user_id, event_id, event_type, "value",
-         |    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec
-         |  FROM events
-         |), v AS (
-         |  SELECT *, LEAD(ts_sec) OVER (
-         |    PARTITION BY user_id ORDER BY ts_sec, event_id) AS valid_to
-         |  FROM ch
-         |), hist AS (
+      s"""WITH $duckVersionCtes, hist AS (
          |  SELECT user_id,
          |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_sec, event_id) AS version_seq,
          |    event_type AS state, ts_sec AS valid_from, valid_to
@@ -1275,15 +1266,7 @@ object Relational {
     // v02/v05's history fragment + the retention predicate; counts
     // BIGINT, one division
     "v07_vacuum_plan" ->
-      s"""WITH ch AS (
-         |  SELECT user_id, event_id, event_type, "value",
-         |    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec
-         |  FROM events
-         |), v AS (
-         |  SELECT *, LEAD(ts_sec) OVER (
-         |    PARTITION BY user_id ORDER BY ts_sec, event_id) AS valid_to
-         |  FROM ch
-         |), hist AS (
+      s"""WITH $duckVersionCtes, hist AS (
          |  SELECT user_id, event_type AS state, ts_sec AS valid_from, valid_to
          |  FROM v WHERE event_type <> 'error'
          |)
@@ -1306,7 +1289,7 @@ object Relational {
     "v06_delete_propagation" ->
       s"""WITH t AS (
          |  SELECT doc_id, source, text,
-         |    CAST(len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS BIGINT) AS n_tokens,
+         |    CAST(len(${DuckSql.tokens}) AS BIGINT) AS n_tokens,
          |    doc_id % 53 = 0 AS deleted
          |  FROM documents
          |), c AS (

@@ -382,7 +382,7 @@ object Similarity {
     * + within-cell pairing chain per query.
     */
   private[graft] def semCellPairsShared(s: SparkSession, dir: String): DataFrame =
-    graft.Materialize.fixture(s, s"ex-sempairs|$dir")(
+    graft.Materialize.fixture(s, "ex-sempairs", dir)(
       semCellPairs(Tables.embeddings(s, dir)))
 
   /** The SQ8 quantized corpus (vec_id, q: array<bigint>) — e07's exact
@@ -558,6 +558,14 @@ object Similarity {
     * occupancy grow 30 → 1000, a 1000× constant on every downstream
     * join, which turned the 64× probe into a disk-filling (if linear)
     * monster. Occupancy is the knob the derivation must hold fixed.
+    *
+    * The floor (6 bits × 48 tables) is tuned for the synthetic corpora's
+    * HARD regime — near-dups at cos ≈ 0.45–0.51, per-bit agreement only
+    * ~0.65 — giving ~0.98 expected recall there. As derived bits grow
+    * past the floor, candidate volume stays linear by construction while
+    * recall on the hard regime decays (0.65^bits per table): the recall
+    * knob at that point is TABLE count, which stays caller-visible
+    * because it trades cost, not correctness-of-scale.
     */
   private[operators] val LshTargetBucket = 32L
   private[operators] val LshMinBits = 6
@@ -566,59 +574,6 @@ object Similarity {
     var b = LshMinBits
     while (b < LshMaxBits && (1L << b) * LshTargetBucket < n) b += 1
     b
-  }
-
-  /** LSH candidate pair generation shared by e01b/e04b (same hyperplane
-    * tables as e03): explode per-table buckets, bound each bucket to
-    * `maxBucket` members (a degenerate bucket — e.g. a corpus of identical
-    * vectors — would otherwise explode the within-bucket pair space
-    * quadratically; dropped buckets lose only pairs that the other 47
-    * tables each get another chance to emit), self-join on (table, bucket),
-    * and dedup the DIRECTED id pair. Only 8-byte ids travel through the
-    * distinct — embeddings are joined back afterwards by key, so the wide
-    * vectors never ride through the pair-dedup shuffle.
-    *
-    * Scale note: bucket count is 2^bits per table, so `bits` must grow
-    * with log2(N / targetBucketSize) for the within-bucket join to stay
-    * linear — and since round 8 the OPERATOR owns that contract:
-    * `bits < 0` (the default) derives the geometry from a corpus count
-    * via `derivedLshBits` instead of trusting the caller. The r7
-    * saturation probe is the motivation: a 64× corpus under the fixed
-    * 6-bit layout put ~5k vectors in EVERY bucket and went quadratic —
-    * a mis-set knob is a silent scale-killer, so the knob computes
-    * itself. The floor (6 bits × 48 tables) is tuned for the synthetic
-    * corpora's HARD regime — near-dups at cos ≈ 0.45–0.51, where per-bit
-    * agreement is only ~0.65 — giving ~0.98 expected recall there at half
-    * the candidate volume of fewer-bits/fewer-tables settings; a real
-    * embedding corpus (dups at cos ≥ 0.9) reaches the same recall with
-    * far more bits and fewer tables. As derived bits grow past the
-    * floor, candidate volume stays linear by construction while recall
-    * on the hard regime decays (0.65^bits per table) — the recall knob
-    * at that point is TABLE count, which stays caller-visible because
-    * it trades cost, not correctness-of-scale.
-    */
-  private def lshCandidatePairs(e: DataFrame, bits: Int = -1, tables: Int = 48,
-                                maxBucket: Long = 10000L,
-                                dedup: Boolean = true): DataFrame = {
-    val b = if (bits > 0) bits else derivedLshBits(e.count())
-    val ex = e
-      .withColumn("buckets", hyperplane_lsh_multi(col("embedding"), b, tables, 64, seed = 7L))
-      .select(col("vec_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-    val bounded = ex.join(
-      ex.groupBy("tbl", "bucket").agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") <= maxBucket)
-        .select("tbl", "bucket"),
-      Seq("tbl", "bucket"))
-    val pairs = bounded.select(col("vec_id").as("vid"), col("tbl"), col("bucket"))
-      .join(bounded.select(col("vec_id").as("nid"), col("tbl"), col("bucket")),
-        Seq("tbl", "bucket"))
-      .filter(col("vid") =!= col("nid"))
-      .select("vid", "nid")
-    // dedup=false skips a full shuffle of the pair set; callers whose
-    // downstream already collapses duplicates (e04b's per-vid top-1
-    // window) pay a few re-scored cosines instead — far cheaper than
-    // shuffling the biggest intermediate in the query.
-    if (dedup) pairs.distinct() else pairs
   }
 
   /** e14 core over any (vec_id, embedding, label) frame — extracted so
@@ -745,7 +700,7 @@ object Similarity {
     * per query.
     */
   private[operators] def knn0Shared(s: SparkSession, dir: String): DataFrame =
-    graft.Materialize.fixture(s, s"ex-knn0|$dir")(
+    graft.Materialize.fixture(s, "ex-knn0", dir)(
       nnTopkLists(lshCarryScored(Tables.embeddings(s, dir)), NnDescentK))
 
   private[operators] def nnDescentRound(e: DataFrame, scored0: DataFrame,
@@ -2567,7 +2522,11 @@ object Similarity {
       |    ON a.cell = b.cell AND b.sub = xor(a.sub, m.m) AND b.vec_id < a.vec_id
       |)""".stripMargin
 
-  private val duckIvfCtes: String =
+  /** e05's fixed-point class centroids: `x` every embedding coordinate,
+    * `cd` the per-label per-dim means, `cent(cell, ce)` the float32
+    * centroid lists. e08 and the IVF chain both start from them.
+    */
+  private val duckCentroidCtes: String =
     """x AS (
       |  SELECT label, vec_id,
       |    unnest([{'d': i - 1, 'v': embedding[i]::DOUBLE} for i in range(1, len(embedding) + 1)]) AS u
@@ -2580,11 +2539,18 @@ object Similarity {
       |), cent AS (
       |  SELECT label AS cell, list_transform(list(c ORDER BY dim), v -> v::FLOAT) AS ce
       |  FROM cd GROUP BY label
-      |), cscored AS (
-      |  SELECT e.vec_id, c.cell,
-      |    list_sum([e.embedding[i]::DOUBLE * c.ce[i]::DOUBLE for i in range(1, len(e.embedding) + 1)])
+      |)""".stripMargin
+
+  /** Cosine of embedding `e` against centroid `c` (e08's assignment). */
+  private val duckCellCos: String =
+    """list_sum([e.embedding[i]::DOUBLE * c.ce[i]::DOUBLE for i in range(1, len(e.embedding) + 1)])
       |    / sqrt(list_sum([e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE for i in range(1, len(e.embedding) + 1)]))
-      |    / sqrt(list_sum([c.ce[i]::DOUBLE * c.ce[i]::DOUBLE for i in range(1, len(c.ce) + 1)])) AS ccos
+      |    / sqrt(list_sum([c.ce[i]::DOUBLE * c.ce[i]::DOUBLE for i in range(1, len(c.ce) + 1)]))""".stripMargin
+
+  private val duckIvfCtes: String =
+    s"""$duckCentroidCtes, cscored AS (
+      |  SELECT e.vec_id, c.cell,
+      |    $duckCellCos AS ccos
       |  FROM embeddings e, cent c
       |), cranked AS (
       |  SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cell ASC) AS rn
@@ -2635,6 +2601,126 @@ object Similarity {
          |FROM lex l FULL OUTER JOIN vec v ON l.doc_id = v.doc_id
          |ORDER BY rrf_score DESC, doc_id ASC
          |LIMIT 10""".stripMargin
+
+  /** duckLshCtes plus e01b's bucket cap: `bok` the (table, bucket) keys
+    * of at most 10000 vectors, `bounded(vec_id, tbl, bucket)` their
+    * signatures.
+    */
+  private def duckLshBoundedCtes: String =
+    s"""${duckLshCtes()}, bok AS (
+       |  SELECT tbl, bucket FROM sigs GROUP BY tbl, bucket HAVING COUNT(*) <= 10000
+       |), bounded AS (
+       |  SELECT s.vec_id, s.tbl, s.bucket FROM sigs s JOIN bok USING (tbl, bucket)
+       |)""".stripMargin
+
+  /** `pairs(vid, nid)`: the distinct bucket-mates in `bounded`, ordered
+    * by `cmp` on vec_id (`<` one row per pair, `<>` both directions).
+    */
+  private def duckLshPairsCte(cmp: String = "<>"): String =
+    s"""pairs AS (
+       |  SELECT DISTINCT a.vec_id AS vid, b.vec_id AS nid
+       |  FROM bounded a JOIN bounded b ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id $cmp b.vec_id
+       |)""".stripMargin
+
+  /** Body of a cosine-ranked CTE over the candidate rows `<from> <c>`
+    * (`<c>.<key>`, `<c>.nid`): cos_sim and its per-key rank `rn`.
+    */
+  private def duckRankedCos(c: String, key: String, from: String): String =
+    s"""SELECT $c.$key, $c.nid, ${duckCos("a", "b")} AS cos_sim,
+       |    ROW_NUMBER() OVER (PARTITION BY $c.$key ORDER BY ${duckCos("a", "b")} DESC, $c.nid ASC) AS rn
+       |  FROM $from $c JOIN embeddings a ON a.vec_id = $c.$key JOIN embeddings b ON b.vec_id = $c.nid""".stripMargin
+
+  /** e18's seed graph: the LSH pairs' top-NnDescentK lists `knn0`. */
+  private def duckKnn0Ctes: String =
+    s"""$duckLshBoundedCtes, ${duckLshPairsCte()}, knn0 AS MATERIALIZED (
+       |  ${duckRankedCos("p", "vid", "pairs")}
+       |  QUALIFY rn <= $NnDescentK
+       |)""".stripMargin
+
+  /** e15's exact truth: `ex(qid, nid)`, the brute-force top-5 of the
+    * first ten query vectors.
+    */
+  private def duckExactTop5Cte: String =
+    s"""ex AS (
+       |  SELECT qid, nid FROM (
+       |    SELECT q.vec_id AS qid, e.vec_id AS nid,
+       |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY ${duckCos("q", "e")} DESC, e.vec_id ASC) AS rn
+       |    FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
+       |    WHERE q.vec_id < 10
+       |  ) WHERE rn <= 5
+       |)""".stripMargin
+
+  /** e19's probe ranks over duckIvfCtes: `mr(qid, nid, mr)`, the best
+    * probe rank at which each candidate's cell is reached.
+    */
+  private val duckIvfMrCte: String =
+    """mr AS (
+      |  SELECT c.vec_id AS qid, a.nid, MIN(c.rn) AS mr
+      |  FROM cranked c JOIN assigned a ON a.cell = c.cell
+      |  WHERE c.rn <= 4 AND c.vec_id < 10 AND a.nid <> c.vec_id
+      |  GROUP BY c.vec_id, a.nid
+      |)""".stripMargin
+
+  /** e19's nprobe sweep over `mr`: `pscored` each candidate's cosine,
+    * `sw(np, qid, nid)` the top-5 reached within 1, 2 and 4 probes, and
+    * duckExactTop5Cte's truth `ex`.
+    */
+  private def duckSweepCtes: String = {
+    def sweep(np: Int): String =
+      s"""  SELECT $np AS np, qid, nid FROM (
+         |    SELECT qid, nid,
+         |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rn
+         |    FROM pscored WHERE mr <= $np) WHERE rn <= 5""".stripMargin
+    s"""pscored AS (
+       |  SELECT m.qid, m.nid, m.mr, ${duckCos("a", "b")} AS cos
+       |  FROM mr m JOIN embeddings a ON a.vec_id = m.qid
+       |    JOIN embeddings b ON b.vec_id = m.nid
+       |), sw AS (
+       |${sweep(1)}
+       |  UNION ALL
+       |${sweep(2)}
+       |  UNION ALL
+       |${sweep(4)}
+       |), $duckExactTop5Cte""".stripMargin
+  }
+
+  /** e19's recall@5 per (nprobe, query) over duckSweepCtes: the closing
+    * CTEs and SELECT of e19 and e21.
+    */
+  private val duckSweepRecall: String =
+    """tc AS (
+      |  SELECT qid, COUNT(*) AS n_exact FROM ex GROUP BY qid
+      |), h AS (
+      |  SELECT s.np, e.qid, COUNT(*) AS n_hits
+      |  FROM ex e JOIN sw s ON s.qid = e.qid AND s.nid = e.nid
+      |  GROUP BY s.np, e.qid
+      |), grid AS (
+      |  SELECT np, qid, n_exact FROM tc CROSS JOIN (SELECT unnest([1, 2, 4]) AS np)
+      |)
+      |SELECT CAST(grid.np AS BIGINT) AS nprobe, grid.qid, grid.n_exact,
+      |  CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
+      |  CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / CAST(grid.n_exact AS DOUBLE) AS recall_at_5
+      |FROM grid LEFT JOIN h ON h.np = grid.np AND h.qid = grid.qid
+      |ORDER BY nprobe, grid.qid""".stripMargin
+
+  /** e22's scalar quantizer: `sq_x` every coordinate, `sq_mm` each
+    * vector's max |v|, `sq_qv` the int8 codes, `sq_ql(vec_id, q)` the
+    * code lists. `sq_`-prefixed: duckIvfCtes owns `x`.
+    */
+  private val duckSqCtes: String =
+    """sq_x AS (
+      |  SELECT vec_id,
+      |    unnest([{'d': i - 1, 'v': embedding[i]::DOUBLE} for i in range(1, len(embedding)+1)]) AS u
+      |  FROM embeddings
+      |), sq_mm AS (
+      |  SELECT vec_id, MAX(abs(u.v)) AS maxabs FROM sq_x GROUP BY vec_id
+      |), sq_qv AS (
+      |  SELECT x.vec_id, x.u.d AS d,
+      |    CAST(floor(x.u.v * 127.0 / greatest(m.maxabs, 1e-300)) AS BIGINT) AS qv
+      |  FROM sq_x x JOIN sq_mm m USING (vec_id)
+      |), sq_ql AS (
+      |  SELECT vec_id, list(qv ORDER BY d) AS q FROM sq_qv GROUP BY vec_id
+      |)""".stripMargin
 
   def oracles: Map[String, String] = Map(
     // identical channel ranks (integer overlap / the duckCos double),
@@ -2777,14 +2863,7 @@ object Similarity {
     // pipeline and the driver checks them hash-exactly; SimilaritySpec
     // keeps the recall assertions against e01/e02/e04.
     "e01b_cosine_pairs_topk_lsh" ->
-      s"""WITH ${duckLshCtes()}, bok AS (
-         |  SELECT tbl, bucket FROM sigs GROUP BY tbl, bucket HAVING COUNT(*) <= 10000
-         |), bounded AS (
-         |  SELECT s.vec_id, s.tbl, s.bucket FROM sigs s JOIN bok USING (tbl, bucket)
-         |), pairs AS (
-         |  SELECT DISTINCT a.vec_id AS vid, b.vec_id AS nid
-         |  FROM bounded a JOIN bounded b ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-         |)
+      s"""WITH $duckLshBoundedCtes, ${duckLshPairsCte("<")}
          |SELECT p.vid AS id_a, p.nid AS id_b, ${duckCos("a", "b")} AS cos_sim
          |FROM pairs p JOIN embeddings a ON a.vec_id = p.vid JOIN embeddings b ON b.vec_id = p.nid
          |ORDER BY cos_sim DESC, id_a ASC, id_b ASC
@@ -2796,24 +2875,13 @@ object Similarity {
          |  FROM sigs q JOIN sigs s ON s.tbl = q.tbl AND s.bucket = q.bucket AND s.vec_id <> q.vec_id
          |  WHERE q.vec_id < 10
          |), scored AS (
-         |  SELECT c.qid, c.nid, ${duckCos("a", "b")} AS cos_sim,
-         |    ROW_NUMBER() OVER (PARTITION BY c.qid ORDER BY ${duckCos("a", "b")} DESC, c.nid ASC) AS rn
-         |  FROM cand c JOIN embeddings a ON a.vec_id = c.qid JOIN embeddings b ON b.vec_id = c.nid
+         |  ${duckRankedCos("c", "qid", "cand")}
          |)
          |SELECT qid, nid, cos_sim, rn FROM scored WHERE rn <= 5 ORDER BY qid, rn""".stripMargin,
 
     "e04b_embedding_nn_dedup_lsh" ->
-      s"""WITH ${duckLshCtes()}, bok AS (
-         |  SELECT tbl, bucket FROM sigs GROUP BY tbl, bucket HAVING COUNT(*) <= 10000
-         |), bounded AS (
-         |  SELECT s.vec_id, s.tbl, s.bucket FROM sigs s JOIN bok USING (tbl, bucket)
-         |), pairs AS (
-         |  SELECT DISTINCT a.vec_id AS vid, b.vec_id AS nid
-         |  FROM bounded a JOIN bounded b ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id <> b.vec_id
-         |), scored AS (
-         |  SELECT p.vid, p.nid, ${duckCos("a", "b")} AS cos_sim,
-         |    ROW_NUMBER() OVER (PARTITION BY p.vid ORDER BY ${duckCos("a", "b")} DESC, p.nid ASC) AS rn
-         |  FROM pairs p JOIN embeddings a ON a.vec_id = p.vid JOIN embeddings b ON b.vec_id = p.nid
+      s"""WITH $duckLshBoundedCtes, ${duckLshPairsCte()}, scored AS (
+         |  ${duckRankedCos("p", "vid", "pairs")}
          |)
          |SELECT vid, nid AS nn_id, cos_sim AS nn_cos, cos_sim > 0.45 AS is_near_dup
          |FROM scored WHERE rn = 1 ORDER BY vid""".stripMargin,
@@ -2823,28 +2891,14 @@ object Similarity {
     // exact re-rank of old ∪ neighbors-of-neighbors; the audit counts are
     // the same strict-worst-cosine / list-growth comparisons
     "e18_nn_descent_round" ->
-      s"""WITH ${duckLshCtes()}, bok AS (
-         |  SELECT tbl, bucket FROM sigs GROUP BY tbl, bucket HAVING COUNT(*) <= 10000
-         |), bounded AS (
-         |  SELECT s.vec_id, s.tbl, s.bucket FROM sigs s JOIN bok USING (tbl, bucket)
-         |), pairs AS (
-         |  SELECT DISTINCT a.vec_id AS vid, b.vec_id AS nid
-         |  FROM bounded a JOIN bounded b ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id <> b.vec_id
-         |), knn0 AS MATERIALIZED (
-         |  SELECT p.vid, p.nid, ${duckCos("a", "b")} AS cos_sim,
-         |    ROW_NUMBER() OVER (PARTITION BY p.vid ORDER BY ${duckCos("a", "b")} DESC, p.nid ASC) AS rn
-         |  FROM pairs p JOIN embeddings a ON a.vec_id = p.vid JOIN embeddings b ON b.vec_id = p.nid
-         |  QUALIFY rn <= $NnDescentK
-         |), und AS MATERIALIZED (
+      s"""WITH $duckKnn0Ctes, und AS MATERIALIZED (
          |  SELECT vid AS u, nid AS v FROM knn0 UNION SELECT nid, vid FROM knn0
          |), cand1 AS MATERIALIZED (
          |  SELECT a.v AS vid, b.v AS nid FROM und a JOIN und b ON a.u = b.u AND a.v <> b.v
          |  UNION
          |  SELECT vid, nid FROM knn0
          |), knn1 AS MATERIALIZED (
-         |  SELECT c.vid, c.nid, ${duckCos("a", "b")} AS cos_sim,
-         |    ROW_NUMBER() OVER (PARTITION BY c.vid ORDER BY ${duckCos("a", "b")} DESC, c.nid ASC) AS rn
-         |  FROM cand1 c JOIN embeddings a ON a.vec_id = c.vid JOIN embeddings b ON b.vec_id = c.nid
+         |  ${duckRankedCos("c", "vid", "cand1")}
          |  QUALIFY rn <= $NnDescentK
          |), m0 AS (
          |  SELECT vid, MIN(cos_sim) AS worst0, COUNT(*) AS k0 FROM knn0 GROUP BY vid
@@ -2868,19 +2922,7 @@ object Similarity {
     // the audit rows union at the end
     "e18b_nn_descent_converge" -> {
       val base =
-        s"""WITH ${duckLshCtes()}, bok AS (
-           |  SELECT tbl, bucket FROM sigs GROUP BY tbl, bucket HAVING COUNT(*) <= 10000
-           |), bounded AS (
-           |  SELECT s.vec_id, s.tbl, s.bucket FROM sigs s JOIN bok USING (tbl, bucket)
-           |), pairs AS (
-           |  SELECT DISTINCT a.vec_id AS vid, b.vec_id AS nid
-           |  FROM bounded a JOIN bounded b ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id <> b.vec_id
-           |), knn0 AS MATERIALIZED (
-           |  SELECT p.vid, p.nid, ${duckCos("a", "b")} AS cos_sim,
-           |    ROW_NUMBER() OVER (PARTITION BY p.vid ORDER BY ${duckCos("a", "b")} DESC, p.nid ASC) AS rn
-           |  FROM pairs p JOIN embeddings a ON a.vec_id = p.vid JOIN embeddings b ON b.vec_id = p.nid
-           |  QUALIFY rn <= $NnDescentK
-           |), m0 AS (
+        s"""WITH $duckKnn0Ctes, m0 AS (
            |  SELECT vid, MIN(cos_sim) AS worst, COUNT(*) AS kk FROM knn0 GROUP BY vid
            |)""".stripMargin
       val rounds = (1 to NnDescentRounds).map { r =>
@@ -2892,9 +2934,7 @@ object Similarity {
            |  UNION
            |  SELECT vid, nid FROM knn$p
            |), knn$r AS MATERIALIZED (
-           |  SELECT c.vid, c.nid, ${duckCos("a", "b")} AS cos_sim,
-           |    ROW_NUMBER() OVER (PARTITION BY c.vid ORDER BY ${duckCos("a", "b")} DESC, c.nid ASC) AS rn
-           |  FROM cand$r c JOIN embeddings a ON a.vec_id = c.vid JOIN embeddings b ON b.vec_id = c.nid
+           |  ${duckRankedCos("c", "vid", s"cand$r")}
            |  QUALIFY rn <= $NnDescentK
            |), m$r AS (
            |  SELECT vid, MIN(cos_sim) AS worst, COUNT(*) AS kk FROM knn$r GROUP BY vid
@@ -2921,18 +2961,12 @@ object Similarity {
     // e04b's oracle with the probe side restricted to the arriving batch
     // and the allowed-neighbor predicate (corpus, or earlier arrival)
     "e13_incremental_embedding_dedup" ->
-      s"""WITH ${duckLshCtes()}, bok AS (
-         |  SELECT tbl, bucket FROM sigs GROUP BY tbl, bucket HAVING COUNT(*) <= 10000
-         |), bounded AS (
-         |  SELECT s.vec_id, s.tbl, s.bucket FROM sigs s JOIN bok USING (tbl, bucket)
-         |), pairs AS (
+      s"""WITH $duckLshBoundedCtes, pairs AS (
          |  SELECT DISTINCT a.vec_id AS vid, b.vec_id AS nid
          |  FROM bounded a JOIN bounded b ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id <> b.vec_id
          |  WHERE a.vec_id % 10 = 0 AND (b.vec_id % 10 <> 0 OR b.vec_id < a.vec_id)
          |), scored AS (
-         |  SELECT p.vid, p.nid, ${duckCos("a", "b")} AS cos_sim,
-         |    ROW_NUMBER() OVER (PARTITION BY p.vid ORDER BY ${duckCos("a", "b")} DESC, p.nid ASC) AS rn
-         |  FROM pairs p JOIN embeddings a ON a.vec_id = p.vid JOIN embeddings b ON b.vec_id = p.nid
+         |  ${duckRankedCos("p", "vid", "pairs")}
          |)
          |SELECT vid, nid AS nn_id, cos_sim AS nn_cos, cos_sim > 0.45 AS is_near_dup,
          |  cos_sim <= 0.45 AS admitted
@@ -2941,11 +2975,7 @@ object Similarity {
     // e04b's candidate oracle with a labeled index side and the 5-NN
     // integer vote — prediction AND correctness both under the hash gate
     "e14_knn_label_propagation" ->
-      s"""WITH ${duckLshCtes()}, bok AS (
-         |  SELECT tbl, bucket FROM sigs GROUP BY tbl, bucket HAVING COUNT(*) <= 10000
-         |), bounded AS (
-         |  SELECT s.vec_id, s.tbl, s.bucket FROM sigs s JOIN bok USING (tbl, bucket)
-         |), cand AS (
+      s"""WITH $duckLshBoundedCtes, cand AS (
          |  SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
          |  FROM bounded a JOIN bounded b ON a.tbl = b.tbl AND a.bucket = b.bucket
          |  WHERE a.vec_id % 10 = 0 AND b.vec_id % 10 <> 0
@@ -2970,14 +3000,7 @@ object Similarity {
     // e02's top-5 and e03's pipeline, joined — recall arithmetic is
     // integer counts + one division
     "e15_ann_recall_eval" ->
-      s"""WITH ${duckLshCtes()}, ex AS (
-         |  SELECT qid, nid FROM (
-         |    SELECT q.vec_id AS qid, e.vec_id AS nid,
-         |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY ${duckCos("q", "e")} DESC, e.vec_id ASC) AS rn
-         |    FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
-         |    WHERE q.vec_id < 10
-         |  ) WHERE rn <= 5
-         |), cand AS (
+      s"""WITH ${duckLshCtes()}, $duckExactTop5Cte, cand AS (
          |  SELECT DISTINCT q.vec_id AS qid, s.vec_id AS nid
          |  FROM sigs q JOIN sigs s ON s.tbl = q.tbl AND s.bucket = q.bucket AND s.vec_id <> q.vec_id
          |  WHERE q.vec_id < 10
@@ -3002,59 +3025,13 @@ object Similarity {
     // duckIvfCtes' cranked ranking drives all three sweeps (min meeting-
     // cell probe rank, then per-np top-5 filters); truth is e15's
     // brute-force block verbatim; recall = integer counts + one division
-    "e19_ivf_probe_sweep" -> {
-      def sweep(np: Int): String =
-        s"""  SELECT $np AS np, qid, nid FROM (
-           |    SELECT qid, nid,
-           |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rn
-           |    FROM pscored WHERE mr <= $np) WHERE rn <= 5""".stripMargin
-      s"""WITH $duckIvfCtes, mr AS (
-         |  SELECT c.vec_id AS qid, a.nid, MIN(c.rn) AS mr
-         |  FROM cranked c JOIN assigned a ON a.cell = c.cell
-         |  WHERE c.rn <= 4 AND c.vec_id < 10 AND a.nid <> c.vec_id
-         |  GROUP BY c.vec_id, a.nid
-         |), pscored AS (
-         |  SELECT m.qid, m.nid, m.mr, ${duckCos("a", "b")} AS cos
-         |  FROM mr m JOIN embeddings a ON a.vec_id = m.qid
-         |    JOIN embeddings b ON b.vec_id = m.nid
-         |), sw AS (
-         |${sweep(1)}
-         |  UNION ALL
-         |${sweep(2)}
-         |  UNION ALL
-         |${sweep(4)}
-         |), ex AS (
-         |  SELECT qid, nid FROM (
-         |    SELECT q.vec_id AS qid, e.vec_id AS nid,
-         |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY ${duckCos("q", "e")} DESC, e.vec_id ASC) AS rn
-         |    FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
-         |    WHERE q.vec_id < 10
-         |  ) WHERE rn <= 5
-         |), tc AS (
-         |  SELECT qid, COUNT(*) AS n_exact FROM ex GROUP BY qid
-         |), h AS (
-         |  SELECT s.np, e.qid, COUNT(*) AS n_hits
-         |  FROM ex e JOIN sw s ON s.qid = e.qid AND s.nid = e.nid
-         |  GROUP BY s.np, e.qid
-         |), grid AS (
-         |  SELECT np, qid, n_exact FROM tc CROSS JOIN (SELECT unnest([1, 2, 4]) AS np)
-         |)
-         |SELECT CAST(grid.np AS BIGINT) AS nprobe, grid.qid, grid.n_exact,
-         |  CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-         |  CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / CAST(grid.n_exact AS DOUBLE) AS recall_at_5
-         |FROM grid LEFT JOIN h ON h.np = grid.np AND h.qid = grid.qid
-         |ORDER BY nprobe, grid.qid""".stripMargin
-    },
+    "e19_ivf_probe_sweep" ->
+      s"""WITH $duckIvfCtes, $duckIvfMrCte, $duckSweepCtes, $duckSweepRecall""",
 
     // e19's sweep tail on duckSemCtes' cranked ranking (same centroids,
     // same ordering — byte-identical ranks) with the index and probe
     // sides filtered to matching derived sub ids (sem_vsub)
-    "e21_ivf_subcell_sweep" -> {
-      def sweep(np: Int): String =
-        s"""  SELECT $np AS np, qid, nid FROM (
-           |    SELECT qid, nid,
-           |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rn
-           |    FROM pscored WHERE mr <= $np) WHERE rn <= 5""".stripMargin
+    "e21_ivf_subcell_sweep" ->
       s"""WITH $duckSemCtes, sasg AS (
          |  SELECT s.vec_id AS nid, s.cell, v.sub
          |  FROM sem_cranked s JOIN sem_vsub v USING (vec_id)
@@ -3066,38 +3043,7 @@ object Similarity {
          |  JOIN sasg a ON a.cell = c.cell AND a.sub = cv.sub
          |  WHERE c.rn <= 4 AND c.vec_id < 10 AND a.nid <> c.vec_id
          |  GROUP BY c.vec_id, a.nid
-         |), pscored AS (
-         |  SELECT m.qid, m.nid, m.mr, ${duckCos("a", "b")} AS cos
-         |  FROM mr m JOIN embeddings a ON a.vec_id = m.qid
-         |    JOIN embeddings b ON b.vec_id = m.nid
-         |), sw AS (
-         |${sweep(1)}
-         |  UNION ALL
-         |${sweep(2)}
-         |  UNION ALL
-         |${sweep(4)}
-         |), ex AS (
-         |  SELECT qid, nid FROM (
-         |    SELECT q.vec_id AS qid, e.vec_id AS nid,
-         |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY ${duckCos("q", "e")} DESC, e.vec_id ASC) AS rn
-         |    FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
-         |    WHERE q.vec_id < 10
-         |  ) WHERE rn <= 5
-         |), tc AS (
-         |  SELECT qid, COUNT(*) AS n_exact FROM ex GROUP BY qid
-         |), h AS (
-         |  SELECT s.np, e.qid, COUNT(*) AS n_hits
-         |  FROM ex e JOIN sw s ON s.qid = e.qid AND s.nid = e.nid
-         |  GROUP BY s.np, e.qid
-         |), grid AS (
-         |  SELECT np, qid, n_exact FROM tc CROSS JOIN (SELECT unnest([1, 2, 4]) AS np)
-         |)
-         |SELECT CAST(grid.np AS BIGINT) AS nprobe, grid.qid, grid.n_exact,
-         |  CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-         |  CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / CAST(grid.n_exact AS DOUBLE) AS recall_at_5
-         |FROM grid LEFT JOIN h ON h.np = grid.np AND h.qid = grid.qid
-         |ORDER BY nprobe, grid.qid""".stripMargin
-    },
+         |), $duckSweepCtes, $duckSweepRecall""".stripMargin,
 
     // one pair CTE, four prefix-sliced cosine rankings, hits vs the
     // d = 64 truth — the same sweep tail as e19/e21
@@ -3170,19 +3116,7 @@ object Similarity {
     // the e22 quantizer chain (sq_-prefixed — duckIvfCtes owns `x`)
     // supplies the integer codes, same top-40 + exact re-rank tail
     "e25_ivf_sq_serve" ->
-      s"""WITH $duckIvfCtes, sq_x AS (
-         |  SELECT vec_id,
-         |    unnest([{'d': i - 1, 'v': embedding[i]::DOUBLE} for i in range(1, len(embedding)+1)]) AS u
-         |  FROM embeddings
-         |), sq_mm AS (
-         |  SELECT vec_id, MAX(abs(u.v)) AS maxabs FROM sq_x GROUP BY vec_id
-         |), sq_qv AS (
-         |  SELECT x.vec_id, x.u.d AS d,
-         |    CAST(floor(x.u.v * 127.0 / greatest(m.maxabs, 1e-300)) AS BIGINT) AS qv
-         |  FROM sq_x x JOIN sq_mm m USING (vec_id)
-         |), sq_ql AS (
-         |  SELECT vec_id, list(qv ORDER BY d) AS q FROM sq_qv GROUP BY vec_id
-         |), sq_cand AS (
+      s"""WITH $duckIvfCtes, $duckSqCtes, sq_cand AS (
          |  SELECT DISTINCT p.qid, a.nid
          |  FROM assigned a JOIN probes p USING (cell)
          |  WHERE a.nid <> p.qid
@@ -3204,19 +3138,7 @@ object Similarity {
     // the same sq_ quantizer chain, both rankings windowed identically,
     // displacement bucketed by length(bin(.)) (d14's spectrum idiom)
     "e26_sq_rank_calibration" ->
-      s"""WITH sq_x AS (
-         |  SELECT vec_id,
-         |    unnest([{'d': i - 1, 'v': embedding[i]::DOUBLE} for i in range(1, len(embedding)+1)]) AS u
-         |  FROM embeddings
-         |), sq_mm AS (
-         |  SELECT vec_id, MAX(abs(u.v)) AS maxabs FROM sq_x GROUP BY vec_id
-         |), sq_qv AS (
-         |  SELECT x.vec_id, x.u.d AS d,
-         |    CAST(floor(x.u.v * 127.0 / greatest(m.maxabs, 1e-300)) AS BIGINT) AS qv
-         |  FROM sq_x x JOIN sq_mm m USING (vec_id)
-         |), sq_ql AS (
-         |  SELECT vec_id, list(qv ORDER BY d) AS q FROM sq_qv GROUP BY vec_id
-         |), ri AS (
+      s"""WITH $duckSqCtes, ri AS (
          |  SELECT qid, nid,
          |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY int_dot DESC, nid ASC) AS rank_int
          |  FROM (
@@ -3243,15 +3165,7 @@ object Similarity {
     // sem_pairs at the e11 bar; both scores restated over the engine's
     // exact domains (xxh64-hashed shingles, IEEE cosine floored to ppb)
     "e27_lexical_semantic_agreement" ->
-      s"""${Dedup.duckClusterCtes}, $duckSemCtes, docsh AS MATERIALIZED (
-         |  SELECT doc_id, unnest(sh) AS g FROM s
-         |), gr AS (
-         |  SELECT g AS gid, g FROM (SELECT DISTINCT g FROM docsh)
-         |), ${DuckHash.xxh64StrCtes()}, shh AS MATERIALIZED (
-         |  SELECT d.doc_id, list(DISTINCT h.hv) AS hh
-         |  FROM docsh d JOIN gh h ON h.gid = d.g
-         |  GROUP BY d.doc_id
-         |), lexp AS (
+      s"""${Dedup.duckClusterCtes}, $duckSemCtes, ${Dedup.duckShingleHashCtes}, lexp AS (
          |  SELECT id_a, id_b FROM pairs
          |), semp AS (
          |  SELECT lo AS id_a, hi AS id_b FROM sem_pairs WHERE cos >= $SemDedupTheta
@@ -3287,35 +3201,8 @@ object Similarity {
 
     // e19's CTE chain aggregated per nprobe; the floor and the argmin
     // selection restated in the same integer cross-multiply
-    "e28_nprobe_select" -> {
-      def sweep(np: Int): String =
-        s"""  SELECT $np AS np, qid, nid FROM (
-           |    SELECT qid, nid,
-           |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rn
-           |    FROM pscored WHERE mr <= $np) WHERE rn <= 5""".stripMargin
-      s"""WITH $duckIvfCtes, mr AS (
-         |  SELECT c.vec_id AS qid, a.nid, MIN(c.rn) AS mr
-         |  FROM cranked c JOIN assigned a ON a.cell = c.cell
-         |  WHERE c.rn <= 4 AND c.vec_id < 10 AND a.nid <> c.vec_id
-         |  GROUP BY c.vec_id, a.nid
-         |), pscored AS (
-         |  SELECT m.qid, m.nid, m.mr, ${duckCos("a", "b")} AS cos
-         |  FROM mr m JOIN embeddings a ON a.vec_id = m.qid
-         |    JOIN embeddings b ON b.vec_id = m.nid
-         |), sw AS (
-         |${sweep(1)}
-         |  UNION ALL
-         |${sweep(2)}
-         |  UNION ALL
-         |${sweep(4)}
-         |), ex AS (
-         |  SELECT qid, nid FROM (
-         |    SELECT q.vec_id AS qid, e.vec_id AS nid,
-         |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY ${duckCos("q", "e")} DESC, e.vec_id ASC) AS rn
-         |    FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
-         |    WHERE q.vec_id < 10
-         |  ) WHERE rn <= 5
-         |), nps AS (
+    "e28_nprobe_select" ->
+      s"""WITH $duckIvfCtes, $duckIvfMrCte, $duckSweepCtes, nps AS (
          |  SELECT unnest([1, 2, 4]) AS np
          |), tot AS (
          |  SELECT COUNT(*) AS n_exact FROM ex
@@ -3341,8 +3228,7 @@ object Similarity {
          |  CAST(n_hits AS BIGINT) AS n_hits,
          |  CAST(cleared AS BIGINT) AS cleared,
          |  CAST(CASE WHEN np = (SELECT pick FROM sel) THEN 1 ELSE 0 END AS BIGINT) AS selected
-         |FROM pernp ORDER BY nprobe""".stripMargin
-    },
+         |FROM pernp ORDER BY nprobe""".stripMargin,
 
     // e29: duckCentroidPpb1Ctes (the e29/s30-shared chain — duckIvfCtes'
     // centroid assembly keyed by the vector's OWN label, ppb1/mean/σ on
@@ -3559,9 +3445,7 @@ object Similarity {
          |  FROM assigned a JOIN probes p USING (cell)
          |  WHERE a.nid <> p.qid
          |), scored AS (
-         |  SELECT c.qid, c.nid, ${duckCos("a", "b")} AS cos_sim,
-         |    ROW_NUMBER() OVER (PARTITION BY c.qid ORDER BY ${duckCos("a", "b")} DESC, c.nid ASC) AS rn
-         |  FROM cand c JOIN embeddings a ON a.vec_id = c.qid JOIN embeddings b ON b.vec_id = c.nid
+         |  ${duckRankedCos("c", "qid", "cand")}
          |)
          |SELECT qid, nid, cos_sim, rn FROM scored WHERE rn <= 5 ORDER BY qid, rn""".stripMargin,
 
@@ -3659,23 +3543,9 @@ object Similarity {
     // same float32 cast Spark's array<float> applies, and the assignment
     // cosine widens float elements to double exactly like CosineSimilarity
     "e08_kmeans_step" ->
-      """WITH x AS (
-        |  SELECT label, vec_id,
-        |    unnest([{'d': i - 1, 'v': embedding[i]::DOUBLE} for i in range(1, len(embedding) + 1)]) AS u
-        |  FROM embeddings
-        |), cd AS (
-        |  SELECT label, u.d AS dim,
-        |    CAST(SUM(CAST(floor(u.v * 1073741824.0) AS HUGEINT)) AS DOUBLE)
-        |      / CAST(COUNT(*) AS DOUBLE) / 1073741824.0 AS c
-        |  FROM x GROUP BY label, u.d
-        |), cent AS (
-        |  SELECT label AS cell, list_transform(list(c ORDER BY dim), v -> v::FLOAT) AS ce
-        |  FROM cd GROUP BY label
-        |), scored AS (
+      s"""WITH $duckCentroidCtes, scored AS (
         |  SELECT e.vec_id, e.embedding, c.cell,
-        |    list_sum([e.embedding[i]::DOUBLE * c.ce[i]::DOUBLE for i in range(1, len(e.embedding) + 1)])
-        |    / sqrt(list_sum([e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE for i in range(1, len(e.embedding) + 1)]))
-        |    / sqrt(list_sum([c.ce[i]::DOUBLE * c.ce[i]::DOUBLE for i in range(1, len(c.ce) + 1)])) AS ccos
+        |    $duckCellCos AS ccos
         |  FROM embeddings e, cent c
         |), assigned AS (
         |  SELECT vec_id, embedding, cell FROM (

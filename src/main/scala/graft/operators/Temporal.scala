@@ -919,6 +919,39 @@ object Temporal {
       |FROM tr
       |ORDER BY from_type, to_type""".stripMargin
 
+  /** a08's hourly grid: `e` buckets every event to its hour `hsec`,
+    * `h(user_id, hsec, hv)` keeps each observed hour's last value, and
+    * `grid(user_id, hsec)` lists every hour of the user's span. a13
+    * interpolates over the same grid.
+    */
+  private val duckHourGridCtes: String =
+    """e AS (
+      |  SELECT user_id, event_id, ts,
+      |    (CAST(epoch(date_trunc('second', ts)) AS BIGINT) // 3600) * 3600 AS hsec, "value"
+      |  FROM events
+      |), h AS (
+      |  SELECT user_id, hsec, "value" AS hv FROM (
+      |    SELECT user_id, hsec, "value",
+      |      ROW_NUMBER() OVER (PARTITION BY user_id, hsec ORDER BY ts DESC, event_id DESC) AS rn
+      |    FROM e) WHERE rn = 1
+      |), b AS (
+      |  SELECT user_id, MIN(hsec) AS h0, MAX(hsec) AS h1 FROM e GROUP BY user_id
+      |), grid AS (
+      |  SELECT user_id, unnest(range(h0, h1 + 3600, 3600)) AS hsec FROM b
+      |)""".stripMargin
+
+  /** a05's funnel head: `e(user_id, event_type, sec)` the funnel events
+    * on second-truncated time, `a(user_id, t_view)` each user's first
+    * view. a15 bounds the later steps on the same head.
+    */
+  private val duckFunnelViewCtes: String =
+    """e AS (
+      |  SELECT user_id, event_type, epoch(date_trunc('second', ts)) AS sec
+      |  FROM events WHERE event_type IN ('view', 'click', 'purchase')
+      |), a AS (
+      |  SELECT user_id, MIN(sec) AS t_view FROM e WHERE event_type = 'view' GROUP BY user_id
+      |)""".stripMargin
+
   def oracles: Map[String, String] = Map(
     // isodow ≡ Spark weekday+1 (both 1 = Monday); counts exact
     "a18_activity_profile" ->
@@ -1121,20 +1154,7 @@ object Temporal {
     // sequence(h0, h1, 3600); the fill is the same last-ignore-nulls
     // window both engines define identically
     "a08_gap_fill" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, ts,
-        |    (CAST(epoch(date_trunc('second', ts)) AS BIGINT) // 3600) * 3600 AS hsec, "value"
-        |  FROM events
-        |), h AS (
-        |  SELECT user_id, hsec, "value" AS hv FROM (
-        |    SELECT user_id, hsec, "value",
-        |      ROW_NUMBER() OVER (PARTITION BY user_id, hsec ORDER BY ts DESC, event_id DESC) AS rn
-        |    FROM e) WHERE rn = 1
-        |), b AS (
-        |  SELECT user_id, MIN(hsec) AS h0, MAX(hsec) AS h1 FROM e GROUP BY user_id
-        |), grid AS (
-        |  SELECT user_id, unnest(range(h0, h1 + 3600, 3600)) AS hsec FROM b
-        |)
+      s"""WITH $duckHourGridCtes
         |SELECT g.user_id AS user_id,
         |  strftime(to_timestamp(g.hsec), '%Y-%m-%d %H:%M:%S') AS hour,
         |  LAST_VALUE(hv IGNORE NULLS) OVER (PARTITION BY g.user_id ORDER BY g.hsec
@@ -1146,20 +1166,7 @@ object Temporal {
     // the interpolation arithmetic is the same fixed double-expression
     // order as the Spark side: prev + (next − prev) · (Δt / span)
     "a13_interpolate" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, ts,
-        |    (CAST(epoch(date_trunc('second', ts)) AS BIGINT) // 3600) * 3600 AS hsec, "value"
-        |  FROM events
-        |), h AS (
-        |  SELECT user_id, hsec, "value" AS hv FROM (
-        |    SELECT user_id, hsec, "value",
-        |      ROW_NUMBER() OVER (PARTITION BY user_id, hsec ORDER BY ts DESC, event_id DESC) AS rn
-        |    FROM e) WHERE rn = 1
-        |), b AS (
-        |  SELECT user_id, MIN(hsec) AS h0, MAX(hsec) AS h1 FROM e GROUP BY user_id
-        |), grid AS (
-        |  SELECT user_id, unnest(range(h0, h1 + 3600, 3600)) AS hsec FROM b
-        |), w AS (
+      s"""WITH $duckHourGridCtes, w AS (
         |  SELECT g.user_id AS user_id, g.hsec AS hsec, hv,
         |    LAST_VALUE(hv IGNORE NULLS) OVER wb AS prev_val,
         |    LAST_VALUE(CASE WHEN hv IS NOT NULL THEN g.hsec END IGNORE NULLS) OVER wb AS prev_t,
@@ -1216,19 +1223,8 @@ object Temporal {
     // single flat running sum (DuckDB is single-node — the oracle needs
     // no prefix-sum decomposition); sessions CTE = a03's exact semantics
     "a09_interval_concurrency" ->
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec,
-        |    CASE WHEN LAG(epoch(date_trunc('second', ts))) OVER w IS NULL
-        |           OR epoch(date_trunc('second', ts)) - LAG(epoch(date_trunc('second', ts))) OVER w > 1800
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-        |), numbered AS (
-        |  SELECT *, SUM(is_new) OVER (
-        |    PARTITION BY user_id ORDER BY ts_sec ASC, event_id ASC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-        |  FROM flagged
-        |), sess AS (
+      s"""WITH ${DuckSql.sessionCtes("user_id, event_id, CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec",
+                                          seqOrder = "ts_sec")}, sess AS (
         |  SELECT user_id, session_seq, MIN(ts_sec) AS start_sec, MAX(ts_sec) AS end_sec
         |  FROM numbered GROUP BY user_id, session_seq
         |), d0 AS (
@@ -1290,12 +1286,7 @@ object Temporal {
          |ORDER BY event_id""".stripMargin,
 
     "a05_funnel" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, epoch(date_trunc('second', ts)) AS sec
-        |  FROM events WHERE event_type IN ('view', 'click', 'purchase')
-        |), a AS (
-        |  SELECT user_id, MIN(sec) AS t_view FROM e WHERE event_type = 'view' GROUP BY user_id
-        |), b AS (
+      s"""WITH $duckFunnelViewCtes, b AS (
         |  SELECT e.user_id, MIN(sec) AS t_click FROM e JOIN a USING (user_id)
         |  WHERE event_type = 'click' AND sec > t_view GROUP BY e.user_id
         |), c AS (
@@ -1312,12 +1303,7 @@ object Temporal {
         |ORDER BY user_id""".stripMargin,
 
     "a15_constrained_funnel" ->
-      s"""WITH e AS (
-        |  SELECT user_id, event_type, epoch(date_trunc('second', ts)) AS sec
-        |  FROM events WHERE event_type IN ('view', 'click', 'purchase')
-        |), a AS (
-        |  SELECT user_id, MIN(sec) AS t_view FROM e WHERE event_type = 'view' GROUP BY user_id
-        |), b AS (
+      s"""WITH $duckFunnelViewCtes, b AS (
         |  SELECT e.user_id, MIN(sec) AS t_click FROM e JOIN a USING (user_id)
         |  WHERE event_type = 'click' AND sec > t_view AND sec <= t_view + $ClickWindowSec
         |  GROUP BY e.user_id
@@ -1412,20 +1398,7 @@ object Temporal {
         |ORDER BY user_id, view_id, purchase_id""".stripMargin,
 
     "a03_sessionize" ->
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, event_type, ts,
-        |    epoch(date_trunc('second', ts)) AS ts_sec,
-        |    CASE WHEN LAG(epoch(date_trunc('second', ts))) OVER w IS NULL
-        |           OR epoch(date_trunc('second', ts)) - LAG(epoch(date_trunc('second', ts))) OVER w > 1800
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-        |), numbered AS (
-        |  SELECT *, SUM(is_new) OVER (
-        |    PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-        |  FROM flagged
-        |)
+      s"""WITH ${DuckSql.sessionCtes()}
         |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
         |  COUNT(*) AS n_events,
         |  strftime(to_timestamp(MIN(ts_sec)), '%Y-%m-%d %H:%M:%S') AS session_start,
@@ -1436,20 +1409,7 @@ object Temporal {
         |ORDER BY user_id, session_seq""".stripMargin,
 
     "a04_session_window" ->
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, event_type, ts,
-        |    epoch(date_trunc('second', ts)) AS ts_sec,
-        |    CASE WHEN LAG(epoch(date_trunc('second', ts))) OVER w IS NULL
-        |           OR epoch(date_trunc('second', ts)) - LAG(epoch(date_trunc('second', ts))) OVER w >= 1800
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-        |), numbered AS (
-        |  SELECT *, SUM(is_new) OVER (
-        |    PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-        |  FROM flagged
-        |)
+      s"""WITH ${DuckSql.sessionCtes(gap = ">=")}
         |SELECT user_id,
         |  strftime(to_timestamp(MIN(ts_sec)), '%Y-%m-%d %H:%M:%S') AS session_start,
         |  strftime(to_timestamp(MAX(ts_sec) + 1800), '%Y-%m-%d %H:%M:%S') AS session_end,

@@ -1244,10 +1244,60 @@ object TextAnalysis {
 
   private val stopList = Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
 
+  /** t07's exact contamination join: every non-eval document sharing a
+    * word 4-gram with an eval document (doc_id % 97 = 0). t13 gates on
+    * the same statement — its bloom prefilter drops no true match.
+    */
+  private val duckDecontamSql: String =
+    s"""WITH ${DuckSql.tokenCte()}, s AS (
+       |  SELECT doc_id,
+       |    unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]
+       |      for i in range(1, len(w) - 2)])) AS g
+       |  FROM t WHERE len(w) >= 4
+       |), ev AS (
+       |  SELECT DISTINCT g FROM s WHERE doc_id % 97 = 0
+       |)
+       |SELECT s.doc_id, COUNT(*) AS n_shared
+       |FROM s JOIN ev USING (g)
+       |WHERE s.doc_id % 97 <> 0
+       |GROUP BY s.doc_id
+       |ORDER BY doc_id""".stripMargin
+
+  /** t06's 80/10/10 split restated: `sp(doc_id, split)` from the
+    * xxhash64 of the doc id (DuckHash chain). p06, p07 and t33 split on it.
+    */
+  private[graft] val duckSplitCtes: String =
+    s"""ids AS (
+       |  SELECT doc_id, doc_id AS x FROM documents
+       |), ${DuckHash.xxhash64LongCtes("doc_id")}, sp AS (
+       |  SELECT doc_id,
+       |    CASE WHEN ((hv % 100) + 100) % 100 < 80 THEN 'train'
+       |         WHEN ((hv % 100) + 100) % 100 < 90 THEN 'val' ELSE 'test' END AS split
+       |  FROM hashed
+       |)""".stripMargin
+
+  /** t25's bitlength surprisal: `toks(doc_id, tok)`, corpus frequencies
+    * `freq(tok, cf)`, `tot(nb)` the bitlength of the corpus size, and
+    * `sc(doc_id, bits, nb)` each token's floor-log2 surprisal. p10
+    * phases its curriculum on the same bits.
+    */
+  private[graft] val duckSurprisalCtes: String =
+    s"""toks AS (
+       |  SELECT doc_id, unnest(${DuckSql.tokens}) AS tok
+       |  FROM documents
+       |), freq AS (
+       |  SELECT tok, COUNT(*) AS cf FROM toks GROUP BY tok
+       |), tot AS (
+       |  SELECT length(bin(CAST(SUM(cf) AS BIGINT))) - 1 AS nb FROM freq
+       |), sc AS (
+       |  SELECT t.doc_id, CAST(tot.nb - (length(bin(f.cf)) - 1) AS BIGINT) AS bits, tot.nb
+       |  FROM toks t JOIN freq f USING (tok) CROSS JOIN tot
+       |)""".stripMargin
+
   def oracles: Map[String, String] = Map(
     "t01_token_stats" ->
       s"""SELECT doc_id,
-         |  len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS n_tokens_ws,
+         |  len(${DuckSql.tokens}) AS n_tokens_ws,
          |  len(regexp_extract_all(lower(text), '${TextFunctions.BpeTokenPattern}')) AS n_tokens_bpe,
          |  n_chars
          |FROM documents
@@ -1256,7 +1306,7 @@ object TextAnalysis {
     "t02_quality_score" ->
       s"""WITH t AS (
          |  SELECT doc_id, text,
-         |    list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS toks
+         |    ${DuckSql.tokens} AS toks
          |  FROM documents
          |), c AS (
          |  SELECT doc_id,
@@ -1286,7 +1336,7 @@ object TextAnalysis {
       val caseExpr = langs.map(l => s"WHEN score_$l = $best THEN '$l'").mkString("CASE ", " ", " ELSE 'und' END")
       s"""WITH t AS (
          |  SELECT doc_id, lang AS lang_actual,
-         |    list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS toks
+         |    ${DuckSql.tokens} AS toks
          |  FROM documents
          |), sc AS (
          |  SELECT doc_id, lang_actual,
@@ -1301,9 +1351,9 @@ object TextAnalysis {
     },
 
     "t15_tfidf_topk" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id,
-        |    unnest(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS tok
+        |    unnest(${DuckSql.tokens}) AS tok
         |  FROM documents
         |), tf AS (
         |  SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY doc_id, tok
@@ -1335,9 +1385,9 @@ object TextAnalysis {
         |ORDER BY a.lang, a.source, id_a, id_b""".stripMargin,
 
     "t16_vocab_stats" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT source,
-        |    unnest(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS tok
+        |    unnest(${DuckSql.tokens}) AS tok
         |  FROM documents
         |), tf AS (
         |  SELECT source, tok, COUNT(*) AS cnt FROM toks GROUP BY source, tok
@@ -1410,8 +1460,8 @@ object TextAnalysis {
     // statement of the semantics the 64-bit window hashes implement),
     // contaminated windows exploded to their 4 covered positions
     "t23_decontaminate_surgery" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
+      s"""WITH t AS (
+        |  SELECT doc_id, ${DuckSql.tokens} AS w
         |  FROM documents
         |), toks AS (
         |  SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens, w FROM t WHERE len(w) > 0
@@ -1441,8 +1491,8 @@ object TextAnalysis {
     // df over the shingle STRINGS (the hash is Spark-internal shuffle
     // economy, answer-invisible modulo the accepted collision odds)
     "t24_ngram_novelty" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
+      s"""WITH t AS (
+        |  SELECT doc_id, ${DuckSql.tokens} AS w
         |  FROM documents
         |), sh AS (
         |  SELECT doc_id,
@@ -1462,18 +1512,8 @@ object TextAnalysis {
     // d03's brute-force pair oracle + DuckDB's levenshtein on the same
     // 80-char heads (both engines implement the classic DP exactly)
     "t20_edit_verify_lsh" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-        |  FROM documents
-        |), s AS (
-        |  SELECT doc_id,
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]) AS sh
-        |  FROM t WHERE len(w) >= 3
-        |), pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |  WHERE len(a.sh) > 0 AND len(b.sh) > 0
-        |    AND len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE >= 0.8
+      s"""WITH ${DuckSql.shingleCtes()}, pairs AS (
+        |  ${DuckSql.nearPairs("s", "0.8")}
         |), heads AS (
         |  SELECT doc_id, substr(text, 1, 80) AS h FROM documents
         |)
@@ -1489,7 +1529,7 @@ object TextAnalysis {
     // bigram formulation; ceil(n/1000) stated in integers on both sides
     "t19_heavy_hitters" ->
       s"""WITH t AS (
-         |  SELECT list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
+         |  SELECT ${DuckSql.tokens} AS w
          |  FROM documents
          |), g AS (
          |  SELECT unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS g
@@ -1502,8 +1542,8 @@ object TextAnalysis {
          |ORDER BY cnt DESC, g ASC""".stripMargin,
 
     "t05_ngram_topk" ->
-      """WITH t AS (
-        |  SELECT list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
+      s"""WITH t AS (
+        |  SELECT ${DuckSql.tokens} AS w
         |  FROM documents
         |), g AS (
         |  SELECT unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS ngram
@@ -1519,8 +1559,8 @@ object TextAnalysis {
     // covers w[2j+1], w[2j+2]; the ragged odd tail word spans nothing.
     // boilerplate test stated as integers (df·20 > n_docs) on both sides
     "t18_boilerplate_spans" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
+      s"""WITH t AS (
+        |  SELECT doc_id, ${DuckSql.tokens} AS w
         |  FROM documents
         |), d AS (
         |  SELECT doc_id, w FROM t WHERE len(w) >= 2
@@ -1561,7 +1601,7 @@ object TextAnalysis {
     "t11_pack_sequences" ->
       s"""WITH t AS (
          |  SELECT doc_id, source,
-         |    len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS n_tokens
+         |    len(${DuckSql.tokens}) AS n_tokens
          |  FROM documents
          |), c AS (
          |  SELECT doc_id, source, n_tokens,
@@ -1597,38 +1637,23 @@ object TextAnalysis {
     // false negatives — and the exact verify join removes the false
     // positives), so the same exact-join oracle gates both
     "t13_bloom_decontaminate" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-        |  FROM documents
-        |), s AS (
-        |  SELECT doc_id,
-        |    unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]
-        |      for i in range(1, len(w) - 2)])) AS g
-        |  FROM t WHERE len(w) >= 4
-        |), ev AS (
-        |  SELECT DISTINCT g FROM s WHERE doc_id % 97 = 0
-        |)
-        |SELECT s.doc_id, COUNT(*) AS n_shared
-        |FROM s JOIN ev USING (g)
-        |WHERE s.doc_id % 97 <> 0
-        |GROUP BY s.doc_id
-        |ORDER BY doc_id""".stripMargin,
+      duckDecontamSql,
 
     // same three disjoint regex classes; counts BIGINT, one division
     "t26_pretokenize" ->
-      """SELECT doc_id,
+      s"""SELECT doc_id,
         |  CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT) AS n_alpha,
         |  CAST(len(regexp_extract_all(lower(text), '[0-9]+')) AS BIGINT) AS n_num,
         |  CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]')) AS BIGINT) AS n_punct,
-        |  CAST(len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS BIGINT) AS n_ws,
+        |  CAST(len(${DuckSql.tokens}) AS BIGINT) AS n_ws,
         |  CAST(len(regexp_extract_all(lower(text), '[a-z]+'))
         |     + len(regexp_extract_all(lower(text), '[0-9]+'))
         |     + len(regexp_extract_all(lower(text), '[^a-z0-9 ]')) AS BIGINT) AS n_pre,
-        |  CASE WHEN len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) = 0 THEN 0.0
+        |  CASE WHEN len(${DuckSql.tokens}) = 0 THEN 0.0
         |       ELSE CAST(len(regexp_extract_all(lower(text), '[a-z]+'))
         |               + len(regexp_extract_all(lower(text), '[0-9]+'))
         |               + len(regexp_extract_all(lower(text), '[^a-z0-9 ]')) AS DOUBLE)
-        |            / CAST(len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS DOUBLE)
+        |            / CAST(len(${DuckSql.tokens}) AS DOUBLE)
         |  END AS fertility
         |FROM documents
         |ORDER BY doc_id""".stripMargin,
@@ -1728,8 +1753,8 @@ object TextAnalysis {
     // the same bitlength identity over the bigram stream: bits =
     // (length(bin(pf)) − 1) − (length(bin(bf)) − 1), the −1s cancel
     "t30_bigram_surprisal" ->
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS toks
+      s"""WITH tk AS (
+        |  SELECT doc_id, ${DuckSql.tokens} AS toks
         |  FROM documents
         |), bi AS (
         |  SELECT doc_id, u.p AS p, u.w AS w
@@ -1755,8 +1780,8 @@ object TextAnalysis {
     // same bitlength bucketing; DuckDB's SUM/window-SUM widen to HUGEINT,
     // so every aggregate is cast back to BIGINT (the a17/s21 discipline)
     "t31_zipf_spectrum" ->
-      """WITH toks AS (
-        |  SELECT unnest(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS tok
+      s"""WITH toks AS (
+        |  SELECT unnest(${DuckSql.tokens}) AS tok
         |  FROM documents
         |), freq AS (
         |  SELECT tok, COUNT(*) AS cf FROM toks GROUP BY tok
@@ -1781,10 +1806,10 @@ object TextAnalysis {
     // the same decomposed union sum; c·N products in HUGEINT (Spark's
     // decimal(38,0) — the g06 discipline), one double division at the end
     "t32_source_divergence" ->
-      """WITH tf AS (
+      s"""WITH tf AS (
         |  SELECT source, tok, COUNT(*) AS c FROM (
         |    SELECT source,
-        |      unnest(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS tok
+        |      unnest(${DuckSql.tokens}) AS tok
         |    FROM documents)
         |  GROUP BY source, tok
         |), nt AS (
@@ -1812,17 +1837,7 @@ object TextAnalysis {
     // bitlength-stated floor-log2 (see the query's scaladoc): exact
     // integer surprisal in both engines, no float log anywhere
     "t25_surprisal_score" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS tok
-        |  FROM documents
-        |), freq AS (
-        |  SELECT tok, COUNT(*) AS cf FROM toks GROUP BY tok
-        |), tot AS (
-        |  SELECT length(bin(CAST(SUM(cf) AS BIGINT))) - 1 AS nb FROM freq
-        |), sc AS (
-        |  SELECT t.doc_id, CAST(tot.nb - (length(bin(f.cf)) - 1) AS BIGINT) AS bits, tot.nb
-        |  FROM toks t JOIN freq f USING (tok) CROSS JOIN tot
-        |)
+      s"""WITH $duckSurprisalCtes
         |SELECT doc_id, COUNT(*) AS n_tokens,
         |  CAST(SUM(bits) AS BIGINT) AS sum_bits,
         |  CAST(SUM(bits) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mean_bits,
@@ -1894,15 +1909,7 @@ object TextAnalysis {
          |LIMIT $PmiTopK""".stripMargin,
 
     "t33_split_shift" ->
-      s"""WITH ids AS (
-         |  SELECT doc_id, doc_id AS x FROM documents
-         |), ${DuckHash.xxhash64LongCtes("doc_id")}, sp AS (
-         |  SELECT doc_id,
-         |    CASE WHEN ((hv % 100) + 100) % 100 < 80 THEN 'train'
-         |         WHEN ((hv % 100) + 100) % 100 < 90 THEN 'val'
-         |         ELSE 'test' END AS split
-         |  FROM hashed
-         |), tk AS (
+      s"""WITH $duckSplitCtes, tk AS (
          |  SELECT d.doc_id, d.source, sp.split,
          |    unnest(list_filter(string_split(lower(d.text), ' '), w -> len(w) > 0)) AS tok
          |  FROM documents d JOIN sp USING (doc_id)
@@ -1927,7 +1934,7 @@ object TextAnalysis {
 
     "t14_rare_token_ratio" ->
       s"""WITH toks AS (
-         |  SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS tok
+         |  SELECT doc_id, unnest(${DuckSql.tokens}) AS tok
          |  FROM documents
          |), freq AS (
          |  SELECT tok, COUNT(*) AS cf FROM toks GROUP BY tok
@@ -1942,32 +1949,17 @@ object TextAnalysis {
          |ORDER BY doc_id""".stripMargin,
 
     "t07_decontaminate" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
-        |  FROM documents
-        |), s AS (
-        |  SELECT doc_id,
-        |    unnest(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]
-        |      for i in range(1, len(w) - 2)])) AS g
-        |  FROM t WHERE len(w) >= 4
-        |), ev AS (
-        |  SELECT DISTINCT g FROM s WHERE doc_id % 97 = 0
-        |)
-        |SELECT s.doc_id, COUNT(*) AS n_shared
-        |FROM s JOIN ev USING (g)
-        |WHERE s.doc_id % 97 <> 0
-        |GROUP BY s.doc_id
-        |ORDER BY doc_id""".stripMargin,
+      duckDecontamSql,
 
     "t09_repetition" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS w
+      s"""WITH t AS (
+        |  SELECT doc_id, ${DuckSql.tokens} AS w
         |  FROM documents
         |), g AS (
         |  SELECT doc_id,
         |    CASE WHEN len(w) >= 3 THEN len(w) - 2 ELSE 0 END AS n_ngrams,
         |    CASE WHEN len(w) >= 3 THEN
-        |      len(list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]))
+        |      len(${DuckSql.shingles3("w")})
         |    ELSE 0 END AS n_distinct
         |  FROM t
         |)
@@ -2213,5 +2205,70 @@ private[graft] object DuckHash {
        |  SELECT $keep, ${mul64("a2", SM3)} AS z2 FROM ${prefix}p3
        |), ${prefix}smixed AS (
        |  SELECT $keep, ${xor64("z2", "z2 // 2147483648")} AS sv FROM ${prefix}p4
+       |)""".stripMargin
+}
+
+/** DuckDB oracle fragments that several modules' statements restate —
+  * one copy of each, so a change to the tokenizer or the shingle rule
+  * reaches every oracle that uses it. Each fragment starts mid-WITH
+  * (compose as `WITH ${...}, next AS (`).
+  */
+private[graft] object DuckSql {
+  /** t01's whitespace tokens of `text`. */
+  val tokens = "list_filter(string_split(lower(text), ' '), w -> len(w) > 0)"
+
+  /** `t(doc_id, <cols> w)`: the tokens of each row of `from`. */
+  def tokenCte(from: String = "documents", cols: String = ""): String =
+    s"""t AS (
+       |  SELECT doc_id, $cols$tokens AS w
+       |  FROM $from
+       |)""".stripMargin
+
+  /** Distinct word 3-shingles of the token list `w` (d03's shingle rule). */
+  def shingles3(w: String): String =
+    s"list_distinct([$w[i] || ' ' || $w[i+1] || ' ' || $w[i+2] for i in range(1, len($w) - 1)])"
+
+  /** tokenCte plus `<shingles>(doc_id, <cols> sh)`: each document of at
+    * least 3 tokens with its distinct 3-shingles.
+    */
+  def shingleCtes(shingles: String = "s", from: String = "documents", cols: String = ""): String =
+    s"""${tokenCte(from, cols)}, $shingles AS (
+       |  SELECT doc_id, $cols
+       |    ${shingles3("w")} AS sh
+       |  FROM t WHERE len(w) >= 3
+       |)""".stripMargin
+
+  /** Exact Jaccard of two shingle lists, as a DOUBLE. */
+  def jaccard(a: String, b: String): String =
+    s"len(list_intersect($a, $b))::DOUBLE / len(list_distinct(list_concat($a, $b)))::DOUBLE"
+
+  /** Body of a pair CTE `(id_a, id_b)`: every id-ordered pair of
+    * `shingles` rows with Jaccard ≥ `threshold` — d03's brute force.
+    */
+  def nearPairs(shingles: String, threshold: Any): String =
+    s"""SELECT a.doc_id AS id_a, b.doc_id AS id_b
+       |  FROM $shingles a JOIN $shingles b ON a.doc_id < b.doc_id
+       |  WHERE len(a.sh) > 0 AND len(b.sh) > 0
+       |    AND ${jaccard("a.sh", "b.sh")} >= $threshold""".stripMargin
+
+  /** a03's sessions over `events`: `flagged(<cols>, is_new)` marks an
+    * event that opens a session (the user's first, or `gap` 1800 s after
+    * the previous one on second-truncated time, `gap` one of `>`, `>=`);
+    * `numbered` adds the running `session_seq`, ordered by `seqOrder`.
+    */
+  def sessionCtes(cols: String = "user_id, event_id, event_type, ts, epoch(date_trunc('second', ts)) AS ts_sec",
+                  gap: String = ">", seqOrder: String = "ts"): String =
+    s"""flagged AS (
+       |  SELECT $cols,
+       |    CASE WHEN LAG(epoch(date_trunc('second', ts))) OVER w IS NULL
+       |           OR epoch(date_trunc('second', ts)) - LAG(epoch(date_trunc('second', ts))) OVER w $gap 1800
+       |         THEN 1 ELSE 0 END AS is_new
+       |  FROM events
+       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
+       |), numbered AS (
+       |  SELECT *, SUM(is_new) OVER (
+       |    PARTITION BY user_id ORDER BY $seqOrder ASC, event_id ASC
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
+       |  FROM flagged
        |)""".stripMargin
 }

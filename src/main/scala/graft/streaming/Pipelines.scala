@@ -43,13 +43,6 @@ object Pipelines {
   def runningCount(decoded: DataFrame): DataFrame =
     decoded.groupBy().count()
 
-  /** A2/A3: per-shard counts (the per-chunk/per-shard folds collapsed into
-    * one hash aggregation — partial map-side, final after a 1-key-wide
-    * shuffle).
-    */
-  def perShardCount(decoded: DataFrame): DataFrame =
-    decoded.groupBy("shard_id").count()
-
   /** A4: last-processed position per shard — the checkpointable high-water
     * mark the reference tracks in `maybeLastProcessed`
     * (`CheckpointOnChunkEndStreamClient.scala:52-61`).
@@ -96,16 +89,4 @@ object Pipelines {
     envelope
       .withWatermark("arrival_ts", watermark)
       .dropDuplicatesWithinWatermark("sequence_number")
-
-  /** Event-time tumbling window counts with late-data policy (the §2.5
-    * "absent in reference, added in the engine" surface): watermark evicts
-    * window state once event time passes, so state is O(open windows) not
-    * O(stream length).
-    */
-  def windowedCounts(decoded: DataFrame, window_ : String = "1 minute",
-                     watermark: String = "2 minutes"): DataFrame =
-    decoded
-      .withWatermark("arrival_ts", watermark)
-      .groupBy(window(col("arrival_ts"), window_), col("shard_id"))
-      .agg(count(lit(1)).as("n"))
 }

@@ -1052,6 +1052,14 @@ object StreamingQueries {
     out.toSeq
   }
 
+  /** s04's per-user fold over the batch table; s14 gates on it too. */
+  private val userStateOracle: String =
+    """SELECT user_id, COUNT(*) AS n_events, MIN(event_id) AS min_event_id,
+      |  strftime(date_trunc('second', MAX(ts)), '%Y-%m-%d %H:%M:%S') AS max_ts
+      |FROM events
+      |GROUP BY user_id
+      |ORDER BY user_id""".stripMargin
+
   def oracles: Map[String, String] = Map(
     "s01_stream_count" -> "SELECT COUNT(*) AS n FROM events",
 
@@ -1060,13 +1068,8 @@ object StreamingQueries {
     // must be answer-invisible
     "s21_stream_transitions" -> graft.operators.Temporal.transitionMatrixOracle,
 
-    "s02_stream_tumbling" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS win_start,
-        |  event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST("value" AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-        |FROM events
-        |GROUP BY 1, 2
-        |ORDER BY win_start, event_type""".stripMargin,
+    // the batch q17 window count — micro-batching must be answer-invisible
+    "s02_stream_tumbling" -> graft.operators.Relational.oracles("q17_event_tumbling"),
 
     "s10_stream_static_enrich" ->
       """SELECT c_mktsegment, event_type, COUNT(*) AS n,
@@ -1114,12 +1117,7 @@ object StreamingQueries {
         |WHERE rn = 1 AND ws + INTERVAL 1 HOUR <= wm
         |ORDER BY win_start, user_id, event_type""".stripMargin,
 
-    "s04_stream_user_state" ->
-      """SELECT user_id, COUNT(*) AS n_events, MIN(event_id) AS min_event_id,
-        |  strftime(date_trunc('second', MAX(ts)), '%Y-%m-%d %H:%M:%S') AS max_ts
-        |FROM events
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+    "s04_stream_user_state" -> userStateOracle,
 
     // identical semantics to the batch a04 oracle (Temporal.oracles)
     "s08_stream_sessions" -> graft.operators.Temporal.oracles("a04_session_window"),
@@ -1139,12 +1137,7 @@ object StreamingQueries {
         |FROM events""".stripMargin,
 
     // s14 ≡ s04 by construction (same fold, new state API) — same oracle
-    "s14_stream_tws_state" ->
-      """SELECT user_id, COUNT(*) AS n_events, MIN(event_id) AS min_event_id,
-        |  strftime(date_trunc('second', MAX(ts)), '%Y-%m-%d %H:%M:%S') AS max_ts
-        |FROM events
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+    "s14_stream_tws_state" -> userStateOracle,
 
     "s07_stream_stream_join" ->
       """SELECT a.user_id, a.event_id AS event_id_a, b.event_id AS event_id_b,
@@ -1172,20 +1165,7 @@ object StreamingQueries {
     // batch sessionization restated (a03's strict >30 min break on
     // second-truncated time), emitted by the custom state fold
     "s12_stream_custom_sessions" ->
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, event_type, ts,
-        |    epoch(date_trunc('second', ts)) AS ts_sec,
-        |    CASE WHEN LAG(epoch(date_trunc('second', ts))) OVER w IS NULL
-        |           OR epoch(date_trunc('second', ts)) - LAG(epoch(date_trunc('second', ts))) OVER w > 1800
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-        |), numbered AS (
-        |  SELECT *, SUM(is_new) OVER (
-        |    PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-        |  FROM flagged
-        |)
+      s"""WITH ${graft.operators.DuckSql.sessionCtes()}
         |SELECT user_id,
         |  strftime(to_timestamp(MIN(ts_sec)), '%Y-%m-%d %H:%M:%S') AS session_start,
         |  strftime(to_timestamp(MAX(ts_sec)), '%Y-%m-%d %H:%M:%S') AS session_end,
@@ -1233,27 +1213,10 @@ object StreamingQueries {
          |ORDER BY shard_id""".stripMargin
     },
 
-    // p02's gate CTEs (same fragments), minus the packing arithmetic —
+    // p02's gate CTEs (Curation.duckQualityCtes), minus the packing arithmetic —
     // the streamed manifest must equal the batch answer exactly
     "s15_stream_curation_gates" ->
-      s"""WITH t AS (
-         |  SELECT *, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS toks
-         |  FROM documents
-         |), scored AS (
-         |  SELECT *,
-         |    ${graft.operators.Curation.scoreExprs},
-         |    CASE WHEN len(toks) = 0 THEN 0.0 ELSE
-         |      len(list_filter(toks, w -> list_contains(${graft.operators.Curation.stopList}, w)))::DOUBLE / len(toks)::DOUBLE END AS stop_ratio,
-         |    CASE WHEN len(text) = 0 THEN 0.0 ELSE
-         |      len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))::DOUBLE / len(text)::DOUBLE END AS p_ratio
-         |  FROM t
-         |), quality AS (
-         |  SELECT *,
-         |    least(len(text)::DOUBLE / 400.0, 1.0) * 0.4
-         |      + least(stop_ratio * 5.0, 1.0) * 0.3
-         |      + (1.0 - least(p_ratio * 10.0, 1.0)) * 0.3 AS q
-         |  FROM scored
-         |)
+      s"""WITH ${graft.operators.Curation.duckQualityCtes}
          |SELECT source, COUNT(*) AS n_docs,
          |  CAST(SUM(len(toks)) AS BIGINT) AS n_tokens
          |FROM quality
@@ -1281,38 +1244,12 @@ object StreamingQueries {
     // t21's window-form oracle verbatim: the streamed bounded-state
     // sample must equal the batch sample (the rank hash is
     // arrival-order-free)
-    "s20_stream_quota_sample" ->
-      s"""SELECT source, rank, doc_id, h FROM (
-         |  SELECT source, doc_id,
-         |    doc_id % 999999937 * 2654435761 % 999999937 AS h,
-         |    ROW_NUMBER() OVER (PARTITION BY source
-         |      ORDER BY doc_id % 999999937 * 2654435761 % 999999937 ASC, doc_id ASC) AS rank
-         |  FROM documents
-         |)
-         |WHERE rank <= ${graft.operators.TextAnalysis.SampleK}
-         |ORDER BY source, rank""".stripMargin,
+    "s20_stream_quota_sample" -> graft.operators.TextAnalysis.oracles("t21_stratified_sample"),
 
-    // p01's gate SQL verbatim (the shared scoreExprs/langCase text) —
+    // p01's gate CTEs (the shared Curation.duckQualityCtes) —
     // the stream's per-source counters must equal the batch gates
     "s23_stream_gate_counts" ->
-      s"""WITH t AS (
-         |  SELECT *, list_filter(string_split(lower(text), ' '), w -> len(w) > 0) AS toks
-         |  FROM documents
-         |), scored AS (
-         |  SELECT *,
-         |    ${graft.operators.Curation.scoreExprs},
-         |    CASE WHEN len(toks) = 0 THEN 0.0 ELSE
-         |      len(list_filter(toks, w -> list_contains(${graft.operators.Curation.stopList}, w)))::DOUBLE / len(toks)::DOUBLE END AS stop_ratio,
-         |    CASE WHEN len(text) = 0 THEN 0.0 ELSE
-         |      len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))::DOUBLE / len(text)::DOUBLE END AS p_ratio
-         |  FROM t
-         |), quality AS (
-         |  SELECT *,
-         |    least(len(text)::DOUBLE / 400.0, 1.0) * 0.4
-         |      + least(stop_ratio * 5.0, 1.0) * 0.3
-         |      + (1.0 - least(p_ratio * 10.0, 1.0)) * 0.3 AS q
-         |  FROM scored
-         |)
+      s"""WITH ${graft.operators.Curation.duckQualityCtes}
          |SELECT source, COUNT(*) AS n_docs,
          |  CAST(SUM(CASE WHEN q >= ${graft.operators.Curation.QualityMin} THEN 1 ELSE 0 END) AS BIGINT) AS n_q_ok,
          |  CAST(SUM(CASE WHEN (${graft.operators.Curation.langCase}) = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_l_ok,
@@ -1336,7 +1273,7 @@ object StreamingQueries {
          |  SELECT doc_id, doc_id AS x FROM documents
          |), ${graft.operators.DuckHash.xxhash64LongCtes("doc_id")}, tk AS (
          |  SELECT doc_id, source,
-         |    CAST(len(list_filter(string_split(lower(text), ' '), w -> len(w) > 0)) AS BIGINT) AS nt
+         |    CAST(len(${graft.operators.DuckSql.tokens}) AS BIGINT) AS nt
          |  FROM documents
          |), adm AS (
          |  SELECT t.source, t.nt

@@ -26,6 +26,21 @@ class CatalogRunnerSpec extends SparkSpec {
     assert(ran == Seq("y_good"))
   }
 
+  test("every query but q52 has an oracle, every oracle names a query, none is left uninterpolated") {
+    // tools/check.py scores a query without an oracle rows-only and still
+    // exits 0, so a dropped or misnamed oracle key would weaken the gate
+    // without failing it
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql
+    assert(oracles.keySet.subsetOf(queries), (oracles.keySet -- queries).toString)
+    assert(queries -- oracles.keySet == Set("q52_sketch_union"))
+    // a fragment spliced into a plain """ string stays literal text:
+    // `${frag}` or `$frag` (DuckDB's own `$` only opens JSON paths, `$.`)
+    val literal = """\$(\{|[A-Za-z_])""".r
+    val raw = oracles.collect { case (k, v) if literal.findFirstIn(v).isDefined => k }
+    assert(raw.isEmpty, s"uninterpolated oracle text in ${raw.toSeq.sorted}")
+  }
+
   test("prefix selection runs only the matching names") {
     val rs = CatalogRunner.run(spark, twoEntries :+ ("y_other" -> good), sfDir,
       only = Some(Seq("y_", "z"))) { (_, df) => df.count() }

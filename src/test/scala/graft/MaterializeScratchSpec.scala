@@ -39,6 +39,25 @@ class MaterializeScratchSpec extends SparkSpec {
     }
   }
 
+  test("a fixture is served from the memo while its source is unchanged and rebuilt after a rewrite") {
+    val s = spark
+    import s.implicits._
+    val src = Files.createTempDirectory("graft_fixture_src").toString + "/t"
+    Seq(1L, 2L).toDF("id").write.parquet(src)
+    var builds = 0
+    def read(): Seq[Long] =
+      Materialize.fixture(s, "spec-fx", src) {
+        builds += 1
+        s.read.parquet(src)
+      }.collect().map(_.getLong(0)).sorted.toSeq
+    assert(read() === Seq(1L, 2L))
+    assert(read() === Seq(1L, 2L))
+    assert(builds === 1, "an unchanged source must be a memo hit")
+    Seq(3L, 4L, 5L).toDF("id").write.mode("overwrite").parquet(src)
+    assert(read() === Seq(3L, 4L, 5L), "a rewritten source must not serve the stale copy")
+    assert(builds === 2)
+  }
+
   test("shutdown-hook registration is local-paths-only (cluster URIs are the scheduler's job)") {
     assert(Materialize.isLocalPath("/tmp/graft-scratch/x"))
     assert(Materialize.isLocalPath("file:/tmp/graft-scratch/x"))

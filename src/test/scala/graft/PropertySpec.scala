@@ -201,7 +201,8 @@ class PropertySpec extends SparkSpec {
         .filter { case (a, b) => a != b }
         .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
         .distinct.toDF("u", "v")
-      val prof = Graph.ccProfile(edges, rounds = 6).collect()
+      val prof = Graph.ccProfile(Graph.directedMsgs(edges, Graph.degrees(edges)),
+          Graph.degrees(edges).select("x"), rounds = 6).collect()
         .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
       // min-label propagation: distinct labels and label mass are
       // non-increasing; once movement stops both freeze

@@ -16,8 +16,15 @@ class GraphSpec extends SparkSpec {
       .distinct.toDF("u", "v")
   }
 
+  // the shared derivations, applied as the catalog's fixtures apply them
+  private def wd(e: DataFrame): DataFrame = Graph.degEdges(e, Graph.degrees(e))
+  private def tris(e: DataFrame): DataFrame = Graph.triangles(wd(e))
+  private def msgs(e: DataFrame): DataFrame = Graph.directedMsgs(e, Graph.degrees(e))
+  private def verts(e: DataFrame): DataFrame = Graph.degrees(e).select("x")
+  private def sup(e: DataFrame): DataFrame = Graph.support(e, tris(e))
+
   private def triCount(e: DataFrame): Long =
-    Graph.triangleStats(e).collect()(0).getAs[Long]("n_triangles")
+    Graph.triangleStats(wd(e), tris(e)).collect()(0).getAs[Long]("n_triangles")
 
   test("g01 closed forms: K4 = 4, C4 = 0, shared-edge pair = 2, star = 0") {
     // K4 (complete graph on 4 vertices): C(4,3) = 4 triangles
@@ -51,7 +58,8 @@ class GraphSpec extends SparkSpec {
   }
 
   test("g01 clustering coefficient: K4 is fully transitive (coeff = 1.0)") {
-    val r = Graph.triangleStats(edges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4))).collect()(0)
+    val k4 = edges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4))
+    val r = Graph.triangleStats(wd(k4), tris(k4)).collect()(0)
     assert(r.getAs[Double]("clustering_coeff") === 1.0)
     assert(r.getAs[Long]("n_wedges") === 12L) // 4 vertices × C(3,2)
   }
@@ -59,7 +67,7 @@ class GraphSpec extends SparkSpec {
   test("g02: star graph — hub collects leaf mass, leaves split the hub's") {
     // star 1-(2,3,4,5): deg(1)=4, deg(leaf)=1. rank(1) = 4 × RankScale;
     // rank(leaf) = RankScale/4.
-    val got = Graph.pagerankStep(edges((1, 2), (1, 3), (1, 4), (1, 5)), 10).collect()
+    val got = Graph.pagerankStep(msgs(edges((1, 2), (1, 3), (1, 4), (1, 5))), 10).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.head === ((1L, 4L, 4L * Graph.RankScale)), "hub first")
     assert(got.tail.forall(_._3 === Graph.RankScale / 4), "each leaf gets 1/deg(hub)")
@@ -73,7 +81,8 @@ class GraphSpec extends SparkSpec {
     // r2: hub 0.15S + 85·(2·5.75e11) div 100 = 1.1275e12
     //     leaves 0.15S + 85·(1.85e12 div 2) div 100 = 9.3625e11
     //     move = 7.225e11 + 2·3.6125e11 = 1.445e12; mass 3e12
-    val got = Graph.pagerankProfile(edges((1L, 2L), (1L, 3L)), rounds = 2).collect()
+    val star = edges((1L, 2L), (1L, 3L))
+    val got = Graph.pagerankProfile(msgs(star), Graph.degrees(star), rounds = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(got === Array(
       (1L, 1700000000000L, 1850000000000L, 575000000000L, 3000000000000L),
@@ -84,8 +93,8 @@ class GraphSpec extends SparkSpec {
     // on C4 every vertex has deg 2 and rank S: contribs S/2, damped sum
     // = 0.15S + 0.85S = S — the uniform state is stationary, so the
     // profile must show total_move = 0 at every round
-    val got = Graph.pagerankProfile(edges((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L)), rounds = 3)
-      .collect()
+    val c4 = edges((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L))
+    val got = Graph.pagerankProfile(msgs(c4), Graph.degrees(c4), rounds = 3).collect()
     assert(got.length === 3)
     got.foreach { r =>
       assert(r.getLong(1) === 0L, s"round ${r.getLong(0)} moved")
@@ -96,20 +105,19 @@ class GraphSpec extends SparkSpec {
   test("g06 closed forms: star is perfectly disassortative; cycle degenerate-regular") {
     // 3-star (hub 1): directed endpoints (3,1)x3 + (1,3)x3 → M=6,
     // Σx = 12, Σxy = 18, Σx² = 30 → r = (108-144)/(180-144) = -1
-    val star = Graph.degreeAssortativity(
-      edges((1L, 2L), (1L, 3L), (1L, 4L))).collect()(0)
+    def assort(e: DataFrame) = Graph.degreeAssortativity(msgs(e), Graph.degrees(e)).collect()(0)
+    val star = assort(edges((1L, 2L), (1L, 3L), (1L, 4L)))
     assert((star.getLong(0), star.getLong(1), star.getLong(2), star.getLong(3))
       === ((6L, 12L, 18L, 30L)))
     assert(star.getDouble(4) === -1.0)
     // C4: all degrees 2 → zero degree variance → r undefined → NULL
-    val c4 = Graph.degreeAssortativity(
-      edges((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L))).collect()(0)
+    val c4 = assort(edges((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L)))
     assert(c4.isNullAt(4))
   }
 
   test("g07 closed forms: K4 all-closed, C4 all-open, star hub-only, bimodal pair") {
     def hist(e: DataFrame): Seq[(Long, Long, Long)] =
-      Graph.localClusteringHistogram(e).collect()
+      Graph.localClusteringHistogram(wd(e), tris(e)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     // K4: every vertex closes all 3 of its wedges → bucket 10, 3 triangles each
     assert(hist(edges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)))
@@ -128,14 +136,15 @@ class GraphSpec extends SparkSpec {
     val pairs = (1 to 120).map(i => ((i * 7919L) % 23, (i * 104729L) % 23))
       .filter { case (a, b) => a != b }
     val e = edges(pairs: _*)
-    val sumT = Graph.localClusteringHistogram(e).collect().map(_.getLong(2)).sum
+    val sumT = Graph.localClusteringHistogram(wd(e), tris(e)).collect().map(_.getLong(2)).sum
     assert(sumT === 3L * triCount(e), "3 vertex credits per triangle")
   }
 
   test("g08 closed form: P4 min-label wavefront, hand-computed per round") {
     // path 1-2-3-4: labels [1,2,3,4] → [1,1,2,3] → [1,1,1,2] → [1,1,1,1]
     // changed: 3, 2, 1, then converged (round 4 synthesized: 0 moves)
-    val got = Graph.ccProfile(edges((1, 2), (2, 3), (3, 4)), rounds = 4).collect()
+    val p4 = edges((1, 2), (2, 3), (3, 4))
+    val got = Graph.ccProfile(msgs(p4), verts(p4), rounds = 4).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got === Array(
       (1L, 3L, 3L, 7L),
@@ -147,8 +156,8 @@ class GraphSpec extends SparkSpec {
   test("g08: two components keep two labels forever; label_sum pins WHICH labels") {
     // triangle {1,2,3} + edge {10,11}: round 1 collapses both (changed
     // 2 + 1), labels {1, 10}, sum 1·3 + 10·2 = 23; then fixed point
-    val got = Graph.ccProfile(edges((1, 2), (2, 3), (1, 3), (10, 11)), rounds = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    val e = edges((1, 2), (2, 3), (1, 3), (10, 11))
+    val got = Graph.ccProfile(msgs(e), verts(e), rounds = 3).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got === Array(
       (1L, 3L, 2L, 23L),
       (2L, 0L, 2L, 23L),
@@ -194,9 +203,8 @@ class GraphSpec extends SparkSpec {
     // k = 2 + 1 = 3. Round 1 removes {5 (deg 2), 6 (deg 1)}; the K4
     // survives (all deg 3) and every later round is an explicit no-op
     // row with the surviving counts carried forward.
-    val prof = Graph.kCorePeel(
-        edges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)),
-        rounds = 4).collect()
+    val e = edges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6))
+    val prof = Graph.kCorePeel(e, Graph.degrees(e), rounds = 4).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(prof.toSeq === Seq(
       (1L, 3L, 2L, 4L, 6L),
@@ -208,15 +216,15 @@ class GraphSpec extends SparkSpec {
   test("g05 closed form: a regular ring collapses entirely once k exceeds its degree") {
     // C5 ring: every degree 2, mean 2 → k = 3 → round 1 removes ALL
     // five vertices; later rounds are no-ops on the empty graph
-    val prof = Graph.kCorePeel(edges((1, 2), (2, 3), (3, 4), (4, 5), (5, 1)),
-        rounds = 3).collect()
+    val c5 = edges((1, 2), (2, 3), (3, 4), (4, 5), (5, 1))
+    val prof = Graph.kCorePeel(c5, Graph.degrees(c5), rounds = 3).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(prof.toSeq === Seq((1L, 5L, 0L, 0L), (2L, 0L, 0L, 0L), (3L, 0L, 0L, 0L)))
   }
 
   test("g09 closed forms: star splits hub/leaves into their log-degree buckets; K4 is one regular bucket") {
     // S4 star: hub deg 4 (bucket 2), 4 leaves deg 1 (bucket 0); 2m = 8
-    val star = Graph.degreeSpectrum(edges((0, 1), (0, 2), (0, 3), (0, 4))).collect()
+    val star = Graph.degreeSpectrum(Graph.degrees(edges((0, 1), (0, 2), (0, 3), (0, 4)))).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5), r.getDouble(6)))
     assert(star.toSeq === Seq(
@@ -224,7 +232,7 @@ class GraphSpec extends SparkSpec {
       (2L, 1L, 4L, 4L, 4L, 0.2, 0.5)))
     // K4: every degree 3 → a single bucket holding all vertices and mass
     val k4 = Graph.degreeSpectrum(
-        edges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4))).collect()
+        Graph.degrees(edges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)))).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(5), r.getDouble(6)))
     assert(k4.toSeq === Seq((1L, 4L, 12L, 1.0, 1.0)))
   }
@@ -250,15 +258,16 @@ class GraphSpec extends SparkSpec {
   test("g04 closed forms: K4 edges all 0.5; triangle edges 1/3; path edge 0") {
     // K4: every edge has the other 2 vertices as common neighbors,
     // deg = 3 each → jacc = 2 / (3 + 3 − 2) = 0.5
-    val k4 = Graph.edgeJaccard(edges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)), 100).collect()
+    def jacc(e: DataFrame, topK: Int) = Graph.edgeJaccard(wd(e), sup(e), topK).collect()
+    val k4 = jacc(edges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)), 100)
     assert(k4.length === 6)
     assert(k4.forall(r => r.getAs[Long]("common_nbrs") === 2L &&
       r.getAs[Double]("jaccard") === 0.5))
     // triangle: common = 1, jacc = 1 / (2 + 2 − 1) = 1/3
-    val c3 = Graph.edgeJaccard(edges((1, 2), (2, 3), (1, 3)), 100).collect()
+    val c3 = jacc(edges((1, 2), (2, 3), (1, 3)), 100)
     assert(c3.forall(r => r.getAs[Double]("jaccard") === 1.0 / 3.0))
     // path 1-2-3: no common neighbors on either edge
-    val p3 = Graph.edgeJaccard(edges((1, 2), (2, 3)), 100).collect()
+    val p3 = jacc(edges((1, 2), (2, 3)), 100)
     assert(p3.forall(r => r.getAs[Long]("common_nbrs") === 0L &&
       r.getAs[Double]("jaccard") === 0.0))
   }
@@ -271,7 +280,7 @@ class GraphSpec extends SparkSpec {
     val es = e.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val nbr = es.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val got = Graph.edgeJaccard(e, 10000).collect()
+    val got = Graph.edgeJaccard(wd(e), sup(e), 10000).collect()
       .map(r => ((r.getLong(0), r.getLong(1)),
         (r.getAs[Long]("common_nbrs"), r.getAs[Long]("deg_u"), r.getAs[Long]("deg_v")))).toMap
     assert(got.keySet === es, "one scored row per edge")
@@ -288,7 +297,7 @@ class GraphSpec extends SparkSpec {
     val deg = e.collect().flatMap(r => Seq(r.getLong(0), r.getLong(1)))
       .groupBy(identity).view.mapValues(_.length.toLong).toMap
     val expected = deg.values.map(d => (Graph.RankScale / d) * d).sum
-    val got = Graph.pagerankStep(e, 1000).collect().map(_.getLong(2)).sum
+    val got = Graph.pagerankStep(msgs(e), 1000).collect().map(_.getLong(2)).sum
     assert(got === expected, "sum of received = sum of sent (exact integer mass)")
   }
 
@@ -299,7 +308,7 @@ class GraphSpec extends SparkSpec {
     // left on 1 / right splits 10|3, round 3 lands the 2-community
     // fixpoint (v10 joins label 3), round 4 is a no-op row
     val e = edges((1, 2), (1, 3), (2, 3), (10, 11), (10, 12), (11, 12), (3, 10))
-    val got = Graph.lpaProfile(e).collect()
+    val got = Graph.lpaProfile(msgs(e), verts(e)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(got.toSeq === Seq(
       (1L, 4L, 6L, 2L, 27L),
@@ -310,7 +319,7 @@ class GraphSpec extends SparkSpec {
 
   test("g12 k-truss closed forms: K4 survives, shared-edge pair peels in two rounds, C5 empties, K5 survives") {
     def prof(e: org.apache.spark.sql.DataFrame) =
-      Graph.kTrussPeel(e).collect()
+      Graph.kTrussPeel(tris(e), sup(e)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
     // K4: every edge in 2 triangles = exactly the k=4 bar; converged at round 1
     assert(prof(edges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4))) ===
@@ -358,7 +367,7 @@ class GraphSpec extends SparkSpec {
     //          m(leaf) = floor(1e12/4) = 2.5e11 -> seeds 1.5e11+2.125e11,
     //          leaf 5 just 2.125e11 (no restart mass).
     val e = edges((1, 2), (1, 3), (1, 4), (1, 5))
-    val got = Graph.pprRanks(e, rounds = 1).collect()
+    val got = Graph.pprRanks(msgs(e), Graph.degrees(e), rounds = 1).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     assert(got === Seq(
       (1L, 2700000000000L, true),
@@ -376,7 +385,7 @@ class GraphSpec extends SparkSpec {
     // components.
     val e = edges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
       (10, 11), (10, 12), (11, 12))
-    val got = Graph.pprRanks(e).collect()
+    val got = Graph.pprRanks(msgs(e), Graph.degrees(e)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     val (k4, tri) = got.partition(_._1 < 10L)
     assert(tri.map(_._1).toSet === Set(10L, 11L, 12L))
@@ -390,7 +399,7 @@ class GraphSpec extends SparkSpec {
     // star 1-(2..12): hub deg 11 (bitlength bucket 4) keeps SampleK = 8
     // of 11; the 11 leaves (deg 1, bucket 1) all keep their only edge
     val e = edges((2L to 12L).map(l => (1L, l)): _*)
-    val got = Graph.neighborSample(e).collect()
+    val got = Graph.neighborSample(msgs(e)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(5)))
       .toSeq
     assert(got.map(_._1) === Seq(1L, 4L), s"buckets: $got")
@@ -401,7 +410,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("g15 on the fixture: cap bound respected, census conserves the directed edge count") {
-    val rows = Graph.neighborSample(Graph.partEdges(spark, sfDir)).collect()
+    val rows = Graph.neighborSample(Graph.msgsFixture(spark, sfDir)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(rows.nonEmpty)
     rows.foreach { case (b, nv, tot, kept, _) =>
