@@ -1,25 +1,24 @@
 package graft.sources
 
 import java.util
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 implementation of the reference's sharded source (SURVEY
   * §2.1 S1/S2): generates the `putRecordsEmitter` workload — envelope
   * records `{ "id": i }` with partition keys `key$i` hash-routed onto
-  * shards — with ONE Spark input partition PER SHARD, making "shard ⇒
-  * unit of source parallelism" literal in the connector API (what a real
-  * Kinesis connector does with shard iterators).
-  *
-  * Each partition enumerates only its own shard's records (the shard
-  * routing hash is evaluated inline — no scan-and-filter amplification,
-  * no coordination). Deterministic: same options ⇒ same data on every
-  * executor and every retry.
+  * shards. Shards are packed onto `min(shards, P)` input partitions, P the
+  * leaf parallelism file sources pack small splits to
+  * (`spark.sql.leafNodeDefaultParallelism`, else the default parallelism);
+  * shard `s` goes to partition `s % groups`, whole and in sequence order —
+  * what a Kinesis shard iterator gives, without one task per shard on
+  * every micro-batch. Deterministic: same options ⇒ same data on every
+  * executor and every retry. The batch read is the range `(0, records]`;
+  * [[SynthMicroBatchStream]] plans the same partitions per offset range.
   *
   * Usage:
   * {{{
@@ -37,10 +36,13 @@ class EnvelopeSynthSource extends TableProvider {
     // Spark hands getTable the ORIGINAL-case option map; re-wrap it so
     // `.option("maxRecordsPerBatch", ...)` and friends resolve.
     val opts = new CaseInsensitiveStringMap(properties)
-    new SynthTable(
-      records = Option(opts.get("records")).map(_.toLong).getOrElse(1000L),
-      shards = Option(opts.get("shards")).map(_.toInt).getOrElse(32),
-      maxPerBatch = Option(opts.get("maxrecordsperbatch")).map(_.toLong).getOrElse(500L))
+    val records = Option(opts.get("records")).map(_.toLong).getOrElse(1000L)
+    val shards = Option(opts.get("shards")).map(_.toInt).getOrElse(32)
+    val maxPerBatch = Option(opts.get("maxrecordsperbatch")).map(_.toLong).getOrElse(500L)
+    require(shards >= 1, s"EnvelopeSynthSource: shards must be >= 1, got $shards")
+    require(records >= 0, s"EnvelopeSynthSource: records must be >= 0, got $records")
+    require(maxPerBatch >= 1, s"EnvelopeSynthSource: maxRecordsPerBatch must be >= 1, got $maxPerBatch")
+    new SynthTable(records, shards, maxPerBatch)
   }
 }
 
@@ -52,7 +54,7 @@ object EnvelopeSynthSource {
     StructField("arrival_ts", TimestampType, nullable = false),
     StructField("data", StringType, nullable = false)))
 
-  /** Same routing as ShardedBatchProducer.shardOf (keep in sync). */
+  /** Shard of record `i`: stand-in for Kinesis' MD5-of-partition-key routing. */
   def shardOf(i: Long, nrShards: Int): Int = {
     var h = i * 0x9E3779B97F4A7C15L
     h ^= (h >>> 32)
@@ -77,50 +79,24 @@ private[sources] class SynthTable(records: Long, shards: Int, maxPerBatch: Long)
 private[sources] class SynthScanBuilder(records: Long, shards: Int, maxPerBatch: Long)
     extends ScanBuilder with Scan with Batch {
 
+  // read once on the driver, when the scan is built
+  private val groups = {
+    val spark = SparkSession.active
+    val parallelism = spark.conf.getOption("spark.sql.leafNodeDefaultParallelism")
+      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
+    math.max(1, math.min(shards, parallelism))
+  }
+
   override def build(): Scan = this
   override def readSchema(): StructType = EnvelopeSynthSource.schema
   override def toBatch: Batch = this
-  override def description(): String = s"EnvelopeSynth[$records records, $shards shards]"
+  override def description(): String = s"EnvelopeSynth[$records records, $shards shards, $groups partitions]"
 
   override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new SynthMicroBatchStream(records, shards, maxPerBatch)
+    new SynthMicroBatchStream(records, shards, maxPerBatch, groups)
 
   override def planInputPartitions(): Array[InputPartition] =
-    Array.tabulate(shards)(s => SynthShardPartition(s, shards, records))
+    Array.tabulate(groups)(g => SynthShardGroup(g, groups, shards, 0L, records))
 
-  override def createReaderFactory(): PartitionReaderFactory = new SynthReaderFactory
-}
-
-/** One shard = one partition; fields are the full generation recipe, so
-  * readers are stateless and retry-safe.
-  */
-case class SynthShardPartition(shard: Int, shards: Int, records: Long) extends InputPartition
-
-private[sources] class SynthReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[SynthShardPartition]
-    new PartitionReader[InternalRow] {
-      private var i = 0L
-      private var current = 0L
-      private val shardName = UTF8String.fromString(f"shardId-${p.shard}%012d")
-
-      override def next(): Boolean = {
-        i += 1
-        // enumerate this shard's subsequence inline — the hash is the
-        // routing table, nothing is scanned or filtered
-        while (i <= p.records && EnvelopeSynthSource.shardOf(i, p.shards) != p.shard) i += 1
-        current = i
-        i <= p.records
-      }
-
-      override def get(): InternalRow = InternalRow(
-        shardName,
-        UTF8String.fromString(s"key$current"),
-        current,
-        EnvelopeSynthSource.BaseTsMicros + current * 1000L,
-        UTF8String.fromString(s"""{ "id": $current }"""))
-
-      override def close(): Unit = ()
-    }
-  }
+  override def createReaderFactory(): PartitionReaderFactory = new SynthRangeReaderFactory
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Micro-batch streaming side of [[EnvelopeSynthSource]]: the offset IS a
@@ -11,12 +11,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Spark's offset log plays the role of the DynamoDB lease table natively.
   *
   *  - admission control (`maxRecordsPerBatch`) bounds each micro-batch the
-  *    way the reference's 500-record chunks do;
+  *    way the reference's 500-record chunks do; `ReadAllAvailable`
+  *    (Trigger.Once) takes the whole backlog and `ReadMaxRows` caps it;
   *  - Trigger.AvailableNow drains the backlog and stops (the bounded-test
   *    shape of FlattenChunksTest);
-  *  - restart resumes from the committed offset: no loss, no duplication.
+  *  - restart resumes from the committed offset: no loss, no duplication
+  *    (the partition layout is not in the offset log).
   */
-class SynthMicroBatchStream(records: Long, shards: Int, maxPerBatch: Long)
+class SynthMicroBatchStream(records: Long, shards: Int, maxPerBatch: Long, groups: Int)
     extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
   override def initialOffset(): Offset = SeqOffset(0L)
@@ -26,7 +28,12 @@ class SynthMicroBatchStream(records: Long, shards: Int, maxPerBatch: Long)
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[SeqOffset].seq
-    SeqOffset(math.min(s + maxPerBatch, records))
+    val take = limit match {
+      case _: ReadAllAvailable => records - s
+      case m: ReadMaxRows => m.maxRows
+      case _ => maxPerBatch
+    }
+    SeqOffset(s + math.min(take, records - s))
   }
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(maxPerBatch)
@@ -39,9 +46,8 @@ class SynthMicroBatchStream(records: Long, shards: Int, maxPerBatch: Long)
   override def stop(): Unit = ()
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SeqOffset].seq
-    val e = end.asInstanceOf[SeqOffset].seq
-    Array.tabulate(shards)(sh => SynthShardRange(sh, shards, s, e))
+    val (s, e) = (start.asInstanceOf[SeqOffset].seq, end.asInstanceOf[SeqOffset].seq)
+    Array.tabulate(groups)(g => SynthShardGroup(g, groups, shards, s, e))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new SynthRangeReaderFactory
@@ -52,31 +58,53 @@ case class SeqOffset(seq: Long) extends Offset {
   override def json(): String = seq.toString
 }
 
-/** Shard's slice of the (start, end] sequence range. */
-case class SynthShardRange(shard: Int, shards: Int, startSeq: Long, endSeq: Long)
+/** Records `(startSeq, endSeq]` of the shards `s % groups == group`: the
+  * full generation recipe, so readers are stateless and retry-safe.
+  */
+case class SynthShardGroup(group: Int, groups: Int, shards: Int, startSeq: Long, endSeq: Long)
     extends InputPartition
 
 private[sources] class SynthRangeReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[SynthShardRange]
+    val p = partition.asInstanceOf[SynthShardGroup]
     new PartitionReader[InternalRow] {
-      private var i = p.startSeq
-      private var current = 0L
-      private val shardName = UTF8String.fromString(f"shardId-${p.shard}%012d")
+      // the group's shard names by shard index, null for other groups' shards
+      private val names = Array.tabulate(p.shards)(s =>
+        if (s % p.groups == p.group) UTF8String.fromString(f"shardId-$s%012d") else null)
+      // the range is hashed once, a window at a time; a window's records of
+      // this group are emitted sorted by (shard, sequence), so the per-shard
+      // grouping downstream sees runs of one shard (faster on large batches)
+      private val keys = new Array[Long](math.max(0L, math.min(1L << 16, p.endSeq - p.startSeq)).toInt)
+      private var lo = p.startSeq // the window is (lo, lo + n]
+      private var n = 0
+      private var m = 0 // keys(k) = shard << 32 | offset in the window, for k < m
+      private var j = -1
 
       override def next(): Boolean = {
-        i += 1
-        while (i <= p.endSeq && EnvelopeSynthSource.shardOf(i, p.shards) != p.shard) i += 1
-        current = i
-        i <= p.endSeq
+        j += 1
+        while (j >= m && lo + n < p.endSeq) {
+          lo += n
+          n = math.min(keys.length.toLong, p.endSeq - lo).toInt
+          m = 0
+          for (k <- 0 until n) {
+            val s = EnvelopeSynthSource.shardOf(lo + k + 1, p.shards)
+            if (names(s) != null) { keys(m) = s.toLong << 32 | k; m += 1 }
+          }
+          java.util.Arrays.sort(keys, 0, m)
+          j = 0
+        }
+        j < m
       }
 
-      override def get(): InternalRow = InternalRow(
-        shardName,
-        UTF8String.fromString(s"key$current"),
-        current,
-        EnvelopeSynthSource.BaseTsMicros + current * 1000L,
-        UTF8String.fromString(s"""{ "id": $current }"""))
+      override def get(): InternalRow = {
+        val i = lo + (keys(j) & 0xFFFFFFFFL) + 1
+        InternalRow(
+          names((keys(j) >>> 32).toInt),
+          UTF8String.fromString(s"key$i"),
+          i,
+          EnvelopeSynthSource.BaseTsMicros + i * 1000L,
+          UTF8String.fromString(s"""{ "id": $i }"""))
+      }
 
       override def close(): Unit = ()
     }

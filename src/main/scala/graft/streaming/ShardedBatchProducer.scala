@@ -24,14 +24,8 @@ class ShardedBatchProducer(dir: String, nrShards: Int = 32, batchSize: Int = 500
   Files.createDirectories(target)
   Files.createDirectories(staging)
 
-  /** Deterministic shard assignment for `key$i` (stand-in for Kinesis'
-    * MD5-of-partition-key routing).
-    */
-  def shardOf(i: Long): Int = {
-    var h = i * 0x9E3779B97F4A7C15L
-    h ^= (h >>> 32)
-    ((h % nrShards + nrShards) % nrShards).toInt
-  }
+  /** Shard of `key$i`: the synthetic source's routing hash. */
+  def shardOf(i: Long): Int = graft.sources.EnvelopeSynthSource.shardOf(i, nrShards)
 
   private def recordJson(i: Long): String = {
     // NB: the `s` interpolator processes escapes even in triple quotes, so

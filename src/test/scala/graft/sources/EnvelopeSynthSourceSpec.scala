@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.streaming.Envelope
 
-/** The DSv2 sharded source: S1's "shard = unit of source parallelism"
-  * expressed in the connector API itself.
+/** The DSv2 sharded source (S1): shards packed onto one input partition
+  * per core, each shard whole and in sequence order inside one partition.
   */
 class EnvelopeSynthSourceSpec extends SparkSpec {
 
@@ -15,23 +15,126 @@ class EnvelopeSynthSourceSpec extends SparkSpec {
       .option("shards", shards.toString)
       .load()
 
-  test("one input partition per shard, all records exactly once") {
-    val df = load(records = 20000, shards = 16)
-    assert(df.rdd.getNumPartitions === 16, "shard ⇒ source partition")
-    assert(df.count() === 20000L)
-    assert(df.select("sequence_number").distinct().count() === 20000L)
-    assert(df.select("shard_id").distinct().count() === 16L)
+  /** (partition index, shard_id, sequence_number) of every row, in read order. */
+  private def layout(records: Long, shards: Int) =
+    load(records, shards).select("shard_id", "sequence_number").rdd
+      .mapPartitionsWithIndex((p, it) => it.map(r => (p, r.getString(0), r.getLong(1))))
+      .collect()
+
+  private val shardCounts = Seq(2, 7, 32) // fewer than the cores, not divisible by the groups, the paper's
+
+  test("min(shards, cores) input partitions, every record once") {
+    shardCounts.foreach { shards =>
+      val df = load(records = 20000, shards = shards)
+      assert(df.rdd.getNumPartitions === math.min(shards, spark.sparkContext.defaultParallelism),
+        s"$shards shards pack onto one input partition per core")
+      assert(df.count() === 20000L)
+      assert(df.select("sequence_number").distinct().count() === 20000L)
+      assert(df.select("shard_id").distinct().count() === shards.toLong)
+    }
   }
 
   test("rows live in the partition their shard hash says (no cross-shard leakage)") {
-    val df = load(records = 5000, shards = 8)
-    val bad = df.select(col("shard_id"), col("sequence_number"))
-      .mapPartitions { it =>
-        val shardsSeen = it.map(_.getString(0)).toSet
-        Iterator(shardsSeen.size)
-      }(org.apache.spark.sql.Encoders.scalaInt)
-      .collect()
-    assert(bad.forall(_ <= 1), "each physical partition holds exactly one shard")
+    shardCounts.foreach { shards =>
+      val rows = layout(records = 70000, shards = shards) // a reader hashes 65,536 records at a time
+      val groups = math.min(shards, spark.sparkContext.defaultParallelism)
+      rows.groupBy(_._2).foreach { case (shard, rs) =>
+        val s = shard.stripPrefix("shardId-").toInt
+        val parts = rs.map(_._1).distinct
+        assert(parts.length === 1, s"$shard spans partitions ${parts.mkString(",")}")
+        assert(parts.head === s % groups, s"$shard sits in its group")
+        val seqs = rs.map(_._3)
+        assert(seqs.zip(seqs.drop(1)).forall { case (a, b) => a < b },
+          s"$shard's sequence numbers ascend within its partition")
+        assert(seqs.forall(EnvelopeSynthSource.shardOf(_, shards) == s))
+      }
+    }
+  }
+
+  test("load rejects shards < 1") {
+    val e = intercept[IllegalArgumentException](load(records = 100, shards = 0))
+    assert(e.getMessage.contains("shards must be >= 1, got 0"))
+  }
+
+  test("load rejects records < 0") {
+    val e = intercept[IllegalArgumentException](load(records = -1, shards = 4))
+    assert(e.getMessage.contains("records must be >= 0, got -1"))
+  }
+
+  test("load rejects maxRecordsPerBatch < 1") {
+    val e = intercept[IllegalArgumentException] {
+      spark.readStream.format("graft.sources.EnvelopeSynthSource")
+        .option("records", "100").option("maxRecordsPerBatch", "0").load()
+    }
+    assert(e.getMessage.contains("maxRecordsPerBatch must be >= 1, got 0"))
+  }
+
+  test("Trigger.Once reads the whole backlog; AvailableNow chunks") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    def batches(trigger: Trigger): Map[Long, Seq[Long]] = {
+      val got = scala.collection.concurrent.TrieMap.empty[Long, Seq[Long]]
+      val q = spark.readStream.format("graft.sources.EnvelopeSynthSource")
+        .option("records", "2100").option("shards", "8").option("maxRecordsPerBatch", "400")
+        .load()
+        .writeStream
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          got.put(id, df.select("sequence_number").collect().map(_.getLong(0)).toSeq)
+          ()
+        }
+        .option("checkpointLocation", java.nio.file.Files.createTempDirectory("synth-trigger").toString)
+        .trigger(trigger)
+        .start()
+      q.awaitTermination()
+      got.toMap
+    }
+    val once = batches(Trigger.Once())
+    assert(once.keySet === Set(0L), "Trigger.Once runs one batch")
+    assert(once(0L).sorted === (1L to 2100L), "the whole backlog, each record once")
+    val now = batches(Trigger.AvailableNow())
+    assert(now.size === 6, "ceil(2100 / 400) batches")
+    assert(now.values.forall(_.size <= 400))
+    assert(now.values.flatten.toSeq.sorted === (1L to 2100L))
+  }
+
+  test("perShardState survives a sink failure and a restart") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+    import graft.streaming.{Pipelines, SinkRetry}
+    val (records, shards) = (3000L, 7)
+    val ckpt = java.nio.file.Files.createTempDirectory("synth-state-ckpt").toString
+    val emitted = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
+    val transientFired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val fatalFired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val sink = SinkRetry.foreachBatchWithRetry(sleep = _ => ()) { (df: DataFrame, id: Long) =>
+      if (id == 1L && transientFired.compareAndSet(false, true))
+        throw new java.io.IOException("injected transient sink error") // retried in place
+      val rows = df.collect()
+      if (id == 3L && fatalFired.compareAndSet(false, true))
+        throw new IllegalStateException("injected fatal sink error") // kills the query
+      rows.foreach(r => emitted.put(r.getString(0), (r.getLong(1), r.getLong(2))))
+    }
+    def run(): Unit = {
+      val src = spark.readStream.format("graft.sources.EnvelopeSynthSource")
+        .option("records", records.toString).option("shards", shards.toString)
+        .option("maxRecordsPerBatch", "500").load()
+      val q = Pipelines.perShardState(Envelope.decoded(src)).toDF("shard_id", "count", "last_seq")
+        .writeStream
+        .foreachBatch(sink)
+        .outputMode(OutputMode.Update())
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
+
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    assert(fatalFired.get && transientFired.get)
+    run() // restart: replays batch 3 from the offset log over the restored state
+    val oracle = (1L to records).groupBy(EnvelopeSynthSource.shardOf(_, shards)).map { case (s, ids) =>
+      f"shardId-$s%012d" -> ((ids.size.toLong, ids.max))
+    }
+    assert(emitted.toMap === oracle)
   }
 
   test("micro-batch stream: chunked batches, offsets are sequence checkpoints, restart resumes") {
