@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.streaming.Envelope
 
 /** DataSource V2 implementation of the reference's sharded source (SURVEY
   * §2.1 S1/S2): generates the `putRecordsEmitter` workload — envelope
@@ -29,7 +30,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 class EnvelopeSynthSource extends TableProvider {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    EnvelopeSynthSource.schema
+    Envelope.schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
@@ -47,13 +48,6 @@ class EnvelopeSynthSource extends TableProvider {
 }
 
 object EnvelopeSynthSource {
-  val schema: StructType = StructType(Seq(
-    StructField("shard_id", StringType, nullable = false),
-    StructField("partition_key", StringType, nullable = false),
-    StructField("sequence_number", LongType, nullable = false),
-    StructField("arrival_ts", TimestampType, nullable = false),
-    StructField("data", StringType, nullable = false)))
-
   /** Shard of record `i`: stand-in for Kinesis' MD5-of-partition-key routing. */
   def shardOf(i: Long, nrShards: Int): Int = {
     var h = i * 0x9E3779B97F4A7C15L
@@ -68,7 +62,7 @@ private[sources] class SynthTable(records: Long, shards: Int, maxPerBatch: Long)
     extends Table with SupportsRead {
 
   override def name(): String = s"envelope_synth(records=$records, shards=$shards)"
-  override def schema(): StructType = EnvelopeSynthSource.schema
+  override def schema(): StructType = Envelope.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
 
@@ -88,7 +82,7 @@ private[sources] class SynthScanBuilder(records: Long, shards: Int, maxPerBatch:
   }
 
   override def build(): Scan = this
-  override def readSchema(): StructType = EnvelopeSynthSource.schema
+  override def readSchema(): StructType = Envelope.schema
   override def toBatch: Batch = this
   override def description(): String = s"EnvelopeSynth[$records records, $shards shards, $groups partitions]"
 

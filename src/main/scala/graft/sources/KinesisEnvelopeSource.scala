@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamReader
@@ -12,9 +13,9 @@ import org.apache.spark.sql.types._
   * application + starting position, consumed per shard).
   *
   * COMPILE-ONLY in this build: no Kinesis connector jar ships here (zero
-  * egress), so `load()` is gated behind `spark.graft.kinesis.enabled`. At
-  * runtime a Spark DSv2 Kinesis connector (the spark-sql-kinesis family)
-  * must be on the classpath to resolve `format("kinesis")`. Everything
+  * egress), so `load()` fails with a clear message. At runtime a Spark
+  * DSv2 Kinesis connector (the spark-sql-kinesis family) must be on the
+  * classpath to resolve `format("kinesis")`. Everything
   * downstream of [[envelope]] — JSON decode, per-shard folds, checkpointed
   * restart — is connector-agnostic and verified offline against the same
   * wire shape by KinesisSurfaceSpec (MemoryStream contract test).
@@ -47,18 +48,19 @@ final case class KinesisSourceConfig(
   def reader(spark: SparkSession): DataStreamReader =
     spark.readStream.format("kinesis").options(options)
 
-  /** Resolve the source. Gated: without a connector jar this build cannot
-    * run it, and failing at configuration time with a clear message beats
-    * a DataSource-lookup stack trace mid-pipeline.
+  /** Resolve the source. Without a connector jar this build cannot run
+    * it: the lookup fails with `DATA_SOURCE_NOT_FOUND`, rethrown here with
+    * a clear message, which beats a DataSource-lookup stack trace
+    * mid-pipeline.
     */
-  def load(spark: SparkSession): DataFrame = {
-    require(
-      spark.conf.getOption("spark.graft.kinesis.enabled").contains("true"),
-      "Kinesis source is compile-only in this build: set " +
-        "spark.graft.kinesis.enabled=true AND put a Spark Kinesis DSv2 " +
-        "connector on the classpath to consume a live stream")
-    reader(spark).load()
-  }
+  def load(spark: SparkSession): DataFrame =
+    try reader(spark).load()
+    catch {
+      case e: Exception with SparkThrowable if e.getCondition == "DATA_SOURCE_NOT_FOUND" =>
+        throw new IllegalArgumentException(
+          "Kinesis source is compile-only in this build: put a Spark Kinesis " +
+            "DSv2 connector on the classpath to consume a live stream", e)
+    }
 }
 
 object KinesisEnvelopeSource {
@@ -78,7 +80,7 @@ object KinesisEnvelopeSource {
   /** Kinesis sequence numbers are decimal strings of up to ~56 digits —
     * too wide for any fixed-width numeric type — but non-negative, so
     * (length, digits) lexicographic order IS numeric order. Folds that
-    * track a per-shard high-water mark (`lastPerShard`, A4) order by this
+    * track a per-shard high-water mark (`shardProgress`, A4) order by this
     * key on the live path where the synthetic path compares its long ids.
     */
   def seqOrderKey(seq: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

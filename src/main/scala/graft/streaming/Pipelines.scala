@@ -33,9 +33,6 @@ object Pipelines {
       .withColumn("arrival_ts", timestamp_millis(col("arrival_ts")))
   }
 
-  /** S3 analog: decode the JSON payload into the typed column. */
-  def decoded(envelope: DataFrame): DataFrame = Envelope.decoded(envelope)
-
   /** A1: the reference's one analytic — global running count
     * (`Ref[Int]`, asserted == 100000 at `FlattenChunksTest.scala:59`).
     * Complete-mode aggregate; exact, state-store-backed.
@@ -43,15 +40,12 @@ object Pipelines {
   def runningCount(decoded: DataFrame): DataFrame =
     decoded.groupBy().count()
 
-  /** A4: last-processed position per shard — the checkpointable high-water
-    * mark the reference tracks in `maybeLastProcessed`
-    * (`CheckpointOnChunkEndStreamClient.scala:52-61`).
-    */
-  def lastPerShard(decoded: DataFrame): DataFrame =
-    decoded.groupBy("shard_id").agg(max("sequence_number").as("last_seq"))
-
-  /** A2+A4 in one streaming aggregate (two streaming aggs can't be joined
-    * post-hoc in complete mode — compose at the agg, not the join).
+  /** A2+A4 in one streaming aggregate: per-shard record count plus the
+    * last-processed position, the checkpointable high-water mark the
+    * reference tracks in `maybeLastProcessed`
+    * (`CheckpointOnChunkEndStreamClient.scala:52-61`). Two streaming aggs
+    * can't be joined post-hoc in complete mode — compose at the agg, not
+    * the join.
     */
   def shardProgress(decoded: DataFrame): DataFrame =
     decoded.groupBy("shard_id")

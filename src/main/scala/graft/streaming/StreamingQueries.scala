@@ -1,11 +1,10 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQueryListener, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
-import org.apache.spark.sql.types._
 import graft.Tables
 
 /** Structured Streaming queries over the `events` table, run to completion
@@ -47,15 +46,9 @@ class UserStateProcessor extends StatefulProcessor[Long, UserEvent, UserStateOut
 
   override def handleInputRows(key: Long, rows: Iterator[UserEvent],
                                tv: TimerValues): Iterator[UserStateOut] = {
-    val prev = if (st.exists()) st.get() else UserState(0L, Long.MaxValue, Long.MinValue)
-    var n = prev.n; var minId = prev.minId; var maxTs = prev.maxTs
-    rows.foreach { r =>
-      n += 1
-      if (r.event_id < minId) minId = r.event_id
-      if (r.ts_sec > maxTs) maxTs = r.ts_sec
-    }
-    st.update(UserState(n, minId, maxTs))
-    Iterator.single(UserStateOut(key, n, minId, maxTs))
+    val next = StreamingQueries.userStep(if (st.exists()) Some(st.get()) else None, rows)
+    st.update(next)
+    Iterator.single(UserStateOut(key, next.n, next.minId, next.maxTs))
   }
 }
 
@@ -63,61 +56,50 @@ object StreamingQueries {
 
   private val runIds = new AtomicInteger(0)
 
-  /** events as a bounded file stream (ts: µs timestamp).
+  /** `table` as a bounded file stream.
     *
     * File streams require a declared schema, so we probe the batch footer
     * once at plan time (cheap: footer read only, no data scan) and declare
-    * whatever physical encoding the current testdata carries; the ts
-    * rebuild then branches the same way the batch loader does. Hard-coding
+    * whatever physical encoding the current testdata carries. Hard-coding
     * the schema is what silently corrupted 11 streaming queries when the
     * testdata's ts encoding changed under us (nanos-as-long read as raw µs
-    * compressed every timestamp 1000×).
+    * compressed every timestamp 1000×); the embeddings label column has
+    * likewise shipped as both int32 and int64.
+    */
+  private def tableStream(s: SparkSession, dir: String, table: String): DataFrame =
+    s.readStream
+      .schema(s.read.parquet(s"$dir/$table.parquet").schema)
+      .option("pathGlobFilter", s"$table.parquet")
+      .parquet(dir)
+
+  /** events as a bounded file stream (ts: µs timestamp): the ts rebuild
+    * branches on the probed encoding the same way the batch loader does.
     */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     Tables.withNanosAsLong(s)
-    val probed = s.read.parquet(s"$dir/events.parquet").schema
-    Tables.adaptiveTs(
-      s.readStream
-        .schema(probed)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+    Tables.adaptiveTs(tableStream(s, dir, "events"))
   }
 
   /** Run `df` (a streaming frame) to completion into a memory sink and
     * return the sink table. One micro-batch per `maxFilesPerTrigger` file
     * set; AvailableNow terminates when the backlog is drained.
     *
-    * `statePartitions`: stateful operators (stream-stream join, session
-    * merge) open/commit one state store PER shuffle partition PER side —
-    * at the default 32 partitions that fixed cost dwarfs these bounded
-    * inputs. The partition count is pinned at the first checkpoint, so
-    * scoping it here (fresh checkpoint every run) only sets state-store
-    * parallelism; results are identical. On a real cluster this is the
-    * knob you size to key-cardinality, not to the global shuffle default.
-    *
-    * NOTE: the scoped value mutates session-global
-    * spark.sql.shuffle.partitions (restored in finally) — single-threaded
-    * runner assumed (Verify/Bench/specs run queries sequentially); do not
-    * start concurrent queries on the same SparkSession around this.
+    * Stateful operators open and commit one state store per shuffle
+    * partition per micro-batch. They run at the partition count of the
+    * frame's session (one per core from `CatalogRunner.session`), which
+    * the query's first checkpoint pins; nothing here changes a session
+    * conf, so concurrent runners on the same session are safe.
     */
-  private def runToTable(df: DataFrame, mode: OutputMode,
-                         statePartitions: Option[Int] = None): DataFrame = {
-    val spark = df.sparkSession
-    val old = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    try {
-      val name = s"graft_stream_${runIds.incrementAndGet()}"
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    } finally {
-      statePartitions.foreach(_ => spark.conf.set("spark.sql.shuffle.partitions", old))
-    }
+  private def runToTable(df: DataFrame, mode: OutputMode): DataFrame = {
+    val name = s"graft_stream_${runIds.incrementAndGet()}"
+    df.writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    df.sparkSession.table(name)
   }
 
   /** K3/C4-shaped sink runner: micro-batches land in a parquet directory
@@ -128,25 +110,17 @@ object StreamingQueries {
     * hard-gated query, not just in specs; with no injected faults the
     * result is identical to the memory-sink runner.
     */
-  private def runViaRetryingSink(df: DataFrame, mode: OutputMode,
-                                 statePartitions: Option[Int] = None): DataFrame = {
-    val spark = df.sparkSession
-    val old = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    try {
-      val out = java.nio.file.Files.createTempDirectory("graft_retry_sink_").toString
-      val q = df.writeStream
-        .foreachBatch(SinkRetry.foreachBatchWithRetry() { (batch, _) =>
-          batch.write.mode("append").parquet(out)
-        })
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.read.schema(df.schema).parquet(out)
-    } finally {
-      statePartitions.foreach(_ => spark.conf.set("spark.sql.shuffle.partitions", old))
-    }
+  private def runViaRetryingSink(df: DataFrame, mode: OutputMode): DataFrame = {
+    val out = java.nio.file.Files.createTempDirectory("graft_retry_sink_").toString
+    df.writeStream
+      .foreachBatch(SinkRetry.foreachBatchWithRetry() { (batch, _) =>
+        batch.write.mode("append").parquet(out)
+      })
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    df.sparkSession.read.schema(df.schema).parquet(out)
   }
 
   /** s17 core: run `stream` (any frame with a double `value` column) to
@@ -258,7 +232,7 @@ object StreamingQueries {
         .groupBy("c_mktsegment", "event_type")
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(38,6)")).cast("double").as("sum_value"))
-      runToTable(agg, OutputMode.Complete(), statePartitions = Some(8))
+      runToTable(agg, OutputMode.Complete())
         .orderBy("c_mktsegment", "event_type")
     }),
 
@@ -279,7 +253,7 @@ object StreamingQueries {
         .agg(count(lit(1)).as("n"))
         .select(date_format(col("win.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
           col("event_type"), col("n"))
-      runViaRetryingSink(agg, OutputMode.Append(), statePartitions = Some(8))
+      runViaRetryingSink(agg, OutputMode.Append())
         .orderBy("win_start", "event_type")
     }),
 
@@ -295,8 +269,7 @@ object StreamingQueries {
     // FIRST event as an order-free struct-min over (ts_sec, event_id),
     // plus how many duplicates the bucket absorbed.
     "s22_stream_dedup_ttl" -> ((s, dir) => {
-      runToTable(ttlDedupAgg(eventsStream(s, dir)), OutputMode.Append(),
-          statePartitions = Some(8))
+      runToTable(ttlDedupAgg(eventsStream(s, dir)), OutputMode.Append())
         .orderBy("win_start", "user_id", "event_type")
     }),
 
@@ -315,62 +288,37 @@ object StreamingQueries {
     // exact; single AvailableNow batch ⇒ one emission per key.
     "s04_stream_user_state" -> ((s, dir) => {
       import s.implicits._
-      val typed = eventsStream(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts").cast("long").as("ts_sec"))
-        .as[UserEvent]
-      val stated = typed
+      userStateRows(userEvents(s, dir)
         .groupByKey(_.user_id)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
           (user: Long, rows: Iterator[UserEvent], state: GroupState[UserState]) =>
-            val prev = state.getOption.getOrElse(UserState(0L, Long.MaxValue, Long.MinValue))
-            var n = prev.n; var minId = prev.minId; var maxTs = prev.maxTs
-            rows.foreach { r =>
-              n += 1
-              if (r.event_id < minId) minId = r.event_id
-              if (r.ts_sec > maxTs) maxTs = r.ts_sec
-            }
-            state.update(UserState(n, minId, maxTs))
-            (user, n, minId, maxTs)
-        }
-        .toDF("user_id", "n_events", "min_event_id", "max_ts_sec")
-      // 8 state partitions: same sizing rationale as s08/s10 — the
-      // per-partition state-store open/commit (×2 batches: data +
-      // AvailableNow final) dominates at the default 32 for this bounded
-      // key set; on a cluster this is sized to key cardinality.
-      runToTable(stated, OutputMode.Update(), statePartitions = Some(8))
-        .withColumn("max_ts", date_format(timestamp_seconds(col("max_ts_sec")), "yyyy-MM-dd HH:mm:ss"))
-        .select("user_id", "n_events", "min_event_id", "max_ts")
-        .orderBy("user_id")
+            val next = userStep(state.getOption, rows)
+            state.update(next)
+            UserStateOut(user, next.n, next.minId, next.maxTs)
+        }.toDF())
     }),
 
     // the NEW stateful API (Spark 4 transformWithState / state v2): s04's
     // exact semantics — same oracle — through a StatefulProcessor with a
-    // named typed ValueState on the RocksDB state-store provider (which
-    // the API requires; provider scoped to this query and restored).
+    // named typed ValueState on the RocksDB state-store provider, which
+    // the API requires. The provider is set on a private child session
+    // (`newSession()`: shared SparkContext, own SQLConf — the
+    // Materialize.loopSession discipline), so the caller's session never
+    // sees it, not even while the stream runs.
     // What the API buys at scale over mapGroupsWithState: named state
     // variables with independent schemas (evolvable without rebuilding
     // the checkpoint), TTL per variable, timers decoupled from output
     // mode — this query pins the engine to the CURRENT state API, not
     // just its deprecated-in-spirit predecessor.
     "s14_stream_tws_state" -> ((s, dir) => {
-      import s.implicits._
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val oldProv = s.conf.get(provKey,
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      s.conf.set(provKey,
+      val s2 = s.newSession()
+      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val typed = eventsStream(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts").cast("long").as("ts_sec"))
-          .as[UserEvent]
-        val out = typed.groupByKey(_.user_id)
-          .transformWithState(new UserStateProcessor, TimeMode.None(), OutputMode.Update())
-        runToTable(out.toDF(), OutputMode.Update(), statePartitions = Some(8))
-          .withColumn("max_ts",
-            date_format(timestamp_seconds(col("max_ts_sec")), "yyyy-MM-dd HH:mm:ss"))
-          .select("user_id", "n_events", "min_event_id", "max_ts")
-          .orderBy("user_id")
-      } finally s.conf.set(provKey, oldProv)
+      import s2.implicits._
+      userStateRows(userEvents(s2, dir)
+        .groupByKey(_.user_id)
+        .transformWithState(new UserStateProcessor, TimeMode.None(), OutputMode.Update())
+        .toDF())
     }),
 
     // STREAMING OHLC — a12's downsampling as a stateful streaming agg:
@@ -394,7 +342,7 @@ object StreamingQueries {
         .select(col("user_id"),
           date_format(timestamp_seconds(col("hsec")), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("open"), col("high"), col("low"), col("close"), col("n_events"))
-      runToTable(agg, OutputMode.Complete(), statePartitions = Some(8))
+      runToTable(agg, OutputMode.Complete())
         .orderBy("user_id", "hour")
     }),
 
@@ -429,7 +377,7 @@ object StreamingQueries {
           max_by(col("value"), ord).as("last_value"),
           max_by(col("ts_sec"), ord).as("last_ts_sec"),
           count(lit(1)).as("n_changes"))
-      runToTable(agg, OutputMode.Complete(), statePartitions = Some(8))
+      runToTable(agg, OutputMode.Complete())
         .filter(col("last_type") =!= "error")
         .select(col("user_id"), col("last_type"), col("last_value"),
           col("last_ts_sec"), col("n_changes"))
@@ -451,7 +399,7 @@ object StreamingQueries {
           date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
           date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
           col("n_events"), col("n_types"))
-      runToTable(agg, OutputMode.Complete(), statePartitions = Some(8))
+      runToTable(agg, OutputMode.Complete())
         .orderBy("user_id", "session_start")
     }),
 
@@ -476,7 +424,7 @@ object StreamingQueries {
             col("ts_b") <= col("ts_a") + expr("INTERVAL 10 MINUTES"))
         .select(col("user_id"), col("event_id_a"), col("event_id_b"),
           (unix_micros(col("ts_b")) - unix_micros(col("ts_a"))).as("gap_us"))
-      runToTable(j, OutputMode.Append(), statePartitions = Some(8))
+      runToTable(j, OutputMode.Append())
         .orderBy("user_id", "event_id_a", "event_id_b")
     }),
 
@@ -506,7 +454,7 @@ object StreamingQueries {
           "left_outer")
         .select(col("user_id"), col("event_id_a"), col("event_id_b"),
           (unix_micros(col("ts_b")) - unix_micros(col("ts_a"))).as("gap_us"))
-      runToTable(j, OutputMode.Append(), statePartitions = Some(8))
+      runToTable(j, OutputMode.Append())
         .orderBy("user_id", "event_id_a", "event_id_b")
     }),
 
@@ -537,7 +485,7 @@ object StreamingQueries {
           date_format(timestamp_seconds(col("start_sec")), "yyyy-MM-dd HH:mm:ss").as("session_start"),
           date_format(timestamp_seconds(col("end_sec")), "yyyy-MM-dd HH:mm:ss").as("session_end"),
           col("n_events"), col("n_types"))
-      runToTable(df, OutputMode.Append(), statePartitions = Some(8))
+      runToTable(df, OutputMode.Append())
         .orderBy("user_id", "session_start")
     }),
 
@@ -560,8 +508,7 @@ object StreamingQueries {
           expr("unix_micros(ts) div 1000000").as("ts_sec"),
           col("event_type"))
         .as[SessEvent]
-      val pairs = runToTable(transitionsStream(typed), OutputMode.Append(),
-        statePartitions = Some(8))
+      val pairs = runToTable(transitionsStream(typed), OutputMode.Append())
       transitionRollup(pairs)
     }),
 
@@ -585,7 +532,7 @@ object StreamingQueries {
           max("n_events").as("max_hourly"))
         .select(date_format(col("dw.start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("n_hours"), col("n_day"), col("max_hourly"))
-      runToTable(daily, OutputMode.Append(), statePartitions = Some(8))
+      runToTable(daily, OutputMode.Append())
         .orderBy("day", "event_type")
     }),
 
@@ -600,7 +547,7 @@ object StreamingQueries {
     "s05_synth_source_count" -> ((s, dir) => {
       val agg = Envelope.decoded(synthStream(s)).groupBy()
         .agg(count(lit(1)).as("n"), sum(col("id").cast("long")).as("sum_id"))
-      runToTable(agg, OutputMode.Complete(), statePartitions = Some(4)).orderBy("n")
+      runToTable(agg, OutputMode.Complete()).orderBy("n")
     }),
 
     // A4 on the DSv2 source: per-shard record count + last sequence
@@ -612,7 +559,7 @@ object StreamingQueries {
     "s06_synth_source_shards" -> ((s, dir) => {
       val agg = synthStream(s).groupBy("shard_id")
         .agg(count(lit(1)).as("n"), max(col("sequence_number")).as("last_seq"))
-      runToTable(agg, OutputMode.Complete(), statePartitions = Some(4)).orderBy("shard_id")
+      runToTable(agg, OutputMode.Complete()).orderBy("shard_id")
     }),
 
     // STREAMING CURATION GATES — p02's gate chain (quality → language →
@@ -629,7 +576,7 @@ object StreamingQueries {
       val digits = regexp_extract(col("source"), "[0-9]+", 0)
       val rate = lit(30L) + when(digits =!= "", digits.cast("long")) % 10 * 7L
       val mix = col("doc_id") % 1000003L * 2654435761L % 100L
-      val agg = documentsStream(s, dir)
+      val agg = tableStream(s, dir, "documents")
         .filter(qualityScore(col("text")) >= graft.operators.Curation.QualityMin &&
           langId(col("text")) === "en")
         .filter(mix < rate)
@@ -637,7 +584,7 @@ object StreamingQueries {
         .filter(col("n_tokens") > 0)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
-      runToTable(agg, OutputMode.Complete(), statePartitions = Some(8)).orderBy("source")
+      runToTable(agg, OutputMode.Complete()).orderBy("source")
     }),
 
     // STREAMING NEAR-DUP GATE — d05's SimHash sketch applied as a
@@ -659,14 +606,14 @@ object StreamingQueries {
     "s19_stream_neardup_gate" -> ((s, dir) => {
       import graft.functions.TextFunctions.wordShingles
       import graft.functions.HashingFunctions.simhash64
-      val agg = documentsStream(s, dir)
+      val agg = tableStream(s, dir, "documents")
         .select(wordShingles(col("text"), 3).as("sh"))
         .filter(size(col("sh")) > 0)
         .select(simhash64(col("sh")).as("simhash"))
         .dropDuplicates("simhash")
         .groupBy(pmod(col("simhash"), lit(8L)).as("sketch_shard"))
         .agg(count(lit(1)).as("n_unique"))
-      runToTable(agg, OutputMode.Complete(), statePartitions = Some(8)).orderBy("sketch_shard")
+      runToTable(agg, OutputMode.Complete()).orderBy("sketch_shard")
     }),
 
     // STREAMING QUOTA SAMPLE — t21's deterministic exactly-k-per-source
@@ -692,7 +639,7 @@ object StreamingQueries {
     "s23_stream_gate_counts" -> ((s, dir) => {
       import graft.functions.TextFunctions.{langId, qualityScore}
       val q = graft.operators.Curation.QualityMin
-      val g = documentsStream(s, dir)
+      val g = tableStream(s, dir, "documents")
         .select(col("source"),
           (qualityScore(col("text")) >= q).as("q_ok"),
           (langId(col("text")) === "en").as("l_ok"))
@@ -708,11 +655,11 @@ object StreamingQueries {
       import graft.functions.TopKAggregator.top_k
       import graft.operators.TextAnalysis.SampleK
       val h = col("doc_id") % lit(999999937L) * lit(2654435761L) % lit(999999937L)
-      val agg = documentsStream(s, dir)
+      val agg = tableStream(s, dir, "documents")
         .select(col("source"), col("doc_id"), h.as("h"))
         .groupBy("source")
         .agg(top_k((-col("h")).cast("double"), col("doc_id"), SampleK).as("top"))
-      runToTable(agg, OutputMode.Complete(), statePartitions = Some(8))
+      runToTable(agg, OutputMode.Complete())
         .select(col("source"), posexplode(col("top")).as(Seq("i", "t")))
         .select(col("source"), (col("i") + 1).cast("long").as("rank"),
           col("t.id").as("doc_id"), (-col("t.score")).cast("long").as("h"))
@@ -732,7 +679,7 @@ object StreamingQueries {
     // any ingest that appends in id order).
     "s24_stream_pack" -> ((s, dir) => {
       import s.implicits._
-      val typed = documentsStream(s, dir)
+      val typed = tableStream(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           graft.functions.TextFunctions.tokenCountWs(col("text")).as("n_tokens"))
         .filter(col("n_tokens") > 0)
@@ -745,7 +692,7 @@ object StreamingQueries {
             state.update(cum)
             out.iterator
         }
-      runToTable(packed.toDF(), OutputMode.Append(), statePartitions = Some(8))
+      runToTable(packed.toDF(), OutputMode.Append())
         .orderBy("doc_id")
     }),
 
@@ -761,7 +708,7 @@ object StreamingQueries {
         .groupBy("event_type", "hr")
         .agg(count(lit(1)).as("n"))
       graft.operators.Temporal.burstRollup(
-        runToTable(m, OutputMode.Complete(), statePartitions = Some(8)))
+        runToTable(m, OutputMode.Complete()))
     }),
 
     // STREAMING α-RATE ADMISSION — p12's mixture plan ENFORCED at the
@@ -781,14 +728,14 @@ object StreamingQueries {
       import graft.functions.TextFunctions.tokenCountWs
       val rates = graft.operators.Curation.queries("p12_alpha_mixture")(s, dir)
         .select(col("source"), col("rate_ppm"))
-      val agg = documentsStream(s, dir)
+      val agg = tableStream(s, dir, "documents")
         .select(col("doc_id"), col("source"), tokenCountWs(col("text")).as("nt"))
         .filter(col("nt") > 0)
         .join(broadcast(rates), "source")
         .filter(pmod(xxhash64(col("doc_id")), lit(1000000L)) < col("rate_ppm"))
         .groupBy("source")
         .agg(count(lit(1)).as("n_admitted"), sum("nt").as("admitted_tokens"))
-      runToTable(agg, OutputMode.Complete(), statePartitions = Some(8))
+      runToTable(agg, OutputMode.Complete())
         .join(rates, "source")
         .select(col("source"), col("rate_ppm"), col("n_admitted"),
           col("admitted_tokens"))
@@ -807,7 +754,7 @@ object StreamingQueries {
       val m = eventsStream(s, dir)
         .groupBy("event_type", "user_id")
         .agg(count(lit(1)).as("n_events"))
-      val t = runToTable(m, OutputMode.Complete(), statePartitions = Some(8))
+      val t = runToTable(m, OutputMode.Complete())
       val w = Window.partitionBy("event_type")
         .orderBy(col("n_events").desc, col("user_id").asc)
       t.withColumn("rank", row_number().over(w).cast("long"))
@@ -834,7 +781,7 @@ object StreamingQueries {
         .groupBy("user_id", "event_type", "day")
         .agg(count(lit(1)).as("n_events"), sum("vfp").as("sum_vfp"))
       graft.operators.Temporal.dayDecayRollup(
-        runToTable(m, OutputMode.Complete(), statePartitions = Some(8)))
+        runToTable(m, OutputMode.Complete()))
     }),
 
     // STREAMING GROWTH ACCOUNTING — a24's weekly new/retained/
@@ -852,7 +799,7 @@ object StreamingQueries {
         .groupBy("user_id", "wk")
         .agg(count(lit(1)).as("n"))
       graft.operators.Temporal.growthLedger(
-        runToTable(uw, OutputMode.Complete(), statePartitions = Some(8))
+        runToTable(uw, OutputMode.Complete())
           .select("user_id", "wk"))
     }),
 
@@ -872,7 +819,7 @@ object StreamingQueries {
         .select(col("label"), col("fence_ppb1"))
         .join(Similarity.ownLabelCentroids(eStatic)
           .select(col("label").cast("long").as("label"), col("centroid")), "label")
-      val tally = embeddingsStream(s, dir)
+      val tally = tableStream(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"))
         .join(broadcast(gate), "label")
         // the ppb1 expression is centroidPpb1's verbatim (the score must
@@ -885,38 +832,12 @@ object StreamingQueries {
         .agg(count(lit(1)).as("n_seen"),
           sum(when(col("admit"), 1L).otherwise(0L)).as("n_admitted"),
           sum(when(!col("admit"), 1L).otherwise(0L)).as("n_rejected"))
-      runToTable(tally, OutputMode.Complete(), statePartitions = Some(8))
+      runToTable(tally, OutputMode.Complete())
         .join(broadcast(gate.select("label", "fence_ppb1")), "label")
         .select("label", "n_seen", "n_admitted", "n_rejected", "fence_ppb1")
         .orderBy("label")
     })
   )
-
-  private val documentsSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
-  /** documents as a bounded file stream. */
-  private def documentsStream(s: SparkSession, dir: String): DataFrame =
-    s.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-
-  /** embeddings as a bounded file stream (schema probed from the batch
-    * file — the label column has shipped as both int32 and int64 across
-    * fixtures, and a hard-coded schema would silently null it).
-    */
-  private def embeddingsStream(s: SparkSession, dir: String): DataFrame = {
-    val probed = s.read.parquet(s"$dir/embeddings.parquet").schema
-    s.readStream
-      .schema(probed)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
-  }
 
   /** Reference topology scale: 100k records over 32 shards. */
   val SynthRecords = 100000L
@@ -929,13 +850,6 @@ object StreamingQueries {
       .option("maxRecordsPerBatch", "50000") // 2 micro-batches: multi-batch semantics without per-batch overhead dominating
       .load()
 
-  /** The s12 state fold, order-free (sorts its own input): split one
-    * user's events into sessions on a STRICT >30 min gap between
-    * second-truncated times (a03's batch semantics). Exposed so the
-    * boundary cases the fixture never hits (gap exactly 1800 s, single
-    * event, empty input) are unit-testable — the oracle gate only
-    * exercises what the fixture contains.
-    */
   /** s22 core over any streaming frame with (ts: timestamp, user_id,
     * event_type, event_id): the watermarked window-keyed dedup agg.
     * Exposed so TtlDedupStreamSpec can drive it over a crafted
@@ -988,6 +902,31 @@ object StreamingQueries {
       .orderBy("from_type", "to_type")
   }
 
+  /** s04/s14 input: one typed row per event, ts in epoch seconds. */
+  private def userEvents(s: SparkSession, dir: String): Dataset[UserEvent] = {
+    import s.implicits._
+    eventsStream(s, dir)
+      .select(col("user_id"), col("event_id"), col("ts").cast("long").as("ts_sec"))
+      .as[UserEvent]
+  }
+
+  /** s04/s14 output: drain the per-user state stream, max ts as text. */
+  private def userStateRows(stated: DataFrame): DataFrame =
+    runToTable(stated, OutputMode.Update())
+      .withColumn("max_ts", date_format(timestamp_seconds(col("max_ts_sec")), "yyyy-MM-dd HH:mm:ss"))
+      .select("user_id", "n_events", "min_event_id", "max_ts")
+      .orderBy("user_id")
+
+  /** s04/s14 per-user step: fold one batch's events onto the carried
+    * (count, min event id, max ts). Order-free, so the emission is exact.
+    * Pure — the mapGroupsWithState body and UserStateProcessor are just
+    * this + a state update.
+    */
+  private[streaming] def userStep(prev: Option[UserState], rows: Iterator[UserEvent]): UserState =
+    rows.foldLeft(prev.getOrElse(UserState(0L, Long.MaxValue, Long.MinValue))) { (st, r) =>
+      UserState(st.n + 1, math.min(st.minId, r.event_id), math.max(st.maxTs, r.ts_sec))
+    }
+
   /** s24 per-key step: fold one source's batch docs onto the carried
     * token offset in doc_id order, emitting t11's pack coordinates for
     * each and returning the new offset. Pure — unit-tested directly on
@@ -1037,6 +976,13 @@ object StreamingQueries {
     (out, LastEvent(last.ts_sec, last.event_id, last.event_type))
   }
 
+  /** The s12 state fold, order-free (sorts its own input): split one
+    * user's events into sessions on a STRICT >30 min gap between
+    * second-truncated times (a03's batch semantics). Exposed so the
+    * boundary cases the fixture never hits (gap exactly 1800 s, single
+    * event, empty input) are unit-testable — the oracle gate only
+    * exercises what the fixture contains.
+    */
   private[streaming] def splitSessions(user: Long, rows: Seq[SessEvent]): Seq[SessionRow] = {
     val evs = rows.toArray.sortBy(e => (e.ts_sec, e.event_id))
     val out = scala.collection.mutable.ArrayBuffer.empty[SessionRow]

@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions.col
 
-/** Queries may scope a session conf to their own execution (q49 raises the
-  * recursion row cap, connectedComponents and the streaming runner resize
-  * shuffle partitions) but must restore it: an unreset conf leaks into
-  * every later query in the session — q49's unreset recursion cap, for
-  * example, would silently remove the runaway-recursion guard for the rest
-  * of a 145-query run. This spec runs every conf-mutating query and
-  * asserts the session conf map is bit-identical before and after.
+/** A query that needs a different conf (q49 raises the recursion row cap,
+  * connectedComponents resizes shuffle partitions, s14 needs the RocksDB
+  * state store) sets it on a private child session, never on the caller's:
+  * an unreset conf leaks into every later query in the session — q49's
+  * unreset recursion cap, for example, would silently remove the
+  * runaway-recursion guard for the rest of a 145-query run — and a conf
+  * set-and-restored on the caller's session is swapped under any
+  * concurrent runner. This spec asserts the session conf map is
+  * bit-identical before, during and after those queries.
   */
 class ConfHygieneSpec extends SparkSpec {
 
@@ -17,6 +19,7 @@ class ConfHygieneSpec extends SparkSpec {
     */
   private val watched = Seq(
     "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.stateStore.providerClass",
     "spark.sql.cteRecursionRowLimit",
     "spark.sql.adaptive.enabled",
     "spark.sql.ansi.enabled")
@@ -26,9 +29,9 @@ class ConfHygieneSpec extends SparkSpec {
 
   test("conf-mutating queries restore every session conf they touch") {
     val before = snapshot()
-    // the three known conf-scoping paths: recursion cap (q49), shuffle
-    // partitions in the CC loop (d07), shuffle partitions in the
-    // streaming runner (s04 passes statePartitions)
+    // recursion cap (q49) and CC-loop shuffle partitions (d07), both set
+    // on child sessions, and a stateful stream (s04), which runs at the
+    // session's own partitioning
     for (name <- Seq("q49_recursive_cte", "d07_dup_clusters", "s04_stream_user_state")) {
       val df = SparkEntry.queries(name)(spark, sfDir)
       assert(df.count() > 0, s"$name returned no rows")
@@ -60,6 +63,34 @@ class ConfHygieneSpec extends SparkSpec {
     }
     assert(probes > 0, "d07 finished before any concurrent probe ran — rerun with a slower box or bigger sf")
     assert(Await.result(d07, 10.minutes) > 0)
+    assert(snapshot() === before)
+  }
+
+  test("stateful streams change no session conf while they run") {
+    import scala.concurrent._
+    import scala.concurrent.duration._
+    import ExecutionContext.Implicits.global
+    // A set-and-restore of a session conf around a stream passes the
+    // before/after check above but swaps the conf under every concurrent
+    // runner for the whole run. s04 (mapGroupsWithState) and s14
+    // (transformWithState on RocksDB) run in the background while the
+    // foreground snapshots the watched confs in a tight loop; every
+    // snapshot must equal the starting one. The first drift is recorded
+    // and asserted after both streams finish, so a failure leaves no
+    // stream running into the next test.
+    val before = snapshot()
+    val streams = Future(Seq("s04_stream_user_state", "s14_stream_tws_state")
+      .map(name => SparkEntry.queries(name)(spark, sfDir).count()))
+    var probes = 0L
+    var drift = Option.empty[Map[String, String]]
+    while (!streams.isCompleted) {
+      val now = snapshot()
+      if (drift.isEmpty && now != before) drift = Some(now)
+      probes += 1
+    }
+    assert(Await.result(streams, 10.minutes).forall(_ > 0))
+    assert(probes > 0)
+    assert(drift.isEmpty, s"session conf changed while a stream ran: $before -> $drift")
     assert(snapshot() === before)
   }
 

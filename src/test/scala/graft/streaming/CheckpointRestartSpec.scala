@@ -22,7 +22,7 @@ class CheckpointRestartSpec extends SparkSpec {
     val producer = new ShardedBatchProducer(src, nrShards = 8, batchSize = 100)
 
     def runOnce(): Unit = {
-      val q = Pipelines.decoded(Pipelines.ingest(spark, src))
+      val q = Envelope.decoded(Pipelines.ingest(spark, src))
         .select("sequence_number", "shard_id", "id")
         .writeStream
         .format("parquet")
@@ -119,7 +119,7 @@ class CheckpointRestartSpec extends SparkSpec {
     // is the production sink shape anyway (SURVEY.md §2.5 C2).
     val emissions = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
     def runOnce(): Unit = {
-      val stated = Pipelines.perShardState(Pipelines.decoded(Pipelines.ingest(spark, src)))
+      val stated = Pipelines.perShardState(Envelope.decoded(Pipelines.ingest(spark, src)))
       val q = stated.toDF("shard_id", "running_count", "last_seq")
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -176,7 +176,7 @@ class CheckpointRestartSpec extends SparkSpec {
     }, "chaos-producer")
 
     def start(trigger: Trigger) =
-      Pipelines.decoded(Pipelines.ingest(spark, src, maxFilesPerTrigger = Some(3)))
+      Envelope.decoded(Pipelines.ingest(spark, src, maxFilesPerTrigger = Some(3)))
         .select("sequence_number", "shard_id", "id")
         .writeStream
         .format("parquet")
@@ -224,7 +224,7 @@ class CheckpointRestartSpec extends SparkSpec {
     val producer = new ShardedBatchProducer(src, nrShards = 8, batchSize = 100)
 
     def start(trigger: Trigger) =
-      Pipelines.decoded(Pipelines.ingest(spark, src, maxFilesPerTrigger = Some(2)))
+      Envelope.decoded(Pipelines.ingest(spark, src, maxFilesPerTrigger = Some(2)))
         .select("sequence_number", "shard_id", "id")
         .writeStream
         .format("parquet")
@@ -286,7 +286,7 @@ class CheckpointRestartSpec extends SparkSpec {
     producer.emit(1, 501) // same ids again — simulated redelivery (C5)
 
     // non-deduped count sees the duplicates...
-    val q1 = Pipelines.runningCount(Pipelines.decoded(Pipelines.ingest(spark, src)))
+    val q1 = Pipelines.runningCount(Envelope.decoded(Pipelines.ingest(spark, src)))
       .writeStream.format("memory").queryName("dup_raw")
       .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow()).start()
     q1.awaitTermination()

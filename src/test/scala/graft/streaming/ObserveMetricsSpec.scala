@@ -34,7 +34,7 @@ class ObserveMetricsSpec extends SparkSpec {
     }
     spark.streams.addListener(listener)
     try {
-      val q = Pipelines.decoded(Pipelines.ingest(spark, dir, maxFilesPerTrigger = Some(2)))
+      val q = Envelope.decoded(Pipelines.ingest(spark, dir, maxFilesPerTrigger = Some(2)))
         .observe("tap", count(lit(1)).as("n"), sum(col("id").cast("long")).as("id_sum"))
         .writeStream
         .format("noop")

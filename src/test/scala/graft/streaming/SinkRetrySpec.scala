@@ -70,7 +70,7 @@ class SinkRetrySpec extends SparkSpec {
 
     val failuresLeft = new java.util.concurrent.atomic.AtomicInteger(2)
     val sleeps = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = Pipelines.decoded(Pipelines.ingest(spark, src))
+    val q = Envelope.decoded(Pipelines.ingest(spark, src))
       .select("sequence_number", "shard_id", "id")
       .writeStream
       .foreachBatch(SinkRetry.foreachBatchWithRetry(sleep = _ => sleeps.incrementAndGet()) {

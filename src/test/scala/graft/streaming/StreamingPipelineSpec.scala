@@ -23,7 +23,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val producer = new ShardedBatchProducer(dir, nrShards = 32, batchSize = 500)
     producer.emit(1, n + 1)
 
-    val counts = Pipelines.runningCount(Pipelines.decoded(Pipelines.ingest(spark, dir)))
+    val counts = Pipelines.runningCount(Envelope.decoded(Pipelines.ingest(spark, dir)))
     val q = counts.writeStream
       .format("memory").queryName("conservation")
       .outputMode(OutputMode.Complete())
@@ -70,7 +70,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val expected = (1L to n).groupBy(producer.shardOf)
       .map { case (s, ids) => (f"shardId-$s%012d", ids.size.toLong, ids.max) }
 
-    val decoded = Pipelines.decoded(Pipelines.ingest(spark, dir))
+    val decoded = Envelope.decoded(Pipelines.ingest(spark, dir))
     val q = Pipelines.shardProgress(decoded)
       .writeStream.format("memory").queryName("per_shard")
       .outputMode(OutputMode.Complete())
@@ -166,7 +166,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val lim = new StreamLimit(spark, limit)
     // 5 files (500 rows) per micro-batch; listener should stop after ~3 batches.
     val src = Pipelines.ingest(spark, dir, maxFilesPerTrigger = Some(5))
-    val q = Pipelines.decoded(src).writeStream
+    val q = Envelope.decoded(src).writeStream
       .format("noop")
       .trigger(Trigger.ProcessingTime(0L))
       .start()
