@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -152,6 +152,20 @@ object Multimodal {
       .orderBy("doc_a", "doc_b")
   }
 
+  /** Number of `FrameStride`-byte frames in a payload (the last one may
+    * be short). */
+  private def frameCount(b: Blob): Int = (b.payload.length + FrameStride - 1) / FrameStride
+
+  /** Frame `f`'s signature: the unsigned byte sum of its bytes — the
+    * per-frame value m08's cuts and m10's shots both read. */
+  private def frameSig(b: Blob, f: Int): Long = {
+    var sig = 0L
+    var i = f * FrameStride
+    val end = math.min(b.payload.length, i + FrameStride)
+    while (i < end) { sig += (b.payload(i) & 0xFF); i += 1 }
+    sig
+  }
+
   /** One shot (maximal run of frames between cuts) of one payload. */
   case class ShotRow(
       doc_id: Long, shot_idx: Long, start_frame: Long, n_frames: Long,
@@ -167,7 +181,7 @@ object Multimodal {
     * segmentation is oracle-checkable.
     */
   private[operators] def shotRows(b: Blob): Seq[ShotRow] = {
-    val nf = (b.payload.length + FrameStride - 1) / FrameStride
+    val nf = frameCount(b)
     val out = scala.collection.mutable.ArrayBuffer.empty[ShotRow]
     var prevSig = 0L
     var shotIdx = 0L; var start = 0L; var n = 0L
@@ -178,10 +192,7 @@ object Multimodal {
     }
     var f = 0
     while (f < nf) {
-      var sig = 0L
-      var i = f * FrameStride
-      val end = math.min(b.payload.length, i + FrameStride)
-      while (i < end) { sig += (b.payload(i) & 0xFF); i += 1 }
+      val sig = frameSig(b, f)
       if (f > 0 && math.abs(sig - prevSig) > CutThreshold) {
         close()
         start = f; n = 0L; keySig = Long.MinValue; mass = 0L
@@ -201,15 +212,12 @@ object Multimodal {
     * no guaranteed cut).
     */
   private[operators] def sceneStats(b: Blob): SceneStats = {
-    val nf = (b.payload.length + FrameStride - 1) / FrameStride
+    val nf = frameCount(b)
     var prevSig = 0L; var nCuts = 0L; var maxDelta = 0L
     var firstCut = -1L
     var f = 0
     while (f < nf) {
-      var sig = 0L
-      var i = f * FrameStride
-      val end = math.min(b.payload.length, i + FrameStride)
-      while (i < end) { sig += (b.payload(i) & 0xFF); i += 1 }
+      val sig = frameSig(b, f)
       if (f > 0) {
         val d = math.abs(sig - prevSig)
         if (d > maxDelta) maxDelta = d
@@ -224,23 +232,6 @@ object Multimodal {
     SceneStats(b.doc_id, nf.toLong, nCuts, maxDelta, firstCut)
   }
 
-  /** m09 core over (doc_id, text) rows — exposed so MultimodalSpec can
-    * drive crafted payloads with controlled bit flips (the fixture's only
-    * sub-threshold pairs are exact duplicates, distance 0).
-    *
-    * The dHash construction: 65 probe bytes at fixed stride, bit i = 1
-    * iff probe i > probe i+1 — the gradient signature a real perceptual
-    * hash computes over downscaled pixel rows. Equal payloads ⇒ equal
-    * hashes; a local edit flips only the bits whose probes it touches.
-    * Each band is built as a 16-term codegen'd sum (no HOF lambdas, no
-    * per-row allocation), so hashing stays inside whole-stage codegen at
-    * scan speed. Candidate pairs come from the (band_idx, band_val)
-    * equi-join — the d03/d05 pigeonhole shape, never all-pairs — and the
-    * 32-byte band arrays ride the join so the exact Hamming check needs
-    * no second join. At 100 TB: ~2^16 buckets per band keep buckets tiny
-    * on natural corpora; a degenerate corpus (one dominant signature)
-    * needs d03's bucket cap, which the precondition spec would flag.
-    */
   /** Per-JVM shared fixture over the corpus's pHash pair frame (the
     * Graph.partEdges discipline): m09 and p04 consume the identical
     * banded pair set.
@@ -249,37 +240,77 @@ object Multimodal {
     graft.Materialize.fixture(s, "mx-phash", dir)(
       phashPairs(Tables.documents(s, dir).select(col("doc_id"), col("text"))))
 
-  private[operators] def phashPairs(docs: DataFrame): DataFrame = {
-    def bandCol(b: Int) = (0 until 16).map { j =>
-      val i = 16 * b + j
-      val p1 = i * PhashStride + 1
-      val p2 = (i + 1) * PhashStride + 1
-      when(ascii(substring(col("text"), p1, 1)) > ascii(substring(col("text"), p2, 1)),
-        lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
-    val hashed = docs
+  /** m09 core over (doc_id, text) rows — exposed so MultimodalSpec can
+    * drive crafted payloads with controlled bit flips (the fixture's only
+    * sub-threshold pairs are exact duplicates, distance 0).
+    *
+    * The dHash construction: 65 probe bytes at fixed stride, bit i = 1
+    * iff probe i > probe i+1 — the gradient signature a real perceptual
+    * hash computes over downscaled pixel rows. Equal payloads ⇒ equal
+    * hashes; a local edit flips only the bits whose probes it touches.
+    * Candidate pairs come from the (band_idx, band_val) equi-join — the
+    * d03/d05 pigeonhole shape, never all-pairs — and the 32-byte band
+    * arrays ride the join so the exact Hamming check needs no second
+    * join (bandMates). At 100 TB: ~2^16 buckets per band keep buckets tiny
+    * on natural corpora; a degenerate corpus (one dominant signature)
+    * needs d03's bucket cap, which the precondition spec would flag.
+    */
+  private[operators] def phashPairs(docs: DataFrame): DataFrame =
+    hammingPairs(docs
       .filter(length(col("text")) >= PhashMinLen)
-      .select(col("doc_id"), array((0 until PhashBands).map(bandCol): _*).as("bands"))
-    val bands = hashed.select(col("doc_id"), col("bands"),
+      .select(col("doc_id"), phashBands.as("bands")), PhashBands, PhashHamMax)
+
+  /** The m09/m14 dHash band array: `PhashBands` 16-bit band values over
+    * `text`. Each band is built as a 16-term codegen'd sum (no HOF
+    * lambdas, no per-row allocation), so hashing stays inside
+    * whole-stage codegen at scan speed.
+    */
+  private def phashBands: Column =
+    array((0 until PhashBands).map { b =>
+      (0 until 16).map { j =>
+        val i = 16 * b + j
+        val p1 = i * PhashStride + 1
+        val p2 = (i + 1) * PhashStride + 1
+        when(ascii(substring(col("text"), p1, 1)) > ascii(substring(col("text"), p2, 1)),
+          lit(1L << j)).otherwise(lit(0L))
+      }.reduce(_ + _)
+    }: _*)
+
+  /** The banded-Hamming pigeonhole join over (doc_id, bands, …) rows:
+    * every (doc_a < doc_b) pair equal in at least one (band_idx,
+    * band_val), with both band arrays (ba, bb) and the `carry` columns
+    * (over the `x`/`y` sides) riding the join so the exact distance
+    * needs no second join. A pair can meet in several bands, so each
+    * pair repeats once per shared band.
+    */
+  private def bandMates(hashed: DataFrame, carry: Column*): DataFrame = {
+    val bands = hashed.select(col("*"),
       posexplode(col("bands")).as(Seq("band_idx", "band_val")))
-    val dist = (0 until PhashBands)
-      .map(i => bit_count(col("ba").getItem(i).bitwiseXOR(col("bb").getItem(i))))
-      .reduce(_ + _)
-      .cast("long")
     bands.as("x").join(bands.as("y"),
         col("x.band_idx") === col("y.band_idx") &&
           col("x.band_val") === col("y.band_val") &&
           col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.bands").as("ba"), col("y.bands").as("bb"))
-      .withColumn("dist", dist)
-      .filter(col("dist") <= PhashHamMax)
-      // a pair ≤ HamMax can band-match in up to PhashBands bands; dist is
+      .select((Seq(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        col("x.bands").as("ba"), col("y.bands").as("bb")) ++ carry): _*)
+  }
+
+  /** Hamming distance over all `nBands` band values of ba/bb. */
+  private def bandHamming(nBands: Int): Column =
+    (0 until nBands)
+      .map(i => bit_count(col("ba").getItem(i).bitwiseXOR(col("bb").getItem(i))))
+      .reduce(_ + _)
+      .cast("long")
+
+  /** m09/m15's near-dup pairs: bandMates within Hamming `hamMax`, one
+    * (doc_a, doc_b, dist) row per pair. */
+  private def hammingPairs(hashed: DataFrame, nBands: Int, hamMax: Int): DataFrame =
+    bandMates(hashed)
+      .withColumn("dist", bandHamming(nBands))
+      .filter(col("dist") <= hamMax)
+      // a pair ≤ hamMax can band-match in up to nBands bands; dist is
       // identical across those duplicate candidate rows
       .dropDuplicates("doc_a", "doc_b")
       .select("doc_a", "doc_b", "dist")
-  }
 
   /** m14 core — the d16-style CALIBRATION of the m09 index: for every
     * band-pigeonhole candidate pair (NO Hamming cut — the spectrum past
@@ -293,34 +324,16 @@ object Multimodal {
     * output is ≤ 65 distance rows.
     */
   private[operators] def phashMargin(docs: DataFrame): DataFrame = {
-    def bandCol(b: Int) = (0 until 16).map { j =>
-      val i = 16 * b + j
-      val p1 = i * PhashStride + 1
-      val p2 = (i + 1) * PhashStride + 1
-      when(ascii(substring(col("text"), p1, 1)) > ascii(substring(col("text"), p2, 1)),
-        lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
     val probes = array((0 to PhashBits).map(i =>
       ascii(substring(col("text"), i * PhashStride + 1, 1))): _*)
     val hashed = docs
       .filter(length(col("text")) >= PhashMinLen)
-      .select(col("doc_id"), array((0 until PhashBands).map(bandCol): _*).as("bands"),
-        probes.as("pr"))
-    val bands = hashed.select(col("doc_id"), col("bands"), col("pr"),
-      posexplode(col("bands")).as(Seq("band_idx", "band_val")))
-    val dist = (0 until PhashBands)
-      .map(i => bit_count(col("ba").getItem(i).bitwiseXOR(col("bb").getItem(i))))
-      .reduce(_ + _)
-      .cast("long")
-    bands.as("x").join(bands.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_val") === col("y.band_val") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.bands").as("ba"), col("y.bands").as("bb"),
-        col("x.pr").as("pa"), col("y.pr").as("pb"))
+      .select(col("doc_id"), phashBands.as("bands"), probes.as("pr"))
+    // deduped BEFORE the distance: no Hamming cut here, so the distance
+    // is computed once per pair, not once per shared band
+    bandMates(hashed, col("x.pr").as("pa"), col("y.pr").as("pb"))
       .dropDuplicates("doc_a", "doc_b")
-      .select(dist.as("dist"),
+      .select(bandHamming(PhashBands).as("dist"),
         aggregate(zip_with(col("pa"), col("pb"),
             (x, y) => when(x === y, 1).otherwise(0)),
           lit(0), (acc, v) => acc + v).cast("long").as("agr"))
@@ -412,22 +425,7 @@ object Multimodal {
     // the cache is |docs|·4 longs. Identical integers, same fingerprints.
     val hashed = graft.Materialize(smpF.select(col("doc_id"),
       array((0 until AudioFpBands).map(bandCol): _*).as("bands")))
-    val bands = hashed.select(col("doc_id"), col("bands"),
-      posexplode(col("bands")).as(Seq("band_idx", "band_val")))
-    val dist = (0 until AudioFpBands)
-      .map(i => bit_count(col("ba").getItem(i).bitwiseXOR(col("bb").getItem(i))))
-      .reduce(_ + _)
-      .cast("long")
-    bands.as("x").join(bands.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_val") === col("y.band_val") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.bands").as("ba"), col("y.bands").as("bb"))
-      .withColumn("dist", dist)
-      .filter(col("dist") <= AudioFpHamMax)
-      .dropDuplicates("doc_a", "doc_b")
-      .select("doc_a", "doc_b", "dist")
+    hammingPairs(hashed, AudioFpBands, AudioFpHamMax)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -561,7 +559,7 @@ object Multimodal {
       blobs.mapPartitions { it =>
         it.grouped(DecodeBatchSize).flatMap { batch =>
           batch.map { b =>
-            val nf = (b.payload.length + FrameStride - 1) / FrameStride
+            val nf = frameCount(b)
             var ns = 0L; var sum = 0L; var fi = 0
             while (fi < nf) {
               if (fi % SampleEvery == 0) { ns += 1; sum += (b.payload(fi * FrameStride) & 0xFF) }

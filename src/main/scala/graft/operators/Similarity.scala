@@ -62,6 +62,23 @@ object Similarity {
       .select(col("label"), col("dim"),
         (col("sfix").cast("double") / col("n").cast("double") / CentroidFixScale).as("c"))
 
+  /** The one centroid assembly: (key, dim, c) components → (key,
+    * centroid: array<float>), the dim-sorted list cast to float32 that
+    * every assignment broadcasts — mirrored by `duckCentroidCtes`' cent.
+    */
+  private def centroidArrays(comp: DataFrame, key: String): DataFrame =
+    comp.groupBy(key)
+      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))), x => x.getField("c"))
+        .cast("array<float>").as("centroid"))
+
+  /** IVF coarse-quantizer centroids as `(cell, centroid: array<float>)` —
+    * e05's fixed-point components assembled per label: the cells of
+    * ivfCranked, semAssigned and e12b's vector shortlist.
+    */
+  private[operators] def ivfCentroids(e: DataFrame): DataFrame =
+    centroidArrays(centroidComponents(e), "label")
+      .select(col("label").as("cell"), col("centroid"))
+
   /** The shared IVF geometry (e06 / e19): every vector scored against
     * every label centroid (broadcast — |labels| rows), probe-ranked per
     * vector by (ccos DESC, cell ASC) row_number. One definition so the
@@ -70,13 +87,8 @@ object Similarity {
     * `duckIvfCtes`' `cranked` CTE.
     */
   private[operators] def ivfCranked(e: DataFrame): DataFrame = {
-    val cents = centroidComponents(e)
-      .groupBy("label")
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))), s => s.getField("c"))
-        .cast("array<float>").as("centroid"))
-      .select(col("label").as("cell"), col("centroid"))
     val wAssign = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cell").asc)
-    e.join(broadcast(cents))
+    e.join(broadcast(ivfCentroids(e)))
       .select(col("vec_id"), col("embedding"), col("cell"),
         cosine_similarity(col("embedding"), col("centroid")).as("ccos"))
       .withColumn("rn", row_number().over(wAssign))
@@ -91,18 +103,100 @@ object Similarity {
     */
   private[operators] def ivfProbePairs(e: DataFrame): DataFrame = {
     val cr = ivfCranked(e)
-    val assigned = cr.filter(col("rn") <= 2)
-      .select(col("vec_id").as("nid"), col("embedding").as("n_emb"), col("cell"))
-    cr.filter(col("rn") <= 4 && col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-        col("cell"), col("rn").as("prn"))
-      .join(assigned, "cell")
+    ivfMeetPairs(
+      cr.filter(col("rn") <= 4 && col("vec_id") < 10)
+        .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
+          col("cell"), col("rn").as("prn")),
+      cr.filter(col("rn") <= 2)
+        .select(col("vec_id").as("nid"), col("embedding").as("n_emb"), col("cell")),
+      Seq("cell"))
+  }
+
+  /** Probe rows (qid, q_emb, prn, `keys`) met with index rows (nid,
+    * n_emb, `keys`): one row per (qid, nid) with its minimum meeting
+    * probe rank `mr` and its cosine — e19's cells, e21's (cell, sub).
+    */
+  private def ivfMeetPairs(probes: DataFrame, index: DataFrame, keys: Seq[String]): DataFrame =
+    probes.join(index, keys)
       .filter(col("nid") =!= col("qid"))
       // q_emb/n_emb are constant per (qid, nid) group — first() is exact
       .groupBy("qid", "nid")
       .agg(min("prn").as("mr"), first("q_emb").as("q_emb"), first("n_emb").as("n_emb"))
       .select(col("qid"), col("nid"), col("mr"),
         cosine_similarity(col("q_emb"), col("n_emb")).as("cos"))
+
+  /** e19/e21's curve over a (qid, nid, mr, cos) probe-pair frame: per
+    * nprobe ∈ {1, 2, 4} the top-5 of the pairs met within np probes,
+    * scored per query as recall@5 against exactTop5.
+    */
+  private def nprobeRecall(e: DataFrame, pairs: DataFrame): DataFrame = {
+    import e.sparkSession.implicits._
+    val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
+    val sweeps = Seq(1, 2, 4).map { np =>
+      pairs.filter(col("mr") <= np)
+        .withColumn("rn", row_number().over(wTop))
+        .filter(col("rn") <= 5)
+        .select(lit(np.toLong).as("nprobe"), col("qid"), col("nid"))
+    }.reduce(_ unionByName _)
+    val exact = exactTop5(e)
+    val grid = exact.groupBy("qid").agg(count(lit(1)).as("n_exact"))
+      .crossJoin(broadcast(Seq(1L, 2L, 4L).toDF("nprobe")))
+    val hits = exact.join(sweeps, Seq("qid", "nid"))
+      .groupBy("nprobe", "qid").agg(count(lit(1)).as("n_hits"))
+    grid.join(hits, Seq("nprobe", "qid"), "left")
+      .select(col("nprobe"), col("qid"), col("n_exact"),
+        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
+        (coalesce(col("n_hits"), lit(0L)).cast("double")
+          / col("n_exact").cast("double")).as("recall_at_5"))
+      .orderBy("nprobe", "qid")
+  }
+
+  /** e02 core: exact top-10 neighbors of the 10 fixed queries (vec_id <
+    * 10) — queries broadcast, one corpus scan, a per-query ranking window
+    * (Q keys wide; the corpus never shuffles because the broadcast join
+    * preserves scan partitioning).
+    */
+  private def bruteForceKnn(e: DataFrame): DataFrame = {
+    val q = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
+    val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
+    e.select(col("vec_id").as("nid"), col("embedding").as("n_emb"))
+      .join(broadcast(q), col("nid") =!= col("qid"))
+      .select(col("qid"), col("nid"),
+        cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .filter(col("rn") <= 10)
+      .orderBy("qid", "rn")
+  }
+
+  /** The exact top-5 (qid, nid) of bruteForceKnn — the truth every ANN
+    * recall audit (e15/e19/e21/e28) scores against. */
+  private def exactTop5(e: DataFrame): DataFrame =
+    bruteForceKnn(e).filter(col("rn") <= 5).select(col("qid"), col("nid"))
+
+  /** e03 core: LSH-bucketed top-5 for the 10 fixed queries — candidates
+    * share a (table, bucket) in lshBuckets (uncapped), exact cosine only
+    * on candidates, per-query top-5 after unioning tables.
+    */
+  private def lshKnn(e: DataFrame): DataFrame = {
+    val exploded = lshBuckets(e, col("embedding"))
+    val q = exploded.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
+        col("tbl"), col("bucket"))
+    // shuffle both sides on (tbl, bucket) — the join key IS the bucket;
+    // at scale this is a co-partitioned equi-join, never a cross join.
+    val cands = exploded.join(q, Seq("tbl", "bucket"))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id").as("nid"), col("q_emb"),
+        col("embedding").as("n_emb"))
+      .distinct() // a pair found by several tables is scored once
+    val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
+    cands
+      .select(col("qid"), col("nid"),
+        cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .filter(col("rn") <= 5)
+      .orderBy("qid", "rn")
   }
 
   /** e28: pinned AGGREGATE recall floor (over all queries, integer
@@ -114,31 +208,12 @@ object Similarity {
   private[operators] val NprobeFloorDen = 5L
 
   /** e11's blocking stage, shared with p04's cross-modal edge builder:
-    * every vector assigned to its nearest label-centroid cell. Centroids
-    * come from `centroidComponents` (order-free fixed-point sums — bit-reproducible)
-    * and are BROADCAST (|labels| rows), so the embedding table crosses no
-    * shuffle here; the nearest-cell pick is a per-vector window over the
-    * |labels| scored copies (constant fan-out, never corpus²).
+    * every vector assigned to its nearest label-centroid cell — one
+    * Lloyd assignment pass (a max_by hash aggregate) against the
+    * broadcast IVF centroids, so the cell is ivfCranked's rn = 1.
     */
-  private[operators] def semAssigned(e: DataFrame): DataFrame = {
-    val cents = centroidComponents(e)
-      .groupBy("label")
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))), s => s.getField("c"))
-        .cast("array<float>").as("centroid"))
-      .select(col("label").as("cell"), col("centroid"))
-    // nearest-cell argmax as a max_by HASH AGG (round 13, the
-    // lloydAssign rewrite verbatim): map-side reduction to one row per
-    // vec_id instead of shuffling+sorting the |labels|-fan-out candidate
-    // stream; struct(ccos, -cell) is (ccos DESC, cell ASC) exactly.
-    e.join(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        cosine_similarity(col("embedding"), col("centroid")).as("ccos"))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("cell"), col("embedding")),
-        struct(col("ccos"), (-col("cell")).as("nc"))).as("pick"))
-      .select(col("vec_id"), col("pick.embedding").as("embedding"),
-        col("pick.cell").as("cell"))
-  }
+  private[operators] def semAssigned(e: DataFrame): DataFrame =
+    lloydAssign(e, ivfCentroids(e))
 
   /** e08b: fixed Lloyd round count — both engines unroll exactly this
     * many assignment/recompute iterations (the g05/g08/e18b rule), so
@@ -166,16 +241,12 @@ object Similarity {
         count(lit(1)).as("n"))
 
   /** Components → broadcastable centroid table (cell, centroid:
-    * array<float>) — the same assemble-sort-cast e05/e06/e08 use, so the
-    * next round's assignment sees bit-identical float32 centroids in
-    * both engines.
+    * array<float>), so the next round's assignment sees the same
+    * float32 centroids in both engines.
     */
   private[operators] def lloydCentroids(comp: DataFrame): DataFrame =
-    comp.select(col("cell"), col("dim"),
-        (col("sfix").cast("double") / col("n").cast("double") / CentroidFixScale).as("c"))
-      .groupBy("cell")
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))), s => s.getField("c"))
-        .cast("array<float>").as("centroid"))
+    centroidArrays(comp.select(col("cell"), col("dim"),
+      (col("sfix").cast("double") / col("n").cast("double") / CentroidFixScale).as("c")), "cell")
 
   /** One Lloyd assignment pass: corpus scan × broadcast centroids,
     * nearest cell by (ccos DESC, cell ASC).
@@ -408,16 +479,32 @@ object Similarity {
         s => s.getField("qv")).as("q"))
   }
 
-  /** IVF coarse-quantizer centroids as `(cell, centroid: array<float>)` —
-    * e05's fixed-point components assembled per label. Shared by e12b's
-    * vector shortlist (and the same block e06/e08 state inline).
+  /** Integer dot of the SQ8 code lists `q_a`·`q_b` — BIGINT sums,
+    * commutative and exact, so the ranking needs no fold-order pinning.
+    * The e22/e25/e26 candidate score. */
+  private def sqIntDot: Column =
+    aggregate(zip_with(col("q_a"), col("q_b"), (x, y) => x * y), lit(0L), (acc, x) => acc + x)
+
+  /** e22/e25's serving tail over (qid, nid, int_dot) candidates: a top-40
+    * shortlist by integer dot, exact-cosine re-rank of the shortlist
+    * only (the float table is touched for 40 rows per query), top-5.
     */
-  private[operators] def ivfCentroids(e: DataFrame): DataFrame =
-    centroidComponents(e)
-      .groupBy("label")
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))), s => s.getField("c"))
-        .cast("array<float>").as("centroid"))
-      .select(col("label").as("cell"), col("centroid"))
+  private def sqRerank(e: DataFrame, scoredInt: DataFrame): DataFrame = {
+    val wTop = Window.partitionBy("qid").orderBy(col("int_dot").desc, col("nid").asc)
+    val shortlist = scoredInt
+      .withColumn("srn", row_number().over(wTop)).filter(col("srn") <= 40)
+      .select("qid", "nid", "int_dot")
+    val emb = e.select(col("vec_id").as("nid"), col("embedding").as("n_emb"))
+    val qemb = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
+    val wCos = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
+    shortlist.join(emb, "nid").join(broadcast(qemb), "qid")
+      .select(col("qid"), col("nid"), col("int_dot"),
+        cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
+      .withColumn("rn", row_number().over(wCos).cast("long"))
+      .filter(col("rn") <= 5)
+      .orderBy("qid", "rn")
+  }
 
   /** e12b's lexical df cap: a query term participates in candidate
     * generation only if its posting list covers at most 4/5 of the corpus
@@ -431,12 +518,6 @@ object Similarity {
   private[operators] val LexDfCapNum = 4L
   private[operators] val LexDfCapDen = 5L
 
-  /** e12b core, factored so e16's greedy selection consumes the same
-    * fused shortlist: indexed hybrid retrieval — inverted-index lexical
-    * channel (df-capped) + IVF vector shortlist (e06 geometry, exact
-    * re-rank), fused by e12's integer RRF, top-`k`. See the e12b query
-    * scaladoc for the at-scale argument.
-    */
   /** Distinct lowercase whitespace tokens per document — the shared
     * lexical-channel input of e12/e12b/e16. */
   private[operators] def docTokens(s: SparkSession, dir: String): DataFrame =
@@ -457,48 +538,57 @@ object Similarity {
     postings.filter(col("doc_id") === 0L).join(okTerms, "term").select("term")
   }
 
-  private[operators] def hybridFusedTop(s: SparkSession, dir: String,
-                                        k: Int = 10): DataFrame = {
-    // lexical channel: inverted index, df-capped, probed by query terms
-    val docs = docTokens(s, dir)
-    val postings = docs.select(col("doc_id"), explode(col("w")).as("term"))
-    val qTerms = dfCappedQueryTerms(docs)
-    val wRank = Window.orderBy(col("score").desc, col("doc_id").asc)
-    val lex = postings.filter(col("doc_id") =!= 0L)
-      .join(broadcast(qTerms), "term")
-      .groupBy("doc_id").agg(count(lit(1)).cast("long").as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(50)
-      .withColumn("lex_rank", row_number().over(wRank).cast("long"))
-      .select("doc_id", "lex_rank")
-    // vector channel: IVF shortlist (e06's geometry), exact re-rank
-    val emb = Tables.embeddings(s, dir)
-    val cscored = emb.join(broadcast(ivfCentroids(emb)))
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        cosine_similarity(col("embedding"), col("centroid")).as("ccos"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cell").asc)
-    val ranked = cscored.withColumn("rn", row_number().over(wAssign))
-    val shard = ranked.filter(col("rn") <= 2)
-      .select(col("vec_id").as("nid"), col("embedding").as("n_emb"), col("cell"))
-    val probeCells = ranked.filter(col("vec_id") === 0L && col("rn") <= 4).select("cell")
-    val qv = emb.filter(col("vec_id") === 0L).select(col("embedding").as("q_emb"))
-    val wCos = Window.orderBy(col("cos_sim").desc, col("doc_id").asc)
-    val vec = shard.join(broadcast(probeCells), "cell")
-      .filter(col("nid") =!= 0L)
-      // a vector filed in two probed cells is one candidate
-      .select(col("nid"), col("n_emb")).distinct()
-      .crossJoin(broadcast(qv))
-      .select(col("nid").as("doc_id"),
-        cosine_similarity(col("n_emb"), col("q_emb")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("doc_id").asc).limit(50)
-      .withColumn("vec_rank", row_number().over(wCos).cast("long"))
-      .select("doc_id", "vec_rank")
-    // e12's fusion, verbatim
+  /** One retrieval channel's top-50 over (doc_id, `score`): TakeOrdered
+    * by (score DESC, doc_id ASC), ranked 1..50 into the BIGINT `rank`
+    * column. */
+  private def channelTop50(scored: DataFrame, score: String, rank: String): DataFrame = {
+    val w = Window.orderBy(col(score).desc, col("doc_id").asc)
+    scored.orderBy(col(score).desc, col("doc_id").asc).limit(50)
+      .withColumn(rank, row_number().over(w).cast("long"))
+      .select("doc_id", rank)
+  }
+
+  /** e12's reciprocal rank fusion of the lexical and vector channels:
+    * integer ⌊10⁹/(60+rank)⌋ contributions summed as BIGINT, top-`k` by
+    * (rrf_score DESC, doc_id ASC). Mirrored by `duckRrfTail`. */
+  private def rrfTop(lex: DataFrame, vec: DataFrame, k: Int): DataFrame =
     lex.join(vec, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("lex_rank"), col("vec_rank"),
         (coalesce(expr("1000000000L div (60 + lex_rank)"), lit(0L)) +
           coalesce(expr("1000000000L div (60 + vec_rank)"), lit(0L))).as("rrf_score"))
       .orderBy(col("rrf_score").desc, col("doc_id").asc)
       .limit(k)
+
+  /** e12b core, factored so e16's greedy selection consumes the same
+    * fused shortlist: indexed hybrid retrieval — inverted-index lexical
+    * channel (df-capped) + IVF vector shortlist (e06 geometry, exact
+    * re-rank), fused by e12's integer RRF, top-`k`. See the e12b query
+    * scaladoc for the at-scale argument.
+    */
+  private[operators] def hybridFusedTop(s: SparkSession, dir: String,
+                                        k: Int = 10): DataFrame = {
+    // lexical channel: inverted index, df-capped, probed by query terms
+    val docs = docTokens(s, dir)
+    val postings = docs.select(col("doc_id"), explode(col("w")).as("term"))
+    val qTerms = dfCappedQueryTerms(docs)
+    val lex = channelTop50(postings.filter(col("doc_id") =!= 0L)
+      .join(broadcast(qTerms), "term")
+      .groupBy("doc_id").agg(count(lit(1)).cast("long").as("score")), "score", "lex_rank")
+    // vector channel: IVF shortlist (e06's geometry), exact re-rank
+    val emb = Tables.embeddings(s, dir)
+    val ranked = ivfCranked(emb)
+    val shard = ranked.filter(col("rn") <= 2)
+      .select(col("vec_id").as("nid"), col("embedding").as("n_emb"), col("cell"))
+    val probeCells = ranked.filter(col("vec_id") === 0L && col("rn") <= 4).select("cell")
+    val qv = emb.filter(col("vec_id") === 0L).select(col("embedding").as("q_emb"))
+    val vec = channelTop50(shard.join(broadcast(probeCells), "cell")
+      .filter(col("nid") =!= 0L)
+      // a vector filed in two probed cells is one candidate
+      .select(col("nid"), col("n_emb")).distinct()
+      .crossJoin(broadcast(qv))
+      .select(col("nid").as("doc_id"),
+        cosine_similarity(col("n_emb"), col("q_emb")).as("cos_sim")), "cos_sim", "vec_rank")
+    rrfTop(lex, vec, k)
   }
 
   /** e16: number of greedy coverage picks — both engines unroll exactly
@@ -576,20 +666,59 @@ object Similarity {
     b
   }
 
+  /** The LSH bucket stream: every vector's derived-bits × 48-table
+    * hyperplane signature (seed 7) exploded to one (vec_id, `carry`…,
+    * tbl, bucket) row per table — e03's candidate key. Mirrored by
+    * `duckLshCtes`' sigs.
+    */
+  private def lshBuckets(e: DataFrame, carry: Column*): DataFrame =
+    e.withColumn("buckets",
+        hyperplane_lsh_multi(col("embedding"), derivedLshBits(e.count()), 48, 64, seed = 7L))
+      .select((col("vec_id") +: carry :+ posexplode(col("buckets")).as(Seq("tbl", "bucket"))): _*)
+
+  /** lshBuckets restricted to buckets of at most 10000 members — the cap
+    * that keeps one degenerate bucket from going quadratic. The candidate
+    * generator of e01b/e04b/e13/e14/e18; mirrored by duckLshBoundedCtes.
+    */
+  private def lshBounded(e: DataFrame, carry: Column*): DataFrame = {
+    val ex = lshBuckets(e, carry: _*)
+    ex.join(
+      ex.groupBy("tbl", "bucket").agg(count(lit(1)).as("bsz"))
+        .filter(col("bsz") <= 10000L).select("tbl", "bucket"),
+      Seq("tbl", "bucket"))
+  }
+
+  /** The all-corpus carry-through scored pair stream of e01b/e04b/e18:
+    * bounded bucket-mates (`a`, `b`) kept by `keep`, with cos_sim
+    * computed in the join output. Embeddings and their Σx² (squared_norm,
+    * round 13) ride the bucket join — `tables`× duplication through one
+    * small exchange — so the pair loop pays the dot alone and
+    * cosine_from_parts reassembles CosineSimilarity's doubles exactly;
+    * fetching embeddings BY PAIR KEY instead duplicates each vector
+    * ~2·pairs/N times (the measured 80 GB r7 disk kill). One row per
+    * shared bucket: a pair found by several tables repeats, and each
+    * caller folds the repeats in its own hash aggregate.
+    */
+  private def lshCarryPairs(e: DataFrame, a: String, b: String)(
+      keep: (Column, Column) => Column): DataFrame = {
+    val bounded = lshBounded(e, col("embedding"), squared_norm(col("embedding")).as("nrm"))
+    bounded.select(col("vec_id").as(a), col("embedding").as("emb_a"),
+        col("nrm").as("nrm_a"), col("tbl"), col("bucket"))
+      .join(bounded.select(col("vec_id").as(b), col("embedding").as("emb_b"),
+        col("nrm").as("nrm_b"), col("tbl"), col("bucket")), Seq("tbl", "bucket"))
+      .filter(keep(col(a), col(b)))
+      .select(col(a), col(b),
+        cosine_from_parts(dot_product(col("emb_a"), col("emb_b")),
+          col("nrm_a"), col("nrm_b")).as("cos_sim"))
+  }
+
   /** e14 core over any (vec_id, embedding, label) frame — extracted so
     * the vote mechanics the fixture can't pin (an exact 2-2-1 vote tie
     * breaking to the LOWEST label, a probe with < 5 candidates) are
     * unit-testable on crafted vectors.
     */
   private[operators] def knnLabelPropagation(e: DataFrame): DataFrame = {
-    val ex = e
-      .withColumn("buckets",
-        hyperplane_lsh_multi(col("embedding"), derivedLshBits(e.count()), 48, 64, seed = 7L))
-      .select(col("vec_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-    val bounded = ex.join(
-      ex.groupBy("tbl", "bucket").agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") <= 10000L).select("tbl", "bucket"),
-      Seq("tbl", "bucket"))
+    val bounded = lshBounded(e)
     val probe = bounded.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("qid"), col("tbl"), col("bucket"))
     val index = bounded.filter(col("vec_id") % 10 =!= 0)
@@ -621,53 +750,25 @@ object Similarity {
     * (the g05/g02b fixed-layer discipline). */
   private[operators] val NnDescentRounds = 2
 
-  /** e18/e18b shared base: LSH-bucket candidate pairs scored with
-    * CARRY-THROUGH cosine (embeddings ride the bucket join — `tables`×
-    * duplication through one small exchange — and the cosine is computed
-    * in the join output and immediately hash-aggregated; fetching
-    * embeddings BY PAIR KEY instead duplicates each vector ~2·pairs/N
-    * times, the measured 80 GB r7 disk kill). One row per (vid, nid).
+  /** e04b/e13's verdict over scored (vid, nid, cos_sim) candidates: each
+    * vid's best neighbor as a lexicographic struct-max (a map-side hash
+    * aggregate; -nid breaks cosine ties to the lowest nid, e04's order)
+    * and the 0.45 near-dup flag, plus the `extra` columns over `best`.
     */
-  private[operators] def lshCarryScored(e: DataFrame): DataFrame = {
-    val ex = e
-      .withColumn("buckets",
-        hyperplane_lsh_multi(col("embedding"), derivedLshBits(e.count()), 48, 64, seed = 7L))
-      .select(col("vec_id"), col("embedding"),
-        squared_norm(col("embedding")).as("nrm"),
-        posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-    val ok = ex.groupBy("tbl", "bucket").agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") <= 10000L).select("tbl", "bucket")
-    val bounded = ex.join(ok, Seq("tbl", "bucket"))
-    // norms ride the bucket join (squared_norm, round 13) — see e04b
-    bounded.select(col("vec_id").as("vid"), col("embedding").as("emb_a"),
-        col("nrm").as("nrm_a"), col("tbl"), col("bucket"))
-      .join(bounded.select(col("vec_id").as("nid"), col("embedding").as("emb_b"),
-        col("nrm").as("nrm_b"), col("tbl"), col("bucket")), Seq("tbl", "bucket"))
-      .filter(col("vid") =!= col("nid"))
-      .select(col("vid"), col("nid"),
-        cosine_from_parts(dot_product(col("emb_a"), col("emb_b")),
-          col("nrm_a"), col("nrm_b")).as("cos_sim"))
-      .groupBy("vid", "nid").agg(max("cos_sim").as("cos_sim"))
-  }
+  private def nnTop1(scored: DataFrame, extra: Column*): DataFrame =
+    scored.groupBy("vid")
+      .agg(max(struct(col("cos_sim"), (-col("nid")).as("neg_nid"))).as("best"))
+      .select((Seq(col("vid"), (-col("best.neg_nid")).as("nn_id"),
+        col("best.cos_sim").as("nn_cos"),
+        (col("best.cos_sim") > 0.45).as("is_near_dup")) ++ extra): _*)
 
-  /** e18 core: ONE NN-DESCENT REFINEMENT ROUND — the distributed
-    * kNN-graph-construction kernel behind graph-ANN indexes (NN-descent /
-    * graph-based HNSW-family builds): start from an approximate top-k
-    * list per vector (`base` candidate pairs, re-ranked exact), then
-    * exploit "a neighbor of my neighbor is probably my neighbor" — the
-    * LOCAL JOIN generates, for every vertex u of the undirected k-NN
-    * graph, all ordered pairs among u's neighborhood; union the old
-    * lists; exact re-rank; keep top-k. Candidate volume is O(k²·N) by
-    * construction (neighborhood size ≤ 2k), so the round is corpus-LINEAR
-    * — the property that makes NN-descent the standard way to build a
-    * billion-vector kNN graph without an index. Output is the one-row
-    * refinement audit: how many lists improved (strictly better worst
-    * neighbor at full width), grew (under-full lists gaining members),
-    * and how many edges are new — the numbers that decide whether to run
-    * another round. Improvement is judged on the exact re-ranked cosines
-    * (order-pinned doubles, identical in both engines), and every output
-    * is an integer count, so the whole round sits under the hash gate.
+  /** e18/e18b shared base: lshCarryPairs over ordered pairs, deduped
+    * to one row per (vid, nid).
     */
+  private[operators] def lshCarryScored(e: DataFrame): DataFrame =
+    lshCarryPairs(e, "vid", "nid")(_ =!= _)
+      .groupBy("vid", "nid").agg(max("cos_sim").as("cos_sim"))
+
   /** Exact-cosine scores for an id-pair frame, deduped to one row per
     * (vid, nid) — the small-candidate-set path (spec bases, the NoN
     * re-rank). The HEAVY base stream must NOT come through here: fetching
@@ -720,7 +821,32 @@ object Similarity {
 
   /** e18's round over pre-built base lists (knn0Shared or scratch). */
   private[operators] def nnDescentRoundFromLists(e: DataFrame, knn0: DataFrame,
-                                                 k: Int = NnDescentK): DataFrame = {
+                                                 k: Int = NnDescentK): DataFrame =
+    nnDescentStep(e, knn0, k)(identity)._2
+
+  /** e18/e18b core: ONE NN-DESCENT REFINEMENT ROUND — the distributed
+    * kNN-graph-construction kernel behind graph-ANN indexes (NN-descent /
+    * graph-based HNSW-family builds): start from an approximate top-k
+    * list per vector (`base` candidate pairs, re-ranked exact), then
+    * exploit "a neighbor of my neighbor is probably my neighbor" — the
+    * LOCAL JOIN generates, for every vertex u of the undirected k-NN
+    * graph, all ordered pairs among u's neighborhood; union the old
+    * lists; exact re-rank; keep top-k. Candidate volume is O(k²·N) by
+    * construction (neighborhood size ≤ 2k), so the round is corpus-LINEAR
+    * — the property that makes NN-descent the standard way to build a
+    * billion-vector kNN graph without an index. Output is the one-row
+    * refinement audit: how many lists improved (strictly better worst
+    * neighbor at full width), grew (under-full lists gaining members),
+    * and how many edges are new — the numbers that decide whether to run
+    * another round. Improvement is judged on the exact re-ranked cosines
+    * (order-pinned doubles, identical in both engines), and every output
+    * is an integer count, so the whole round sits under the hash gate.
+    * Returns the refined lists — passed through `carry` (identity, or
+    * e18b's scratch write, so the next round reads a flat scan) — and
+    * the audit row.
+    */
+  private def nnDescentStep(e: DataFrame, knn0: DataFrame, k: Int)(
+      carry: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     val und = knn0.select(col("vid").as("u"), col("nid").as("v"))
       .unionAll(knn0.select(col("nid").as("u"), col("vid").as("v"))).distinct()
     val non = und.select(col("u"), col("v").as("vid"))
@@ -728,13 +854,13 @@ object Similarity {
       .filter(col("vid") =!= col("nid"))
       .select("vid", "nid")
     val cand1 = non.unionAll(knn0.select("vid", "nid")).distinct()
-    val knn1 = nnTopkLists(scorePairs(e, cand1), k)
+    val knn1 = carry(nnTopkLists(scorePairs(e, cand1), k))
     val m0 = knn0.groupBy("vid").agg(min("cos_sim").as("worst0"), count(lit(1)).as("k0"))
     val m1 = knn1.groupBy("vid").agg(min("cos_sim").as("worst1"), count(lit(1)).as("k1"))
     val newEdges = knn1
       .join(knn0.select(col("vid"), col("nid"), lit(1).as("hit")), Seq("vid", "nid"), "left")
       .filter(col("hit").isNull)
-    m0.join(m1, "vid")
+    (knn1, m0.join(m1, "vid")
       .agg(count(lit(1)).as("n_vectors"),
         sum(when(col("k0") === k && col("worst1") > col("worst0"), 1L)
           .otherwise(0L)).as("n_improved"),
@@ -742,7 +868,7 @@ object Similarity {
       .crossJoin(broadcast(cand1.agg(count(lit(1)).as("n_cand_pairs"))))
       .crossJoin(broadcast(newEdges.agg(count(lit(1)).as("n_new_edges"))))
       .select(col("n_vectors"), col("n_cand_pairs"), col("n_improved"),
-        col("n_grown"), col("n_new_edges"))
+        col("n_grown"), col("n_new_edges")))
   }
 
   /** Exact cosine over candidate id-pairs: embeddings fetched by two
@@ -820,10 +946,7 @@ object Similarity {
     * broadcast at every use).
     */
   private[graft] def ownLabelCentroids(e: DataFrame): DataFrame =
-    centroidComponents(e)
-      .groupBy("label")
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))), x => x.getField("c"))
-        .cast("array<float>").as("centroid"))
+    centroidArrays(centroidComponents(e), "label")
 
   /** e29/s30 shared scoring: every vector's cosine to its OWN label
     * centroid on the ppb1 = floor((1+cos)·1e9) grid (the +1 shift keeps
@@ -939,17 +1062,7 @@ object Similarity {
         (col("vec_id") * 2 <= col("nmax")).as("is_old"))
     // the stale index: per-label fixed-point centroid means over the OLD
     // epoch only (what the index was built from)
-    val staleCents = graft.Materialize(ev.filter(col("is_old"))
-      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .groupBy("label", "dim")
-      .agg(sum(floor(col("v").cast("double") * CentroidFixScale).cast(dec)).as("sfix"),
-        count(lit(1)).as("n"))
-      .select(col("label"), col("dim"),
-        (col("sfix").cast("double") / col("n").cast("double") / CentroidFixScale).as("c"))
-      .groupBy("label")
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))), x => x.getField("c"))
-        .cast("array<float>").as("centroid"))
-      .select(col("label").as("cell"), col("centroid")))
+    val staleCents = graft.Materialize(ivfCentroids(ev.filter(col("is_old"))))
     // production state: every vector in its nearest STALE cell.
     // Assignment argmaxes in this kernel are max_by HASH AGGS (round 13,
     // the lloydAssign rewrite): struct(ccos, -cell) is (ccos DESC, cell
@@ -993,12 +1106,9 @@ object Similarity {
     val refreshedCells = ledger.filter(col("refreshed")).select("cell")
     // partition-scoped rebuild: ONLY the drifted cells get new centroids,
     // from the already-computed component sums — no second corpus pass
-    val freshCents = cs.join(refreshedCells, "cell")
+    val freshCents = centroidArrays(cs.join(refreshedCells, "cell")
       .select(col("cell"), col("dim"),
-        (col("sc").cast("double") / col("nc").cast("double") / CentroidFixScale).as("c"))
-      .groupBy("cell")
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))), x => x.getField("c"))
-        .cast("array<float>").as("centroid"))
+        (col("sc").cast("double") / col("nc").cast("double") / CentroidFixScale).as("c")), "cell")
     val updatedCents = graft.Materialize(
       staleCents.join(refreshedCells, Seq("cell"), "left_anti").unionByName(freshCents))
     // re-assign ONLY the drifted cells' members against the updated set;
@@ -1095,23 +1205,9 @@ object Similarity {
         .limit(100)
     }),
 
-    // k-NN for a query set (vec_id < 10) against the full table: queries
-    // broadcast, one scan of the corpus, per-query top-k via ranking window
-    // (the window shuffle is Q keys wide — tiny; the corpus never shuffles
-    // because the broadcast join preserves scan partitioning).
-    "e02_ann_bruteforce" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-      val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
-      e.select(col("vec_id").as("nid"), col("embedding").as("n_emb"))
-        .join(broadcast(q), col("nid") =!= col("qid"))
-        .select(col("qid"), col("nid"),
-          cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 10)
-        .orderBy("qid", "rn")
-    }),
+    // exact k-NN for the query set (vec_id < 10) against the full table
+    // — see bruteForceKnn.
+    "e02_ann_bruteforce" -> ((s, dir) => bruteForceKnn(Tables.embeddings(s, dir))),
 
     // nearest neighbor for EVERY vector + near-dup flag — the embedding
     // flavor of dedup (threshold tuned to this corpus; see Dedup for the
@@ -1147,44 +1243,18 @@ object Similarity {
       // so fetching embeddings BY PAIR KEY duplicates each embedding
       // ~2·pairs/N times (measured 2300× at the 64× corpus — an 80 GB
       // sort-spill that filled the disk), while carrying the embedding
-      // THROUGH the bucket join duplicates it exactly `tables` (48×)
-      // times through one small exchange (1.7 GB at the same corpus).
-      // The cosine is computed inside the join output and immediately
-      // hash-aggregated — the candidate stream itself never
+      // THROUGH the bucket join (lshCarryPairs) duplicates it exactly
+      // `tables` (48×) times through one small exchange (1.7 GB at the
+      // same corpus). The cosine is computed inside the join output and
+      // immediately hash-aggregated — the candidate stream itself never
       // materializes or shuffles.
-      val ex = e
-        .withColumn("buckets",
-          hyperplane_lsh_multi(col("embedding"), derivedLshBits(e.count()), 48, 64, seed = 7L))
-        .select(col("vec_id"), col("embedding"),
-          squared_norm(col("embedding")).as("nrm"),
-          posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-      val ok = ex.groupBy("tbl", "bucket").agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") <= 10000L).select("tbl", "bucket")
-      val bounded = ex.join(ok, Seq("tbl", "bucket"))
-      // top-1 as a lexicographic struct-max, NOT a row_number window: a
-      // hash aggregate reduces map-side (one candidate per vid survives
-      // each task), where the window would sort-shuffle the full
-      // candidate set — the difference between shuffling |vids| rows and
-      // |candidates| rows. (-nid) makes the tie-break nid-ascending,
-      // identical to e04's ordering. A pair found by several tables is
-      // re-scored, never re-counted — max-of-equal-structs, so the
-      // skipped pair-dedup shuffle (the biggest intermediate) is free.
-      // Each side carries its Σx² from the scan (squared_norm — round
-      // 13), so the O(candidates) inner loop pays the dot alone;
-      // cosine_from_parts reassembles CosineSimilarity's exact doubles.
-      bounded.select(col("vec_id").as("vid"), col("embedding").as("emb_a"),
-          col("nrm").as("nrm_a"), col("tbl"), col("bucket"))
-        .join(bounded.select(col("vec_id").as("nid"), col("embedding").as("emb_b"),
-          col("nrm").as("nrm_b"), col("tbl"), col("bucket")), Seq("tbl", "bucket"))
-        .filter(col("vid") =!= col("nid"))
-        .select(col("vid"), col("nid"),
-          cosine_from_parts(dot_product(col("emb_a"), col("emb_b")),
-            col("nrm_a"), col("nrm_b")).as("cos_sim"))
-        .groupBy("vid")
-        .agg(max(struct(col("cos_sim"), (-col("nid")).as("neg_nid"))).as("best"))
-        .select(col("vid"), (-col("best.neg_nid")).as("nn_id"),
-          col("best.cos_sim").as("nn_cos"),
-          (col("best.cos_sim") > 0.45).as("is_near_dup"))
+      // top-1 as nnTop1's struct-max, NOT a row_number window: the hash
+      // aggregate keeps one candidate per vid per task, where the window
+      // would sort-shuffle the full candidate set. A pair found by
+      // several tables is re-scored, never re-counted — max-of-equal-
+      // structs, so the skipped pair-dedup shuffle (the biggest
+      // intermediate) is free.
+      nnTop1(lshCarryPairs(e, "vid", "nid")(_ =!= _))
         .orderBy("vid")
     }),
 
@@ -1200,16 +1270,8 @@ object Similarity {
     "e13_incremental_embedding_dedup" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
       // e04b's bucket machinery (derived-bits × 48 tables, cap 10000)
-      // with the probe side pre-filtered — inline because the shared
-      // helper pairs the full corpus by construction
-      val ex = e
-        .withColumn("buckets",
-          hyperplane_lsh_multi(col("embedding"), derivedLshBits(e.count()), 48, 64, seed = 7L))
-        .select(col("vec_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-      val bounded = ex.join(
-        ex.groupBy("tbl", "bucket").agg(count(lit(1)).as("bsz"))
-          .filter(col("bsz") <= 10000L).select("tbl", "bucket"),
-        Seq("tbl", "bucket"))
+      // with the probe side pre-filtered before pairing
+      val bounded = lshBounded(e)
       val probe = bounded.filter(col("vec_id") % 10 === 0)
         .select(col("vec_id").as("vid"), col("tbl"), col("bucket"))
       val index = bounded.select(col("vec_id").as("nid"), col("tbl"), col("bucket"))
@@ -1217,13 +1279,7 @@ object Similarity {
         .filter(col("nid") =!= col("vid") &&
           (col("nid") % 10 =!= 0 || col("nid") < col("vid")))
         .select("vid", "nid")
-      scoreCandidates(e, cands)
-        .groupBy("vid")
-        .agg(max(struct(col("cos_sim"), (-col("nid")).as("neg_nid"))).as("best"))
-        .select(col("vid"), (-col("best.neg_nid")).as("nn_id"),
-          col("best.cos_sim").as("nn_cos"),
-          (col("best.cos_sim") > 0.45).as("is_near_dup"),
-          (col("best.cos_sim") <= 0.45).as("admitted"))
+      nnTop1(scoreCandidates(e, cands), (col("best.cos_sim") <= 0.45).as("admitted"))
         .orderBy("vid")
     }),
 
@@ -1247,34 +1303,15 @@ object Similarity {
     // candidate pipeline is deterministic and fully restated).
     "e01b_cosine_pairs_topk_lsh" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      // e04b's all-corpus carry-through shape (see its scaladoc for the
+      // e04b's all-corpus carry-through shape (see lshCarryPairs for the
       // measured trade): embeddings ride the bucket join once (48×
       // duplication, one small exchange), the cosine is computed in the
       // join output, and the pair-dedup happens on SCORED pairs — a
-      // (vid, nid)-keyed agg of 24-byte rows (max of equal values) in
+      // (id_a, id_b)-keyed agg of 24-byte rows (max of equal values) in
       // place of an id-distinct followed by two embedding fetch joins
       // whose sort carried the wide arrays (measured 221 s → see
       // SCALING.md r8 row). TakeOrdered keeps the global top-100.
-      val ex = e
-        .withColumn("buckets",
-          hyperplane_lsh_multi(col("embedding"), derivedLshBits(e.count()), 48, 64, seed = 7L))
-        .select(col("vec_id"), col("embedding"),
-          squared_norm(col("embedding")).as("nrm"),
-          posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-      val ok = ex.groupBy("tbl", "bucket").agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") <= 10000L).select("tbl", "bucket")
-      val bounded = ex.join(ok, Seq("tbl", "bucket"))
-      // norms ride the bucket join (squared_norm, round 13): the pair
-      // loop pays the dot alone, cosine_from_parts reassembles the
-      // identical doubles — see e04b.
-      bounded.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
-          col("nrm").as("nrm_a"), col("tbl"), col("bucket"))
-        .join(bounded.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"),
-          col("nrm").as("nrm_b"), col("tbl"), col("bucket")), Seq("tbl", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          cosine_from_parts(dot_product(col("emb_a"), col("emb_b")),
-            col("nrm_a"), col("nrm_b")).as("cos_sim"))
+      lshCarryPairs(e, "id_a", "id_b")(_ < _)
         .groupBy("id_a", "id_b").agg(max(col("cos_sim")).as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("id_a").asc, col("id_b").asc)
         .limit(100)
@@ -1290,10 +1327,9 @@ object Similarity {
     // shipped pipelines; cost is e02's bounded brute force (10 probes)
     // + e03.
     "e15_ann_recall_eval" -> ((s, dir) => {
-      val exact = Similarity.queries("e02_ann_bruteforce")(s, dir)
-        .filter(col("rn") <= 5).select(col("qid"), col("nid"))
-      val approx = Similarity.queries("e03_ann_lsh")(s, dir)
-        .select(col("qid"), col("nid"))
+      val e = Tables.embeddings(s, dir)
+      val exact = exactTop5(e)
+      val approx = lshKnn(e).select(col("qid"), col("nid"))
       val hits = exact.join(approx, Seq("qid", "nid"), "left_semi")
         .groupBy("qid").agg(count(lit(1)).as("n_hits"))
       exact.groupBy("qid").agg(count(lit(1)).as("n_exact"))
@@ -1316,28 +1352,8 @@ object Similarity {
     // fails correctness. Cost: e06's candidate generation once + e02's
     // bounded brute force (10 queries).
     "e19_ivf_probe_sweep" -> ((s, dir) => {
-      import s.implicits._
       val e = Tables.embeddings(s, dir)
-      val pairs = ivfProbePairs(e)
-      val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
-      val sweeps = Seq(1, 2, 4).map { np =>
-        pairs.filter(col("mr") <= np)
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5)
-          .select(lit(np.toLong).as("nprobe"), col("qid"), col("nid"))
-      }.reduce(_ unionByName _)
-      val exact = Similarity.queries("e02_ann_bruteforce")(s, dir)
-        .filter(col("rn") <= 5).select(col("qid"), col("nid"))
-      val grid = exact.groupBy("qid").agg(count(lit(1)).as("n_exact"))
-        .crossJoin(broadcast(Seq(1L, 2L, 4L).toDF("nprobe")))
-      val hits = exact.join(sweeps, Seq("qid", "nid"))
-        .groupBy("nprobe", "qid").agg(count(lit(1)).as("n_hits"))
-      grid.join(hits, Seq("nprobe", "qid"), "left")
-        .select(col("nprobe"), col("qid"), col("n_exact"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double")
-            / col("n_exact").cast("double")).as("recall_at_5"))
-        .orderBy("nprobe", "qid")
+      nprobeRecall(e, ivfProbePairs(e))
     }),
 
     // IVF SUB-CELL PROBE SWEEP — e19's recall curve on the DERIVED
@@ -1352,13 +1368,9 @@ object Similarity {
     // SimilaritySpec — parity by construction); past the tuning point
     // the recall cost of the sub filter is what this curve measures.
     "e21_ivf_subcell_sweep" -> ((s, dir) => {
-      import s.implicits._
       val e = Tables.embeddings(s, dir)
       val b = semSubBitsOf(e)
       val cr = ivfCranked(e).withColumn("sub", subColFor(b))
-      val assigned = cr.filter(col("rn") <= 2)
-        .select(col("vec_id").as("nid"), col("embedding").as("n_emb"),
-          col("cell"), col("sub"))
       // Derived-radius multi-probe on the sub dimension (the semCellPairs
       // knob applied to serving): the query probes its own sub XORed with
       // every mask of the derived geometry — Σ_{i≤r} C(b,i) probes per
@@ -1366,34 +1378,14 @@ object Similarity {
       // still constant per query at any corpus size
       val probeSubs = array(
         semProbeMasks(b).map(m => col("sub").bitwiseXOR(lit(m))): _*)
-      val pairs = cr.filter(col("rn") <= 4 && col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-          col("cell"), explode(probeSubs).as("sub"), col("rn").as("prn"))
-        .join(assigned, Seq("cell", "sub"))
-        .filter(col("nid") =!= col("qid"))
-        .groupBy("qid", "nid")
-        .agg(min("prn").as("mr"), first("q_emb").as("q_emb"), first("n_emb").as("n_emb"))
-        .select(col("qid"), col("nid"), col("mr"),
-          cosine_similarity(col("q_emb"), col("n_emb")).as("cos"))
-      val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
-      val sweeps = Seq(1, 2, 4).map { np =>
-        pairs.filter(col("mr") <= np)
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5)
-          .select(lit(np.toLong).as("nprobe"), col("qid"), col("nid"))
-      }.reduce(_ unionByName _)
-      val exact = Similarity.queries("e02_ann_bruteforce")(s, dir)
-        .filter(col("rn") <= 5).select(col("qid"), col("nid"))
-      val grid = exact.groupBy("qid").agg(count(lit(1)).as("n_exact"))
-        .crossJoin(broadcast(Seq(1L, 2L, 4L).toDF("nprobe")))
-      val hits = exact.join(sweeps, Seq("qid", "nid"))
-        .groupBy("nprobe", "qid").agg(count(lit(1)).as("n_hits"))
-      grid.join(hits, Seq("nprobe", "qid"), "left")
-        .select(col("nprobe"), col("qid"), col("n_exact"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double")
-            / col("n_exact").cast("double")).as("recall_at_5"))
-        .orderBy("nprobe", "qid")
+      nprobeRecall(e, ivfMeetPairs(
+        cr.filter(col("rn") <= 4 && col("vec_id") < 10)
+          .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
+            col("cell"), explode(probeSubs).as("sub"), col("rn").as("prn")),
+        cr.filter(col("rn") <= 2)
+          .select(col("vec_id").as("nid"), col("embedding").as("n_emb"),
+            col("cell"), col("sub")),
+        Seq("cell", "sub")))
     }),
 
     // SEM MULTI-PROBE GEOMETRY AUDIT — the derivation record of the
@@ -1639,34 +1631,19 @@ object Similarity {
     // channels are exactly this plan over an inverted-index prefilter
     // (lexical) and an IVF shortlist (e06) — the fusion stays identical.
     "e12_hybrid_rrf" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          array_distinct(expr("filter(split(lower(text), ' '), x -> length(x) > 0)")).as("w"))
+      val docs = docTokens(s, dir)
       val qd = docs.filter(col("doc_id") === 0L).select(col("w").as("qw"))
-      val wRank = Window.orderBy(col("score").desc, col("doc_id").asc)
-      val lex = docs.filter(col("doc_id") =!= 0L)
+      val lex = channelTop50(docs.filter(col("doc_id") =!= 0L)
         .crossJoin(broadcast(qd))
         .select(col("doc_id"), size(array_intersect(col("w"), col("qw"))).cast("long").as("score"))
-        .filter(col("score") > 0L)
-        .orderBy(col("score").desc, col("doc_id").asc).limit(50)
-        .withColumn("lex_rank", row_number().over(wRank).cast("long"))
-        .select("doc_id", "lex_rank")
+        .filter(col("score") > 0L), "score", "lex_rank")
       val e = Tables.embeddings(s, dir)
       val qv = e.filter(col("vec_id") === 0L).select(col("embedding").as("q_emb"))
-      val wCos = Window.orderBy(col("cos_sim").desc, col("doc_id").asc)
-      val vec = e.filter(col("vec_id") =!= 0L)
+      val vec = channelTop50(e.filter(col("vec_id") =!= 0L)
         .crossJoin(broadcast(qv))
         .select(col("vec_id").as("doc_id"),
-          cosine_similarity(col("embedding"), col("q_emb")).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("doc_id").asc).limit(50)
-        .withColumn("vec_rank", row_number().over(wCos).cast("long"))
-        .select("doc_id", "vec_rank")
-      lex.join(vec, Seq("doc_id"), "full_outer")
-        .select(col("doc_id"), col("lex_rank"), col("vec_rank"),
-          (coalesce(expr("1000000000L div (60 + lex_rank)"), lit(0L)) +
-            coalesce(expr("1000000000L div (60 + vec_rank)"), lit(0L))).as("rrf_score"))
-        .orderBy(col("rrf_score").desc, col("doc_id").asc)
-        .limit(10)
+          cosine_similarity(col("embedding"), col("q_emb")).as("cos_sim")), "cos_sim", "vec_rank")
+      rrfTop(lex, vec, 10)
     }),
 
     // HYBRID RETRIEVAL, AT-SCALE CANDIDATE GENERATION — e12's fusion over
@@ -1726,11 +1703,7 @@ object Similarity {
     // scan + two hash aggs — corpus-linear at any scale.
     "e17_ivf_balance" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      val wAssign = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cell").asc)
-      val occ = e.join(broadcast(ivfCentroids(e)))
-        .select(col("vec_id"), col("cell"),
-          cosine_similarity(col("embedding"), col("centroid")).as("ccos"))
-        .withColumn("rn", row_number().over(wAssign))
+      val occ = ivfCranked(e)
         .filter(col("rn") <= 2)
         .groupBy("cell").agg(count(lit(1)).as("occ"))
       occ.agg(count(lit(1)).as("n_cells"), sum("occ").as("n_postings"),
@@ -1770,37 +1743,12 @@ object Similarity {
     // corpus-linear; the oracle generates both rounds as layered CTEs.
     "e18b_nn_descent_converge" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      val k = NnDescentK
       var knnCur = knn0Shared(s, dir)
       val audits = (1 to NnDescentRounds).map { r =>
-        val und = knnCur.select(col("vid").as("u"), col("nid").as("v"))
-          .unionAll(knnCur.select(col("nid").as("u"), col("vid").as("v"))).distinct()
-        val non = und.select(col("u"), col("v").as("vid"))
-          .join(und.select(col("u"), col("v").as("nid")), "u")
-          .filter(col("vid") =!= col("nid"))
-          .select("vid", "nid")
-        val cand = non.unionAll(knnCur.select("vid", "nid")).distinct()
-        val knnNext = graft.Materialize.toStorage(
-          nnTopkLists(scorePairs(e, cand), k), s"e18b_knn$r")
-        val m0 = knnCur.groupBy("vid")
-          .agg(min("cos_sim").as("worst0"), count(lit(1)).as("k0"))
-        val m1 = knnNext.groupBy("vid")
-          .agg(min("cos_sim").as("worst1"), count(lit(1)).as("k1"))
-        val newEdges = knnNext.join(
-          knnCur.select(col("vid"), col("nid"), lit(1).as("hit")),
-          Seq("vid", "nid"), "left").filter(col("hit").isNull)
-        val audit = m0.join(m1, "vid")
-          .agg(count(lit(1)).as("n_vectors"),
-            sum(when(col("k0") === k && col("worst1") > col("worst0"), 1L)
-              .otherwise(0L)).as("n_improved"),
-            sum(when(col("k1") > col("k0"), 1L).otherwise(0L)).as("n_grown"))
-          .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_cand_pairs"))))
-          .crossJoin(broadcast(newEdges.agg(count(lit(1)).as("n_new_edges"))))
-          .select(lit(r.toLong).as("round"), col("n_vectors"),
-            col("n_cand_pairs"), col("n_improved"), col("n_grown"),
-            col("n_new_edges"))
+        val (knnNext, audit) = nnDescentStep(e, knnCur, NnDescentK)(
+          graft.Materialize.toStorage(_, s"e18b_knn$r"))
         knnCur = knnNext
-        audit
+        audit.select(lit(r.toLong).as("round"), col("*"))
       }
       audits.reduce(_ unionByName _).orderBy("round")
     }),
@@ -1895,23 +1843,8 @@ object Similarity {
         .select(col("vec_id").as("qid"), col("q").as("q_a"))
       val scoredInt = q.select(col("vec_id").as("nid"), col("q").as("q_b"))
         .join(broadcast(qq), col("nid") =!= col("qid"))
-        .select(col("qid"), col("nid"),
-          aggregate(zip_with(col("q_a"), col("q_b"), (x, y) => x * y),
-            lit(0L), (acc, x) => acc + x).as("int_dot"))
-      val wTop = Window.partitionBy("qid").orderBy(col("int_dot").desc, col("nid").asc)
-      val shortlist = scoredInt
-        .withColumn("srn", row_number().over(wTop)).filter(col("srn") <= 40)
-        .select("qid", "nid", "int_dot")
-      val emb = e.select(col("vec_id").as("nid"), col("embedding").as("n_emb"))
-      val qemb = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-      val wCos = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
-      shortlist.join(emb, "nid").join(broadcast(qemb), "qid")
-        .select(col("qid"), col("nid"), col("int_dot"),
-          cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
-        .withColumn("rn", row_number().over(wCos).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("qid", "rn")
+        .select(col("qid"), col("nid"), sqIntDot.as("int_dot"))
+      sqRerank(e, scoredInt)
     }),
 
     // IVF-PROBED SQ8 SERVE — the COMPOSED production form e22's scaladoc
@@ -1941,23 +1874,8 @@ object Similarity {
         .join(q.select(col("vec_id").as("nid"), col("q").as("q_b")), "nid")
         .join(broadcast(q.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("q").as("q_a"))), "qid")
-        .select(col("qid"), col("nid"),
-          aggregate(zip_with(col("q_a"), col("q_b"), (x, y) => x * y),
-            lit(0L), (acc, x) => acc + x).as("int_dot"))
-      val wTop = Window.partitionBy("qid").orderBy(col("int_dot").desc, col("nid").asc)
-      val shortlist = scoredInt
-        .withColumn("srn", row_number().over(wTop)).filter(col("srn") <= 40)
-        .select("qid", "nid", "int_dot")
-      val emb = e.select(col("vec_id").as("nid"), col("embedding").as("n_emb"))
-      val qemb = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-      val wCos = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
-      shortlist.join(emb, "nid").join(broadcast(qemb), "qid")
-        .select(col("qid"), col("nid"), col("int_dot"),
-          cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
-        .withColumn("rn", row_number().over(wCos).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("qid", "rn")
+        .select(col("qid"), col("nid"), sqIntDot.as("int_dot"))
+      sqRerank(e, scoredInt)
     }),
 
     // SQ8 RANK-FIDELITY CALIBRATION — d16's role for the scalar
@@ -1979,9 +1897,7 @@ object Similarity {
       val pairsInt = q.select(col("vec_id").as("nid"), col("q").as("q_b"))
         .join(broadcast(q.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("q").as("q_a"))), col("nid") =!= col("qid"))
-        .select(col("qid"), col("nid"),
-          aggregate(zip_with(col("q_a"), col("q_b"), (x, y) => x * y),
-            lit(0L), (acc, x) => acc + x).as("int_dot"))
+        .select(col("qid"), col("nid"), sqIntDot.as("int_dot"))
       val wInt = Window.partitionBy("qid").orderBy(col("int_dot").desc, col("nid").asc)
       val ri = pairsInt.select(col("qid"), col("nid"),
         row_number().over(wInt).cast("long").as("rank_int"))
@@ -2087,8 +2003,7 @@ object Similarity {
           .filter(col("rn") <= 5)
           .select(lit(np).as("nprobe"), col("qid"), col("nid"))
       }.reduce(_ unionByName _)
-      val exact = Similarity.queries("e02_ann_bruteforce")(s, dir)
-        .filter(col("rn") <= 5).select(col("qid"), col("nid"))
+      val exact = exactTop5(e)
       val npDf = broadcast(nps.toDF("nprobe"))
       val totals = exact.agg(count(lit(1)).as("n_exact")).crossJoin(npDf)
       val hits = exact.join(sweeps, Seq("qid", "nid"))
@@ -2249,19 +2164,10 @@ object Similarity {
     "e10_ivf_pq_ann" -> ((s, dir) => {
       val nprobe = 4; val assign = 2; val rerank = 40
       val e = Tables.embeddings(s, dir)
-      val cents = centroidComponents(e)
-        .groupBy("label")
-        .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))), s => s.getField("c"))
-          .cast("array<float>").as("centroid"))
-        .select(col("label").as("cell"), col("centroid"))
-      val scored = e.join(broadcast(cents))
-        .select(col("vec_id"), col("embedding"), col("cell"),
-          cosine_similarity(col("embedding"), col("centroid")).as("ccos"))
-      val wAssign = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cell").asc)
+      val cr = ivfCranked(e)
       // index side: top-`assign` cells per vector (e06's spill), but the
       // index payload is the PQ CODES, not the embeddings
-      val assigned = scored.withColumn("rn", row_number().over(wAssign))
-        .filter(col("rn") <= assign)
+      val assigned = cr.filter(col("rn") <= assign)
         .select(col("vec_id").as("nid"), col("cell"))
       val codes = pqEncoded(e).select(col("vec_id").as("nid"), col("sub"), col("code"))
       val qvecs = e.filter(col("vec_id") < 10)
@@ -2273,9 +2179,7 @@ object Similarity {
           explode(sequence(lit(0), lit(PqM - 1))).as("sub"))
         .withColumn("d", pqSubIp)
         .select("qid", "sub", "code", "d")
-      val probes = scored.filter(col("vec_id") < 10)
-        .withColumn("rn", row_number().over(wAssign))
-        .filter(col("rn") <= nprobe)
+      val probes = cr.filter(col("rn") <= nprobe && col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("cell"))
       val cand = assigned.join(probes, "cell")
         .filter(col("nid") =!= col("qid"))
@@ -2314,32 +2218,7 @@ object Similarity {
     // neighbor's cos ≈ 0.35); corpora with real cluster structure can
     // afford more bits and fewer tables. Approximate vs e02 (recall in
     // tests) but deterministic → oracle-gated via the plane restatement.
-    "e03_ann_lsh" -> ((s, dir) => {
-      val tables = 48; val dim = 64
-      val base = Tables.embeddings(s, dir)
-      val bits = derivedLshBits(base.count())
-      val e = base
-        .withColumn("buckets", hyperplane_lsh_multi(col("embedding"), bits, tables, dim, seed = 7L))
-      val exploded = e.select(col("vec_id"), col("embedding"),
-          posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-      val q = exploded.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-          col("tbl"), col("bucket"))
-      // shuffle both sides on (tbl, bucket) — the join key IS the bucket;
-      // at scale this is a co-partitioned equi-join, never a cross join.
-      val cands = exploded.join(q, Seq("tbl", "bucket"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("nid"), col("q_emb"),
-          col("embedding").as("n_emb"))
-        .distinct() // a pair found by several tables is scored once
-      val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
-      cands
-        .select(col("qid"), col("nid"),
-          cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("qid", "rn")
-    })
+    "e03_ann_lsh" -> ((s, dir) => lshKnn(Tables.embeddings(s, dir)))
   )
 
   /** DuckDB restatement of `hyperplane_lsh_multi` (seed 7, derived-bits
@@ -2388,12 +2267,6 @@ object Similarity {
        |)""".stripMargin
   }
 
-  /** Shared IVF coarse-quantizer fragment (e06/e10): e05's fixed-point
-    * centroids, the float32 cast Spark's array<float> applies, cosine
-    * assignment, top-2 index cells / top-4 query probes — e08's oracle
-    * arithmetic, reshaped. Emits CTEs ending in `assigned(nid, cell)`
-    * and `probes(qid, cell)`.
-    */
   /** Exact HUGEINT 15^e / 16^e for an SQL integer expression e ∈ [0,
     * SemMaxSubBits] — binary exponentiation unrolled into lazy CASE
     * factors (DuckDB has no integer pow, and float pow is inexact past
@@ -2547,6 +2420,12 @@ object Similarity {
       |    / sqrt(list_sum([e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE for i in range(1, len(e.embedding) + 1)]))
       |    / sqrt(list_sum([c.ce[i]::DOUBLE * c.ce[i]::DOUBLE for i in range(1, len(c.ce) + 1)]))""".stripMargin
 
+  /** Shared IVF coarse-quantizer fragment (e06/e10): e05's fixed-point
+    * centroids, the float32 cast Spark's array<float> applies, cosine
+    * assignment, top-2 index cells / top-4 query probes — e08's oracle
+    * arithmetic, reshaped. Emits CTEs ending in `assigned(nid, cell)`
+    * and `probes(qid, cell)`.
+    */
   private val duckIvfCtes: String =
     s"""$duckCentroidCtes, cscored AS (
       |  SELECT e.vec_id, c.cell,
@@ -2560,6 +2439,24 @@ object Similarity {
       |), probes AS (
       |  SELECT vec_id AS qid, cell FROM cranked WHERE rn <= 4 AND vec_id < 10
       |)""".stripMargin
+
+  /** e12/e12b's closing fusion: `vec` ranks the `vecall(doc_id,
+    * cos_sim)` channel top-50, and the SELECT fuses it with `lex` by the
+    * integer RRF, top 10 — rrfTop's mirror.
+    */
+  private val duckRrfTail: String =
+    """vec AS (
+      |  SELECT doc_id,
+      |    CAST(ROW_NUMBER() OVER (ORDER BY cos_sim DESC, doc_id ASC) AS BIGINT) AS vec_rank
+      |  FROM vecall
+      |  QUALIFY vec_rank <= 50
+      |)
+      |SELECT COALESCE(l.doc_id, v.doc_id) AS doc_id, l.lex_rank, v.vec_rank,
+      |  COALESCE(1000000000 // (60 + l.lex_rank), 0)
+      |    + COALESCE(1000000000 // (60 + v.vec_rank), 0) AS rrf_score
+      |FROM lex l FULL OUTER JOIN vec v ON l.doc_id = v.doc_id
+      |ORDER BY rrf_score DESC, doc_id ASC
+      |LIMIT 10""".stripMargin
 
   private val e12bOracle: String =
     s"""WITH $duckIvfCtes, words AS (
@@ -2589,18 +2486,7 @@ object Similarity {
          |), vecall AS (
          |  SELECT b.vec_id AS doc_id, ${duckCos("q", "b")} AS cos_sim
          |  FROM q, embeddings b JOIN vcand ON vcand.nid = b.vec_id
-         |), vec AS (
-         |  SELECT doc_id,
-         |    CAST(ROW_NUMBER() OVER (ORDER BY cos_sim DESC, doc_id ASC) AS BIGINT) AS vec_rank
-         |  FROM vecall
-         |  QUALIFY vec_rank <= 50
-         |)
-         |SELECT COALESCE(l.doc_id, v.doc_id) AS doc_id, l.lex_rank, v.vec_rank,
-         |  COALESCE(1000000000 // (60 + l.lex_rank), 0)
-         |    + COALESCE(1000000000 // (60 + v.vec_rank), 0) AS rrf_score
-         |FROM lex l FULL OUTER JOIN vec v ON l.doc_id = v.doc_id
-         |ORDER BY rrf_score DESC, doc_id ASC
-         |LIMIT 10""".stripMargin
+         |), $duckRrfTail""".stripMargin
 
   /** duckLshCtes plus e01b's bucket cap: `bok` the (table, bucket) keys
     * of at most 10000 vectors, `bounded(vec_id, tbl, bucket)` their
@@ -2745,18 +2631,7 @@ object Similarity {
          |), vecall AS (
          |  SELECT b.vec_id AS doc_id, ${duckCos("q", "b")} AS cos_sim
          |  FROM q, embeddings b WHERE b.vec_id <> 0
-         |), vec AS (
-         |  SELECT doc_id,
-         |    CAST(ROW_NUMBER() OVER (ORDER BY cos_sim DESC, doc_id ASC) AS BIGINT) AS vec_rank
-         |  FROM vecall
-         |  QUALIFY vec_rank <= 50
-         |)
-         |SELECT COALESCE(l.doc_id, v.doc_id) AS doc_id, l.lex_rank, v.vec_rank,
-         |  COALESCE(1000000000 // (60 + l.lex_rank), 0)
-         |    + COALESCE(1000000000 // (60 + v.vec_rank), 0) AS rrf_score
-         |FROM lex l FULL OUTER JOIN vec v ON l.doc_id = v.doc_id
-         |ORDER BY rrf_score DESC, doc_id ASC
-         |LIMIT 10""".stripMargin,
+         |), $duckRrfTail""".stripMargin,
 
     // both prefilters restated (the e03/e10 discipline): the inverted
     // index's df cap is the same integer cross-multiplication, and the

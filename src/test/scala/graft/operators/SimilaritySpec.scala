@@ -197,6 +197,41 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.derivedLshBits(Long.MaxValue) === Similarity.LshMaxBits)
   }
 
+  test("IVF geometry: an equidistant vector ranks the lower cell first; semAssigned is rn = 1") {
+    import spark.implicits._
+    // one member each pins the label-0/1 centroids to e1 and e2 exactly;
+    // label 2's members sum to (0, 0, 2, 0), a centroid on e3. Vector 0
+    // (e1 + e2) is then exactly equidistant from cells 0 and 1 (cos
+    // 1/sqrt 2, bit-identical), and vector 4 ties cells 0/1 at rank 2
+    // (cos -1/sqrt 3 to both). (ccos DESC, cell ASC) must put cell 0
+    // first in both ties.
+    val e = Seq(
+      (0L, Array(1.0f, 1.0f, 0.0f, 0.0f), 2),
+      (1L, Array(1.0f, 0.0f, 0.0f, 0.0f), 0),
+      (2L, Array(0.0f, 1.0f, 0.0f, 0.0f), 1),
+      (3L, Array(0.0f, 0.0f, 1.0f, 0.0f), 2),
+      (4L, Array(-1.0f, -1.0f, 1.0f, 0.0f), 2))
+      .toDF("vec_id", "embedding", "label")
+    val ranked = Similarity.ivfCranked(e)
+      .select($"vec_id", $"cell", $"ccos", $"rn").as[(Long, Int, Double, Int)].collect()
+    val byVec = ranked.groupBy(_._1).map { case (v, rs) => v -> rs.sortBy(_._4).toSeq }
+    val v0 = byVec(0L)
+    assert(v0.map(_._2) === Seq(0, 1, 2), "lower cell first on the exact tie")
+    assert(v0(0)._3 === v0(1)._3, "vector 0 really is equidistant from cells 0 and 1")
+    val v4 = byVec(4L)
+    assert(v4.map(_._2) === Seq(2, 0, 1), "the rank-2 tie also breaks to the lower cell")
+    assert(v4(1)._3 === v4(2)._3)
+    val filed = ranked.filter(_._4 <= 2).groupBy(_._1).map { case (v, rs) => v -> rs.map(_._2).toSet }
+    assert(filed.keySet === Set(0L, 1L, 2L, 3L, 4L))
+    assert(filed.values.forall(_.size == 2), s"rn <= 2 files each vector under two cells: $filed")
+    assert(filed(0L) === Set(0, 1) && filed(4L) === Set(2, 0))
+    val assigned = Similarity.semAssigned(e).select($"vec_id", $"cell").as[(Long, Int)]
+      .collect().toMap
+    assert(assigned === byVec.map { case (v, rs) => v -> rs.head._2 },
+      "semAssigned's cell is ivfCranked's rn = 1 for every vector")
+    assert(assigned(0L) === 0 && assigned(4L) === 2)
+  }
+
   test("e14 vote mechanics: a 2-2-1 tie breaks to the LOWEST label") {
     import spark.implicits._
     // identical vectors collide in every table, so probe 0's 5-NN is
