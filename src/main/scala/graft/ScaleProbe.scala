@@ -77,7 +77,7 @@ object ScaleProbe {
     */
   private def scaledEvents(s: SparkSession, dir: String, factor: Int): DataFrame = {
     Tables.withNanosAsLong(s)
-    val base = s.read.parquet(s"$dir/events.parquet")
+    val base = Tables.parquet(s, s"$dir/events.parquet")
     val reps = (0 until factor).map { r =>
       if (r == 0) base
       else base

@@ -533,14 +533,6 @@ object Curation {
   private[operators] val EpochBudgetFactor = 2L
   private[operators] val MaxEpochs = 4L
 
-  /** p09 core over any (source, text) frame — extracted so the ceil/cap/
-    * truncate arithmetic is unit-testable on crafted token counts (the
-    * cap-bound source, the exactly-at-target source, the truncated
-    * giant). target = (2·total) div n_sources; epochs = min(MaxEpochs,
-    * ⌈target∕tokens⌉); planned = min(target, epochs·tokens); deficit =
-    * target − planned (> 0 iff the epoch cap binds). All floor/ceil
-    * divisions of exact longs.
-    */
   /** p10 core over (doc_id, source, text) rows — see the catalog entry.
     * Phase boundaries are integer cross-multiplications against t25's
     * corpus-max bits nb: easy ⟺ sum_bits·4 ≤ nb·n_tokens (mean ≤ nb/4),
@@ -561,6 +553,14 @@ object Curation {
         col("bits_mass").cast("double") / col("tok_mass").cast("double"))
       .orderBy("phase", "source")
 
+  /** p09 core over any (source, text) frame — extracted so the ceil/cap/
+    * truncate arithmetic is unit-testable on crafted token counts (the
+    * cap-bound source, the exactly-at-target source, the truncated
+    * giant). target = (2·total) div n_sources; epochs = min(MaxEpochs,
+    * ⌈target∕tokens⌉); planned = min(target, epochs·tokens); deficit =
+    * target − planned (> 0 iff the epoch cap binds). All floor/ceil
+    * divisions of exact longs.
+    */
   private[operators] def epochPlan(docs: DataFrame): DataFrame = {
     val src = docs
       .select(col("source"), tokenCountWs(col("text")).as("nt"))

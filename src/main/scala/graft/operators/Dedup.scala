@@ -433,10 +433,6 @@ object Dedup {
     flatten(transform(ids, (x, i) =>
       transform(slice(ids, i + 2, size(ids)), y => struct(x.as("id_a"), y.as("id_b")))))
 
-  /** MinHash band explode → bucket group → capped candidate pairs, from a
-    * (doc_id, sig) frame. Exposed for DedupSpec's bucket-explosion
-    * property test.
-    */
   /** (doc_id, band, bkey) rows — 32 band keys per signature. Exposed for
     * DedupSpec's fixture-precondition check on bucket widths.
     */
@@ -463,6 +459,10 @@ object Dedup {
         .select("band", "bkey"),
       Seq("band", "bkey"))
 
+  /** MinHash band explode → bucket group → capped candidate pairs, from a
+    * (doc_id, sig) frame. Exposed for DedupSpec's bucket-explosion
+    * property test.
+    */
   private[operators] def minhashBandCandidates(sig: DataFrame,
                                                maxBucket: Int = MaxBucket): DataFrame =
     admittedBands(minhashBands(sig), maxBucket)
@@ -550,10 +550,9 @@ object Dedup {
     // result returns as a storage-backed frame on the CALLER's session.
     val owner = pairs.sparkSession
     val spark = graft.Materialize.loopSession(owner)
-    val pairsPath = graft.Materialize.toStoragePath(pairs.toDF("id_a", "id_b"), "cc_input")
     // undirected edges + self-loops (self-loop keeps a node's own label
     // in the min; symmetric closure makes propagation direction-free)
-    val pa = spark.read.parquet(pairsPath)
+    val pa = graft.Materialize.toStorage(pairs.toDF("id_a", "id_b"), "cc_input", spark)
     val edges = pa
       .union(pa.select(col("id_b"), col("id_a")))
       .union(pa.select(col("id_a"), col("id_a")))
@@ -627,10 +626,10 @@ object Dedup {
       // whole propagation on every later read. See Materialize.toStorage.
       // Read back on the CALLER's session: downstream consumers (d11's
       // survivor join) compose it with caller-session frames.
-      val outPath = graft.Materialize.toStoragePath(
-        labels.select(col("doc_id"), col("lbl").as("cluster_id")), "cc_labels")
+      val out = graft.Materialize.toStorage(
+        labels.select(col("doc_id"), col("lbl").as("cluster_id")), "cc_labels", owner)
       labels.unpersist()
-      owner.read.parquet(outPath)
+      out
     } finally {
       // no conf restore needed — the override lives and dies with the
       // child session's private SQLConf

@@ -289,8 +289,8 @@ object Graph {
     // re-read parquet scratch table is a constant-size scan plan, the
     // same iterative-state discipline as bfsLevels/toStorage, and on a
     // real cluster (scratchDir on HDFS/S3) it survives executor loss.
-    var rank = spark2.read.parquet(graft.Materialize.toStoragePath(
-      deg.select(col("x"), lit(RankScale).as("rank")), "pr_r0"))
+    var rank = graft.Materialize.toStorage(
+      deg.select(col("x"), lit(RankScale).as("rank")), "pr_r0", spark2)
     val base = RankScale * (DampDen - DampNum) / DampDen
     val profile = (1 to rounds).map { r =>
       // the previous rank rides the same shuffle as the contributions
@@ -307,7 +307,7 @@ object Graph {
         // a second scan job over the just-written |V|-row file — one
         // pass per round, not two, at any scale (round 13)
         val obs = org.apache.spark.sql.Observation()
-        val nextPath = graft.Materialize.toStoragePath(msgs
+        val next = graft.Materialize.toStorage(msgs
           .join(rank.select(col("x").as("src"), col("rank").as("srank")), "src")
           .select(col("dst"), expr("srank div deg").as("c"), lit(0L).as("pr"))
           .unionAll(rank.select(col("x").as("dst"), lit(0L).as("c"), col("rank").as("pr")))
@@ -319,8 +319,7 @@ object Graph {
           .observe(obs,
             sum(abs(col("rank") - col("prev_rank"))).as("move"),
             max("rank").as("rmax"), min("rank").as("rmin"),
-            sum("rank").as("mass")), s"pr_r$r")
-        val next = spark2.read.parquet(nextPath)
+            sum("rank").as("mass")), s"pr_r$r", spark2)
         val m = obs.get
         rank = next.select(col("x"), col("rank"))
         (r.toLong, m("move").asInstanceOf[Long], m("rmax").asInstanceOf[Long],
@@ -366,13 +365,13 @@ object Graph {
     val seeds = graft.Materialize(
       deg.orderBy(col("deg").desc, col("x").asc).limit(PprSeedK)
         .select(col("x"), lit(seedBase).as("sb")))
-    var rank = spark.read.parquet(graft.Materialize.toStoragePath(
+    var rank = graft.Materialize.toStorage(
       deg.join(broadcast(seeds), Seq("x"), "left")
         .select(col("x"),
           when(col("sb").isNotNull, lit(RankScale)).otherwise(lit(0L)).as("rank")),
-      "ppr_r0"))
+      "ppr_r0", spark)
     (1 to rounds).foreach { r =>
-      rank = spark.read.parquet(graft.Materialize.toStoragePath(
+      rank = graft.Materialize.toStorage(
         msgs.join(rank.select(col("x").as("src"), col("rank").as("srank")), "src")
           .select(col("dst"), expr("srank div deg").as("c"))
           .groupBy(col("dst").as("x"))
@@ -380,7 +379,7 @@ object Graph {
           .join(broadcast(seeds), Seq("x"), "left")
           .select(col("x"),
             (coalesce(col("sb"), lit(0L)) + expr(s"m * $DampNum div $DampDen"))
-              .as("rank")), s"ppr_r$r"))
+              .as("rank")), s"ppr_r$r", spark)
     }
     rank.join(broadcast(seeds), Seq("x"), "left")
       .select(col("x").as("part_id"), col("rank"), col("sb").isNotNull.as("is_seed"))
@@ -495,21 +494,20 @@ object Graph {
                                rounds: Int = CcRounds): DataFrame = {
     val spark = msgs.sparkSession
     import spark.implicits._
-    var lab = spark.read.parquet(graft.Materialize.toStoragePath(
-      verts.select(col("x"), col("x").as("lab")), "cc_l0"))
+    var lab = graft.Materialize.toStorage(
+      verts.select(col("x"), col("x").as("lab")), "cc_l0", spark)
     var converged = false
     var lastRow: (Long, Long, Long) = null
     val prof = (1 to rounds).map { r =>
       if (converged) (r.toLong, 0L, lastRow._2, lastRow._3)
       else {
-        val nextPath = graft.Materialize.toStoragePath(msgs
+        val next = graft.Materialize.toStorage(msgs
           .join(lab.select(col("x").as("src"), col("lab").as("slab")), "src")
           .select(col("dst"), col("slab"), lit(0).as("own"))
           .unionAll(lab.select(col("x").as("dst"), col("lab").as("slab"), lit(1).as("own")))
           .groupBy(col("dst").as("x"))
           .agg(min("slab").as("lab"),
-            max(when(col("own") === 1, col("slab"))).as("prev_lab")), s"cc_l$r")
-        val next = spark.read.parquet(nextPath)
+            max(when(col("own") === 1, col("slab"))).as("prev_lab")), s"cc_l$r", spark)
         // grouped audit (round 13): countDistinct alongside row-level
         // aggs plans an Expand (2× every |V| row) + two shuffles; one
         // groupBy(lab) + a |labels|-row global agg computes the same
@@ -531,15 +529,6 @@ object Graph {
     prof.toDF("round", "n_changed", "n_labels", "label_sum").orderBy("round")
   }
 
-  /** g03 core: single-source BFS by iterative frontier expansion — the
-    * third canonical Pregel shape after label propagation (d07) and one
-    * message round (g02). Root = the max-degree vertex (tie-break min
-    * id — deterministic). Each round: frontier ⋈ edges → dedup → anti-join
-    * visited; the shuffles carry only the frontier fan-out and the visited
-    * id set, never the whole graph per round, and only a 1-row emptiness
-    * probe reaches the driver per round. Rounds = eccentricity of the
-    * root (small-world graphs: a handful at any scale).
-    */
   /** g03: vertex count at which bfsLevels switches the adjacency from a
     * memory cache to the range-bucketed storage layout. The bucketed
     * layout's pruning is the 100×-probe win (per-round IO ∝ frontier
@@ -554,6 +543,15 @@ object Graph {
     */
   val BfsStorageMinVertices = 1000000L
 
+  /** g03 core: single-source BFS by iterative frontier expansion — the
+    * third canonical Pregel shape after label propagation (d07) and one
+    * message round (g02). Root = the max-degree vertex (tie-break min
+    * id — deterministic). Each round: frontier ⋈ edges → dedup → anti-join
+    * visited; the shuffles carry only the frontier fan-out and the visited
+    * id set, never the whole graph per round, and only a 1-row emptiness
+    * probe reaches the driver per round. Rounds = eccentricity of the
+    * root (small-world graphs: a handful at any scale).
+    */
   private[operators] def bfsLevels(e: DataFrame, maxRounds: Int = MaxBfsRounds,
                                    storageMinVertices: Long = BfsStorageMinVertices): DataFrame = {
     val spark = e.sparkSession
@@ -732,20 +730,19 @@ object Graph {
       else {
         val removed = nWeak
         val weak = aliveDeg.filter(col("deg") < k).select("x")
-        val next = spark.read.parquet(graft.Materialize.toStoragePath(alive
+        val next = graft.Materialize.toStorage(alive
           .join(weak.withColumnRenamed("x", "u"), Seq("u"), "left_anti")
           .join(weak.withColumnRenamed("x", "v"), Seq("v"), "left_anti")
-          .select("u", "v"), s"kcore_e$r"))
+          .select("u", "v"), s"kcore_e$r", spark)
         alive = next
         // audit rides the degree write (observe — round 13): metrics
         // over exactly the |V'|-row frame written, so the separate
         // post-write audit scan job is gone; identical integers.
         val obs = org.apache.spark.sql.Observation()
-        val nextDeg = spark.read.parquet(
-          graft.Materialize.toStoragePath(degrees(next).observe(obs,
-            count(lit(1)).as("nv"),
-            coalesce(sum(col("deg")), lit(0L)).as("sumdeg"),
-            count(when(col("deg") < k, 1)).as("nweak")), s"kcore_d$r"))
+        val nextDeg = graft.Materialize.toStorage(degrees(next).observe(obs,
+          count(lit(1)).as("nv"),
+          coalesce(sum(col("deg")), lit(0L)).as("sumdeg"),
+          count(when(col("deg") < k, 1)).as("nweak")), s"kcore_d$r", spark)
         aliveDeg = nextDeg
         val m = obs.get
         nV = m("nv").asInstanceOf[Long]
@@ -911,8 +908,7 @@ object Graph {
           // of two executions of the 3-join chain; the last round skips
           // the write because nothing reads its survivors
           val flagged =
-            if (r < rounds) spark.read.parquet(
-              graft.Materialize.toStoragePath(flagged0, s"ktruss_f$r"))
+            if (r < rounds) graft.Materialize.toStorage(flagged0, s"ktruss_f$r", spark)
             else flagged0
           val dead = flagged
             .filter(col("f1").isNotNull || col("f2").isNotNull || col("f3").isNotNull)
@@ -934,8 +930,7 @@ object Graph {
           // the LAST round's sup has no later-round reader — keep the
           // lineage and let the audit job compute it once, instead of a
           // full |E|-row scratch write nothing re-reads (round 13)
-          sup = if (r < rounds) spark.read.parquet(
-            graft.Materialize.toStoragePath(supFrame, s"ktruss_s$r"))
+          sup = if (r < rounds) graft.Materialize.toStorage(supFrame, s"ktruss_s$r", spark)
           else supFrame
         }
         // (the per-round System.gc() that used to sit here was a vestige
@@ -948,13 +943,13 @@ object Graph {
             // old standalone agg scanned; a removal file whose round
             // turns out converged (nw == 0) is just an ignored empty dir
             val (obsSup, obs) = auditObs(sup)
-            val rmPath = graft.Materialize.toStoragePath(
-              obsSup.filter(col("sup") < minSup).select("u", "v"), s"ktruss_r$r")
+            val removed = graft.Materialize.toStorage(
+              obsSup.filter(col("sup") < minSup).select("u", "v"), s"ktruss_r$r", spark)
             val m = obs.get
             val t = (m("ne").asInstanceOf[Long], m("st").asInstanceOf[Long],
               m("nw").asInstanceOf[Long])
             if (t._3 > 0L) {
-              removedLast = spark.read.parquet(rmPath)
+              removedLast = removed
               removedLastN = t._3
             }
             t
@@ -1022,7 +1017,7 @@ object Graph {
     // (≤ |E_key|·Scale ≤ 1e15 at a 1e9-degree hub) and the renormalized
     // product runs in decimal(38,0), so no intermediate can overflow.
     def renorm(raw: DataFrame, key: String, out: String, tag: String): DataFrame = {
-      val stored = spark.read.parquet(graft.Materialize.toStoragePath(raw, tag))
+      val stored = graft.Materialize.toStorage(raw, tag, spark)
       val m = stored.agg(max(col("s"))).head().getLong(0)
       stored.select(col(key),
         expr(s"CAST((CAST(s AS DECIMAL(38,0)) * $HitsScale) DIV CAST($m AS DECIMAL(38,0)) AS BIGINT)")
@@ -1065,20 +1060,19 @@ object Graph {
                                     rounds: Int = LpaRounds): DataFrame = {
     val spark = msgs.sparkSession
     import spark.implicits._
-    var lbls = spark.read.parquet(graft.Materialize.toStoragePath(
-      verts.select(col("x"), col("x").as("lbl")), "lpa_l0"))
+    var lbls = graft.Materialize.toStorage(
+      verts.select(col("x"), col("x").as("lbl")), "lpa_l0", spark)
     val profile = (1 to rounds).map { r =>
       // one store job per round: message join → per-(dst, label) count →
       // deterministic argmax → carry the previous label alongside so the
       // audit is a scan of THIS round's frame only
-      val nextPath = graft.Materialize.toStoragePath(
+      val next = graft.Materialize.toStorage(
         msgs.join(lbls.select(col("x").as("src"), col("lbl")), "src")
           .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("cnt"))
           .groupBy(col("dst"))
           .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("pick"))
           .select(col("dst").as("x"), col("pick.l").as("lbl"))
-          .join(lbls.select(col("x"), col("lbl").as("prev_lbl")), "x"), s"lpa_l$r")
-      val next = spark.read.parquet(nextPath)
+          .join(lbls.select(col("x"), col("lbl").as("prev_lbl")), "x"), s"lpa_l$r", spark)
       // ONE audit job, not two (round 13): group by label once, then a
       // tiny global agg over the |labels|-row frame yields all four
       // scalars — n_communities = the group count (what countDistinct

@@ -73,13 +73,6 @@ object TextAnalysis {
   def redactPii(c: Column): Column =
     PiiPatterns.foldLeft(c) { case (acc, (_, pat, tag)) => regexp_replace(acc, pat, tag) }
 
-  /** t18 core over (doc_id, w: array<string>) rows — exposed so TextSpec
-    * can drive the flag threshold with a crafted corpus (the fixture's
-    * span frequencies are emergent, not controlled).
-    */
-  /** t25 core over any (doc_id, text) frame — see the catalog entry for
-    * the bitlength-as-floor-log2 exactness argument.
-    */
   /** Per-doc (n_tokens, sum_bits, nb) frame t25 finalizes and p10's
     * curriculum planner phases on — one definition so the two operators
     * cannot drift (the s23 shared-gate lesson applied to Scala).
@@ -99,10 +92,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_tokens"), sum("bits").as("sum_bits"), max("nb").as("nb"))
   }
 
-  /** t33 core over any (doc_id, source, text) frame — extracted so the
-    * OOV rule and the shift direction are unit-testable on crafted
-    * splits (the fixture is IID by construction, so its report correctly
-    * shows no shift). */
   /** t34 core over a documents frame — extracted so a crafted two-doc
     * corpus pins counts, the fixed-point lift, and the filter floors
     * closed-form. See the query scaladoc.
@@ -140,6 +129,10 @@ object TextAnalysis {
       .limit(PmiTopK)
   }
 
+  /** t33 core over any (doc_id, source, text) frame — extracted so the
+    * OOV rule and the shift direction are unit-testable on crafted
+    * splits (the fixture is IID by construction, so its report correctly
+    * shows no shift). */
   private[operators] def splitShift(docs: DataFrame): DataFrame = {
     val bucket = pmod(xxhash64(col("doc_id")), lit(100))
     val toks = docs
@@ -168,6 +161,9 @@ object TextAnalysis {
       .orderBy("split", "source")
   }
 
+  /** t25 core over any (doc_id, text) frame — see the catalog entry for
+    * the bitlength-as-floor-log2 exactness argument.
+    */
   private[operators] def surprisalScore(docs: DataFrame): DataFrame = {
     surprisalPerDoc(docs)
       .select(col("doc_id"), col("n_tokens"), col("sum_bits"),
@@ -298,11 +294,11 @@ object TextAnalysis {
     import s.implicits._
     val S = "\u0001"
     val E = "\u0002"
-    var vocab = s.read.parquet(graft.Materialize.toStoragePath(
+    var vocab = graft.Materialize.toStorage(
       docs.select(explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("wf"))
         .select(regexp_replace(col("w"), "(.)", S + "$1" + E).as("ws"), col("wf")),
-      "bpe_v0"))
+      "bpe_v0")
     val prof = (1 to rounds).map { r =>
       val pairs = vocab
         .select(col("wf"), split(expr("substring(ws, 2, length(ws) - 2)"), E + S).as("sy"))
@@ -317,11 +313,11 @@ object TextAnalysis {
       val (wl, wr, cnt) = (win.getString(0), win.getString(1), win.getLong(2))
       // `replace` with lit() patterns — corpus-derived symbols never touch
       // SQL text (and [a-z]+ symbols can't collide with the delimiters)
-      val next = s.read.parquet(graft.Materialize.toStoragePath(
+      val next = graft.Materialize.toStorage(
         vocab.select(
           replace(col("ws"), lit(S + wl + E + S + wr + E),
             lit(S + wl + wr + E)).as("ws"),
-          col("wf")), s"bpe_v$r"))
+          col("wf")), s"bpe_v$r")
       val tokensAfter = next
         .agg(sum(col("wf") *
           (length(col("ws")) - length(replace(col("ws"), lit(S), lit(""))))).as("ta"))
@@ -459,6 +455,10 @@ object TextAnalysis {
       .orderBy("src_a", "src_b")
   }
 
+  /** t18 core over (doc_id, w: array<string>) rows — exposed so TextSpec
+    * can drive the flag threshold with a crafted corpus (the fixture's
+    * span frequencies are emergent, not controlled).
+    */
   private[operators] def boilerplateSpans(docs: DataFrame): DataFrame = {
     val d = docs.filter(size(col("w")) >= 2)
     val sp = d.select(col("doc_id"),

@@ -58,17 +58,17 @@ object StreamingQueries {
 
   /** `table` as a bounded file stream.
     *
-    * File streams require a declared schema, so we probe the batch footer
-    * once at plan time (cheap: footer read only, no data scan) and declare
-    * whatever physical encoding the current testdata carries. Hard-coding
-    * the schema is what silently corrupted 11 streaming queries when the
-    * testdata's ts encoding changed under us (nanos-as-long read as raw µs
-    * compressed every timestamp 1000×); the embeddings label column has
-    * likewise shipped as both int32 and int64.
+    * File streams require a declared schema, so we take the batch footer's
+    * (`Tables.parquet`: inferred once per JVM, no Spark job after that)
+    * and declare whatever physical encoding the current testdata carries.
+    * Hard-coding the schema is what silently corrupted 11 streaming
+    * queries when the testdata's ts encoding changed under us
+    * (nanos-as-long read as raw µs compressed every timestamp 1000×); the
+    * embeddings label column has likewise shipped as both int32 and int64.
     */
   private def tableStream(s: SparkSession, dir: String, table: String): DataFrame =
     s.readStream
-      .schema(s.read.parquet(s"$dir/$table.parquet").schema)
+      .schema(Tables.parquet(s, s"$dir/$table.parquet").schema)
       .option("pathGlobFilter", s"$table.parquet")
       .parquet(dir)
 
