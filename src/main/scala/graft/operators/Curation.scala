@@ -76,21 +76,7 @@ object Curation {
       // materialized once (Materialize): banding and BOTH verify-join
       // sides consume it — without this the survivor scan+shingle+sketch
       // lineage runs three times. Production: a disk-backed sketch table.
-      val sh = graft.Materialize(exactKept
-        .select(col("doc_id"), wordShingles(col("text"), 3).as("raw"))
-        .filter(size(col("raw")) > 0)
-        .select(col("doc_id"),
-          minhash_signature(col("raw"), Dedup.MinHashK).as("sig"),
-          sort_array(transform(col("raw"), g => xxhash64(g))).as("hsh")))
-      val cand = Dedup.minhashBandCandidates(sh.select(col("doc_id"), col("sig")))
-      val a = sh.select(col("doc_id").as("id_a"), col("hsh").as("sh_a"))
-      val b = sh.select(col("doc_id").as("id_b"), col("hsh").as("sh_b"))
-      val nearDupLosers = cand.join(a, "id_a").join(b, "id_b")
-        .filter(jaccardSorted(col("sh_a"), col("sh_b")) >= Jac)
-        .select(col("id_b").as("doc_id")) // id_a < id_b: larger id loses
-        .distinct()
-
-      exactKept.join(nearDupLosers, Seq("doc_id"), "left_anti")
+      exactKept.join(nearDupLosers(survivorSketches(exactKept)), Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           col("q").as("quality_score"))
         .orderBy("doc_id")
@@ -108,17 +94,8 @@ object Curation {
     // p01's LSH stage this composition is END-TO-END oracle-checked with
     // no approximate component.
     "p02_training_mix" -> ((s, dir) => {
-      val digits = regexp_extract(col("source"), "[0-9]+", 0)
-      val rate = lit(30L) + when(digits =!= "", digits.cast("long")) % 10 * 7L
-      val mix = col("doc_id") % 1000003L * 2654435761L % 100L
       val budget = TextAnalysis.SeqBudget
-      Tables.documents(s, dir)
-        .filter(qualityScore(col("text")) >= QualityMin && langId(col("text")) === "en")
-        .filter(mix < rate)
-        .select(col("source"), tokenCountWs(col("text")).as("n_tokens"))
-        .filter(col("n_tokens") > 0)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
+      mixAdmitted(Tables.documents(s, dir))
         .withColumn("n_seqs", expr(s"(n_tokens + ${budget - 1}) div $budget"))
         .withColumn("fill_ratio",
           col("n_tokens").cast("double") / (col("n_seqs") * budget).cast("double"))
@@ -666,19 +643,8 @@ object Curation {
         .select(col("doc_id"), (col("doc_id") =!= col("keep_id")).as("exact_loser"))
       val exactKept = base.join(pooled.filter(!col("exact_loser"))
         .select("doc_id"), Seq("doc_id"), "left_semi")
-      sh = graft.Materialize(exactKept
-        .select(col("doc_id"), wordShingles(col("text"), 3).as("raw"))
-        .filter(size(col("raw")) > 0)
-        .select(col("doc_id"),
-          minhash_signature(col("raw"), Dedup.MinHashK).as("sig"),
-          sort_array(transform(col("raw"), g => xxhash64(g))).as("hsh")))
-      val cand = Dedup.minhashBandCandidates(sh.select(col("doc_id"), col("sig")))
-      val nearLosers = cand
-        .join(sh.select(col("doc_id").as("id_a"), col("hsh").as("sh_a")), "id_a")
-        .join(sh.select(col("doc_id").as("id_b"), col("hsh").as("sh_b")), "id_b")
-        .filter(jaccardSorted(col("sh_a"), col("sh_b")) >= Jac)
-        .select(col("id_b").as("doc_id")).distinct()
-        .withColumn("near_loser", lit(true))
+      sh = survivorSketches(exactKept)
+      val nearLosers = nearDupLosers(sh).withColumn("near_loser", lit(true))
       // gram universe = eval docs (the contamination REFERENCE) + the
       // exact-dup survivors (the only docs whose status can still reach
       // the contamination gate — every other doc already reported an
@@ -722,6 +688,46 @@ object Curation {
         base.unpersist()
       }
     }
+
+  /** p02 core over any documents frame, batch or stream (s15 runs it as a
+    * complete-mode streaming aggregate): quality gate → language gate →
+    * deterministic per-source mixture sample (t08's stateless integer
+    * rule) → admitted docs and tokens per source.
+    */
+  private[graft] def mixAdmitted(docs: DataFrame): DataFrame = {
+    val digits = regexp_extract(col("source"), "[0-9]+", 0)
+    val rate = lit(30L) + when(digits =!= "", digits.cast("long")) % 10 * 7L
+    val mix = col("doc_id") % 1000003L * 2654435761L % 100L
+    docs.filter(qualityScore(col("text")) >= QualityMin && langId(col("text")) === "en")
+      .filter(mix < rate)
+      .select(col("source"), tokenCountWs(col("text")).as("n_tokens"))
+      .filter(col("n_tokens") > 0)
+      .groupBy("source")
+      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
+  }
+
+  /** p01/p07 stage 4 input: the exact-dedup survivors' sketches, one
+    * shingling pass for BOTH the MinHash signature and the sorted int64
+    * shingle hashes (the verify join ships only the hashes), materialized
+    * because banding and both verify-join sides consume them.
+    */
+  private def survivorSketches(exactKept: DataFrame): DataFrame = graft.Materialize(exactKept
+    .select(col("doc_id"), wordShingles(col("text"), 3).as("raw"))
+    .filter(size(col("raw")) > 0)
+    .select(col("doc_id"),
+      minhash_signature(col("raw"), Dedup.MinHashK).as("sig"),
+      sort_array(transform(col("raw"), g => xxhash64(g))).as("hsh")))
+
+  /** p01/p07 near-dedup: the larger id of every LSH candidate pair whose
+    * exact Jaccard over `sh`'s hashed shingles reaches [[Jac]].
+    */
+  private def nearDupLosers(sh: DataFrame): DataFrame =
+    Dedup.minhashBandCandidates(sh.select(col("doc_id"), col("sig")))
+      .join(sh.select(col("doc_id").as("id_a"), col("hsh").as("sh_a")), "id_a")
+      .join(sh.select(col("doc_id").as("id_b"), col("hsh").as("sh_b")), "id_b")
+      .filter(jaccardSorted(col("sh_a"), col("sh_b")) >= Jac)
+      .select(col("id_b").as("doc_id")) // id_a < id_b: larger id loses
+      .distinct()
 
   private[graft] val langCase: String = {
     val langs = TextFunctions.LangMarkers.map(_._1)

@@ -459,6 +459,26 @@ object Dedup {
         .select("band", "bkey"),
       Seq("band", "bkey"))
 
+  /** d08/d22 asymmetric probe over a (doc_id, sig, hsh) index: the band
+    * rows `isNew` keeps from the admitted bands equi-join every admitted
+    * band row, and each candidate pair is exact-Jaccard verified — every
+    * pair includes at least one new doc, and old×old is never paired.
+    */
+  private def incrementalPairs(idx: DataFrame, isNew: DataFrame => DataFrame): DataFrame = {
+    val bandsAll = admittedBands(
+      minhashBands(idx.select(col("doc_id"), col("sig"))), MaxBucket)
+    val bandsNew = isNew(bandsAll).withColumnRenamed("doc_id", "new_id")
+    bandsAll.join(bandsNew, Seq("band", "bkey"))
+      .filter(col("doc_id") =!= col("new_id"))
+      .select(least(col("doc_id"), col("new_id")).as("id_a"),
+        greatest(col("doc_id"), col("new_id")).as("id_b"))
+      .distinct()
+      .join(idx.select(col("doc_id").as("id_a"), col("hsh").as("sh_a")), "id_a")
+      .join(idx.select(col("doc_id").as("id_b"), col("hsh").as("sh_b")), "id_b")
+      .select(col("id_a"), col("id_b"), jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
+      .filter(col("jaccard") >= JaccardThreshold)
+  }
+
   /** MinHash band explode → bucket group → capped candidate pairs, from a
     * (doc_id, sig) frame. Exposed for DedupSpec's bucket-explosion
     * property test.
@@ -932,21 +952,7 @@ object Dedup {
     // construction; jaccard-verified exactly like d03.
     "d08_incremental_dedup" -> ((s, dir) => {
       val cutoff = 400L
-      val sk = sketched(s, dir)
-      val bandsAll = admittedBands(
-        minhashBands(sk.select(col("doc_id"), col("sig"))), MaxBucket)
-      val bandsNew = bandsAll.filter(col("doc_id") >= cutoff)
-        .withColumnRenamed("doc_id", "new_id")
-      val cand = bandsAll.join(bandsNew, Seq("band", "bkey"))
-        .filter(col("doc_id") =!= col("new_id"))
-        .select(least(col("doc_id"), col("new_id")).as("id_a"),
-          greatest(col("doc_id"), col("new_id")).as("id_b"))
-        .distinct()
-      val a = sk.select(col("doc_id").as("id_a"), col("hsh").as("sh_a"))
-      val b = sk.select(col("doc_id").as("id_b"), col("hsh").as("sh_b"))
-      cand.join(a, "id_a").join(b, "id_b")
-        .select(col("id_a"), col("id_b"), jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
-        .filter(col("jaccard") >= JaccardThreshold)
+      incrementalPairs(sketched(s, dir), _.filter(col("doc_id") >= cutoff))
         .orderBy("id_a", "id_b")
     }),
 
@@ -1014,21 +1020,7 @@ object Dedup {
           col("bkey_m") =!= col("bkey_r"))
         .agg(count(lit(1)).as("band_mismatches"))
       // the batch's new duplicates, from the maintained index alone
-      val bandsAll = admittedBands(
-        minhashBands(merged.select(col("doc_id"), col("sig"))), MaxBucket)
-      val bandsNew = bandsAll.join(changedIds, Seq("doc_id"))
-        .withColumnRenamed("doc_id", "new_id")
-      val cand = bandsAll.join(bandsNew, Seq("band", "bkey"))
-        .filter(col("doc_id") =!= col("new_id"))
-        .select(least(col("doc_id"), col("new_id")).as("id_a"),
-          greatest(col("doc_id"), col("new_id")).as("id_b"))
-        .distinct()
-      cand
-        .join(merged.select(col("doc_id").as("id_a"), col("hsh").as("sh_a")), "id_a")
-        .join(merged.select(col("doc_id").as("id_b"), col("hsh").as("sh_b")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
-        .filter(col("jaccard") >= JaccardThreshold)
+      incrementalPairs(merged, _.join(changedIds, Seq("doc_id")))
         .crossJoin(broadcast(sigMis))
         .crossJoin(broadcast(bandMis))
         .orderBy("id_a", "id_b")

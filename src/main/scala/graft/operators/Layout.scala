@@ -106,31 +106,7 @@ object Layout {
       val bounds = li.agg(
         min("l_partkey").as("pk0"), max("l_partkey").as("pk1"),
         min("l_suppkey").as("sk0"), max("l_suppkey").as("sk1"))
-      // diagonal quartile boxes, stated in integer grid arithmetic
-      val probes = bounds
-        .select(explode(expr("sequence(0L, 3L)")).as("q"),
-          col("pk0"), col("pk1"), col("sk0"), col("sk1"))
-        .select(col("q"),
-          expr("pk0 + (pk1 - pk0 + 1) * q div 4").as("lo_pk"),
-          expr("pk0 + (pk1 - pk0 + 1) * (q + 1) div 4 - 1").as("hi_pk"),
-          expr("sk0 + (sk1 - sk0 + 1) * q div 4").as("lo_sk"),
-          expr("sk0 + (sk1 - sk0 + 1) * (q + 1) div 4 - 1").as("hi_sk"))
-      val touched = zoneMaps(s, dir).crossJoin(broadcast(probes))
-        .groupBy("q")
-        .agg(count(lit(1)).as("n_buckets"),
-          sum(when(col("min_pk") <= col("hi_pk") && col("max_pk") >= col("lo_pk") &&
-                   col("min_sk") <= col("hi_sk") && col("max_sk") >= col("lo_sk"), 1L)
-            .otherwise(0L)).as("n_touched"),
-          sum(when(col("min_pk") <= col("hi_pk") && col("max_pk") >= col("lo_pk") &&
-                   col("min_sk") <= col("hi_sk") && col("max_sk") >= col("lo_sk"), col("n"))
-            .otherwise(0L)).as("rows_scanned"))
-      val exact = li.crossJoin(broadcast(probes))
-        .groupBy("q")
-        .agg(count(when(col("l_partkey").between(col("lo_pk"), col("hi_pk")) &&
-                        col("l_suppkey").between(col("lo_sk"), col("hi_sk")), 1))
-          .as("rows_matching"),
-          count(lit(1)).as("rows_total"))
-      touched.join(exact, "q")
+      quartileProbes(zoneMaps(s, dir), bounds, li, "q")
         .select(col("q"), col("n_buckets"), col("n_touched"),
           col("rows_scanned"), col("rows_matching"),
           (col("rows_scanned").cast("double") / col("rows_total").cast("double"))
@@ -259,30 +235,9 @@ object Layout {
         .agg(count(lit(1)).as("n"),
           min("l_partkey").as("min_pk"), max("l_partkey").as("max_pk"),
           min("l_suppkey").as("min_sk"), max("l_suppkey").as("max_sk"))
-      val probes = bounds
-        .select(explode(expr("sequence(0L, 3L)")).as("q"),
-          col("pk0"), col("pk1"), col("sk0"), col("sk1"))
-        .select(col("q"),
-          expr("pk0 + (pk1 - pk0 + 1) * q div 4").as("lo_pk"),
-          expr("pk0 + (pk1 - pk0 + 1) * (q + 1) div 4 - 1").as("hi_pk"),
-          expr("sk0 + (sk1 - sk0 + 1) * q div 4").as("lo_sk"),
-          expr("sk0 + (sk1 - sk0 + 1) * (q + 1) div 4 - 1").as("hi_sk"))
-      val hit = col("min_pk") <= col("hi_pk") && col("max_pk") >= col("lo_pk") &&
-        col("min_sk") <= col("hi_sk") && col("max_sk") >= col("lo_sk")
-      val touched = zm.crossJoin(broadcast(probes))
-        .groupBy("layout", "q")
-        .agg(count(lit(1)).as("n_buckets"),
-          sum(when(hit, 1L).otherwise(0L)).as("n_touched"),
-          sum(when(hit, col("n")).otherwise(0L)).as("rows_scanned"))
-      val exact = li.crossJoin(broadcast(probes))
-        .groupBy("q")
-        .agg(count(when(col("l_partkey").between(col("lo_pk"), col("hi_pk")) &&
-          col("l_suppkey").between(col("lo_sk"), col("hi_sk")), 1))
-          .as("rows_matching"),
-          count(lit(1)).as("rows_total"))
       val wQ = Window.partitionBy("q")
         .orderBy(col("rows_scanned").asc, col("layout").asc)
-      touched.join(exact, "q")
+      quartileProbes(zm, bounds, li, "layout", "q")
         .withColumn("is_best", row_number().over(wQ) === 1)
         .select(col("q"), col("layout"), col("n_buckets"), col("n_touched"),
           col("rows_scanned"), col("rows_matching"),
@@ -292,6 +247,37 @@ object Layout {
         .orderBy("q", "layout")
     })
   )
+
+  /** z03/z07 shared core: the four diagonal quartile boxes of `bounds`'
+    * (partkey, suppkey) grid, stated in integer grid arithmetic; the zone
+    * buckets and rows each box reads per `keys` group of `zones`; joined
+    * on `q` to the exact rows of `li` each box matches.
+    */
+  private def quartileProbes(zones: DataFrame, bounds: DataFrame, li: DataFrame,
+      keys: String*): DataFrame = {
+    val probes = bounds
+      .select(explode(expr("sequence(0L, 3L)")).as("q"),
+        col("pk0"), col("pk1"), col("sk0"), col("sk1"))
+      .select(col("q"),
+        expr("pk0 + (pk1 - pk0 + 1) * q div 4").as("lo_pk"),
+        expr("pk0 + (pk1 - pk0 + 1) * (q + 1) div 4 - 1").as("hi_pk"),
+        expr("sk0 + (sk1 - sk0 + 1) * q div 4").as("lo_sk"),
+        expr("sk0 + (sk1 - sk0 + 1) * (q + 1) div 4 - 1").as("hi_sk"))
+    val hit = col("min_pk") <= col("hi_pk") && col("max_pk") >= col("lo_pk") &&
+      col("min_sk") <= col("hi_sk") && col("max_sk") >= col("lo_sk")
+    val touched = zones.crossJoin(broadcast(probes))
+      .groupBy(keys.head, keys.tail: _*)
+      .agg(count(lit(1)).as("n_buckets"),
+        sum(when(hit, 1L).otherwise(0L)).as("n_touched"),
+        sum(when(hit, col("n")).otherwise(0L)).as("rows_scanned"))
+    val exact = li.crossJoin(broadcast(probes))
+      .groupBy("q")
+      .agg(count(when(col("l_partkey").between(col("lo_pk"), col("hi_pk")) &&
+        col("l_suppkey").between(col("lo_sk"), col("hi_sk")), 1))
+        .as("rows_matching"),
+        count(lit(1)).as("rows_total"))
+    touched.join(exact, "q")
+  }
 
   /** z01/z03 shared core: per-z-bucket zone maps (row count + min/max of
     * both clustering keys) over the Morton-bucketed lineitem keys.

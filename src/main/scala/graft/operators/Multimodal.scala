@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -482,13 +482,18 @@ object Multimodal {
       .orderBy("doc_id")
   }
 
+  /** (doc_id, text) rows as typed binary payloads: the input of every
+    * batched blob map below.
+    */
+  private def blobsOf(docs: DataFrame): Dataset[Blob] =
+    docs.select(col("doc_id"), col("text").cast("binary").as("payload"))
+      .as(Encoders.product[Blob])
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // binary ingestion + partition-local batched stats. Exact byte math →
     // oracle-checkable (DuckDB recomputes from the string bytes).
     "m01_blob_stats" -> ((s, dir) => {
-      val blobs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as(Encoders.product[Blob])
+      val blobs = blobsOf(Tables.documents(s, dir))
       blobs.mapPartitions { it =>
         it.grouped(DecodeBatchSize).flatMap { batch =>
           batch.map { b =>
@@ -510,9 +515,7 @@ object Multimodal {
     // image/audio featurizer uses; emitted long-format (doc_id, bin, n)
     // with empty bins omitted.
     "m04_feature_extract" -> ((s, dir) => {
-      val blobs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as(Encoders.product[Blob])
+      val blobs = blobsOf(Tables.documents(s, dir))
       blobs.mapPartitions { it =>
         it.grouped(DecodeBatchSize).flatMap { batch =>
           batch.flatMap { b =>
@@ -532,9 +535,7 @@ object Multimodal {
     // Geometry is derived from the stubbed decode → rows-only check +
     // MultimodalSpec invariants (aspect preserved, bounded, deterministic).
     "m03_resize_plan" -> ((s, dir) => {
-      val blobs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as(Encoders.product[Blob])
+      val blobs = blobsOf(Tables.documents(s, dir))
       blobs.mapPartitions { it =>
         it.grouped(DecodeBatchSize).flatMap(b => planResize(fakeDecode(b), maxSide = 256))
       }(Encoders.product[Resized])
@@ -552,10 +553,7 @@ object Multimodal {
       // empty payloads are excluded on BOTH sides: a zero-byte blob has no
       // frame grid, and the oracle's unnest(range(0,0)) would drop the doc
       // while an unguarded Spark side emitted a zero row
-      val blobs = Tables.documents(s, dir)
-        .filter(length(col("text")) > 0)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as(Encoders.product[Blob])
+      val blobs = blobsOf(Tables.documents(s, dir).filter(length(col("text")) > 0))
       blobs.mapPartitions { it =>
         it.grouped(DecodeBatchSize).flatMap { batch =>
           batch.map { b =>
@@ -583,10 +581,7 @@ object Multimodal {
     // engines), so the whole windowing path is oracle-checked. Same
     // batched narrow map as m01/m05 — no shuffle, scan-linear.
     "m07_audio_energy" -> ((s, dir) => {
-      val blobs = Tables.documents(s, dir)
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as(Encoders.product[Blob])
+      val blobs = blobsOf(Tables.documents(s, dir).filter(length(col("text")) >= 2))
       blobs.mapPartitions { it =>
         it.grouped(DecodeBatchSize).flatMap { batch =>
           batch.map { b =>
@@ -627,10 +622,7 @@ object Multimodal {
     // payload's frames (energies, then the edge scan), no shuffle,
     // scan-linear, all BIGINT ⇒ exact gate.
     "m11_silence_trim" -> ((s, dir) => {
-      val blobs = Tables.documents(s, dir)
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as(Encoders.product[Blob])
+      val blobs = blobsOf(Tables.documents(s, dir).filter(length(col("text")) >= 2))
       blobs.mapPartitions { it =>
         it.grouped(DecodeBatchSize).flatMap(_.map(b => trimOf(b)))
       }(Encoders.product[AudioTrim])
@@ -649,10 +641,7 @@ object Multimodal {
     // partition each video into shots for per-shot frame sampling
     // (m05) — the standard dedup/caption unit.
     "m08_scene_change" -> ((s, dir) => {
-      val blobs = Tables.documents(s, dir)
-        .filter(length(col("text")) > 0)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as(Encoders.product[Blob])
+      val blobs = blobsOf(Tables.documents(s, dir).filter(length(col("text")) > 0))
       blobs.mapPartitions { it =>
         it.grouped(DecodeBatchSize).flatMap(batch => batch.map(sceneStats))
       }(Encoders.product[SceneStats])
@@ -671,10 +660,7 @@ object Multimodal {
     // under the exact gate (the oracle restates it with window
     // functions: cut flags → running-sum shot ids → per-shot rollup).
     "m10_shot_summary" -> ((s, dir) => {
-      val blobs = Tables.documents(s, dir)
-        .filter(length(col("text")) > 0)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as(Encoders.product[Blob])
+      val blobs = blobsOf(Tables.documents(s, dir).filter(length(col("text")) > 0))
       blobs.mapPartitions { it =>
         it.grouped(DecodeBatchSize).flatMap(batch => batch.flatMap(shotRows))
       }(Encoders.product[ShotRow])
@@ -696,10 +682,7 @@ object Multimodal {
     // narrow decode map as m10, only (doc, sig) longs shuffle, pair work
     // is bounded by df·|bucket| per signature.
     "m12_video_neardup" -> ((s, dir) => {
-      val blobs = Tables.documents(s, dir)
-        .filter(length(col("text")) > 0)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as(Encoders.product[Blob])
+      val blobs = blobsOf(Tables.documents(s, dir).filter(length(col("text")) > 0))
       val shots = blobs.mapPartitions { it =>
         it.grouped(DecodeBatchSize).flatMap(batch => batch.flatMap(shotRows))
       }(Encoders.product[ShotRow]).toDF()
@@ -734,9 +717,7 @@ object Multimodal {
     // decode values are fake (see fakeDecode) → no SQL oracle; schema,
     // batching, and determinism are asserted in MultimodalSpec.
     "m02_fake_decode" -> ((s, dir) => {
-      val blobs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as(Encoders.product[Blob])
+      val blobs = blobsOf(Tables.documents(s, dir))
       blobs.mapPartitions { it =>
         it.grouped(DecodeBatchSize).flatMap(batch => fakeDecode(batch))
       }(Encoders.product[Decoded])

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -26,8 +26,6 @@ import graft.Tables
   */
 object Relational {
 
-  /** Exact pass through decimal: sum(cast(x as decimal(38,6))) as double. */
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
   private val lit1 = lit(1.0)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -317,15 +315,8 @@ object Relational {
     // ---- event-time windows (batch-expressible analogs of §2.5 streaming) ----
     // tumbling 1h: window() assigns each row one bucket — pure map-side,
     // then one hash agg shuffle on (bucket, type).
-    "q17_event_tumbling" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-        .select(
-          date_format(col("win.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
-          col("event_type"), col("n"), col("sum_value"))
-        .orderBy("win_start", "event_type")
-    }),
+    "q17_event_tumbling" -> ((s, dir) =>
+      tumblingWindows(Tables.events(s, dir)).orderBy("win_start", "event_type")),
 
     // sliding 1h-window every 30min: each row lands in width/slide = 2
     // buckets (map-side Expand ×2), then the same single shuffle.
@@ -716,8 +707,8 @@ object Relational {
       val wide = Tables.lineitem(s, dir)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).cast("double").as("n_items"),
-          sum(col("l_quantity").cast("decimal(38,6)")).cast("double").as("sum_qty"),
-          sum(col("l_extendedprice").cast("decimal(38,6)")).cast("double").as("sum_price"))
+          dsum(col("l_quantity")).as("sum_qty"),
+          dsum(col("l_extendedprice")).as("sum_price"))
       wide.unpivot(
           Array(col("l_returnflag")),
           Array(col("n_items"), col("sum_qty"), col("sum_price")),
@@ -856,21 +847,7 @@ object Relational {
     // row per key, never a sort of every change. Doubles pass through
     // untouched (no arithmetic), so the query gates exactly against the
     // ranked-window oracle.
-    "q51_cdc_apply" -> ((s, dir) => {
-      val ord = struct(col("ts_sec"), col("event_id"))
-      Tables.events(s, dir)
-        .withColumn("ts_sec", col("ts").cast("long"))
-        .groupBy("user_id")
-        .agg(
-          max_by(col("event_type"), ord).as("last_type"),
-          max_by(col("value"), ord).as("last_value"),
-          max_by(col("ts_sec"), ord).as("last_ts_sec"),
-          count(lit(1)).as("n_changes"))
-        .filter(col("last_type") =!= "error")
-        .select(col("user_id"), col("last_type"), col("last_value"),
-          col("last_ts_sec"), col("n_changes"))
-        .orderBy("user_id")
-    }),
+    "q51_cdc_apply" -> ((s, dir) => cdcApply(Tables.events(s, dir))),
 
     // APPROX-DISTINCT'S EXACT TWIN, under the hash gate. The sketch
     // numbers themselves (HLL++ counts, KLL percentile ranks) are
@@ -953,10 +930,7 @@ object Relational {
     // own handful of changes — per-key-linear, never a global sort.
     // Values pass through untouched ⇒ the whole history gates exactly.
     "v02_scd2_history" -> ((s, dir) => {
-      scd2History(Tables.events(s, dir)
-        .withColumn("ts_sec", col("ts").cast("long"))
-        .select(col("user_id"), col("event_id"), col("ts_sec"),
-          col("event_type"), col("value")))
+      scd2History(eventChanges(s, dir))
         .orderBy("user_id", "version_seq")
     }),
 
@@ -991,10 +965,7 @@ object Relational {
     // both absent BY the interval algebra (the delete contract v02's
     // spec pins). T is mid-fixture so all three populations exist.
     "v04_asof_snapshot" -> ((s, dir) => {
-      scd2History(Tables.events(s, dir)
-        .withColumn("ts_sec", col("ts").cast("long"))
-        .select(col("user_id"), col("event_id"), col("ts_sec"),
-          col("event_type"), col("value")))
+      scd2History(eventChanges(s, dir))
         .filter(col("valid_from") <= SnapshotSec &&
           (col("valid_to").isNull || col("valid_to") > SnapshotSec))
         .select(col("user_id"), col("version_seq"), col("state"), col("value"),
@@ -1058,6 +1029,43 @@ object Relational {
 
     "v06_delete_propagation" -> ((s, dir) => deletePropagation(Tables.documents(s, dir)))
   )
+
+  /** q17 core over any events frame, batch or stream (s02 runs it as a
+    * complete-mode streaming aggregate): 1-hour tumbling counts and exact
+    * value sums per event type.
+    */
+  private[graft] def tumblingWindows(e: DataFrame): DataFrame =
+    e.groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
+      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
+      .select(
+        date_format(col("win.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
+        col("event_type"), col("n"), col("sum_value"))
+
+  /** q51 core over any events frame: the latest-wins state per user goes
+    * through `drain` (identity in batch; s18 runs the streaming state to
+    * its sink) before tombstones filter out.
+    */
+  private[graft] def cdcApply(e: DataFrame, drain: DataFrame => DataFrame = identity): DataFrame = {
+    val ord = struct(col("ts_sec"), col("event_id"))
+    drain(e.withColumn("ts_sec", col("ts").cast("long"))
+        .groupBy("user_id")
+        .agg(
+          max_by(col("event_type"), ord).as("last_type"),
+          max_by(col("value"), ord).as("last_value"),
+          max_by(col("ts_sec"), ord).as("last_ts_sec"),
+          count(lit(1)).as("n_changes")))
+      .filter(col("last_type") =!= "error")
+      .select(col("user_id"), col("last_type"), col("last_value"),
+        col("last_ts_sec"), col("n_changes"))
+      .orderBy("user_id")
+  }
+
+  /** v02/v04 input: the events table as per-user change rows. */
+  private def eventChanges(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .withColumn("ts_sec", col("ts").cast("long"))
+      .select(col("user_id"), col("event_id"), col("ts_sec"),
+        col("event_type"), col("value"))
 
   /** v06 core over any (doc_id, source, text) frame — extracted so the
     * interval corners the fixture may not hit (a deleted doc sharing a

@@ -120,8 +120,7 @@ object Skew {
       saltedJoin(li, dim, "flag", hash(col("l_orderkey"), col("l_linenumber")), salts = 16)
         .groupBy("flag")
         .agg(count(lit(1)).as("n"),
-          sum((col("l_quantity").cast("decimal(38,6)") * col("mult")).cast("decimal(38,6)"))
-            .cast("double").as("weighted_qty"))
+          dsum(col("l_quantity").cast("decimal(38,6)") * col("mult")).as("weighted_qty"))
         .orderBy("flag")
     }),
 
@@ -139,9 +138,9 @@ object Skew {
       hotKeyIsolatedJoin(li, p, "p_partkey")
         .groupBy("p_partkey")
         .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("decimal(38,6)")).cast("double").as("sum_qty"),
-          sum((col("l_extendedprice").cast("decimal(38,6)") * col("p_size").cast("long"))
-            .cast("decimal(38,6)")).cast("double").as("weighted_price"))
+          dsum(col("l_quantity")).as("sum_qty"),
+          dsum(col("l_extendedprice").cast("decimal(38,6)") * col("p_size").cast("long"))
+            .as("weighted_price"))
         .orderBy("p_partkey")
     }),
 

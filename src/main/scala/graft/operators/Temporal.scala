@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -20,6 +20,85 @@ object Temporal {
     * match of a purchase — the merge_asof(tolerance) bound.
     */
   val AsofToleranceSec = 3600L
+
+  /** a01/a14 core: each purchase with its user's latest view at or before
+    * it (`view_ts`), from one running max over (ts, event_id) order.
+    */
+  private def asofViews(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    events.filter(col("event_type").isin("view", "purchase"))
+      .withColumn("view_ts",
+        max(when(col("event_type") === "view", col("ts"))).over(w))
+      .filter(col("event_type") === "purchase")
+  }
+
+  /** a03/a09 core: per-user `session_seq` (and `ts_sec`), a new session
+    * after a gap of more than 30 minutes in (ts, event_id) order.
+    */
+  private def gapSessions(events: DataFrame): DataFrame = {
+    val wOrd = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
+    events.withColumn("ts_sec", col("ts").cast("long"))
+      .withColumn("prev_sec", lag(col("ts_sec"), 1).over(wOrd))
+      .withColumn("is_new",
+        when(col("prev_sec").isNull || col("ts_sec") - col("prev_sec") > 1800L, 1L)
+          .otherwise(0L))
+      .withColumn("session_seq",
+        sum(col("is_new")).over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  /** a04 core over any events frame, batch or stream: per-user 30-minute
+    * session windows on second-truncated time, with `nTypes` as the
+    * distinct event-type count (s08 passes size(collect_set), since
+    * countDistinct does not run in streaming).
+    */
+  private[graft] def sessionWindows(events: DataFrame, nTypes: Column): DataFrame =
+    events.withColumn("tss", timestamp_seconds(col("ts").cast("long")))
+      .groupBy(session_window(col("tss"), "30 minutes").as("w"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"), nTypes.as("n_types"))
+      .select(col("user_id"),
+        date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
+        date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
+        col("n_events"), col("n_types"))
+
+  /** a08/a13 core: each user's hourly last reading `hv` — a max_by HASH
+    * AGG over (ts, event_id), not a row_number window (round 13): the
+    * argmax reduces map-side, one row per (user, hour) leaves each task,
+    * where the window form shuffled and sorted EVERY event by (user,
+    * hsec, ts); (ts, event_id) is unique per row, so the pick equals the
+    * old (ts DESC, event_id DESC) rn = 1 exactly — and the per-user grid
+    * of every hour between the first and last observed one. Grid bounds
+    * come off the HOURLY table, which carries every distinct (user, hsec)
+    * of the events, so the events scan runs once.
+    */
+  private def hourlyGrid(events: DataFrame): (DataFrame, DataFrame) = {
+    val e = events.select(col("user_id"), col("event_id"), col("ts"),
+      expr("(cast(ts as long) div 3600) * 3600").as("hsec"), col("value"))
+    val hourly = e.groupBy(col("user_id"), col("hsec"))
+      .agg(max_by(col("value"), struct(col("ts"), col("event_id"))).as("hv"))
+    val grid = hourly.groupBy("user_id").agg(min("hsec").as("h0"), max("hsec").as("h1"))
+      .select(col("user_id"), explode(expr("sequence(h0, h1, 3600)")).as("hsec"))
+    (hourly, grid)
+  }
+
+  /** a12 core over any events frame, batch or stream (s16 runs it as a
+    * complete-mode streaming aggregate): hourly OHLC bars per user.
+    */
+  private[graft] def ohlcBars(events: DataFrame): DataFrame = {
+    val ord = struct(col("ts_sec"), col("event_id"))
+    events.withColumn("ts_sec", col("ts").cast("long"))
+      .withColumn("hsec", expr("(ts_sec div 3600) * 3600"))
+      .groupBy("user_id", "hsec")
+      .agg(
+        min_by(col("value"), ord).as("open"),
+        max(col("value")).as("high"),
+        min(col("value")).as("low"),
+        max_by(col("value"), ord).as("close"),
+        count(lit(1)).as("n_events"))
+      .select(col("user_id"),
+        date_format(timestamp_seconds(col("hsec")), "yyyy-MM-dd HH:mm:ss").as("hour"),
+        col("open"), col("high"), col("low"), col("close"), col("n_events"))
+  }
 
   /** Funnel core over (user_id, event_type, sec) rows — extracted so the
     * stall paths (stage-1/stage-2 users, click-before-view) can be
@@ -109,17 +188,7 @@ object Temporal {
     * grid bounds) are unit-testable on crafted series.
     */
   private[operators] def gapFill(events: DataFrame): DataFrame = {
-    val e = events.select(col("user_id"), col("event_id"), col("ts"),
-      expr("(cast(ts as long) div 3600) * 3600").as("hsec"), col("value"))
-    // hourly "last reading" as a max_by HASH AGG + grid bounds off the
-    // hourly table — the a13 rewrite verbatim (round 13): map-side
-    // partial reduction instead of a full shuffle+sort of every event,
-    // and the events scan runs once; (ts, event_id) is unique per row so
-    // the pick equals the old (ts DESC, event_id DESC) rn = 1 exactly.
-    val hourly = e.groupBy(col("user_id"), col("hsec"))
-      .agg(max_by(col("value"), struct(col("ts"), col("event_id"))).as("hv"))
-    val grid = hourly.groupBy("user_id").agg(min("hsec").as("h0"), max("hsec").as("h1"))
-      .select(col("user_id"), explode(expr("sequence(h0, h1, 3600)")).as("hsec"))
+    val (hourly, grid) = hourlyGrid(events)
     val wFill = Window.partitionBy("user_id").orderBy("hsec")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     grid.join(hourly, Seq("user_id", "hsec"), "left")
@@ -170,13 +239,7 @@ object Temporal {
     // how an as-of survives 100 TB: no range-condition nested loop, no
     // per-key explosion, state = one value.
     "a01_asof_join" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, dir)
-        .filter(col("event_type").isin("view", "purchase"))
-        .withColumn("view_ts",
-          max(when(col("event_type") === "view", col("ts"))).over(w))
-        .filter(col("event_type") === "purchase")
+      asofViews(Tables.events(s, dir))
         .select(
           col("event_id"), col("user_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
@@ -195,13 +258,7 @@ object Temporal {
     // running max, NOT a different algorithm — which is exactly why the
     // bounded variant costs nothing extra at 100 TB.
     "a14_asof_tolerance" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, dir)
-        .filter(col("event_type").isin("view", "purchase"))
-        .withColumn("view_ts",
-          max(when(col("event_type") === "view", col("ts"))).over(w))
-        .filter(col("event_type") === "purchase")
+      asofViews(Tables.events(s, dir))
         .withColumn("stale_sec", col("ts").cast("long") - col("view_ts").cast("long"))
         .select(
           col("event_id"), col("user_id"),
@@ -267,22 +324,8 @@ object Temporal {
     // arithmetic), so doubles compare exactly. At 100 TB this is the
     // downsampling pass that turns a raw event stream into a
     // bars/metrics table orders of magnitude smaller.
-    "a12_ohlc_bars" -> ((s, dir) => {
-      val e = Tables.events(s, dir)
-        .withColumn("ts_sec", col("ts").cast("long"))
-        .withColumn("hsec", expr("(ts_sec div 3600) * 3600"))
-      e.groupBy("user_id", "hsec")
-        .agg(
-          min_by(col("value"), struct(col("ts_sec"), col("event_id"))).as("open"),
-          max(col("value")).as("high"),
-          min(col("value")).as("low"),
-          max_by(col("value"), struct(col("ts_sec"), col("event_id"))).as("close"),
-          count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          date_format(timestamp_seconds(col("hsec")), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("open"), col("high"), col("low"), col("close"), col("n_events"))
-        .orderBy("user_id", "hour")
-    }),
+    "a12_ohlc_bars" -> ((s, dir) =>
+      ohlcBars(Tables.events(s, dir)).orderBy("user_id", "hour")),
 
     // Spark's native session_window operator — same gap semantics as a03
     // but via the built-in merging session assigner (the operator the
@@ -291,18 +334,9 @@ object Temporal {
     // decision arithmetic is engine-portable; session_window starts a new
     // session at gap >= 30 min (prev_ts + gap is an exclusive end), which
     // the oracle mirrors with >=.
-    "a04_session_window" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .withColumn("tss", timestamp_seconds(col("ts").cast("long")))
-        .groupBy(session_window(col("tss"), "30 minutes").as("w"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("event_type")).as("n_types"))
-        .select(col("user_id"),
-          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
-          col("n_events"), col("n_types"))
-        .orderBy("user_id", "session_start")
-    }),
+    "a04_session_window" -> ((s, dir) =>
+      sessionWindows(Tables.events(s, dir), countDistinct(col("event_type")))
+        .orderBy("user_id", "session_start")),
 
     // FUNNEL: view → click → purchase in strict temporal order, per-user
     // first-passage times. Each stage is one conditional min AFTER the
@@ -418,23 +452,7 @@ object Temporal {
     // fixed double-expression order mirrored verbatim in the oracle, so
     // the interpolated values gate hash-exactly.
     "a13_interpolate" -> ((s, dir) => {
-      val e = Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          expr("(cast(ts as long) div 3600) * 3600").as("hsec"), col("value"))
-      // hourly "last reading" as a max_by HASH AGG, not a row_number
-      // window (round 13): the argmax reduces map-side — one row per
-      // (user, hour) leaves each task — where the window form shuffled
-      // and sorted EVERY event by (user, hsec, ts). (ts, event_id) is
-      // unique per row, so max_by over that struct is the old
-      // (ts DESC, event_id DESC) rn = 1 pick exactly.
-      val hourly = e.groupBy(col("user_id"), col("hsec"))
-        .agg(max_by(col("value"), struct(col("ts"), col("event_id"))).as("hv"))
-      // grid bounds off the HOURLY table (round 13): hourly carries every
-      // distinct (user, hsec) of e, so per-user min/max agree with the
-      // old full-events agg while scanning orders-of-magnitude fewer
-      // rows (and the events scan itself no longer runs twice).
-      val grid = hourly.groupBy("user_id").agg(min("hsec").as("h0"), max("hsec").as("h1"))
-        .select(col("user_id"), explode(expr("sequence(h0, h1, 3600)")).as("hsec"))
+      val (hourly, grid) = hourlyGrid(Tables.events(s, dir))
       val wBack = Window.partitionBy("user_id").orderBy("hsec")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       // the bracketing NEXT observation stated as a REVERSED running
@@ -477,20 +495,10 @@ object Temporal {
     // broadcast back. Same decomposition t11 uses for packing; it is how
     // any global prefix sum survives 100 TB.
     "a09_interval_concurrency" -> ((s, dir) => {
-      val gapSec = 1800L
-      val wOrd = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
-      val e = Tables.events(s, dir)
-        .withColumn("ts_sec", col("ts").cast("long"))
-        .withColumn("prev_sec", lag(col("ts_sec"), 1).over(wOrd))
-        .withColumn("is_new",
-          when(col("prev_sec").isNull || col("ts_sec") - col("prev_sec") > gapSec, 1L)
-            .otherwise(0L))
-        .withColumn("session_seq",
-          sum(col("is_new")).over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       // +1 when a session opens, -1 the second after it closes (inclusive
       // intervals); same-second deltas pre-summed inside the core so
       // ordering within a timestamp can never matter
-      intervalConcurrency(e.groupBy("user_id", "session_seq")
+      intervalConcurrency(gapSessions(Tables.events(s, dir)).groupBy("user_id", "session_seq")
         .agg(min("ts_sec").as("start_sec"), max("ts_sec").as("end_sec")))
     }),
 
@@ -538,17 +546,7 @@ object Temporal {
     // aggregate. Session ids are (user, seq) — globally unique without any
     // driver-side coordination.
     "a03_sessionize" -> ((s, dir) => {
-      val gapSec = 1800L
-      val wOrd = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
-      val e = Tables.events(s, dir)
-        .withColumn("ts_sec", col("ts").cast("long"))
-        .withColumn("prev_sec", lag(col("ts_sec"), 1).over(wOrd))
-        .withColumn("is_new",
-          when(col("prev_sec").isNull || col("ts_sec") - col("prev_sec") > gapSec, 1L)
-            .otherwise(0L))
-        .withColumn("session_seq",
-          sum(col("is_new")).over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      e.groupBy("user_id", "session_seq")
+      gapSessions(Tables.events(s, dir)).groupBy("user_id", "session_seq")
         .agg(
           count(lit(1)).as("n_events"),
           date_format(timestamp_seconds(min(col("ts_sec"))), "yyyy-MM-dd HH:mm:ss").as("session_start"),
@@ -777,22 +775,28 @@ object Temporal {
     */
   private[operators] def decayedEngagement(e: DataFrame): DataFrame = {
     val now = e.agg(max("ts_sec").as("now"))
-    e.crossJoin(broadcast(now))
+    decayedTotals(e.crossJoin(broadcast(now))
       .select(col("user_id"), col("event_type"),
         expr(s"CAST(floor(value * 1048576.0) AS BIGINT)").as("vfp"),
         expr(s"shiftleft(1L, CAST(LEAST((now - ts_sec) DIV $DecayHalfLifeSec, 62L) AS INT))")
           .as("pw"))
       .select(col("user_id"), col("event_type"),
         expr("CASE WHEN vfp >= 0 THEN vfp DIV pw ELSE -((-vfp + pw - 1) DIV pw) END")
-          .as("dfp"))
-      .groupBy("user_id", "event_type")
-      .agg(count(lit(1)).as("n_events"),
+          .as("dfp")), count(lit(1)))
+  }
+
+  /** a21/s27 tail over (user_id, event_type, dfp) rows: `nEvents` and the
+    * exact decimal sum of the decayed fixed-point values per (user, type),
+    * surfaced as fixed point and as value units.
+    */
+  private def decayedTotals(d: DataFrame, nEvents: Column): DataFrame =
+    d.groupBy("user_id", "event_type")
+      .agg(nEvents.as("n_events"),
         sum(col("dfp").cast("decimal(38,0)")).as("sfp"))
       .select(col("user_id"), col("event_type"), col("n_events"),
         col("sfp").cast("long").as("decayed_fp"),
         (col("sfp").cast("double") / 1048576.0).as("decayed_value"))
       .orderBy("user_id", "event_type")
-  }
 
   /** s27 rollup core over drained (user_id, event_type, day, n_events,
     * sum_vfp) calendar-day sums: decay each day's SUM by the integer
@@ -807,20 +811,13 @@ object Temporal {
     */
   private[graft] def dayDecayRollup(sums: DataFrame): DataFrame = {
     val nowd = sums.agg(max("day").as("now_day"))
-    sums.crossJoin(broadcast(nowd))
+    decayedTotals(sums.crossJoin(broadcast(nowd))
       .select(col("user_id"), col("event_type"), col("n_events"),
         col("sum_vfp").cast("long").as("s"),
         expr("shiftleft(1L, CAST(LEAST(now_day - day, 62L) AS INT))").as("pw"))
       .select(col("user_id"), col("event_type"), col("n_events"),
         expr("CASE WHEN s >= 0 THEN s DIV pw ELSE -((-s + pw - 1) DIV pw) END")
-          .as("dfp"))
-      .groupBy("user_id", "event_type")
-      .agg(sum("n_events").as("n_events"),
-        sum(col("dfp").cast("decimal(38,0)")).as("sfp"))
-      .select(col("user_id"), col("event_type"), col("n_events"),
-        col("sfp").cast("long").as("decayed_fp"),
-        (col("sfp").cast("double") / 1048576.0).as("decayed_value"))
-      .orderBy("user_id", "event_type")
+          .as("dfp")), sum("n_events"))
   }
 
   /** a20 window seconds: a touch older than this is 'expired'. */
@@ -879,18 +876,22 @@ object Temporal {
     */
   private[operators] def transitionMatrix(e: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts_sec").asc, col("event_id").asc)
-    val wFrom = Window.partitionBy("from_type")
-    e.withColumn("next_type", lead(col("event_type"), 1).over(w))
+    transitionShares(e.withColumn("next_type", lead(col("event_type"), 1).over(w))
       .filter(col("next_type").isNotNull)
       .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
-      .agg(count(lit(1)).as("n_transitions"))
-      .withColumn("from_total", sum(col("n_transitions")).over(wFrom))
+      .agg(count(lit(1)).as("n_transitions")))
+  }
+
+  /** The a17 tail over counted (from_type, to_type, n_transitions) rows —
+    * shared with s21, whose streamed pairs are counted on the sink table.
+    */
+  private[graft] def transitionShares(counts: DataFrame): DataFrame =
+    counts.withColumn("from_total", sum(col("n_transitions")).over(Window.partitionBy("from_type")))
       .select(col("from_type"), col("to_type"), col("n_transitions"),
         col("from_total"),
         (col("n_transitions").cast("double") / col("from_total").cast("double"))
           .as("p_transition"))
       .orderBy("from_type", "to_type")
-  }
 
   /** The transition-matrix oracle SQL, shared verbatim by a17 (batch)
     * and s21 (streaming — micro-batching + carried state must be

@@ -73,6 +73,32 @@ object TextAnalysis {
   def redactPii(c: Column): Column =
     PiiPatterns.foldLeft(c) { case (acc, (_, pat, tag)) => regexp_replace(acc, pat, tag) }
 
+  /** t21 core over any documents frame: the SampleK smallest-hash docs
+    * per source, kept by the TopKAggregator's bounded buffer, which goes
+    * through `drain` (identity in batch; s20 runs the streaming state to
+    * its sink) before the ranks unpack.
+    */
+  private[graft] def quotaSample(docs: DataFrame,
+      drain: DataFrame => DataFrame = identity): DataFrame = {
+    import graft.functions.TopKAggregator.top_k
+    // reduce mod p BEFORE the multiply: (doc_id % p) ≤ ~1e9 times the
+    // Knuth constant (~2.65e9) peaks at ~2.65e18 < Long.Max, so the
+    // modular multiply never wraps — the raw doc_id * 2654435761 form
+    // silently overflowed Long for doc_id ≳ 3.5e9 (Spark wraps, DuckDB
+    // errors: a latent cross-engine divergence at real id scales).
+    // For doc_id < p the value is unchanged, so the sample is stable.
+    val h = col("doc_id") % lit(999999937L) * lit(2654435761L) % lit(999999937L)
+    drain(docs.select(col("source"), col("doc_id"), h.as("h"))
+        // negated: the aggregator keeps score-DESC, we want smallest-h;
+        // hash < 1e9 ⇒ the double carries it exactly
+        .groupBy("source")
+        .agg(top_k((-col("h")).cast("double"), col("doc_id"), SampleK).as("top")))
+      .select(col("source"), posexplode(col("top")).as(Seq("i", "t")))
+      .select(col("source"), (col("i") + 1).cast("long").as("rank"),
+        col("t.id").as("doc_id"), (-col("t.score")).cast("long").as("h"))
+      .orderBy("source", "rank")
+  }
+
   /** Per-doc (n_tokens, sum_bits, nb) frame t25 finalizes and p10's
     * curriculum planner phases on — one definition so the two operators
     * cannot drift (the s23 shared-gate lesson applied to Scala).
@@ -1156,26 +1182,7 @@ object TextAnalysis {
     // row_number window: the k-bounded buffer partial-aggregates
     // map-side, so the shuffle carries k rows per source per task
     // instead of the corpus (q38's argument, applied to sampling).
-    "t21_stratified_sample" -> ((s, dir) => {
-      import graft.functions.TopKAggregator.top_k
-      // reduce mod p BEFORE the multiply: (doc_id % p) ≤ ~1e9 times the
-      // Knuth constant (~2.65e9) peaks at ~2.65e18 < Long.Max, so the
-      // modular multiply never wraps — the raw doc_id * 2654435761 form
-      // silently overflowed Long for doc_id ≳ 3.5e9 (Spark wraps, DuckDB
-      // errors: a latent cross-engine divergence at real id scales).
-      // For doc_id < p the value is unchanged, so the sample is stable.
-      val h = col("doc_id") % lit(999999937L) * lit(2654435761L) % lit(999999937L)
-      Tables.documents(s, dir)
-        .select(col("source"), col("doc_id"), h.as("h"))
-        // negated: the aggregator keeps score-DESC, we want smallest-h;
-        // hash < 1e9 ⇒ the double carries it exactly
-        .groupBy("source")
-        .agg(top_k((-col("h")).cast("double"), col("doc_id"), SampleK).as("top"))
-        .select(col("source"), posexplode(col("top")).as(Seq("i", "t")))
-        .select(col("source"), (col("i") + 1).cast("long").as("rank"),
-          col("t.id").as("doc_id"), (-col("t.score")).cast("long").as("h"))
-        .orderBy("source", "rank")
-    }),
+    "t21_stratified_sample" -> ((s, dir) => quotaSample(Tables.documents(s, dir))),
 
     // APPORTIONED SAMPLE — t21 upgraded from "k per stratum" to the
     // question a mixture designer actually asks: split ONE global budget

@@ -1,11 +1,12 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQueryListener, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQueryListener, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import graft.Tables
+import graft.operators.dsum
 
 /** Structured Streaming queries over the `events` table, run to completion
   * with `Trigger.AvailableNow` into a memory sink so the final answer is a
@@ -89,18 +90,29 @@ object StreamingQueries {
     * frame's session (one per core from `CatalogRunner.session`), which
     * the query's first checkpoint pins; nothing here changes a session
     * conf, so concurrent runners on the same session are safe.
+    *
+    * The memory sink registers its table as a temp view; the returned
+    * frame is analyzed against the sink itself, so the view is dropped at
+    * once instead of staying registered for the rest of the session.
     */
   private def runToTable(df: DataFrame, mode: OutputMode): DataFrame = {
     val name = s"graft_stream_${runIds.incrementAndGet()}"
-    df.writeStream
+    runToEnd(df.writeStream
       .format("memory")
-      .queryName(name)
-      .outputMode(mode)
+      .queryName(name), mode)
+    val table = df.sparkSession.table(name)
+    df.sparkSession.catalog.dropTempView(name)
+    table
+  }
+
+  /** Start `w` in `mode` under AvailableNow and block until it has
+    * drained the backlog and terminated.
+    */
+  private def runToEnd(w: DataStreamWriter[Row], mode: OutputMode): Unit =
+    w.outputMode(mode)
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
-    df.sparkSession.table(name)
-  }
 
   /** K3/C4-shaped sink runner: micro-batches land in a parquet directory
     * through `foreachBatch` guarded by [[SinkRetry]] — the
@@ -112,14 +124,10 @@ object StreamingQueries {
     */
   private def runViaRetryingSink(df: DataFrame, mode: OutputMode): DataFrame = {
     val out = java.nio.file.Files.createTempDirectory("graft_retry_sink_").toString
-    df.writeStream
+    runToEnd(df.writeStream
       .foreachBatch(SinkRetry.foreachBatchWithRetry() { (batch, _) =>
         batch.write.mode("append").parquet(out)
-      })
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+      }), mode)
     df.sparkSession.read.schema(df.schema).parquet(out)
   }
 
@@ -167,7 +175,7 @@ object StreamingQueries {
       // measured as the whole cost (5.4 s vs scan-speed) and which at
       // 100 TB is a driver OOM. This is the production shape: observe
       // rides whatever real sink the pipeline already has.
-      val q = stream
+      runToEnd(stream
         .observe("quality",
           count(lit(1)).as("n_rows"),
           count(when(col("value") >= 100.0, 1)).as("n_hi"),
@@ -175,11 +183,7 @@ object StreamingQueries {
         .writeStream
         .foreachBatch((batch: DataFrame, _: Long) =>
           batch.write.format("noop").mode("overwrite").save())
-        .queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .queryName(name), OutputMode.Append())
       if (!done.await(60, java.util.concurrent.TimeUnit.SECONDS))
         throw new IllegalStateException(
           "observeQuality: listener bus did not deliver the terminated event " +
@@ -209,15 +213,9 @@ object StreamingQueries {
     // event-time tumbling windows as a STREAMING aggregation (state-store
     // backed); complete mode emits the final window set, which must equal
     // the batch q17 answer.
-    "s02_stream_tumbling" -> ((s, dir) => {
-      val agg = eventsStream(s, dir)
-        .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(38,6)")).cast("double").as("sum_value"))
-        .select(date_format(col("win.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
-          col("event_type"), col("n"), col("sum_value"))
-      runToTable(agg, OutputMode.Complete()).orderBy("win_start", "event_type")
-    }),
+    "s02_stream_tumbling" -> ((s, dir) =>
+      runToTable(graft.operators.Relational.tumblingWindows(eventsStream(s, dir)),
+        OutputMode.Complete()).orderBy("win_start", "event_type")),
 
     // stream-STATIC enrichment — the most common production streaming
     // join: each micro-batch joins a broadcast dimension (stateless — no
@@ -230,8 +228,7 @@ object StreamingQueries {
       val agg = eventsStream(s, dir)
         .join(broadcast(cust), col("user_id") === col("c_custkey"))
         .groupBy("c_mktsegment", "event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(38,6)")).cast("double").as("sum_value"))
+        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
       runToTable(agg, OutputMode.Complete())
         .orderBy("c_mktsegment", "event_type")
     }),
@@ -328,23 +325,9 @@ object StreamingQueries {
     // like any other agg state — constant state per open (user, hour)
     // bar; complete mode emits the final bar set, which must equal the
     // batch a12 answer — same oracle.
-    "s16_stream_ohlc" -> ((s, dir) => {
-      val agg = eventsStream(s, dir)
-        .withColumn("ts_sec", col("ts").cast("long"))
-        .withColumn("hsec", expr("(ts_sec div 3600) * 3600"))
-        .groupBy("user_id", "hsec")
-        .agg(
-          min_by(col("value"), struct(col("ts_sec"), col("event_id"))).as("open"),
-          max(col("value")).as("high"),
-          min(col("value")).as("low"),
-          max_by(col("value"), struct(col("ts_sec"), col("event_id"))).as("close"),
-          count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          date_format(timestamp_seconds(col("hsec")), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("open"), col("high"), col("low"), col("close"), col("n_events"))
-      runToTable(agg, OutputMode.Complete())
-        .orderBy("user_id", "hour")
-    }),
+    "s16_stream_ohlc" -> ((s, dir) =>
+      runToTable(graft.operators.Temporal.ohlcBars(eventsStream(s, dir)), OutputMode.Complete())
+        .orderBy("user_id", "hour")),
 
     // STREAMING OBSERVABILITY — `Dataset.observe()`: named aggregate
     // metrics computed ON the stream as it flows (no second pass, no
@@ -367,41 +350,18 @@ object StreamingQueries {
     // mode emits the final state, tombstones filter on the way out. The
     // streamed answer must equal batch q51 under the same oracle — the
     // batch↔stream parity pattern of a12/s16.
-    "s18_stream_cdc" -> ((s, dir) => {
-      val ord = struct(col("ts_sec"), col("event_id"))
-      val agg = eventsStream(s, dir)
-        .withColumn("ts_sec", col("ts").cast("long"))
-        .groupBy("user_id")
-        .agg(
-          max_by(col("event_type"), ord).as("last_type"),
-          max_by(col("value"), ord).as("last_value"),
-          max_by(col("ts_sec"), ord).as("last_ts_sec"),
-          count(lit(1)).as("n_changes"))
-      runToTable(agg, OutputMode.Complete())
-        .filter(col("last_type") =!= "error")
-        .select(col("user_id"), col("last_type"), col("last_value"),
-          col("last_ts_sec"), col("n_changes"))
-        .orderBy("user_id")
-    }),
+    "s18_stream_cdc" -> ((s, dir) => graft.operators.Relational.cdcApply(
+      eventsStream(s, dir), runToTable(_, OutputMode.Complete()))),
 
     // session windows as a STREAMING aggregation (state-store session
     // merging, the dynamic-gap machinery a04 runs in batch): complete
     // mode emits the final merged session set, which must equal the batch
     // a04 answer — same oracle. countDistinct is unsupported in
     // streaming; size(collect_set(...)) computes the identical value.
-    "s08_stream_sessions" -> ((s, dir) => {
-      val agg = eventsStream(s, dir)
-        .withColumn("tss", timestamp_seconds(col("ts").cast("long")))
-        .groupBy(session_window(col("tss"), "30 minutes").as("w"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          size(collect_set(col("event_type"))).cast("long").as("n_types"))
-        .select(col("user_id"),
-          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
-          col("n_events"), col("n_types"))
-      runToTable(agg, OutputMode.Complete())
-        .orderBy("user_id", "session_start")
-    }),
+    "s08_stream_sessions" -> ((s, dir) =>
+      runToTable(graft.operators.Temporal.sessionWindows(eventsStream(s, dir),
+          size(collect_set(col("event_type"))).cast("long")), OutputMode.Complete())
+        .orderBy("user_id", "session_start")),
 
     // stream-stream interval self-join UNDER THE ORACLE GATE (the spec
     // suite exercises the mechanism on sharded files; this pins the
@@ -409,24 +369,7 @@ object StreamingQueries {
     // watermarked, append mode. Inner SS-join state is range-bounded by
     // the watermark at scale; with AvailableNow the emission is exactly
     // the batch join's answer, which is what DuckDB computes.
-    "s07_stream_stream_join" -> ((s, dir) => {
-      val a = eventsStream(s, dir)
-        .select(col("event_id").as("event_id_a"), col("user_id"), col("ts").as("ts_a"))
-        .withWatermark("ts_a", "30 minutes")
-      val b = eventsStream(s, dir)
-        .select(col("event_id").as("event_id_b"), col("user_id").as("user_id_b"),
-          col("ts").as("ts_b"))
-        .withWatermark("ts_b", "30 minutes")
-      val j = a.join(b,
-          col("user_id") === col("user_id_b") &&
-            col("event_id_a") =!= col("event_id_b") &&
-            col("ts_b") >= col("ts_a") &&
-            col("ts_b") <= col("ts_a") + expr("INTERVAL 10 MINUTES"))
-        .select(col("user_id"), col("event_id_a"), col("event_id_b"),
-          (unix_micros(col("ts_b")) - unix_micros(col("ts_a"))).as("gap_us"))
-      runToTable(j, OutputMode.Append())
-        .orderBy("user_id", "event_id_a", "event_id_b")
-    }),
+    "s07_stream_stream_join" -> ((s, dir) => followUps(s, dir, "inner")),
 
     // stream-stream LEFT OUTER join — the production shape for "did this
     // event get a follow-up?": same-user follow-ups within 10 minutes;
@@ -438,25 +381,7 @@ object StreamingQueries {
     // 10-minute window that terminal watermark passed — left rows still
     // inside it are correctly ABSENT (the at-most-the-watermark contract,
     // same as s09). State is range-bounded by the watermark at scale.
-    "s11_stream_left_outer" -> ((s, dir) => {
-      val a = eventsStream(s, dir)
-        .select(col("event_id").as("event_id_a"), col("user_id"), col("ts").as("ts_a"))
-        .withWatermark("ts_a", "30 minutes")
-      val b = eventsStream(s, dir)
-        .select(col("event_id").as("event_id_b"), col("user_id").as("user_id_b"),
-          col("ts").as("ts_b"))
-        .withWatermark("ts_b", "30 minutes")
-      val j = a.join(b,
-          col("user_id") === col("user_id_b") &&
-            col("event_id_a") =!= col("event_id_b") &&
-            col("ts_b") >= col("ts_a") &&
-            col("ts_b") <= col("ts_a") + expr("INTERVAL 10 MINUTES"),
-          "left_outer")
-        .select(col("user_id"), col("event_id_a"), col("event_id_b"),
-          (unix_micros(col("ts_b")) - unix_micros(col("ts_a"))).as("gap_us"))
-      runToTable(j, OutputMode.Append())
-        .orderBy("user_id", "event_id_a", "event_id_b")
-    }),
+    "s11_stream_left_outer" -> ((s, dir) => followUps(s, dir, "left_outer")),
 
     // custom per-key session state via flatMapGroupsWithState — the
     // reference's fold-with-Ref pattern (CheckpointOnChunkEndStreamClient
@@ -469,12 +394,7 @@ object StreamingQueries {
     // lag/running-sum SQL.
     "s12_stream_custom_sessions" -> ((s, dir) => {
       import s.implicits._
-      val typed = eventsStream(s, dir)
-        .select(col("user_id"), col("event_id"),
-          expr("unix_micros(ts) div 1000000").as("ts_sec"),
-          col("event_type"))
-        .as[SessEvent]
-      val sessions = typed
+      val sessions = sessEvents(s, dir)
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
           (user: Long, rows: Iterator[SessEvent], state: GroupState[Long]) =>
@@ -501,16 +421,8 @@ object StreamingQueries {
     // rewrites. Oracle = a17's batch SQL: batching must be answer-
     // invisible, which TransitionStreamSpec pins by re-running the same
     // events split 1-file-per-batch.
-    "s21_stream_transitions" -> ((s, dir) => {
-      import s.implicits._
-      val typed = eventsStream(s, dir)
-        .select(col("user_id"), col("event_id"),
-          expr("unix_micros(ts) div 1000000").as("ts_sec"),
-          col("event_type"))
-        .as[SessEvent]
-      val pairs = runToTable(transitionsStream(typed), OutputMode.Append())
-      transitionRollup(pairs)
-    }),
+    "s21_stream_transitions" -> ((s, dir) =>
+      transitionRollup(runToTable(transitionsStream(sessEvents(s, dir)), OutputMode.Append()))),
 
     // CHAINED time-window aggregations — TWO stateful operators in ONE
     // streaming query (the multi-stateful-operator support of Spark
@@ -571,21 +483,9 @@ object StreamingQueries {
     // production: gates on the stream, manifest as a complete-mode agg.
     // Because every gate is deterministic, the streamed answer equals the
     // batch answer and the same oracle gates both.
-    "s15_stream_curation_gates" -> ((s, dir) => {
-      import graft.functions.TextFunctions._
-      val digits = regexp_extract(col("source"), "[0-9]+", 0)
-      val rate = lit(30L) + when(digits =!= "", digits.cast("long")) % 10 * 7L
-      val mix = col("doc_id") % 1000003L * 2654435761L % 100L
-      val agg = tableStream(s, dir, "documents")
-        .filter(qualityScore(col("text")) >= graft.operators.Curation.QualityMin &&
-          langId(col("text")) === "en")
-        .filter(mix < rate)
-        .select(col("source"), tokenCountWs(col("text")).as("n_tokens"))
-        .filter(col("n_tokens") > 0)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
-      runToTable(agg, OutputMode.Complete()).orderBy("source")
-    }),
+    "s15_stream_curation_gates" -> ((s, dir) =>
+      runToTable(graft.operators.Curation.mixAdmitted(tableStream(s, dir, "documents")),
+        OutputMode.Complete()).orderBy("source")),
 
     // STREAMING NEAR-DUP GATE — d05's SimHash sketch applied as a
     // continuous-ingest dedup filter: sketch each arriving document
@@ -651,20 +551,8 @@ object StreamingQueries {
       runToTable(g, OutputMode.Complete()).orderBy("source")
     }),
 
-    "s20_stream_quota_sample" -> ((s, dir) => {
-      import graft.functions.TopKAggregator.top_k
-      import graft.operators.TextAnalysis.SampleK
-      val h = col("doc_id") % lit(999999937L) * lit(2654435761L) % lit(999999937L)
-      val agg = tableStream(s, dir, "documents")
-        .select(col("source"), col("doc_id"), h.as("h"))
-        .groupBy("source")
-        .agg(top_k((-col("h")).cast("double"), col("doc_id"), SampleK).as("top"))
-      runToTable(agg, OutputMode.Complete())
-        .select(col("source"), posexplode(col("top")).as(Seq("i", "t")))
-        .select(col("source"), (col("i") + 1).cast("long").as("rank"),
-          col("t.id").as("doc_id"), (-col("t.score")).cast("long").as("h"))
-        .orderBy("source", "rank")
-    }),
+    "s20_stream_quota_sample" -> ((s, dir) => graft.operators.TextAnalysis.quotaSample(
+      tableStream(s, dir, "documents"), runToTable(_, OutputMode.Complete()))),
 
     // STREAMING SEQUENCE PACKING — t11's training-sequence packer as an
     // incremental pipeline: the per-source token offset is the ONLY state
@@ -890,16 +778,42 @@ object StreamingQueries {
   /** s21 batch-side rollup over the emitted (user_id, from_type, to_type)
     * pair table — identical output contract to a17.
     */
-  private[streaming] def transitionRollup(pairs: DataFrame): DataFrame = {
-    val wFrom = org.apache.spark.sql.expressions.Window.partitionBy("from_type")
-    pairs.groupBy("from_type", "to_type")
-      .agg(count(lit(1)).as("n_transitions"))
-      .withColumn("from_total", sum(col("n_transitions")).over(wFrom))
-      .select(col("from_type"), col("to_type"), col("n_transitions"),
-        col("from_total"),
-        (col("n_transitions").cast("double") / col("from_total").cast("double"))
-          .as("p_transition"))
-      .orderBy("from_type", "to_type")
+  private[streaming] def transitionRollup(pairs: DataFrame): DataFrame =
+    graft.operators.Temporal.transitionShares(pairs.groupBy("from_type", "to_type")
+      .agg(count(lit(1)).as("n_transitions")))
+
+  /** s07/s11: same-user follow-ups within 10 minutes as a stream-stream
+    * interval self-join of type `joinType`, both sides watermarked at
+    * 30 minutes, drained in append mode.
+    */
+  private def followUps(s: SparkSession, dir: String, joinType: String): DataFrame = {
+    val a = eventsStream(s, dir)
+      .select(col("event_id").as("event_id_a"), col("user_id"), col("ts").as("ts_a"))
+      .withWatermark("ts_a", "30 minutes")
+    val b = eventsStream(s, dir)
+      .select(col("event_id").as("event_id_b"), col("user_id").as("user_id_b"),
+        col("ts").as("ts_b"))
+      .withWatermark("ts_b", "30 minutes")
+    val j = a.join(b,
+        col("user_id") === col("user_id_b") &&
+          col("event_id_a") =!= col("event_id_b") &&
+          col("ts_b") >= col("ts_a") &&
+          col("ts_b") <= col("ts_a") + expr("INTERVAL 10 MINUTES"),
+        joinType)
+      .select(col("user_id"), col("event_id_a"), col("event_id_b"),
+        (unix_micros(col("ts_b")) - unix_micros(col("ts_a"))).as("gap_us"))
+    runToTable(j, OutputMode.Append())
+      .orderBy("user_id", "event_id_a", "event_id_b")
+  }
+
+  /** s12/s21 input: one typed row per event, ts in whole epoch seconds. */
+  private def sessEvents(s: SparkSession, dir: String): Dataset[SessEvent] = {
+    import s.implicits._
+    eventsStream(s, dir)
+      .select(col("user_id"), col("event_id"),
+        expr("unix_micros(ts) div 1000000").as("ts_sec"),
+        col("event_type"))
+      .as[SessEvent]
   }
 
   /** s04/s14 input: one typed row per event, ts in epoch seconds. */

@@ -106,6 +106,36 @@ class StreamingPipelineSpec extends SparkSpec {
       ex.getCause != null, s"unexpected error shape: ${ex.getMessage.take(200)}")
   }
 
+  test("perShardState: a non-JSON payload fails with NOT_NULL_ASSERT_VIOLATION on ShardRecord.id") {
+    import spark.implicits._
+    // PERMISSIVE decode nulls the id; the typed ShardRecord view refuses
+    // it, so a malformed record can never be folded into a shard's count
+    val env = Seq(
+      ("s-0", "key1", 1L, "{ \"id\": 1 }"),
+      ("s-0", "key2", 2L, "not json at all"))
+      .toDF("shard_id", "partition_key", "sequence_number", "data")
+    val ex = intercept[Exception] {
+      Pipelines.perShardState(Envelope.decoded(env)).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString("\n")
+    assert(msgs.contains("NOT_NULL_ASSERT_VIOLATION"), msgs.take(500))
+    assert(msgs.contains("\"id\"") && msgs.contains("graft.streaming.ShardRecord"), msgs.take(500))
+  }
+
+  test("runToTable leaves no graft_stream_ view behind once s01 and s16 are built and collected") {
+    val s01 = StreamingQueries.queries("s01_stream_count")(spark, sfDir)
+    val s16 = StreamingQueries.queries("s16_stream_ohlc")(spark, sfDir)
+    // both frames still read their sink after its view is dropped, twice
+    assert(s01.collect().toSeq === s01.collect().toSeq)
+    assert(s01.head().getLong(0) === graft.Tables.events(spark, sfDir).count())
+    val bars = s16.collect().toSeq
+    assert(bars.nonEmpty && bars === s16.collect().toSeq)
+    assert(bars === graft.operators.Temporal.queries("a12_ohlc_bars")(spark, sfDir).collect().toSeq)
+    val left = spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_stream_"))
+    assert(left.isEmpty, s"views left registered: ${left.mkString(", ")}")
+  }
+
   test("stream-stream interval join: two sharded streams join on key within a time bound") {
     import org.apache.spark.sql.functions._
     val dirA = tmp("graft-ss-a")
