@@ -22,8 +22,14 @@ object CatalogRunner {
     * partition per core, plus any caller confs. The 5000-entry codegen
     * class cache is catalog-sized: at Spark's default of 100, every pass
     * over 263 queries recompiled every generated class (measured pass
-    * totals 661/563/388 s before it). Log level ERROR: Bench's JSON line is
-    * scraped from a ~2000-char log tail, and benign WARNs crowded it out.
+    * totals 661/563/388 s before it). nanosAsLong: the parquet reader
+    * rejects an INT64 TIMESTAMP(NANOS) column ([PARQUET_TYPE_ILLEGAL])
+    * unless it reads it as a raw long, and `events.ts` has shipped in that
+    * encoding (`Tables.adaptiveTs`); files without such a column read the
+    * same either way. Set here, it is in the SparkConf that `newSession()`
+    * children inherit, so no loader writes a conf on a caller's session.
+    * Log level ERROR: Bench's JSON line is scraped from a ~2000-char log
+    * tail, and benign WARNs crowded it out.
     */
   def session(confs: (String, String)*): SparkSession = {
     val n = Runtime.getRuntime.availableProcessors.toString
@@ -33,6 +39,7 @@ object CatalogRunner {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     val spark = confs.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark

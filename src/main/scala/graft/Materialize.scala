@@ -216,16 +216,22 @@ object Materialize {
     s
   }
 
-  /** Write `df` under the scratch base and return the path, registered
-    * for shutdown cleanup (the toStorage contract).
+  /** A fresh `tag`_UUID path under the scratch base
+    * (`spark.graft.scratchDir`, default a shared tmpdir path), registered
+    * for shutdown cleanup when local (the toStorage contract).
     */
-  private def toStoragePath(df: DataFrame, tag: String): String = {
-    val spark = df.sparkSession
+  private[graft] def scratchPath(spark: org.apache.spark.sql.SparkSession, tag: String): String = {
     val base = spark.conf.getOption("spark.graft.scratchDir")
       .getOrElse(sys.props("java.io.tmpdir") + "/graft-scratch")
     val path = s"$base/${tag}_${java.util.UUID.randomUUID()}"
-    df.write.parquet(path)
     if (isLocalPath(path)) localScratch.add(path)
+    path
+  }
+
+  /** Write `df` to a fresh [[scratchPath]] and return the path. */
+  private def toStoragePath(df: DataFrame, tag: String): String = {
+    val path = scratchPath(df.sparkSession, tag)
+    df.write.parquet(path)
     path
   }
 
@@ -240,12 +246,8 @@ object Materialize {
     * toStoragePath.
     */
   def toStoragePathPartitioned(df: DataFrame, tag: String, partCol: String): String = {
-    val spark = df.sparkSession
-    val base = spark.conf.getOption("spark.graft.scratchDir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-scratch")
-    val path = s"$base/${tag}_${java.util.UUID.randomUUID()}"
+    val path = scratchPath(df.sparkSession, tag)
     df.write.partitionBy(partCol).parquet(path)
-    if (isLocalPath(path)) localScratch.add(path)
     path
   }
 }

@@ -24,23 +24,16 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   */
 object Tables {
 
-  /** events.ts has shipped in two physical encodings across testdata
-    * generations: parquet INT64 TIMESTAMP(NANOS) — which Spark's vectorized
-    * reader rejects ([PARQUET_TYPE_ILLEGAL]) unless read as a raw long via
-    * `spark.sql.legacy.parquet.nanosAsLong` — and plain `timestamp[us]`
-    * (isAdjustedToUTC=false), which Spark 4 reads as TIMESTAMP_NTZ. A real
-    * engine reads the footer and adapts; hard-coding either encoding is how
-    * a testdata regeneration silently kills every event-time query. The
-    * conf is harmless for non-NANOS files, so we always set it and then
-    * branch on the type the scan actually produced ([[adaptiveTs]]).
-    */
-  def withNanosAsLong(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark
-  }
-
   /** Schema-adaptive rebuild of `ts` into a session-TZ TimestampType (µs)
     * column — the one shape all downstream operators assume.
+    *
+    * events.ts has shipped in two physical encodings across testdata
+    * generations: parquet INT64 TIMESTAMP(NANOS), which the session reads
+    * as a raw long (`CatalogRunner.session` sets
+    * `spark.sql.legacy.parquet.nanosAsLong`), and plain `timestamp[us]`
+    * (isAdjustedToUTC=false), which Spark 4 reads as TIMESTAMP_NTZ. A real
+    * engine reads the footer and adapts; hard-coding either encoding is how
+    * a testdata regeneration silently kills every event-time query.
     *
     *  - LongType (nanos-as-long): `div 1000` → µs. `div` (integral), not
     *    `/`, which on longs is DOUBLE division and truncates ns epochs
@@ -65,17 +58,18 @@ object Tables {
 
   /** The session confs that change what parquet schema inference returns
     * for the same file: how un-annotated BINARY and INT96 decode, whether
-    * `isAdjustedToUTC=false` timestamps become TIMESTAMP_NTZ, and whether a
-    * multi-file directory's footers are merged.
+    * `isAdjustedToUTC=false` timestamps become TIMESTAMP_NTZ, whether INT64
+    * TIMESTAMP(NANOS) decodes as a long, and whether a multi-file
+    * directory's footers are merged.
     */
   private val inferenceConfs = Seq(
     "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.mergeSchema")
-  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema")
 
   /** Inferred footer schemas, keyed by path, the path's source fingerprint
     * (`Materialize.sourceFingerprint`: a rewrite at the same path changes
-    * the key), the [[inferenceConfs]] values and the nanosAsLong value.
+    * the key) and the [[inferenceConfs]] values.
     * Cleared by `Materialize.resetFixtureMemo()`.
     */
   private[graft] val schemaMemo = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
@@ -83,27 +77,15 @@ object Tables {
   /** The parquet table at `path`, with its schema inferred at most once
     * per (path, fingerprint, confs) per JVM; every later call is a typed
     * read that launches no Spark job.
-    *
-    * An entry inferred with nanosAsLong=false also serves a lookup under
-    * true: inference without the conf fails on any INT64 TIMESTAMP(NANOS)
-    * column, so such an entry comes from a file with none, whose schema is
-    * the same under either value. The converse never holds — an entry
-    * inferred under true may carry a NANOS column as LongType — so it only
-    * serves true. Without the first rule, the conf flip in [[events]]
-    * (set once, for the rest of the session) would cost one more inference
-    * per table per session.
     */
   def parquet(spark: SparkSession, path: String): DataFrame = {
     val key = (path +: Materialize.sourceFingerprint(spark, path) +:
       inferenceConfs.map(spark.conf.get(_).toLowerCase)).mkString("|")
-    val nanos = spark.conf.get(NanosAsLong).toBoolean
-    val schema = Option(schemaMemo.get(s"$key|false"))
-      .orElse(Option(schemaMemo.get(s"$key|$nanos")))
-      .getOrElse {
-        val inferred = spark.read.parquet(path).schema
-        schemaMemo.putIfAbsent(s"$key|$nanos", inferred)
-        inferred
-      }
+    val schema = Option(schemaMemo.get(key)).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemaMemo.putIfAbsent(key, inferred)
+      inferred
+    }
     spark.read.schema(schema).parquet(path)
   }
 
@@ -123,8 +105,6 @@ object Tables {
   /** `events` with `ts` rebuilt as a TimestampType (µs) column, whatever
     * physical encoding the current testdata generation used ([[adaptiveTs]]).
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    withNanosAsLong(spark)
+  def events(spark: SparkSession, dir: String): DataFrame =
     adaptiveTs(read(spark, dir, "events"))
-  }
 }

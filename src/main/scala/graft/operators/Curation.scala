@@ -76,7 +76,8 @@ object Curation {
       // materialized once (Materialize): banding and BOTH verify-join
       // sides consume it — without this the survivor scan+shingle+sketch
       // lineage runs three times. Production: a disk-backed sketch table.
-      exactKept.join(nearDupLosers(survivorSketches(exactKept)), Seq("doc_id"), "left_anti")
+      exactKept
+        .join(nearDupLosers(graft.Materialize(Dedup.sketchOf(exactKept))), Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           col("q").as("quality_score"))
         .orderBy("doc_id")
@@ -643,7 +644,7 @@ object Curation {
         .select(col("doc_id"), (col("doc_id") =!= col("keep_id")).as("exact_loser"))
       val exactKept = base.join(pooled.filter(!col("exact_loser"))
         .select("doc_id"), Seq("doc_id"), "left_semi")
-      sh = survivorSketches(exactKept)
+      sh = graft.Materialize(Dedup.sketchOf(exactKept))
       val nearLosers = nearDupLosers(sh).withColumn("near_loser", lit(true))
       // gram universe = eval docs (the contamination REFERENCE) + the
       // exact-dup survivors (the only docs whose status can still reach
@@ -705,18 +706,6 @@ object Curation {
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
   }
-
-  /** p01/p07 stage 4 input: the exact-dedup survivors' sketches, one
-    * shingling pass for BOTH the MinHash signature and the sorted int64
-    * shingle hashes (the verify join ships only the hashes), materialized
-    * because banding and both verify-join sides consume them.
-    */
-  private def survivorSketches(exactKept: DataFrame): DataFrame = graft.Materialize(exactKept
-    .select(col("doc_id"), wordShingles(col("text"), 3).as("raw"))
-    .filter(size(col("raw")) > 0)
-    .select(col("doc_id"),
-      minhash_signature(col("raw"), Dedup.MinHashK).as("sig"),
-      sort_array(transform(col("raw"), g => xxhash64(g))).as("hsh")))
 
   /** p01/p07 near-dedup: the larger id of every LSH candidate pair whose
     * exact Jaccard over `sh`'s hashed shingles reaches [[Jac]].

@@ -76,10 +76,8 @@ object StreamingQueries {
   /** events as a bounded file stream (ts: µs timestamp): the ts rebuild
     * branches on the probed encoding the same way the batch loader does.
     */
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    Tables.withNanosAsLong(s)
+  private def eventsStream(s: SparkSession, dir: String): DataFrame =
     Tables.adaptiveTs(tableStream(s, dir, "events"))
-  }
 
   /** Run `df` (a streaming frame) to completion into a memory sink and
     * return the sink table. One micro-batch per `maxFilesPerTrigger` file
@@ -120,15 +118,20 @@ object StreamingQueries {
     * batch, retry transient errors on the composed schedule, fail loud on
     * anything else). Used by s09 so the retry wrapper sits on a
     * hard-gated query, not just in specs; with no injected faults the
-    * result is identical to the memory-sink runner.
+    * result is identical to the memory-sink runner. The sink dir is a
+    * `Materialize.scratchPath`, made before the stream starts, so a stream
+    * with no rows reads back as an empty frame.
     */
   private def runViaRetryingSink(df: DataFrame, mode: OutputMode): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_retry_sink_").toString
+    val s = df.sparkSession
+    val out = graft.Materialize.scratchPath(s, "retry_sink")
+    val dir = new org.apache.hadoop.fs.Path(out)
+    dir.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(dir)
     runToEnd(df.writeStream
       .foreachBatch(SinkRetry.foreachBatchWithRetry() { (batch, _) =>
         batch.write.mode("append").parquet(out)
       }), mode)
-    df.sparkSession.read.schema(df.schema).parquet(out)
+    s.read.schema(df.schema).parquet(out)
   }
 
   /** s17 core: run `stream` (any frame with a double `value` column) to

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions.col
   * runaway-recursion guard for the rest of a 145-query run — and a conf
   * set-and-restored on the caller's session is swapped under any
   * concurrent runner. This spec asserts the session conf map is
-  * bit-identical before, during and after those queries.
+  * bit-identical before, during and after those queries, and that loading
+  * events sets no conf either.
   */
 class ConfHygieneSpec extends SparkSpec {
 
@@ -22,10 +23,11 @@ class ConfHygieneSpec extends SparkSpec {
     "spark.sql.streaming.stateStore.providerClass",
     "spark.sql.cteRecursionRowLimit",
     "spark.sql.adaptive.enabled",
-    "spark.sql.ansi.enabled")
+    "spark.sql.ansi.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
 
-  private def snapshot(): Map[String, String] =
-    watched.map(k => k -> spark.conf.getOption(k).getOrElse("<unset>")).toMap
+  private def snapshot(s: org.apache.spark.sql.SparkSession = spark): Map[String, String] =
+    watched.map(k => k -> s.conf.getOption(k).getOrElse("<unset>")).toMap
 
   test("conf-mutating queries restore every session conf they touch") {
     val before = snapshot()
@@ -38,6 +40,18 @@ class ConfHygieneSpec extends SparkSpec {
       assert(snapshot() === before, s"session conf drifted after $name")
     }
     assert(snapshot() === before)
+  }
+
+  test("loading events, batch or stream, changes no conf of a fresh child session") {
+    // the nanosAsLong that INT64 TIMESTAMP(NANOS) events need comes from
+    // the session builder, so a child session has it before any load
+    val fresh = spark.newSession()
+    val before = snapshot(fresh)
+    assert(Tables.events(fresh, sfDir).count() > 0)
+    assert(snapshot(fresh) === before, "Tables.events changed a session conf")
+    assert(SparkEntry.queries("s01_stream_count")(fresh, sfDir).count() > 0)
+    assert(snapshot(fresh) === before, "s01 changed a session conf")
+    assert(before("spark.sql.legacy.parquet.nanosAsLong") === "true")
   }
 
   test("d07's partition override is invisible to a query running CONCURRENTLY on the same context") {

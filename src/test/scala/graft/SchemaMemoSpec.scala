@@ -17,23 +17,12 @@ import org.apache.spark.sql.types._
   * served to a session without that conf.
   */
 class SchemaMemoSpec extends SparkSpec {
+  import SchemaMemoSpec.writeRows
 
   private def tmpDir(name: String): String = {
     val d = Files.createTempDirectory(s"graft_schema_memo_$name")
     d.toFile.deleteOnExit()
     d.toString
-  }
-
-  /** One parquet file written by parquet-mr, with no Spark schema in its
-    * footer, so inference decodes the parquet types under the session confs.
-    */
-  private def writeRows(path: String, message: String)(rows: SimpleGroupFactory => Seq[
-      org.apache.parquet.example.data.Group]): Unit = {
-    val schema = MessageTypeParser.parseMessageType(message)
-    val w = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(new Path(path), new Configuration()))
-      .withType(schema).build()
-    try rows(new SimpleGroupFactory(schema)).foreach(w.write) finally w.close()
   }
 
   private def child(confs: (String, String)*): SparkSession = {
@@ -79,7 +68,7 @@ class SchemaMemoSpec extends SparkSpec {
     assert(tsType("true") == TimestampNTZType)
   }
 
-  test("an entry inferred with nanosAsLong=true is never served under false; false serves true") {
+  test("an entry inferred with nanosAsLong=true is never served under false") {
     val nanos = "spark.sql.legacy.parquet.nanosAsLong"
     val raw = s"${tmpDir("nanos")}/raw.parquet"
     writeRows(raw, "message m { required int64 ts (TIMESTAMP(NANOS,false)); }") { g =>
@@ -93,12 +82,6 @@ class SchemaMemoSpec extends SparkSpec {
     val off = child(nanos -> "false")
     intercept[Exception](off.read.parquet(raw))
     intercept[Exception](Tables.parquet(off, raw))
-
-    val plain = s"$sfDir/region.parquet"
-    val before = Tables.parquet(off, plain).schema
-    val entries = Tables.schemaMemo.size
-    assert(Tables.parquet(on, plain).schema == before)
-    assert(Tables.schemaMemo.size == entries, "an entry inferred under false must serve true")
   }
 
   test("resetFixtureMemo empties the fixture memo and the schema memo") {
@@ -107,5 +90,20 @@ class SchemaMemoSpec extends SparkSpec {
     assert(!Materialize.fixtureMemo.isEmpty && !Tables.schemaMemo.isEmpty)
     Materialize.resetFixtureMemo()
     assert(Materialize.fixtureMemo.isEmpty && Tables.schemaMemo.isEmpty)
+  }
+}
+
+object SchemaMemoSpec {
+
+  /** One parquet file written by parquet-mr, with no Spark schema in its
+    * footer, so inference decodes the parquet types under the session confs.
+    */
+  def writeRows(path: String, message: String)(rows: SimpleGroupFactory => Seq[
+      org.apache.parquet.example.data.Group]): Unit = {
+    val schema = MessageTypeParser.parseMessageType(message)
+    val w = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(new Path(path), new Configuration()))
+      .withType(schema).build()
+    try rows(new SimpleGroupFactory(schema)).foreach(w.write) finally w.close()
   }
 }

@@ -17,8 +17,12 @@ import org.apache.spark.sql.types.TimestampType
   * long nanos, TIMESTAMP_NTZ µs (the current generation's
   * isAdjustedToUTC=false shape), and TIMESTAMP µs — round-trips each
   * through parquet, and asserts all three decode to the identical
-  * TimestampType instants. A fourth check reads the REAL testdata so
-  * in-round drift fails here first, loudly, not in the driver's gate.
+  * TimestampType instants. Parquet-mr-written INT64 TIMESTAMP(NANOS) and
+  * TIMESTAMP(MICROS) files pin the same instants through `Tables.events`,
+  * on the suite session and on a child session; both read NANOS only
+  * because they inherit the session builder's nanosAsLong. A last check
+  * reads the REAL testdata so in-round drift fails here first, loudly, not
+  * in the driver's gate.
   */
 class TablesAdaptiveSpec extends SparkSpec {
 
@@ -34,7 +38,6 @@ class TablesAdaptiveSpec extends SparkSpec {
   test("adaptiveTs decodes long-nanos, TIMESTAMP_NTZ, and TIMESTAMP parquet to identical instants") {
     val s = spark
     import s.implicits._
-    Tables.withNanosAsLong(s)
 
     val asLongNanos = micros.map(_ * 1000L).toDF("ts")
     val asNtz = micros.toDF("us")
@@ -54,6 +57,27 @@ class TablesAdaptiveSpec extends SparkSpec {
     assert(decoded("nanos") == decoded("ntz"), "nanos and NTZ encodings must agree")
     assert(decoded("ntz") == decoded("ts"), "NTZ and TIMESTAMP encodings must agree")
     assert(decoded("ts").map(_._2) == micros, "decoded micros must be the written instants")
+  }
+
+  test("INT64 TIMESTAMP(NANOS) events read through Tables.events on the session and a child session") {
+    // parquet-mr writes the logical type Spark's own writer never emits;
+    // the reader rejects it unless the session reads it as a raw long
+    val dirs = Seq("NANOS" -> 1000L, "MICROS" -> 1L).map { case (unit, scale) =>
+      val dir = tmp(unit.toLowerCase)
+      SchemaMemoSpec.writeRows(s"$dir/events.parquet",
+        s"message m { required int64 ts (TIMESTAMP($unit,false)); }") { g =>
+        micros.map(us => g.newGroup().append("ts", us * scale))
+      }
+      unit -> dir
+    }.toMap
+    def instants(s: org.apache.spark.sql.SparkSession, dir: String): Seq[Long] = {
+      val e = Tables.events(s, dir)
+      assert(e.schema("ts").dataType == TimestampType)
+      e.select(expr("unix_micros(ts)")).collect().map(_.getLong(0)).sorted.toSeq
+    }
+    assert(instants(spark, dirs("MICROS")) == micros)
+    assert(instants(spark, dirs("NANOS")) == micros)
+    assert(instants(spark.newSession(), dirs("NANOS")) == micros)
   }
 
   test("adaptiveTs fails loud on an unknown ts encoding") {

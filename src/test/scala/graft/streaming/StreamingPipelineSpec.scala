@@ -186,6 +186,20 @@ class StreamingPipelineSpec extends SparkSpec {
       s"withheld window $ws is older than an emitted one — not a watermark tail"))
   }
 
+  test("s09's retry sink writes under spark.graft.scratchDir and leaves no temp dir behind") {
+    val tmpRoot = new java.io.File(sys.props("java.io.tmpdir"))
+    def sinkDirs() = Option(tmpRoot.list()).toSeq.flatten.filter(_.startsWith("graft_retry_sink_")).toSet
+    val before = sinkDirs()
+    val scratch = tmp("graft-s09-scratch")
+    val s = spark.newSession()
+    s.conf.set("spark.graft.scratchDir", scratch)
+    val s09 = StreamingQueries.queries("s09_stream_append_finalized")(s, sfDir)
+    assert(s09.count() > 0)
+    assert(s09.inputFiles.nonEmpty && s09.inputFiles.forall(_.contains(scratch)),
+      s"s09 read back outside $scratch: ${s09.inputFiles.mkString(", ")}")
+    assert((sinkDirs() -- before).isEmpty, s"new temp dirs: ${(sinkDirs() -- before).mkString(", ")}")
+  }
+
   test("stream limit: listener stops the query once >= N records are ingested") {
     val dir = tmp("graft-limit")
     val n = 5000L

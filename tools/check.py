@@ -46,8 +46,8 @@ def main():
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
-            # ScaleProbe fixtures are directories of part files; the driver's
-            # testdata tables are single files — handle both
+            # a table is one file in the shipped testdata, or a directory
+            # of part files in a split copy of it — handle both
             src = f"{p}/*.parquet" if os.path.isdir(p) else p
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
     manifest_path = f"{out_dir}/manifest.json"
