@@ -22,7 +22,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = CatalogRunner.session(CatalogRunner.privateScratch)
+    val spark = CatalogRunner.session()
     // noop write forces EVERY output column — a bare count() would let
     // Catalyst skip projection work and under-time scan-heavy queries
     val passes = (1 to Passes).flatMap(_ =>

@@ -1,6 +1,5 @@
 package graft
 
-import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one way every main and spec builds a session, and the one loop that
@@ -45,15 +44,6 @@ object CatalogRunner {
     spark
   }
 
-  /** A `Materialize` scratch base no other JVM shares, so the fence may
-    * sweep it without touching a concurrent run's scratch. Removed at exit.
-    */
-  lazy val privateScratch: (String, String) = {
-    val dir = sys.props("java.io.tmpdir") + s"/graft-scratch-${java.util.UUID.randomUUID()}"
-    sys.addShutdownHook(deleteRecursively(new File(dir)))
-    "spark.graft.scratchDir" -> dir
-  }
-
   /** `SPARK_GRAFT_ONLY=q01,g0`: comma-separated name prefixes that limit a
     * run to a subset (local iteration only).
     */
@@ -88,15 +78,8 @@ object CatalogRunner {
 
   private def fence(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    spark.conf.getOption("spark.graft.scratchDir")
-      .flatMap(d => Option(new File(d).listFiles()))
-      .foreach(_.foreach(deleteRecursively))
+    Materialize.sweepScratch(spark)
     System.gc()
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
   }
 
   /** JSON string literal: escapes quote, backslash and every control

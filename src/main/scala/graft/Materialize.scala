@@ -36,6 +36,16 @@ object Materialize {
     df
   }
 
+  /** The per-JVM default home of intermediate tables,
+    * `<tmpdir>/graft-<UUID>`: a session that sets no
+    * `spark.graft.scratchDir` / `spark.graft.fixtureDir` writes scratch
+    * under `<root>/scratch` and fixtures under `<root>/fixtures`. Nothing
+    * creates it until the first write; the shutdown hook removes it whole.
+    */
+  private[graft] val defaultRoot =
+    s"${sys.props("java.io.tmpdir")}/graft-${java.util.UUID.randomUUID()}"
+
+  /** Every local path [[freshPath]] made, removed at exit. */
   private val localScratch = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
   private def deleteRecursively(p: java.io.File): Unit = {
@@ -55,8 +65,33 @@ object Materialize {
   locally {
     sys.addShutdownHook {
       localScratch.forEach(p => deleteRecursively(new java.io.File(p)))
+      deleteRecursively(new java.io.File(defaultRoot))
     }
   }
+
+  private def base(s: org.apache.spark.sql.SparkSession, key: String, sub: String): String =
+    s.conf.getOption(key).getOrElse(s"$defaultRoot/$sub")
+
+  /** The one path maker: a fresh `<base>/<tag>_<UUID>`, where the base is
+    * the session's `key` conf or `<defaultRoot>/<sub>`, registered for
+    * shutdown cleanup when local. Non-local bases (hdfs://, s3a://) are
+    * never registered: java.io.File deletion would silently no-op on them,
+    * and cleanup there is the cluster scheduler's job.
+    */
+  private def freshPath(s: org.apache.spark.sql.SparkSession, key: String, sub: String,
+                        tag: String): String = {
+    val path = s"${base(s, key, sub)}/${tag}_${java.util.UUID.randomUUID()}"
+    if (isLocalPath(path)) localScratch.add(path)
+    path
+  }
+
+  /** Removes everything under the session's scratch base, configured or
+    * default: the catalog runner's fence between queries. Fixtures live
+    * under their own base and survive it.
+    */
+  private[graft] def sweepScratch(s: org.apache.spark.sql.SparkSession): Unit =
+    Option(new java.io.File(base(s, "spark.graft.scratchDir", "scratch")).listFiles())
+      .foreach(_.foreach(deleteRecursively))
 
   /** Reliable materialization for the RESULT of an iterative computation
     * (connected components, BFS) whose upstream per-round caches are
@@ -72,17 +107,12 @@ object Materialize {
     * cluster (scratchDir on HDFS/S3) it survives executor loss, which is
     * what production graph/dedup pipelines do with iteration outputs.
     *
-    * Scratch files are label-table-sized (O(|V|) rows, few columns), so
-    * cleanup is deferred entirely to a JVM shutdown hook: every LOCAL
-    * scratch dir this process created is removed on exit. No dir is
-    * deleted while the process lives — two frames produced under the same
-    * tag (a plan composing two connectedComponents results, or parallel
-    * suites) can both stay readable for the whole session; the previous
-    * eager delete-on-overwrite assumed a sequential-consumption contract
-    * nothing enforced. Set `spark.graft.scratchDir` to the job's scratch
-    * space on a cluster — non-local URIs (hdfs://, s3a://, …) are NOT
-    * registered with the hook (java.io.File deletion would silently no-op
-    * on them anyway); cleanup there is the cluster scheduler's job.
+    * Scratch files are label-table-sized (O(|V|) rows, few columns), and
+    * this module deletes none while the process lives: two frames produced
+    * under the same tag (a plan composing two connectedComponents results)
+    * both stay readable; the shutdown hook removes them, and the catalog
+    * runner's fence ([[sweepScratch]]) between queries. Set
+    * `spark.graft.scratchDir` to the job's scratch space on a cluster.
     */
   def toStorage(df: DataFrame, tag: String): DataFrame = toStorage(df, tag, df.sparkSession)
 
@@ -93,8 +123,11 @@ object Materialize {
     * frame just written, which is what the stored footer says, so it runs
     * no schema-inference job.
     */
-  def toStorage(df: DataFrame, tag: String, on: org.apache.spark.sql.SparkSession): DataFrame =
-    on.read.schema(df.schema).parquet(toStoragePath(df, tag))
+  def toStorage(df: DataFrame, tag: String, on: org.apache.spark.sql.SparkSession): DataFrame = {
+    val path = scratchPath(df.sparkSession, tag)
+    df.write.parquet(path)
+    on.read.schema(df.schema).parquet(path)
+  }
 
   /** Per-JVM MEMOIZED storage for a shared derived table (a graph's edge
     * set, its degree table, its triangle table): the first caller builds
@@ -106,16 +139,15 @@ object Materialize {
     * aggregation per query (measured ~5–10 s of the g-family's per-query
     * cost at sf0.1 — the round-11 bench-median regression in one line).
     *
-    * Scratch-parquet, NOT cache, deliberately: Bench's inter-query fence
-    * unpersists every cached RDD and sweeps the per-run scratch dir, and
-    * the fixture must survive both to amortize anything. Fixtures live
-    * under their own base (`spark.graft.fixtureDir`, default a shared
-    * tmpdir path — every stored path carries a UUID, so concurrent JVMs
-    * never collide), are registered with the same shutdown-hook cleanup
-    * as toStorage, and keep no lineage to invalidate: a fixture read
-    * is a flat columnar scan forever. On a real cluster the conf points
-    * at job scratch space (HDFS/S3) and the stored table doubles as the
-    * executor-loss-safe form (the toStorage contract).
+    * Scratch-parquet, NOT cache, deliberately: the catalog runner's fence
+    * unpersists every cached RDD and sweeps the scratch base, and the
+    * fixture must survive both to amortize anything. Fixtures live under
+    * their own base (`spark.graft.fixtureDir`, default
+    * `<defaultRoot>/fixtures`), get their paths and shutdown cleanup from
+    * [[freshPath]] as toStorage does, and keep no lineage to invalidate:
+    * a fixture read is a flat columnar scan forever. On a real cluster
+    * the conf points at job scratch space (HDFS/S3) and the stored table
+    * doubles as the executor-loss-safe form (the toStorage contract).
     *
     * The memo key is (fixture name, source dir, source fingerprint): two
     * sessions in one JVM asking for the same fixture of the same source
@@ -150,12 +182,9 @@ object Materialize {
     val path =
       if (memoized != null) memoized
       else {
-        val base = s.conf.getOption("spark.graft.fixtureDir")
-          .getOrElse(sys.props("java.io.tmpdir") + "/graft-fixtures")
         val tag = key.map(c => if (c.isLetterOrDigit || c == '-' || c == '_') c else '-')
-        val built = s"$base/${tag}_${java.util.UUID.randomUUID()}"
+        val built = freshPath(s, "spark.graft.fixtureDir", "fixtures", tag)
         build.write.parquet(built)
-        if (isLocalPath(built)) localScratch.add(built)
         val raced = fixtureMemo.putIfAbsent(key, built)
         if (raced != null) raced else built
       }
@@ -216,38 +245,7 @@ object Materialize {
     s
   }
 
-  /** A fresh `tag`_UUID path under the scratch base
-    * (`spark.graft.scratchDir`, default a shared tmpdir path), registered
-    * for shutdown cleanup when local (the toStorage contract).
-    */
-  private[graft] def scratchPath(spark: org.apache.spark.sql.SparkSession, tag: String): String = {
-    val base = spark.conf.getOption("spark.graft.scratchDir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-scratch")
-    val path = s"$base/${tag}_${java.util.UUID.randomUUID()}"
-    if (isLocalPath(path)) localScratch.add(path)
-    path
-  }
-
-  /** Write `df` to a fresh [[scratchPath]] and return the path. */
-  private def toStoragePath(df: DataFrame, tag: String): String = {
-    val path = scratchPath(df.sparkSession, tag)
-    df.write.parquet(path)
-    path
-  }
-
-  /** toStoragePath with a Hive-style directory layout on `partCol`: each
-    * distinct partCol value becomes its own directory, so a later read
-    * with `WHERE partCol IN (...)` (literal values) prunes whole
-    * directories at PLANNING time — the scan never opens the unselected
-    * files. This is the storage shape an iterative consumer needs when
-    * its per-round working set (a BFS frontier's neighborhoods) touches a
-    * small, identifiable slice of a big materialized table: per-round IO
-    * ∝ the slice, not the table. Cleanup contract identical to
-    * toStoragePath.
-    */
-  def toStoragePathPartitioned(df: DataFrame, tag: String, partCol: String): String = {
-    val path = scratchPath(df.sparkSession, tag)
-    df.write.partitionBy(partCol).parquet(path)
-    path
-  }
+  /** A fresh scratch path for `tag` (see [[freshPath]]). */
+  private[graft] def scratchPath(spark: org.apache.spark.sql.SparkSession, tag: String): String =
+    freshPath(spark, "spark.graft.scratchDir", "scratch", tag)
 }

@@ -17,7 +17,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val spark = CatalogRunner.session(CatalogRunner.privateScratch)
+    val spark = CatalogRunner.session()
     dump(spark, SparkEntry.queries, sfDir, outDir)
     val json = SparkEntry.oracleSql.map { case (k, v) =>
       s"${CatalogRunner.json(k)}: ${CatalogRunner.json(v)}"

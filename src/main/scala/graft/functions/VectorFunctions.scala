@@ -206,31 +206,6 @@ object VectorFunctions {
     dot(a, b) / sqrt(dot(a, a)) / sqrt(dot(b, b))
   }
 
-  /** Deterministic random-hyperplane LSH signature: `bits` sign bits packed
-    * into a long. Hyperplane components are pseudo-random in [-1,1), derived
-    * from splitmix64(seed, bitIdx, dim) — no RNG state, so executors and
-    * retries always agree (crucial for distributed determinism).
-    */
-  def hyperplane_lsh(vec: Column, bits: Int, dim: Int, seed: Long): Column = {
-    require(bits <= 64, "signature packs into one long")
-    // component(j, d) as a literal array-of-arrays, built driver-side once:
-    // bits × dim doubles is tiny (<= 64*4096); shipped to executors as one
-    // literal, evaluated inside codegen.
-    val planes: Array[Array[Double]] = Array.tabulate(bits, dim) { (j, d) =>
-      val z = splitmix64(seed + j.toLong * 0x9E3779B97F4A7C15L + d.toLong)
-      // map top 53 bits to [-1, 1)
-      (z >>> 11).toDouble / (1L << 52).toDouble - 1.0
-    }
-    val bitCols = (0 until bits).map { j =>
-      val plane = lit(planes(j))
-      val proj = aggregate(
-        zip_with(vec, plane, (x, p) => x.cast("double") * p),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_ + _)
-  }
-
   /** Multi-table hyperplane LSH signatures as one codegen'd pass: returns
     * `array<long>` of `tables` bucket ids (each `bits` sign bits). The
     * production ANN path: bucket ids are computed at scan speed, the join

@@ -36,15 +36,6 @@ object Graph {
     */
   val MaxBfsRounds = 30
 
-  /** g03: directory count for the range-bucketed adjacency layout (see
-    * bfsLevels). A constant, not a function of |V|: what it bounds is the
-    * per-round driver traffic (≤ this many bucket ids collected to plan
-    * the pruned scan) and the file-listing overhead; within a bucket the
-    * scan is columnar and parallel, so more buckets past ~the executor
-    * count buys pruning granularity but nothing else.
-    */
-  val BfsAdjBuckets = 64
-
   /** Undirected co-purchase pairs (u < v), WITH multiplicity — one row
     * per order that pairs the two parts. Per-order part sets are small
     * (TPC-H ~4 lineitems/order), so the self-join on l_orderkey is
@@ -529,20 +520,6 @@ object Graph {
     prof.toDF("round", "n_changed", "n_labels", "label_sum").orderBy("round")
   }
 
-  /** g03: vertex count at which bfsLevels switches the adjacency from a
-    * memory cache to the range-bucketed storage layout. The bucketed
-    * layout's pruning is the 100×-probe win (per-round IO ∝ frontier
-    * coverage, 593 → 31.5 s), but it pays a fixed write + per-round
-    * cold-read cost that a cache-resident adjacency doesn't — measured
-    * ~+5 s at sf0.1 (20 k vertices), where the whole adjacency fits in
-    * memory and pruning buys nothing. Below the threshold the cached
-    * frame wins by construction; above it, cache residency is no longer
-    * guaranteed and pruned reads win. Same decision rule a table
-    * service applies to any index: build it when the data outgrows the
-    * cache, not before.
-    */
-  val BfsStorageMinVertices = 1000000L
-
   /** g03 core: single-source BFS by iterative frontier expansion — the
     * third canonical Pregel shape after label propagation (d07) and one
     * message round (g02). Root = the max-degree vertex (tie-break min
@@ -552,8 +529,7 @@ object Graph {
     * probe reaches the driver per round. Rounds = eccentricity of the
     * root (small-world graphs: a handful at any scale).
     */
-  private[operators] def bfsLevels(e: DataFrame, maxRounds: Int = MaxBfsRounds,
-                                   storageMinVertices: Long = BfsStorageMinVertices): DataFrame = {
+  private[operators] def bfsLevels(e: DataFrame, maxRounds: Int = MaxBfsRounds): DataFrame = {
     val spark = e.sparkSession
     // adjacency lists, built ONCE: the per-round expansion joins the
     // frontier against |V| adjacency rows instead of re-shuffling the
@@ -561,7 +537,7 @@ object Graph {
     // shuffle ∝ frontier fan-out and per-round shuffle ∝ |E| at cluster
     // scale. collect_set also absorbs input multiplicity, so the input
     // may be the RAW pair stream (partPairs) — no edge-dedup shuffle.
-    val adjBuild = e.select(col("u").as("src"), col("v").as("dst"))
+    val adj = e.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
       .groupBy("src").agg(collect_set(col("dst")).as("nbrs"))
       .persist()
@@ -569,44 +545,14 @@ object Graph {
     // union over those caches (≤ |V| cached rows total, re-cached never)
     var levels = List.empty[DataFrame]
     try {
-      // 2 driver rows, both over the just-cached adjacency: the id range
-      // (sizes the range-bucket layout below) and the root choice (same
-      // 1-scalar discipline as d07's convergence count). The first job
-      // also materializes the cache.
-      val statsRow = adjBuild.agg(min(col("src")).as("lo"), max(col("src")).as("hi"),
-        count(lit(1)).as("nv")).collect()(0)
-      require(!statsRow.isNullAt(0), "bfsLevels: empty edge input — no root to pick")
-      val (lo, hi, nV) = (statsRow.getLong(0), statsRow.getLong(1), statsRow.getLong(2))
-      val root = adjBuild
+      // 1 driver row over the just-cached adjacency: the root choice
+      // (same 1-scalar discipline as d07's convergence count); the job
+      // also materializes the cache
+      val rootRow = adj
         .orderBy(size(col("nbrs")).desc, col("src").asc)
-        .limit(1).select("src").collect()(0).getLong(0)
-      // the at-scale lever (SCALING.md's 100× reading: pre-bucketing,
-      // every round scanned the FULL adjacency — rounds × |E|): past the
-      // size threshold, write the adjacency ONCE as a range-bucketed
-      // table (bkt = (src−lo) ∕ w, ≤ BfsAdjBuckets directories), and
-      // each round scan ONLY the buckets the frontier's ids fall in.
-      // Range (not hash) bucketing is deliberate: real vertex ids have
-      // locality (a crawl segment, a tenant, one component of a
-      // partitioned graph), so a frontier confined to a region touches
-      // few ranges — a hash layout would smear any frontier across every
-      // bucket and prune nothing. Per-round IO ∝ frontier's bucket
-      // coverage, never |E|. Below the threshold the cached adjacency
-      // stays resident and pruning would only add cold reads (see
-      // BfsStorageMinVertices).
-      val useStorage = nV >= storageMinVertices
-      val w = math.max(1L, (hi - lo) / BfsAdjBuckets + 1L)
-      // integer DIV (the Layout.overlapDepth idiom), not double division:
-      // long/long `/` on Columns is IEEE double then int-cast, which at
-      // extreme id ranges can round up into a phantom 64th bucket
-      def bktOf(name: String) = expr(s"CAST(($name - ${lo}L) DIV ${w}L AS INT)")
-      val adj: DataFrame =
-        if (!useStorage) adjBuild
-        else {
-          val adjPath = graft.Materialize.toStoragePathPartitioned(
-            adjBuild.withColumn("bkt", bktOf("src")), "bfs_adj", "bkt")
-          adjBuild.unpersist()
-          spark.read.parquet(adjPath)
-        }
+        .limit(1).select("src").collect()
+      require(rootRow.nonEmpty, "bfsLevels: empty edge input — no root to pick")
+      val root = rootRow(0).getLong(0)
       var frontier = spark.range(1)
         .select(lit(root).as("v"), lit(0L).as("lvl")).persist()
       levels = frontier :: levels
@@ -614,23 +560,12 @@ object Graph {
       var lvl = 0L
       var exhausted = false
       while (!exhausted && lvl < maxRounds) {
-        // ≤ BfsAdjBuckets scalars to the driver: the bucket ids this
-        // frontier touches — bounded by the bucket-count CONSTANT, never
-        // by frontier size. The isin over literal partition values is
-        // what turns into planning-time directory pruning on the scan.
-        val adjRound =
-          if (!useStorage) adj
-          else {
-            val bkts = frontier.select(bktOf("v").as("bkt"))
-              .distinct().collect().map(_.getInt(0)).toSeq
-            adj.where(col("bkt").isin(bkts: _*))
-          }
         // no broadcast hint: a small-world frontier can be most of |V| by
         // level 2, so the join must be allowed to stay a shuffle join —
         // AQE broadcasts the early (tiny) frontiers on its own. distinct
         // runs BEFORE the anti-join: its map-side partial dedup collapses
         // the fan-out to ≤ |V| rows per task before anything shuffles.
-        val next = adjRound.join(frontier.select(col("v").as("src")), "src")
+        val next = adj.join(frontier.select(col("v").as("src")), "src")
           .select(explode(col("nbrs")).as("v")).distinct()
           .join(visited, Seq("v"), "left_anti")
           .select(col("v"), lit(lvl + 1L).as("lvl"))
@@ -658,7 +593,7 @@ object Graph {
         .orderBy("level"), "bfs_levels")
     } finally {
       levels.foreach(_.unpersist())
-      adjBuild.unpersist()
+      adj.unpersist()
     }
   }
 

@@ -752,23 +752,22 @@ object Relational {
       // trips it with a perfectly healthy walk (rows ∝ |orders|, depth
       // unchanged). This recursion is provably finite (the frontier
       // strictly advances along rn), so the cap is raised on an ISOLATED
-      // CHILD SESSION (`newSession()`: shared SparkContext, private
-      // SQLConf) — the caller's session keeps the runaway-recursion
-      // guard, and a concurrent runner can never observe the override
-      // (ConfHygieneSpec). The temp view registers in the child's
-      // private catalog, so it can't clobber a caller-session view
-      // either. The whole recursion executes eagerly (Materialize) on
-      // the child; the returned frame is served from persisted blocks.
-      val s2 = s.newSession()
+      // CHILD SESSION (Materialize.loopSession: shared SparkContext,
+      // private SQLConf, AQE off) — the caller's session keeps the
+      // runaway-recursion guard, and a concurrent runner can never
+      // observe the override (ConfHygieneSpec). The temp view registers
+      // in the child's private catalog, so it can't clobber a
+      // caller-session view either. The whole recursion executes eagerly
+      // (Materialize) on the child; the returned frame is served from
+      // persisted blocks. The recursion is a fixed-shape per-step join
+      // whose wall-clock is DRIVER overhead at this SF (depth ≈ max chain
+      // length sequential steps): AQE would re-plan each step's exchanges
+      // into extra driver jobs, and the task count per step is sized to
+      // the DATA, not the session default (32 tasks/step on a 150 k-row
+      // walk was the bisected r10→r11 q49 regression shape: 11.7 → 7.2 s
+      // with both fixes).
+      val s2 = graft.Materialize.loopSession(s)
       s2.conf.set("spark.sql.cteRecursionRowLimit", "1000000000")
-      // The recursion is a fixed-shape per-step join whose wall-clock is
-      // DRIVER overhead at this SF (depth ≈ max chain length sequential
-      // steps) — the Materialize.loopSession discipline applies: AQE off
-      // (it re-plans each step's exchanges into extra driver jobs) and
-      // the task count per step sized to the DATA, not the session
-      // default (32 tasks/step on a 150 k-row walk was the bisected
-      // r10→r11 q49 regression shape: 11.7 → 7.2 s with both fixes).
-      s2.conf.set("spark.sql.adaptive.enabled", "false")
       // the successor table is MATERIALIZED once (Materialize:
       // lineage-keeping persist) before the recursion: a plain
       // CTE would be inlined into every recursive step, re-running the

@@ -282,8 +282,9 @@ object Similarity {
     * nCells · 2^b · SemTargetOcc ≥ n (integer shift-compare, no float
     * log — the DuckDB mirror `sem_geo` derives bit-identically from the
     * same counts), and each cell splits into 2^b sub-cells by b
-    * HYPERPLANE SIGN BITS of the member vector (one `hyperplane_lsh`
-    * table, seed 7 — the planes the engine already mirrors in SQL).
+    * HYPERPLANE SIGN BITS of the member vector
+    * (`hyperplane_lsh_multi(…, tables = 1, seed = 7)` — the planes the
+    * engine already mirrors in SQL).
     * Locality-sensitive sub-splitting, NOT a per-cell rank window: a
     * row_number over cells would sort N/nCells rows in one task (the
     * p08 skew wall), while the sign bits are scan-level. Recall within

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** The shared session factory and catalog runner: a throwing entry is
@@ -58,6 +57,26 @@ class CatalogRunnerSpec extends SparkSpec {
     assert(seen("b_next") == 0, s"persisted RDDs survived the fence: $seen")
   }
 
+  test("on the default scratch base the fence removes a query's toStorage dir and keeps fixtures") {
+    assert(spark.conf.getOption("spark.graft.scratchDir").isEmpty)
+    var fx: org.apache.spark.sql.DataFrame = null
+    var stored = Seq.empty[java.io.File]
+    val store: CatalogRunner.Query = (s, dir) => {
+      fx = Materialize.fixture(s, "fence-spec", dir)(s.range(3).toDF("id"))
+      Materialize.toStorage(s.range(5).toDF("id"), "fence_spec")
+    }
+    val rs = CatalogRunner.run(spark, Seq("a_store" -> store, "b_next" -> good), sfDir, only = None) {
+      (name, df) =>
+        df.count()
+        if (name == "a_store")
+          stored = df.inputFiles.map(f => new java.io.File(new java.net.URI(f)).getParentFile).distinct.toSeq
+    }
+    assert(rs.forall(_.ok), rs.toString)
+    assert(stored.nonEmpty, "the query must have read back a stored copy")
+    assert(stored.forall(!_.exists), s"a toStorage dir survived the fence: ${stored.mkString(", ")}")
+    assert(fx.count() == 3, "a fixture must survive the fence")
+  }
+
   test("the factory session runs local[nproc] with the catalog-sized codegen cache") {
     val n = Runtime.getRuntime.availableProcessors
     assert(spark.conf.get("spark.sql.shuffle.partitions") == n.toString)
@@ -67,7 +86,7 @@ class CatalogRunnerSpec extends SparkSpec {
   }
 
   test("a Verify dump writes a manifest listing every selected entry, failed ones with their reason") {
-    val out = Files.createTempDirectory("graft_verify_spec").toString
+    val out = SparkSpec.tmpDir("graft_verify_spec")
     val rs = Verify.dump(spark, twoEntries, sfDir, out)
     assert(rs.size == 2)
     val manifest = new ObjectMapper().readTree(new java.io.File(s"$out/manifest.json"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** Pins the toStorage scratch contract (round-7 form, per the round-6
   * advisory): NO dir is deleted while the process lives — two frames
   * produced under the same tag must BOTH stay readable (the previous
@@ -17,7 +15,7 @@ class MaterializeScratchSpec extends SparkSpec {
   test("every toStorage frame stays readable for the whole session, including same-tag overlaps") {
     val s = spark
     import s.implicits._
-    val scratch = Files.createTempDirectory("graft_scratch_spec").toString
+    val scratch = SparkSpec.tmpDir("graft_scratch_spec")
     val old = s.conf.getOption("spark.graft.scratchDir")
     s.conf.set("spark.graft.scratchDir", scratch)
     try {
@@ -42,7 +40,7 @@ class MaterializeScratchSpec extends SparkSpec {
   test("a fixture is served from the memo while its source is unchanged and rebuilt after a rewrite") {
     val s = spark
     import s.implicits._
-    val src = Files.createTempDirectory("graft_fixture_src").toString + "/t"
+    val src = SparkSpec.tmpDir("graft_fixture_src") + "/t"
     Seq(1L, 2L).toDF("id").write.parquet(src)
     var builds = 0
     def read(): Seq[Long] =

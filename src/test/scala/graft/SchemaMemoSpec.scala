@@ -19,12 +19,6 @@ import org.apache.spark.sql.types._
 class SchemaMemoSpec extends SparkSpec {
   import SchemaMemoSpec.writeRows
 
-  private def tmpDir(name: String): String = {
-    val d = Files.createTempDirectory(s"graft_schema_memo_$name")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
   private def child(confs: (String, String)*): SparkSession = {
     val s = spark.newSession()
     confs.foreach { case (k, v) => s.conf.set(k, v) }
@@ -34,7 +28,7 @@ class SchemaMemoSpec extends SparkSpec {
   test("a file rewritten at the same path with a re-typed column is read with the new schema") {
     val s = spark
     import s.implicits._
-    val src = tmpDir("rewrite")
+    val src = SparkSpec.tmpDir("graft_schema_memo_rewrite")
     val path = s"$src/t.parquet"
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
       val out = s"$src/$name"
@@ -51,7 +45,7 @@ class SchemaMemoSpec extends SparkSpec {
   }
 
   test("toggling an inference conf changes the schema that is served") {
-    val path = s"${tmpDir("binary")}/raw.parquet"
+    val path = s"${SparkSpec.tmpDir("graft_schema_memo_binary")}/raw.parquet"
     writeRows(path, "message m { required binary b; }") { g =>
       Seq(g.newGroup().append("b", "x"))
     }
@@ -70,7 +64,7 @@ class SchemaMemoSpec extends SparkSpec {
 
   test("an entry inferred with nanosAsLong=true is never served under false") {
     val nanos = "spark.sql.legacy.parquet.nanosAsLong"
-    val raw = s"${tmpDir("nanos")}/raw.parquet"
+    val raw = s"${SparkSpec.tmpDir("graft_schema_memo_nanos")}/raw.parquet"
     writeRows(raw, "message m { required int64 ts (TIMESTAMP(NANOS,false)); }") { g =>
       Seq(g.newGroup().append("ts", 1709251200123456789L))
     }

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,4 +12,13 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = CatalogRunner.session()
+
+  /** A fresh `prefix`-named dir under `Materialize.defaultRoot`, the
+    * per-JVM root whose shutdown hook removes it, so no spec leaves a temp
+    * dir behind. The catalog runner's fence sweeps only the root's
+    * `scratch`, never these.
+    */
+  def tmpDir(prefix: String): String =
+    Files.createTempDirectory(
+      Files.createDirectories(Paths.get(Materialize.defaultRoot, "spec")), prefix).toString
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
@@ -26,12 +25,6 @@ import org.apache.spark.sql.types.TimestampType
   */
 class TablesAdaptiveSpec extends SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = Files.createTempDirectory(s"graft_adaptive_$name")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
   // 2024-03-01 00:00:00.123456 UTC and one second later, as epoch micros
   private val micros = Seq(1709251200123456L, 1709251201123456L)
 
@@ -46,7 +39,7 @@ class TablesAdaptiveSpec extends SparkSpec {
 
     val decoded = Seq("nanos" -> asLongNanos, "ntz" -> asNtz, "ts" -> asTs).map {
       case (name, df) =>
-        val dir = tmp(name)
+        val dir = SparkSpec.tmpDir(s"graft_adaptive_$name")
         df.write.mode("overwrite").parquet(dir)
         val out = Tables.adaptiveTs(s.read.parquet(dir))
         assert(out.schema("ts").dataType == TimestampType, s"$name branch must yield TimestampType")
@@ -63,7 +56,7 @@ class TablesAdaptiveSpec extends SparkSpec {
     // parquet-mr writes the logical type Spark's own writer never emits;
     // the reader rejects it unless the session reads it as a raw long
     val dirs = Seq("NANOS" -> 1000L, "MICROS" -> 1L).map { case (unit, scale) =>
-      val dir = tmp(unit.toLowerCase)
+      val dir = SparkSpec.tmpDir(s"graft_adaptive_${unit.toLowerCase}")
       SchemaMemoSpec.writeRows(s"$dir/events.parquet",
         s"message m { required int64 ts (TIMESTAMP($unit,false)); }") { g =>
         micros.map(us => g.newGroup().append("ts", us * scale))

@@ -267,7 +267,7 @@ class CurationSpec extends SparkSpec {
   test("p15 dataset card hand trace: cross-source dup flagged on both sides, exact median, lang mode") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-p15").toString
+    val dir = SparkSpec.tmpDir("graft-p15")
     try {
       // src A: 3 docs (en, en, de) with token counts 1/3/5 (median 3);
       //   doc 2 duplicates doc 10 in src B ACROSS sources (normalization

@@ -181,12 +181,9 @@ class GraphSpec extends SparkSpec {
     assert(disc.map(_.getLong(1)).sum === 3L, "only the root's component is reached")
   }
 
-  test("g03 storage-backed (bucket-pruned) path returns the identical levels") {
-    // storageMinVertices = 0 forces the range-bucketed layout the big
-    // graphs take; the answer must be bit-identical to the cached path
-    val path = Graph.bfsLevels(edges((1, 2), (2, 3), (3, 4), (4, 5)), storageMinVertices = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(path.toSeq === Seq((0L, 1L, 2L, 2L), (1L, 2L, 1L, 3L), (2L, 1L, 4L, 4L), (3L, 1L, 5L, 5L)))
+  test("bfsLevels on an empty edge frame fails with the empty-input message") {
+    val e = intercept[IllegalArgumentException](Graph.bfsLevels(edges()))
+    assert(e.getMessage.contains("bfsLevels: empty edge input — no root to pick"), e.getMessage)
   }
 
   test("g03 throws past the round cap instead of truncating levels") {

@@ -798,7 +798,7 @@ class SimilaritySpec extends SparkSpec {
     //   exactly the antipode sits under mean - 2*sigma.
     // label 1: five identical vectors — sigma = 0, fence = mean, zero
     //   outliers (nobody is strictly below their own value).
-    val dir = java.nio.file.Files.createTempDirectory("graft-e29").toString
+    val dir = SparkSpec.tmpDir("graft-e29")
     try {
       val rows =
         (0L to 8L).map(i => (i, Array(1.0f, 0.0f, 0.0f, 0.0f), 0)) ++
@@ -846,7 +846,7 @@ class SimilaritySpec extends SparkSpec {
   test("e30 centroid drift: planted e1->e2 flip reads exactly 2.0; identical halves read 0") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-e30").toString
+    val dir = SparkSpec.tmpDir("graft-e30")
     try {
       // epoch split is global: nmax = 9, half a = ids 0..4, half b = 5..9
       // label 0: epoch a all +e1, epoch b all +e2 -> per-dim mean drift
@@ -892,7 +892,7 @@ class SimilaritySpec extends SparkSpec {
     //   recall = sum over queries of (|probed cell|-1) / 90 on both
     //   sides: stale cells {5,4,1} -> (5*4+4*3)/90; fresh probing lands
     //   q5 on c1 and conserves the candidate total -> 32e6 DIV 90.
-    val dir = java.nio.file.Files.createTempDirectory("graft-e31").toString
+    val dir = SparkSpec.tmpDir("graft-e31")
     try {
       val c0 = Array(1.0f, 0.0f, 0.0f, 0.0f)
       val c1 = Array(0.0f, 0.0f, 1.0f, 0.0f)

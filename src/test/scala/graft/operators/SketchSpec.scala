@@ -75,7 +75,7 @@ class SketchSpec extends SparkSpec {
     // Storability — the half of the idiom the query can't show: sketches
     // written to parquet and unioned from the STORED table must answer
     // identically to the inline union (binary round-trip is lossless).
-    val dir = java.nio.file.Files.createTempDirectory("graft-hll").toString
+    val dir = SparkSpec.tmpDir("graft-hll")
     try {
       ev.groupBy("event_type")
         .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))

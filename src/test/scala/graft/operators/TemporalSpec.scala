@@ -408,7 +408,7 @@ class TemporalSpec extends SparkSpec {
     // B: wk0               (churned at wk1)
     // C: wk0, wk2          (churned at wk1, resurrected at wk2)
     // D: wk2               (new at wk2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-a24").toString
+    val dir = SparkSpec.tmpDir("graft-a24")
     try {
       Seq(
         ("A", "1970-01-01 10:00:00"), ("A", "1970-01-08 10:00:00"),
@@ -440,7 +440,7 @@ class TemporalSpec extends SparkSpec {
     // churn at wk1 — the full-outer week spine must emit (wk1, 0 active,
     // 2 churned) instead of dropping the week (the pre-round-12 left join
     // silently undercounted total churn by exactly such rows).
-    val dir = java.nio.file.Files.createTempDirectory("graft-a24s").toString
+    val dir = SparkSpec.tmpDir("graft-a24s")
     try {
       Seq(("A", "1970-01-01 10:00:00"),
         ("B", "1970-01-02 10:00:00"), ("B", "1970-01-15 10:00:00"))

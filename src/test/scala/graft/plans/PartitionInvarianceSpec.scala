@@ -180,7 +180,7 @@ class PartitionInvarianceSpec extends SparkSpec {
     val oldFx = spark.conf.getOption("spark.graft.fixtureDir")
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     spark.conf.set("spark.graft.fixtureDir",
-      java.nio.file.Files.createTempDirectory("pinv-fx").toString)
+      SparkSpec.tmpDir("pinv-fx"))
     graft.Materialize.resetFixtureMemo()
     try SparkEntry.queries(name)(spark, sfDir).collect().map(_.toString).toSeq
     finally {

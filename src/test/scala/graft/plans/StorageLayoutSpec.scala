@@ -1,6 +1,5 @@
 package graft.plans
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -14,8 +13,6 @@ import graft.{SparkSpec, Tables}
   * The specs assert the PLAN SHAPE, not just the answer.
   */
 class StorageLayoutSpec extends SparkSpec {
-
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
 
   private def shuffleCount(df: org.apache.spark.sql.DataFrame): Int = {
     df.collect() // materialize so AQE finalizes the plan
@@ -71,7 +68,7 @@ class StorageLayoutSpec extends SparkSpec {
     // filters (reusing the broadcast) and untouched year directories are
     // never read
     import spark.implicits._
-    val dir = tmp("graft-dpp")
+    val dir = SparkSpec.tmpDir("graft-dpp")
     Tables.orders(spark, sfDir)
       .withColumn("order_year", year(col("o_orderdate")))
       .write.partitionBy("order_year").mode("overwrite").parquet(dir)
@@ -79,7 +76,7 @@ class StorageLayoutSpec extends SparkSpec {
     // the dim must be a real scan with a real Filter node — a local Seq
     // constant-folds away (ConvertToLocalRelation), leaving no selective
     // predicate for the PartitionPruning rule to key on
-    val dimDir = tmp("graft-dpp-dim")
+    val dimDir = SparkSpec.tmpDir("graft-dpp-dim")
     Seq((1996, "keep"), (1997, "drop"), (1998, "drop")).toDF("yr", "tag")
       .write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir)
@@ -96,7 +93,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("partition pruning: a date-bounded scan reads only matching partitions") {
-    val dir = tmp("graft-part")
+    val dir = SparkSpec.tmpDir("graft-part")
     Tables.orders(spark, sfDir)
       .withColumn("order_year", year(col("o_orderdate")))
       .write.partitionBy("order_year").mode("overwrite").parquet(dir)

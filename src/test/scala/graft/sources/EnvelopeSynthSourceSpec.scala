@@ -82,7 +82,7 @@ class EnvelopeSynthSourceSpec extends SparkSpec {
           got.put(id, df.select("sequence_number").collect().map(_.getLong(0)).toSeq)
           ()
         }
-        .option("checkpointLocation", java.nio.file.Files.createTempDirectory("synth-trigger").toString)
+        .option("checkpointLocation", SparkSpec.tmpDir("synth-trigger"))
         .trigger(trigger)
         .start()
       q.awaitTermination()
@@ -102,7 +102,7 @@ class EnvelopeSynthSourceSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     import graft.streaming.{Pipelines, SinkRetry}
     val (records, shards) = (3000L, 7)
-    val ckpt = java.nio.file.Files.createTempDirectory("synth-state-ckpt").toString
+    val ckpt = SparkSpec.tmpDir("synth-state-ckpt")
     val emitted = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
     val transientFired = new java.util.concurrent.atomic.AtomicBoolean(false)
     val fatalFired = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -139,8 +139,8 @@ class EnvelopeSynthSourceSpec extends SparkSpec {
 
   test("micro-batch stream: chunked batches, offsets are sequence checkpoints, restart resumes") {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val ckpt = java.nio.file.Files.createTempDirectory("synth-stream-ckpt").toString
-    val sink = java.nio.file.Files.createTempDirectory("synth-stream-sink").toString
+    val ckpt = SparkSpec.tmpDir("synth-stream-ckpt")
+    val sink = SparkSpec.tmpDir("synth-stream-sink")
 
     def run(records: Long): Unit = {
       val q = spark.readStream.format("graft.sources.EnvelopeSynthSource")
@@ -174,7 +174,7 @@ class EnvelopeSynthSourceSpec extends SparkSpec {
     assert(decoded.agg(sum(col("id").cast("long"))).head().getLong(0) === 100000L * 100001L / 2)
     // matches the offline producer's routing exactly
     val producer = new graft.streaming.ShardedBatchProducer(
-      java.nio.file.Files.createTempDirectory("synth-cmp").toString, 32, 500)
+      SparkSpec.tmpDir("synth-cmp"), 32, 500)
     val expected = (1L to 1000L).groupBy(producer.shardOf).map { case (s, ids) =>
       (f"shardId-$s%012d", ids.size.toLong)
     }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{SparkSpec, Tables}
@@ -12,8 +11,6 @@ import graft.{SparkSpec, Tables}
   * (a schema-inference pass is a full extra read of the data).
   */
 class FormatRoundTripSpec extends SparkSpec {
-
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
 
   private val schema = StructType(Seq(
     StructField("o_orderkey", LongType),
@@ -31,21 +28,21 @@ class FormatRoundTripSpec extends SparkSpec {
   }
 
   test("csv round-trip with explicit schema preserves values") {
-    val dir = tmp("graft-csv")
+    val dir = SparkSpec.tmpDir("graft-csv")
     sample.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.schema(schema).option("header", "true").csv(dir)
     assert(fingerprint(back) === fingerprint(sample))
   }
 
   test("json-lines round-trip with explicit schema preserves values") {
-    val dir = tmp("graft-json")
+    val dir = SparkSpec.tmpDir("graft-json")
     sample.write.mode("overwrite").json(dir)
     val back = spark.read.schema(schema).json(dir)
     assert(fingerprint(back) === fingerprint(sample))
   }
 
   test("orc round-trip with explicit schema preserves values and pushes filters") {
-    val dir = tmp("graft-orc")
+    val dir = SparkSpec.tmpDir("graft-orc")
     sample.write.mode("overwrite").orc(dir)
     val back = spark.read.schema(schema).orc(dir)
     assert(fingerprint(back) === fingerprint(sample))
@@ -57,7 +54,7 @@ class FormatRoundTripSpec extends SparkSpec {
   }
 
   test("zstd parquet round-trip preserves values and keeps pushdown") {
-    val dir = tmp("graft-zstd")
+    val dir = SparkSpec.tmpDir("graft-zstd")
     sample.write.mode("overwrite").option("compression", "zstd").parquet(dir)
     val back = spark.read.parquet(dir).filter(col("o_totalprice") > 100000)
     val scan = back.queryExecution.sparkPlan.collect {

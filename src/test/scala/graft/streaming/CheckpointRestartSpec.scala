@@ -13,12 +13,10 @@ import graft.SparkSpec
   */
 class CheckpointRestartSpec extends SparkSpec {
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
-
   test("restart from checkpoint: two runs over a growing input produce exactly-once output") {
-    val src = tmp("graft-src")
-    val ckpt = tmp("graft-restart-ckpt")
-    val sink = tmp("graft-restart-sink")
+    val src = SparkSpec.tmpDir("graft-src")
+    val ckpt = SparkSpec.tmpDir("graft-restart-ckpt")
+    val sink = SparkSpec.tmpDir("graft-restart-sink")
     val producer = new ShardedBatchProducer(src, nrShards = 8, batchSize = 100)
 
     def runOnce(): Unit = {
@@ -51,8 +49,8 @@ class CheckpointRestartSpec extends SparkSpec {
     import graft.functions.HashingFunctions.simhash64
     val s = spark
     import s.implicits._
-    val src = tmp("graft-dedup-src")
-    val ckpt = tmp("graft-dedup-ckpt")
+    val src = SparkSpec.tmpDir("graft-dedup-src")
+    val ckpt = SparkSpec.tmpDir("graft-dedup-ckpt")
 
     def doc(id: Long, text: String) = (id, text)
     // tranche 1: three distinct docs
@@ -111,8 +109,8 @@ class CheckpointRestartSpec extends SparkSpec {
   }
 
   test("stateful restart: mapGroupsWithState per-shard counts survive a restart") {
-    val src = tmp("graft-state-src")
-    val ckpt = tmp("graft-state-ckpt")
+    val src = SparkSpec.tmpDir("graft-state-src")
+    val ckpt = SparkSpec.tmpDir("graft-state-ckpt")
     val producer = new ShardedBatchProducer(src, nrShards = 4, batchSize = 100)
 
     // memory sink can't recover from a checkpoint — foreachBatch can, and
@@ -156,9 +154,9 @@ class CheckpointRestartSpec extends SparkSpec {
     // commit checkpoint + file-sink metadata log must deliver EXACTLY
     // the emitted records — no loss from the kills, no duplication from
     // re-run in-flight batches.
-    val src = tmp("graft-chaos-src")
-    val ckpt = tmp("graft-chaos-ckpt")
-    val sink = tmp("graft-chaos-sink")
+    val src = SparkSpec.tmpDir("graft-chaos-src")
+    val ckpt = SparkSpec.tmpDir("graft-chaos-ckpt")
+    val sink = SparkSpec.tmpDir("graft-chaos-sink")
     val producer = new ShardedBatchProducer(src, nrShards = 8, batchSize = 100)
     val total = 10000L
 
@@ -218,9 +216,9 @@ class CheckpointRestartSpec extends SparkSpec {
     //  - with takeover disabled: B's start() is REFUSED loudly ("same id
     //    is already active") and A is untouched — never two writers
     //    interleaving commits on one checkpoint.
-    val src = tmp("graft-compete-src")
-    val ckpt = tmp("graft-compete-ckpt")
-    val sink = tmp("graft-compete-sink")
+    val src = SparkSpec.tmpDir("graft-compete-src")
+    val ckpt = SparkSpec.tmpDir("graft-compete-ckpt")
+    val sink = SparkSpec.tmpDir("graft-compete-sink")
     val producer = new ShardedBatchProducer(src, nrShards = 8, batchSize = 100)
 
     def start(trigger: Trigger) =
@@ -280,7 +278,7 @@ class CheckpointRestartSpec extends SparkSpec {
 
   test("at-least-once to exactly-once: dropDuplicatesWithinWatermark collapses redelivery") {
     import spark.implicits._
-    val src = tmp("graft-dedup-src")
+    val src = SparkSpec.tmpDir("graft-dedup-src")
     val producer = new ShardedBatchProducer(src, nrShards = 4, batchSize = 100)
     producer.emit(1, 501)
     producer.emit(1, 501) // same ids again — simulated redelivery (C5)

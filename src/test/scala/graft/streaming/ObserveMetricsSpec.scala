@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, Trigger}
@@ -15,7 +14,7 @@ import graft.SparkSpec
 class ObserveMetricsSpec extends SparkSpec {
 
   test("observe(): per-batch metrics count the stream without altering it") {
-    val dir = Files.createTempDirectory("graft-observe").toString
+    val dir = SparkSpec.tmpDir("graft-observe")
     val n = 3000L
     new ShardedBatchProducer(dir, nrShards = 8, batchSize = 500).emit(1, n + 1)
 

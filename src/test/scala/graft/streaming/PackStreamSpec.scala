@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.SparkSpec
 
@@ -32,7 +31,7 @@ class PackStreamSpec extends SparkSpec {
 
   test("multi-batch stream: offsets carry across batches per source") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-pack").toString
+    val dir = SparkSpec.tmpDir("graft-pack")
 
     def writeBatch(name: String, mtimeOffsetMs: Long,
                    rows: Seq[(Long, String, String)]): Unit = {

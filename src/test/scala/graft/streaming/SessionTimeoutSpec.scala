@@ -18,7 +18,7 @@ case class SessAcc(n: Long, minTs: Long, maxTs: Long)
 class SessionTimeoutSpec extends SparkSpec {
 
   test("event-time timeout emits closed sessions once the watermark passes") {
-    val dir = Files.createTempDirectory("graft-sess").toString
+    val dir = SparkSpec.tmpDir("graft-sess")
     val producer = new ShardedBatchProducer(dir, nrShards = 4, batchSize = 1000)
     // burst 1: seqs 1..100 → ts base+1..base+100 ms (one session per shard)
     producer.emit(1, 101)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -64,8 +63,8 @@ class SinkRetrySpec extends SparkSpec {
   }
 
   test("foreachBatch wrapper rides out an injected transient sink outage end-to-end") {
-    val src = Files.createTempDirectory("graft-retry-src").toString
-    val sink = Files.createTempDirectory("graft-retry-sink").toString
+    val src = SparkSpec.tmpDir("graft-retry-src")
+    val sink = SparkSpec.tmpDir("graft-retry-sink")
     new ShardedBatchProducer(src, nrShards = 4, batchSize = 100).emit(1, 401)
 
     val failuresLeft = new java.util.concurrent.atomic.AtomicInteger(2)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.SparkSpec
 
@@ -11,14 +10,12 @@ import graft.SparkSpec
   */
 class StreamingPipelineSpec extends SparkSpec {
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
-
   test("count conservation at reference scale: 100k records == 100k counted across 32 shards") {
     // exact reference workload parameters: nrRecords = 100000, batchSize =
     // 500, nrShards = 32 (FlattenChunksTest.scala:25-27), same invariant
     // (:59) — processed count conserved across all shards.
-    val dir = tmp("graft-ingest")
-    val ckpt = tmp("graft-ckpt")
+    val dir = SparkSpec.tmpDir("graft-ingest")
+    val ckpt = SparkSpec.tmpDir("graft-ckpt")
     val n = 100000L
     val producer = new ShardedBatchProducer(dir, nrShards = 32, batchSize = 500)
     producer.emit(1, n + 1)
@@ -40,7 +37,7 @@ class StreamingPipelineSpec extends SparkSpec {
     // the sf fixture is one parquet file (one batch); here 6 files +
     // maxFilesPerTrigger(1) force a genuinely multi-batch run, so the
     // cross-batch fold (longs add, decimal value mass) is what's tested
-    val dir = tmp("graft-observe")
+    val dir = SparkSpec.tmpDir("graft-observe")
     val df = spark.range(600).select(
       col("id").as("event_id"),
       (col("id") % 7 * 30.5 + 1.0).as("value"))
@@ -62,7 +59,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("per-shard counts and last-seq match the producer's deterministic routing") {
-    val dir = tmp("graft-shards")
+    val dir = SparkSpec.tmpDir("graft-shards")
     val n = 2000L
     val producer = new ShardedBatchProducer(dir, nrShards = 8, batchSize = 250)
     producer.emit(1, n + 1)
@@ -138,8 +135,8 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("stream-stream interval join: two sharded streams join on key within a time bound") {
     import org.apache.spark.sql.functions._
-    val dirA = tmp("graft-ss-a")
-    val dirB = tmp("graft-ss-b")
+    val dirA = SparkSpec.tmpDir("graft-ss-a")
+    val dirB = SparkSpec.tmpDir("graft-ss-b")
     new ShardedBatchProducer(dirA, nrShards = 4, batchSize = 200).emit(1, 1001)
     new ShardedBatchProducer(dirB, nrShards = 4, batchSize = 200).emit(500, 1501)
 
@@ -190,7 +187,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val tmpRoot = new java.io.File(sys.props("java.io.tmpdir"))
     def sinkDirs() = Option(tmpRoot.list()).toSeq.flatten.filter(_.startsWith("graft_retry_sink_")).toSet
     val before = sinkDirs()
-    val scratch = tmp("graft-s09-scratch")
+    val scratch = SparkSpec.tmpDir("graft-s09-scratch")
     val s = spark.newSession()
     s.conf.set("spark.graft.scratchDir", scratch)
     val s09 = StreamingQueries.queries("s09_stream_append_finalized")(s, sfDir)
@@ -201,7 +198,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("stream limit: listener stops the query once >= N records are ingested") {
-    val dir = tmp("graft-limit")
+    val dir = SparkSpec.tmpDir("graft-limit")
     val n = 5000L
     val limit = 1200L
     val producer = new ShardedBatchProducer(dir, nrShards = 4, batchSize = 100)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -53,7 +52,7 @@ class TransitionStreamSpec extends SparkSpec {
 
   test("multi-batch stream: state carries across batches, matrix == batch answer") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-trans").toString
+    val dir = SparkSpec.tmpDir("graft-trans")
 
     // one parquet file per micro-batch, mtime-ordered (the file source
     // processes in modification-time order; maxFilesPerTrigger=1 makes

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.SparkSpec
@@ -18,7 +17,7 @@ class TtlDedupStreamSpec extends SparkSpec {
 
   test("watermark evicts finalized buckets: a too-late duplicate is dropped, not counted") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-ttl").toString
+    val dir = SparkSpec.tmpDir("graft-ttl")
 
     def writeBatch(name: String, mtimeOffsetMs: Long,
                    rows: Seq[(Long, Long, String, Long)]): Unit = {
