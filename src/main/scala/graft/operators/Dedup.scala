@@ -265,23 +265,20 @@ object Dedup {
     * execution (the e18 lesson, found by the same sweep).
     */
   private[operators] def calibSketchAndCandidates(
-      s: SparkSession, dir: String, tag: String): (DataFrame, DataFrame) = {
+      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     // PER-JVM SHARED FIXTURES (round 13): d16 and d21 consume the
     // identical k=16 sketch table and ANY-min-agrees candidate set, and
     // each was re-paying the shingle+sketch chain AND the band
     // explode + capped-bucket pair join per query (per-query toStorage
     // tags kept the copies separate for no reason — the content is
-    // dir-determined). The `tag` parameter stays for call-site
-    // compatibility but the storage is keyed on the data dir alone.
+    // dir-determined). The storage is keyed on the data dir alone.
     val sk = graft.Materialize.fixture(s, "dx-calibsk", dir)(shingled(s, dir)
       .select(col("doc_id"),
         minhash_signature(col("sh"), CalibK).as("sig"),
         sort_array(transform(col("sh"), g => xxhash64(g))).as("hsh")))
     val cand = graft.Materialize.fixture(s, "dx-calibcand", dir) {
-      val ex = sk.select(col("doc_id"), posexplode(col("sig")).as(Seq("j", "mv")))
-      val ok = ex.groupBy("j", "mv").agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") <= MaxBucket).select("j", "mv")
-      val bounded = ex.join(ok, Seq("j", "mv"))
+      val bounded = admitted(sk.select(col("doc_id"), posexplode(col("sig")).as(Seq("j", "mv"))),
+        Seq("j", "mv"), 1, MaxBucket)
       bounded.select(col("doc_id").as("id_a"), col("j"), col("mv"))
         .join(bounded.select(col("doc_id").as("id_b"), col("j"), col("mv")),
           Seq("j", "mv"))
@@ -337,24 +334,13 @@ object Dedup {
     val bands = sh.select(col("doc_id"), col("simhash"),
         explode(array(bandCols: _*)).as("bb"))
       .select(col("doc_id"), col("simhash"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    // count-first cap (see minhashBandCandidates): degenerate buckets
-    // are dropped before their member arrays exist
-    val admitted = bands.groupBy("band", "bkey")
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > 1 && col("bsz") <= MaxBucket)
-      .select("band", "bkey")
-    val buckets = bands.join(admitted, Seq("band", "bkey"))
+    admitted(bands, Seq("band", "bkey"), 2, MaxBucket)
       .groupBy("band", "bkey")
       .agg(sort_array(collect_set(struct(col("doc_id"), col("simhash")))).as("members"))
-    val cand = buckets
-      .select(explode(flatten(transform(col("members"), (x, i) =>
-        transform(slice(col("members"), i + 2, size(col("members"))), y =>
-          struct(x.getField("doc_id").as("id_a"), y.getField("doc_id").as("id_b"),
-            x.getField("simhash").as("h_a"), y.getField("simhash").as("h_b")))))).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-        col("p.h_a").as("h_a"), col("p.h_b").as("h_b"))
+      .select(explode(pairsOf(col("members"))).as("p"))
+      .select(col("p.id_a.doc_id").as("id_a"), col("p.id_b.doc_id").as("id_b"),
+        col("p.id_a.simhash").as("h_a"), col("p.id_b.simhash").as("h_b"))
       .distinct()
-    cand
       .select(col("id_a"), col("id_b"),
         bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long").as("hamming"))
       .filter(col("hamming") <= 3)
@@ -428,7 +414,9 @@ object Dedup {
       .orderBy("sb")
   }
 
-  /** All unordered candidate pairs from an array of bucket members. */
+  /** All unordered candidate pairs (id_a, id_b) from an array of bucket
+    * members; each side carries its whole member value.
+    */
   private def pairsOf(ids: Column): Column =
     flatten(transform(ids, (x, i) =>
       transform(slice(ids, i + 2, size(ids)), y => struct(x.as("id_a"), y.as("id_b")))))
@@ -444,29 +432,14 @@ object Dedup {
           .as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
 
-  /** Band rows restricted to admitted buckets: >1 member (pairs possible)
-    * and ≤ maxBucket. The cap must act BEFORE collect_set: a count
-    * aggregate (constant state per bucket) decides which buckets live, so
-    * a degenerate bucket is dropped without ever materializing its member
-    * array — filtering on size(ids) afterwards would already have built
-    * the arbitrarily large array in executor memory.
-    */
-  private def admittedBands(bands: DataFrame, maxBucket: Int): DataFrame =
-    bands.join(
-      bands.groupBy("band", "bkey")
-        .agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") > 1 && col("bsz") <= maxBucket)
-        .select("band", "bkey"),
-      Seq("band", "bkey"))
-
   /** d08/d22 asymmetric probe over a (doc_id, sig, hsh) index: the band
     * rows `isNew` keeps from the admitted bands equi-join every admitted
     * band row, and each candidate pair is exact-Jaccard verified — every
     * pair includes at least one new doc, and old×old is never paired.
     */
   private def incrementalPairs(idx: DataFrame, isNew: DataFrame => DataFrame): DataFrame = {
-    val bandsAll = admittedBands(
-      minhashBands(idx.select(col("doc_id"), col("sig"))), MaxBucket)
+    val bandsAll = admitted(
+      minhashBands(idx.select(col("doc_id"), col("sig"))), Seq("band", "bkey"), 2, MaxBucket)
     val bandsNew = isNew(bandsAll).withColumnRenamed("doc_id", "new_id")
     bandsAll.join(bandsNew, Seq("band", "bkey"))
       .filter(col("doc_id") =!= col("new_id"))
@@ -485,7 +458,7 @@ object Dedup {
     */
   private[operators] def minhashBandCandidates(sig: DataFrame,
                                                maxBucket: Int = MaxBucket): DataFrame =
-    admittedBands(minhashBands(sig), maxBucket)
+    admitted(minhashBands(sig), Seq("band", "bkey"), 2, maxBucket)
       .groupBy("band", "bkey")
       .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
       .select(explode(pairsOf(col("ids"))).as("p"))
@@ -494,11 +467,9 @@ object Dedup {
 
   /** d04 core: within-block all-pairs exact Jaccard over a
     * (doc_id, lang, source, sh) frame — with the block admission decided
-    * COUNT-FIRST, exactly like `admittedBands` does for d03's LSH
-    * buckets: a count aggregate (constant state per block) picks which
-    * (lang, source) blocks enter the pair join, so a degenerate block — a
-    * crawl where one source dominates — is dropped BEFORE the n²-per-block
-    * self-join can materialize its pair space. Without the cap this was
+    * COUNT-FIRST (`admitted`), exactly like d03's LSH buckets: a
+    * degenerate block — a crawl where one source dominates — is dropped
+    * BEFORE the self-join can build its pairs. Without the cap this was
     * the catalog's last unbounded quadratic: pair count grows as Σ|block|²
     * and a single million-doc block is 5·10¹¹ pairs. With it, pairs ≤
     * #blocks · maxBlock²/2 — bounded by a config constant, not the data.
@@ -510,11 +481,7 @@ object Dedup {
     */
   private[operators] def blockedJaccardPairs(d: DataFrame,
                                              maxBlock: Int = MaxBucket): DataFrame = {
-    val admittedBlocks = d.groupBy("lang", "source")
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > 1 && col("bsz") <= maxBlock)
-      .select("lang", "source")
-    val adm = d.join(admittedBlocks, Seq("lang", "source"))
+    val adm = admitted(d, Seq("lang", "source"), 2, maxBlock)
     val a = adm.select(col("lang"), col("source"), col("doc_id").as("id_a"), col("sh").as("sh_a"))
     val b = adm.select(col("lang"), col("source"), col("doc_id").as("id_b"), col("sh").as("sh_b"))
     a.join(b, Seq("lang", "source"))
@@ -528,11 +495,7 @@ object Dedup {
     * exclusion) independent of the fixture.
     */
   private[operators] def containmentPairs(toks: DataFrame): DataFrame = {
-    val rare = toks.join(
-      toks.groupBy("tok").agg(count(lit(1)).as("df"))
-        .filter(col("df") >= 2 && col("df") <= DfCap)
-        .select("tok"),
-      "tok")
+    val rare = admitted(toks, Seq("tok"), 2, DfCap)
     val rareSz = rare.groupBy("doc_id").agg(count(lit(1)).as("n_rare"))
     val a = rare.select(col("tok"), col("doc_id").as("id_a"))
     val b = rare.select(col("tok"), col("doc_id").as("id_b"))
@@ -750,7 +713,7 @@ object Dedup {
     // is scan-speed, candidates are capped-bucket-join-bounded, and
     // the output is ≤ k+1 rows.
     "d16_minhash_calibration" -> ((s, dir) => {
-      val (sk, cand) = calibSketchAndCandidates(s, dir, "d16_sk")
+      val (sk, cand) = calibSketchAndCandidates(s, dir)
       locally {
         val scored = cand
           .join(sk.select(col("doc_id").as("id_a"), col("sig").as("sig_a"),
@@ -789,7 +752,7 @@ object Dedup {
     // sketch at scan speed, capped-bucket candidates, exact verify over
     // 8-byte hash arrays, one bounded window per doc — never all-pairs.
     "d21_lexical_knn" -> ((s, dir) => {
-      val (sk, cand) = calibSketchAndCandidates(s, dir, "d21_sk")
+      val (sk, cand) = calibSketchAndCandidates(s, dir)
       val scored = cand
         .join(sk.select(col("doc_id").as("id_a"), col("hsh").as("hsh_a")), "id_a")
         .join(sk.select(col("doc_id").as("id_b"), col("hsh").as("hsh_b")), "id_b")

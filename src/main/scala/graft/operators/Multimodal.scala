@@ -135,8 +135,8 @@ object Multimodal {
     * crafted signature sets.
     */
   private[operators] def shotSigPairs(sigs: DataFrame): DataFrame = {
-    val df = sigs.groupBy("key_sig").agg(count(lit(1)).as("df"))
-    val keep = sigs.join(df.filter(col("df") <= ShotSigDfCap).select("key_sig"), "key_sig")
+    // singletons stay: nsig counts them
+    val keep = admitted(sigs, Seq("key_sig"), 1, ShotSigDfCap)
     val sz = keep.groupBy("doc_id").agg(count(lit(1)).as("nsig"))
     val shared = keep.select(col("key_sig"), col("doc_id").as("doc_a"))
       .join(keep.select(col("key_sig"), col("doc_id").as("doc_b")), "key_sig")

@@ -677,17 +677,17 @@ object Similarity {
         hyperplane_lsh_multi(col("embedding"), derivedLshBits(e.count()), 48, 64, seed = 7L))
       .select((col("vec_id") +: carry :+ posexplode(col("buckets")).as(Seq("tbl", "bucket"))): _*)
 
-  /** lshBuckets restricted to buckets of at most 10000 members — the cap
-    * that keeps one degenerate bucket from going quadratic. The candidate
-    * generator of e01b/e04b/e13/e14/e18; mirrored by duckLshBoundedCtes.
+  /** Most members an LSH bucket may have and still pair its vectors —
+    * the cap that keeps one degenerate bucket from going quadratic.
     */
-  private def lshBounded(e: DataFrame, carry: Column*): DataFrame = {
-    val ex = lshBuckets(e, carry: _*)
-    ex.join(
-      ex.groupBy("tbl", "bucket").agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") <= 10000L).select("tbl", "bucket"),
-      Seq("tbl", "bucket"))
-  }
+  private val LshBucketCap = 10000L
+
+  /** lshBuckets restricted to buckets of at most LshBucketCap members.
+    * The candidate generator of e01b/e04b/e13/e14/e18; mirrored by
+    * duckLshBoundedCtes.
+    */
+  private def lshBounded(e: DataFrame, carry: Column*): DataFrame =
+    admitted(lshBuckets(e, carry: _*), Seq("tbl", "bucket"), 1, LshBucketCap)
 
   /** The all-corpus carry-through scored pair stream of e01b/e04b/e18:
     * bounded bucket-mates (`a`, `b`) kept by `keep`, with cos_sim
@@ -1270,7 +1270,7 @@ object Similarity {
     // decision — the ingestion-time gate a vector store runs.
     "e13_incremental_embedding_dedup" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      // e04b's bucket machinery (derived-bits × 48 tables, cap 10000)
+      // e04b's bucket machinery (derived-bits × 48 tables, LshBucketCap)
       // with the probe side pre-filtered before pairing
       val bounded = lshBounded(e)
       val probe = bounded.filter(col("vec_id") % 10 === 0)
@@ -2490,12 +2490,12 @@ object Similarity {
          |), $duckRrfTail""".stripMargin
 
   /** duckLshCtes plus e01b's bucket cap: `bok` the (table, bucket) keys
-    * of at most 10000 vectors, `bounded(vec_id, tbl, bucket)` their
+    * of at most LshBucketCap vectors, `bounded(vec_id, tbl, bucket)` their
     * signatures.
     */
   private def duckLshBoundedCtes: String =
     s"""${duckLshCtes()}, bok AS (
-       |  SELECT tbl, bucket FROM sigs GROUP BY tbl, bucket HAVING COUNT(*) <= 10000
+       |  SELECT tbl, bucket FROM sigs GROUP BY tbl, bucket HAVING COUNT(*) <= $LshBucketCap
        |), bounded AS (
        |  SELECT s.vec_id, s.tbl, s.bucket FROM sigs s JOIN bok USING (tbl, bucket)
        |)""".stripMargin

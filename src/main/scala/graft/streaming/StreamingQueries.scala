@@ -285,18 +285,8 @@ object StreamingQueries {
     // A3/A4 — per-key running state via mapGroupsWithState (the per-shard
     // fold + last-processed Ref of CheckpointOnChunkEndStreamClient.scala:
     // 52-85, keyed by user). Order-independent state so the emission is
-    // exact; single AvailableNow batch ⇒ one emission per key.
-    "s04_stream_user_state" -> ((s, dir) => {
-      import s.implicits._
-      userStateRows(userEvents(s, dir)
-        .groupByKey(_.user_id)
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-          (user: Long, rows: Iterator[UserEvent], state: GroupState[UserState]) =>
-            val next = userStep(state.getOption, rows)
-            state.update(next)
-            UserStateOut(user, next.n, next.minId, next.maxTs)
-        }.toDF())
-    }),
+    // exact however the events are cut into micro-batches.
+    "s04_stream_user_state" -> ((s, dir) => userStateFold(userEvents(s, dir))),
 
     // the NEW stateful API (Spark 4 transformWithState / state v2): s04's
     // exact semantics — same oracle — through a StatefulProcessor with a
@@ -314,11 +304,7 @@ object StreamingQueries {
       val s2 = s.newSession()
       s2.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      import s2.implicits._
-      userStateRows(userEvents(s2, dir)
-        .groupByKey(_.user_id)
-        .transformWithState(new UserStateProcessor, TimeMode.None(), OutputMode.Update())
-        .toDF())
+      userStateTws(userEvents(s2, dir))
     }),
 
     // STREAMING OHLC — a12's downsampling as a stateful streaming agg:
@@ -827,11 +813,38 @@ object StreamingQueries {
       .as[UserEvent]
   }
 
-  /** s04/s14 output: drain the per-user state stream, max ts as text. */
+  /** s04's fold over `events`: mapGroupsWithState, one row per user. */
+  private[streaming] def userStateFold(events: Dataset[UserEvent]): DataFrame = {
+    val s = events.sparkSession
+    import s.implicits._
+    userStateRows(events.groupByKey(_.user_id)
+      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+        (user: Long, rows: Iterator[UserEvent], state: GroupState[UserState]) =>
+          val next = userStep(state.getOption, rows)
+          state.update(next)
+          UserStateOut(user, next.n, next.minId, next.maxTs)
+      }.toDF())
+  }
+
+  /** s14's fold over `events`, whose session must use the RocksDB state
+    * store: transformWithState, one row per user.
+    */
+  private[streaming] def userStateTws(events: Dataset[UserEvent]): DataFrame = {
+    val s = events.sparkSession
+    import s.implicits._
+    userStateRows(events.groupByKey(_.user_id)
+      .transformWithState(new UserStateProcessor, TimeMode.None(), OutputMode.Update()).toDF())
+  }
+
+  /** s04/s14 output: drain the per-user state stream, max ts as text. The
+    * Update-mode sink keeps every micro-batch's emission; n_events grows
+    * with each one, so a user's largest is its final state.
+    */
   private def userStateRows(stated: DataFrame): DataFrame =
     runToTable(stated, OutputMode.Update())
-      .withColumn("max_ts", date_format(timestamp_seconds(col("max_ts_sec")), "yyyy-MM-dd HH:mm:ss"))
-      .select("user_id", "n_events", "min_event_id", "max_ts")
+      .groupBy("user_id").agg(max(struct("n_events", "min_event_id", "max_ts_sec")).as("last"))
+      .select(col("user_id"), col("last.n_events"), col("last.min_event_id"),
+        date_format(timestamp_seconds(col("last.max_ts_sec")), "yyyy-MM-dd HH:mm:ss").as("max_ts"))
       .orderBy("user_id")
 
   /** s04/s14 per-user step: fold one batch's events onto the carried

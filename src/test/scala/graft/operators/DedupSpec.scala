@@ -148,6 +148,14 @@ class DedupSpec extends SparkSpec {
     val mixedSig = mixed.select(col("doc_id"),
       minhash_signature(wordShingles(col("text"), 3), Dedup.MinHashK).as("sig"))
     assert(Dedup.minhashBandCandidates(mixedSig).count() === 45L) // C(10,2), loner excluded
+    // the admission kernel's bounds: groups of 1, cap and cap + 1 members
+    val cap = 4
+    val groups = Seq(1 -> 1, 2 -> cap, 3 -> (cap + 1))
+      .flatMap { case (k, sz) => (1 to sz).map(i => (k.toLong, i.toLong)) }.toDF("k", "id")
+    def kept(minSize: Long) = admitted(groups, Seq("k"), minSize, cap)
+      .groupBy("k").count().as[(Long, Long)].collect().sorted.toSeq
+    assert(kept(1) === Seq(1L -> 1L, 2L -> cap.toLong), "singleton and cap-sized groups kept whole, cap + 1 dropped")
+    assert(kept(2) === Seq(2L -> cap.toLong), "minSize 2 drops the singleton")
   }
 
   test("block cap: a single dominant (lang, source) block cannot explode d04's pair join") {
