@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.execution.command.DataWritingCommand
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dumps `.explain("formatted")` for catalog queries, one file per query:
   * the human-readable plan evidence (scan pushdown, broadcast choices, agg
@@ -11,6 +13,12 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * writes <outDir>/<name>_<suffix>.txt for each query; an absent or empty
   * name list dumps the flagships. sfDir defaults to the bench default.
+  * Every parquet write that building a query runs on this session (its
+  * `Materialize` fixture builds and scratch carries, not a loop's writes
+  * on its own `Materialize.loopSession`) lands next to it as
+  * <name>_<suffix>_build<i>.txt, in write order; the fixture memo is reset
+  * before each name, so a fixture another name built first is built (and
+  * dumped) again.
   */
 object PlanFiles {
 
@@ -35,11 +43,23 @@ object PlanFiles {
     val sfDir = args.lift(3).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val spark = CatalogRunner.session()
+    val formatted = ExplainMode.fromString("formatted")
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.isInstanceOf[DataWritingCommand]) writes.add(qe.explainString(formatted))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
+      Materialize.resetFixtureMemo()
       val df = SparkEntry.queries(name)(spark, sfDir)
       Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
-        df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+        df.queryExecution.explainString(formatted))
+      org.apache.spark.sql.graft.Bridge.drainListeners(spark)
+      Iterator.continually(writes.poll()).takeWhile(_ != null).zipWithIndex.foreach { case (plan, i) =>
+        Files.writeString(Paths.get(s"$outDir/${name}_${suffix}_build$i.txt"), plan)
+      }
       System.err.println(s"[plans] wrote $name ($suffix)")
     }
     spark.stop()

@@ -14,9 +14,23 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Whitespace tokens of lower-cased text, empties dropped. */
+  /** Whitespace tokens of lower-cased text, empties dropped. Split on the
+    * ASCII space only: a tab or newline stays inside its token.
+    */
   def tokens(text: Column): Column =
     filter(split(lower(text), " "), t => length(t) > 0)
+
+  /** Lower-cased text with every char outside `[a-z0-9 ]` dropped (spaces
+    * kept as they are): the exact-dedup key.
+    */
+  def normText(text: Column): Column =
+    regexp_replace(lower(text), "[^a-z0-9 ]", "")
+
+  /** The maximal runs of ASCII letters in lower-cased text, in order: the
+    * BPE vocabulary's words and the pretokenizer's letter class.
+    */
+  def alphaWords(text: Column): Column =
+    regexp_extract_all(lower(text), lit("[a-z]+"), lit(0))
 
   /** Word n-grams in document order (repeats kept; docs shorter than n
     * yield an empty array). Native single-pass expression — see

@@ -36,7 +36,6 @@ object Curation {
       // corpus once (Materialize: lineage-keeping persist; a
       // disk-backed intermediate table in production) so the corpus is
       // scanned and scored exactly once.
-      val norm = regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")
       // quality_score is COMPUTED ONCE at the gate and carried through
       // the materialized frame (round 13): the final projection used to
       // re-run the regex-heavy scorer over every surviving row — the
@@ -47,7 +46,7 @@ object Curation {
       val gated = graft.Materialize(Tables.documents(s, dir)
         .withColumn("q", qualityScore(col("text")))
         .filter(col("q") >= QualityMin && langId(col("text")) === "en")
-        .withColumn("fp", xxhash64(norm)))
+        .withColumn("fp", xxhash64(normText(col("text")))))
 
       // stage 3: exact dedup on normalized text — keep the smallest doc_id.
       // Hash-first two-pass (d02's shape): group an 8-byte fingerprint of
@@ -310,11 +309,10 @@ object Curation {
     // median partition the straggler — at that skew the fix is the
     // t21-style two-pass rank, not a sketch.
     "p15_dataset_card" -> ((s, dir) => {
-      val norm = regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")
       val base = graft.Materialize(Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
           tokenCountWs(col("text")).as("nt"),
-          rolling_fingerprint(norm).as("fp")))
+          rolling_fingerprint(normText(col("text"))).as("fp")))
       // dup flag groups on the 64-bit fingerprint (the d02 convention:
       // the oracle groups on the full normalized text, so a fingerprint
       // collision between DISTINCT norms would over-count dup_ppm and
@@ -441,13 +439,12 @@ object Curation {
       // (Materialize.toStorage — same discipline as d07's edge table),
       // so the three rollups below scan an 8-byte-hash table and text
       // never leaves the first scan.
-      val toks = filter(split(lower(col("text")), " "), w => length(w) > 0)
       val hashed = graft.Materialize.toStorage(
         docs
-          .select(col("source"), col("doc_id"), col("text"), toks.as("w"))
+          .select(col("source"), col("doc_id"), col("text"), tokens(col("text")).as("w"))
           .select(col("source"), col("doc_id"),
             xxhash64(col("text")).as("h_exact"),
-            xxhash64(regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")).as("h_norm"),
+            xxhash64(normText(col("text"))).as("h_norm"),
             when(size(col("w")) >= Dedup.SubstringW,
               transform(sequence(lit(0), size(col("w")) - Dedup.SubstringW),
                 i => xxhash64(concat_ws(" ", slice(col("w"), i + lit(1), lit(Dedup.SubstringW))))))
@@ -629,13 +626,12 @@ object Curation {
       // returning — the result itself goes through Materialize.toStorage
       // (the iterative-result discipline), so the returned frame is a
       // plain scratch-file scan with no dependence on the caches
-      val norm = regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")
       val base = graft.Materialize(docs
         .select(col("doc_id"), col("source"), col("text"),
           (col("doc_id") % 97 === 0).as("is_eval"),
           (qualityScore(col("text")) >= QualityMin).as("q_ok"),
           (langId(col("text")) === "en").as("l_ok"),
-          xxhash64(norm).as("fp")))
+          xxhash64(normText(col("text"))).as("fp")))
       var sh: DataFrame = null
       try {
       val pool = base.filter(!col("is_eval") && col("q_ok") && col("l_ok"))
@@ -737,7 +733,7 @@ object Curation {
     */
   private val duckScoredCtes: String =
     s"""t AS (
-       |  SELECT *, ${DuckSql.tokens} AS toks
+       |  SELECT *, ${DuckSql.tokens()} AS toks
        |  FROM documents
        |), scored AS (
        |  SELECT *,
@@ -770,11 +766,11 @@ object Curation {
     */
   private lazy val duckSourceTokens: String =
     s"""SELECT source,
-       |    CAST(SUM(len(${DuckSql.tokens})) AS BIGINT)
+       |    CAST(SUM(len(${DuckSql.tokens()})) AS BIGINT)
        |      AS n_tokens
        |  FROM documents
        |  GROUP BY source
-       |  HAVING SUM(len(${DuckSql.tokens})) > 0""".stripMargin
+       |  HAVING SUM(len(${DuckSql.tokens()})) > 0""".stripMargin
 
   def oracles: Map[String, String] = Map(
     "p01_curation_pipeline" ->
@@ -784,7 +780,7 @@ object Curation {
          |), exact_kept AS (
          |  SELECT * FROM (
          |    SELECT *, ROW_NUMBER() OVER (
-         |      PARTITION BY regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')
+         |      PARTITION BY ${DuckSql.normText()}
          |      ORDER BY doc_id) AS rn
          |    FROM gated
          |  ) WHERE rn = 1
@@ -993,8 +989,8 @@ object Curation {
     "p15_dataset_card" ->
       s"""WITH base AS (
         |  SELECT doc_id, source, lang, n_chars,
-        |    len(${DuckSql.tokens}) AS nt,
-        |    regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS norm
+        |    len(${DuckSql.tokens()}) AS nt,
+        |    ${DuckSql.normText()} AS norm
         |  FROM documents
         |), dup AS (
         |  SELECT norm FROM base GROUP BY norm HAVING COUNT(*) >= 2
@@ -1035,7 +1031,7 @@ object Curation {
     "p11_dedup_yield" ->
       s"""${Dedup.duckClusterCtes}, tk AS (
          |  SELECT doc_id, source,
-         |    CAST(len(${DuckSql.tokens}) AS BIGINT) AS nt
+         |    CAST(len(${DuckSql.tokens()}) AS BIGINT) AS nt
          |  FROM documents
          |), ek AS (
          |  SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text
@@ -1092,12 +1088,12 @@ object Curation {
          |), pool AS (
          |  SELECT * FROM flags WHERE NOT is_eval AND q_ok AND l_ok
          |), ek AS (
-         |  SELECT regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS nt,
+         |  SELECT ${DuckSql.normText()} AS nt,
          |    MIN(doc_id) AS keep
          |  FROM pool GROUP BY 1
          |), pooled AS (
          |  SELECT p.doc_id, p.doc_id <> ek.keep AS exact_loser
-         |  FROM pool p JOIN ek ON ek.nt = regexp_replace(lower(p.text), '[^a-z0-9 ]', '', 'g')
+         |  FROM pool p JOIN ek ON ek.nt = ${DuckSql.normText("p.text")}
          |), kept1 AS (
          |  SELECT f.* FROM flags f JOIN pooled pl ON pl.doc_id = f.doc_id AND NOT pl.exact_loser
          |), shl AS (
@@ -1163,13 +1159,13 @@ object Curation {
          |  FROM documents d JOIN ek ON ek.text = d.text
          |  WHERE d.doc_id <> ek.keep GROUP BY d.source
          |), nk AS (
-         |  SELECT regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS nt,
+         |  SELECT ${DuckSql.normText()} AS nt,
          |    MIN(doc_id) AS keep
          |  FROM documents GROUP BY 1
          |), ne AS (
          |  SELECT d.source, COUNT(*) AS n_norm_extra
          |  FROM documents d
-         |  JOIN nk ON nk.nt = regexp_replace(lower(d.text), '[^a-z0-9 ]', '', 'g')
+         |  JOIN nk ON nk.nt = ${DuckSql.normText("d.text")}
          |  WHERE d.doc_id <> nk.keep GROUP BY d.source
          |), ${DuckSql.tokenCte()}, ${Dedup.duckWindowCtes()}, dm AS (
          |  SELECT w.doc_id, COUNT(*) AS n_windows,

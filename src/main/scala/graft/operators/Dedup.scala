@@ -160,7 +160,7 @@ object Dedup {
       s"CASE WHEN v$b > 0 THEN CAST('${BigInt(1) << b}' AS HUGEINT)" +
         s" ELSE CAST(0 AS HUGEINT) END").mkString(" + ")
     s"""tok AS (
-       |  SELECT doc_id, ${DuckSql.tokens} AS w
+       |  SELECT doc_id, ${DuckSql.tokens()} AS w
        |  FROM documents
        |), docsh AS MATERIALIZED (
        |  SELECT DISTINCT doc_id,
@@ -629,9 +629,8 @@ object Dedup {
     * all-pairs frame is |sources|², metadata-sized at any corpus scale).
     */
   private[operators] def crossSourceDupMatrix(docs: DataFrame): DataFrame = {
-    val norm = regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")
     val fp = docs
-      .select(col("source"), rolling_fingerprint(norm).as("fp"))
+      .select(col("source"), rolling_fingerprint(normText(col("text"))).as("fp"))
       .distinct()
     val sizes = fp.groupBy("source").agg(count(lit(1)).as("n_texts"))
     val shared = fp.select(col("fp"), col("source").as("src_a"))
@@ -667,9 +666,8 @@ object Dedup {
     // fingerprint → group by the fingerprint (8 bytes shuffled per doc
     // instead of the full text — the only workable exact dedup at 100 TB).
     "d02_dedup_normalized" -> ((s, dir) => {
-      val norm = regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")
       Tables.documents(s, dir)
-        .select(col("doc_id"), rolling_fingerprint(norm).as("fp"))
+        .select(col("doc_id"), rolling_fingerprint(normText(col("text"))).as("fp"))
         .groupBy("fp")
         .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
         .select("keep_id", "n_copies")
@@ -1184,8 +1182,7 @@ object Dedup {
     */
   private[operators] def substringDupMass(docs: DataFrame): DataFrame = {
     val wins = docs
-      .select(col("doc_id"),
-        filter(split(lower(col("text")), " "), w => length(w) > 0).as("w"))
+      .select(col("doc_id"), tokens(col("text")).as("w"))
       .filter(size(col("w")) >= SubstringW)
       .select(col("doc_id"),
         explode(transform(sequence(lit(0), size(col("w")) - SubstringW),
@@ -1304,7 +1301,7 @@ object Dedup {
     val keyRows = calibMixKeys.zipWithIndex
       .map { case (k, j) => s"($j, CAST('$k' AS HUGEINT))" }.mkString(", ")
     s"""tok AS (
-       |  SELECT doc_id, ${DuckSql.tokens} AS w
+       |  SELECT doc_id, ${DuckSql.tokens()} AS w
        |  FROM documents
        |), shd AS MATERIALIZED (
        |  SELECT doc_id,
@@ -1358,16 +1355,16 @@ object Dedup {
         |ORDER BY keep_id""".stripMargin,
 
     "d02_dedup_normalized" ->
-      """SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
+      s"""SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
         |FROM documents
-        |GROUP BY regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')
+        |GROUP BY ${DuckSql.normText()}
         |ORDER BY keep_id""".stripMargin,
 
     // the normalized text itself is the oracle's group key (the Spark
     // side's 64-bit fingerprint is shuffle economy, same as d02)
     "d13_cross_source_dup_matrix" ->
-      """WITH fp AS (
-        |  SELECT DISTINCT source, regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g') AS nt
+      s"""WITH fp AS (
+        |  SELECT DISTINCT source, ${DuckSql.normText()} AS nt
         |  FROM documents
         |), sizes AS (
         |  SELECT source, COUNT(*) AS n_texts FROM fp GROUP BY source
@@ -1478,7 +1475,7 @@ object Dedup {
          |  SELECT COALESCE(MAX(r) FILTER (WHERE m * $LshMissCeilDen <= $two60), 1) AS rpb
          |  FROM d17_s7
          |), d17_tok AS (
-         |  SELECT ${DuckSql.tokens} AS w
+         |  SELECT ${DuckSql.tokens()} AS w
          |  FROM documents
          |), d17_n AS (
          |  SELECT COUNT(*) AS n FROM d17_tok WHERE len(w) >= 3
@@ -1597,7 +1594,7 @@ object Dedup {
     "d06_source_shingle_jaccard" ->
       s"""WITH t AS (
         |  SELECT doc_id, source,
-        |    ${DuckSql.tokens} AS w
+        |    ${DuckSql.tokens()} AS w
         |  FROM documents WHERE lang = 'en'
         |), s AS (
         |  SELECT DISTINCT source,

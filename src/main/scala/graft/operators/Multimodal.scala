@@ -898,7 +898,7 @@ object Multimodal {
     "m13_multimodal_pack" ->
       s"""WITH t AS (
          |  SELECT doc_id, source,
-         |    CAST(len(${DuckSql.tokens}) AS BIGINT) AS txt_tokens,
+         |    CAST(len(${DuckSql.tokens()}) AS BIGINT) AS txt_tokens,
          |    (strlen(text) + ${PatchBytes - 1}) // $PatchBytes AS media_tokens
          |  FROM documents
          |), c AS (

@@ -1296,7 +1296,7 @@ object Relational {
     "v06_delete_propagation" ->
       s"""WITH t AS (
          |  SELECT doc_id, source, text,
-         |    CAST(len(${DuckSql.tokens}) AS BIGINT) AS n_tokens,
+         |    CAST(len(${DuckSql.tokens()}) AS BIGINT) AS n_tokens,
          |    doc_id % 53 = 0 AS deleted
          |  FROM documents
          |), c AS (

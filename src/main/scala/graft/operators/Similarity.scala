@@ -159,15 +159,25 @@ object Similarity {
   private def bruteForceKnn(e: DataFrame): DataFrame = {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
-    e.select(col("vec_id").as("nid"), col("embedding").as("n_emb"))
+    cosTopK(e.select(col("vec_id").as("nid"), col("embedding").as("n_emb"))
       .join(broadcast(q), col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
-        cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 10)
-      .orderBy("qid", "rn")
+        cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim")), 10)
   }
+
+  /** The ranking every top-k in this module uses: cos_sim descending, ties
+    * to the smaller nid (the oracles' `ORDER BY cos_sim DESC, nid ASC`),
+    * numbered from 1 within each `by` group.
+    */
+  private def cosRank(by: String = "qid"): Column =
+    row_number().over(Window.partitionBy(by).orderBy(col("cos_sim").desc, col("nid").asc))
+
+  /** The `k` best of each query's candidates in `scored` (qid, nid,
+    * cos_sim, ...) by [[cosRank]], with that rank as a BIGINT `rn`, in
+    * (qid, rn) order.
+    */
+  private def cosTopK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rn", cosRank().cast("long")).filter(col("rn") <= k).orderBy("qid", "rn")
 
   /** The exact top-5 (qid, nid) of bruteForceKnn — the truth every ANN
     * recall audit (e15/e19/e21/e28) scores against. */
@@ -190,13 +200,8 @@ object Similarity {
       .select(col("qid"), col("vec_id").as("nid"), col("q_emb"),
         col("embedding").as("n_emb"))
       .distinct() // a pair found by several tables is scored once
-    val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
-    cands
-      .select(col("qid"), col("nid"),
-        cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 5)
-      .orderBy("qid", "rn")
+    cosTopK(cands.select(col("qid"), col("nid"),
+      cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim")), 5)
   }
 
   /** e28: pinned AGGREGATE recall floor (over all queries, integer
@@ -498,13 +503,9 @@ object Similarity {
     val emb = e.select(col("vec_id").as("nid"), col("embedding").as("n_emb"))
     val qemb = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-    val wCos = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
-    shortlist.join(emb, "nid").join(broadcast(qemb), "qid")
+    cosTopK(shortlist.join(emb, "nid").join(broadcast(qemb), "qid")
       .select(col("qid"), col("nid"), col("int_dot"),
-        cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
-      .withColumn("rn", row_number().over(wCos).cast("long"))
-      .filter(col("rn") <= 5)
-      .orderBy("qid", "rn")
+        cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim")), 5)
   }
 
   /** e12b's lexical df cap: a query term participates in candidate
@@ -524,7 +525,7 @@ object Similarity {
   private[operators] def docTokens(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("doc_id"),
-        array_distinct(expr("filter(split(lower(text), ' '), x -> length(x) > 0)")).as("w"))
+        array_distinct(graft.functions.TextFunctions.tokens(col("text"))).as("w"))
 
   /** The query's df-capped term set (doc 0's tokens minus terms above
     * LexDfCap) — one row per term. Shared by e12b's posting probe and
@@ -731,8 +732,7 @@ object Similarity {
         col("label").as("nlab")), "nid")
       .select(col("qid"), col("nid"), col("nlab"),
         cosine_similarity(col("qe"), col("ne")).as("cos_sim"))
-    val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
-    val votes = scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
+    val votes = scored.withColumn("rn", cosRank()).filter(col("rn") <= 5)
       .groupBy("qid", "nlab").agg(count(lit(1)).as("votes"))
     val pick = votes.groupBy("qid")
       .agg(max(struct(col("votes"), (-col("nlab")).as("neg"))).as("best"))
@@ -1134,13 +1134,12 @@ object Similarity {
     // the nprobe-1 candidate set, before and after the refresh
     val q = ev.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-    val wq = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
     val exact = graft.Materialize(
       ev.select(col("vec_id").as("nid"), col("embedding").as("n_emb"))
         .join(broadcast(q), col("nid") =!= col("qid"))
         .select(col("qid"), col("nid"),
           cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
-        .withColumn("rn", row_number().over(wq))
+        .withColumn("rn", cosRank())
         .filter(col("rn") <= RefreshRecallK)
         .select("qid", "nid"))
     def topkIn(probe: DataFrame, members: DataFrame): DataFrame =
@@ -1149,7 +1148,7 @@ object Similarity {
         .join(ev.select(col("vec_id").as("nid"), col("embedding").as("n_emb")), "nid")
         .select(col("qid"), col("nid"),
           cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
-        .withColumn("rn", row_number().over(wq))
+        .withColumn("rn", cosRank())
         .filter(col("rn") <= RefreshRecallK)
         .select("qid", "nid")
     val staleProbe = asg.filter(col("vec_id") < 10)
@@ -1218,11 +1217,10 @@ object Similarity {
       val e = Tables.embeddings(s, dir)
       val a = e.select(col("vec_id").as("vid"), col("embedding").as("emb_a"))
       val b = e.select(col("vec_id").as("nid"), col("embedding").as("emb_b"))
-      val w = Window.partitionBy("vid").orderBy(col("cos_sim").desc, col("nid").asc)
       a.join(b, col("vid") =!= col("nid"))
         .select(col("vid"), col("nid"),
           cosine_similarity(col("emb_a"), col("emb_b")).as("cos_sim"))
-        .withColumn("rn", row_number().over(w))
+        .withColumn("rn", cosRank("vid"))
         .filter(col("rn") === 1)
         .select(col("vid"), col("nid").as("nn_id"), col("cos_sim").as("nn_cos"),
           (col("cos_sim") > 0.45).as("is_near_dup"))
@@ -1474,16 +1472,12 @@ object Similarity {
       val probes = cranked.filter(col("vec_id") < 10)
         .filter(col("rn") <= nprobe)
         .select(col("vec_id").as("qid"), col("embedding").as("q_emb"), col("cell"))
-      val wTop = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
-      assigned.join(probes, "cell")
+      cosTopK(assigned.join(probes, "cell")
         .filter(col("nid") =!= col("qid"))
         // a (query, vector) pair can meet in up to `assign` cells — score once
         .select(col("qid"), col("nid"), col("q_emb"), col("n_emb")).distinct()
         .select(col("qid"), col("nid"),
-          cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
-        .withColumn("rn", row_number().over(wTop).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("qid", "rn")
+          cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim")), 5)
     }),
 
     // one Lloyd iteration of k-means — the clustering step a curation
@@ -1908,9 +1902,7 @@ object Similarity {
           col("nid") =!= col("qid"))
         .select(col("qid"), col("nid"),
           cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
-      val wCos = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
-      val rc = pairsCos.select(col("qid"), col("nid"),
-        row_number().over(wCos).cast("long").as("rank_exact"))
+      val rc = pairsCos.select(col("qid"), col("nid"), cosRank().cast("long").as("rank_exact"))
       ri.join(rc, Seq("qid", "nid"))
         .select(abs(col("rank_int") - col("rank_exact")).as("disp"))
         .groupBy(when(col("disp") === 0L, 0L)
@@ -2199,15 +2191,11 @@ object Similarity {
         .filter(col("rn") <= rerank)
         .select("qid", "nid")
       // exact re-rank of the shortlist only
-      val wTop = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid").asc)
-      shortlist
+      cosTopK(shortlist
         .join(e.select(col("vec_id").as("qid"), col("embedding").as("q_emb")), "qid")
         .join(e.select(col("vec_id").as("nid"), col("embedding").as("n_emb")), "nid")
         .select(col("qid"), col("nid"),
-          cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim"))
-        .withColumn("rn", row_number().over(wTop).cast("long"))
-        .filter(col("rn") <= 5)
-        .orderBy("qid", "rn")
+          cosine_similarity(col("q_emb"), col("n_emb")).as("cos_sim")), 5)
     }),
 
     // LSH-bucketed ANN (the scale path): 48 tables × 6-bit hyperplane
@@ -2462,7 +2450,7 @@ object Similarity {
   private val e12bOracle: String =
     s"""WITH $duckIvfCtes, words AS (
          |  SELECT doc_id,
-         |    unnest(list_distinct(list_filter(string_split(lower(text), ' '), x -> len(x) > 0))) AS term
+         |    unnest(list_distinct(${DuckSql.tokens()})) AS term
          |  FROM documents
          |), okt AS (
          |  SELECT term FROM words, (SELECT COUNT(*) AS n FROM documents) nd
@@ -2614,12 +2602,12 @@ object Similarity {
     // identical integer fusion — 10⁹ // (60+rank) in BIGINT
     "e12_hybrid_rrf" ->
       s"""WITH qd AS (
-         |  SELECT list_distinct(list_filter(string_split(lower(text), ' '), x -> len(x) > 0)) AS qw
+         |  SELECT list_distinct(${DuckSql.tokens()}) AS qw
          |  FROM documents WHERE doc_id = 0
          |), lexall AS (
          |  SELECT d.doc_id,
          |    CAST(len(list_intersect(
-         |      list_distinct(list_filter(string_split(lower(d.text), ' '), x -> len(x) > 0)), qd.qw
+         |      list_distinct(${DuckSql.tokens("d.text")}), qd.qw
          |    )) AS BIGINT) AS score
          |  FROM documents d, qd WHERE d.doc_id <> 0
          |), lex AS (
@@ -2685,7 +2673,7 @@ object Similarity {
          |$e12bOracle
          |), docs2 AS (
          |  SELECT doc_id,
-         |    list_distinct(list_filter(string_split(lower(text), ' '), x -> len(x) > 0)) AS w
+         |    list_distinct(${DuckSql.tokens()}) AS w
          |  FROM documents
          |), posts2 AS (
          |  SELECT doc_id, unnest(w) AS term FROM docs2

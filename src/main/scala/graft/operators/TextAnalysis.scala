@@ -105,8 +105,7 @@ object TextAnalysis {
     */
   private[operators] def surprisalPerDoc(docs: DataFrame): DataFrame = {
     val toks = docs
-      .select(col("doc_id"),
-        explode(filter(split(lower(col("text")), " "), w => length(w) > 0)).as("tok"))
+      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
     val freq = toks.groupBy("tok").agg(count(lit(1)).as("cf"))
     val tot = freq.agg(sum("cf").as("n"))
       .select((length(bin(col("n"))) - 1).cast("long").as("nb"))
@@ -124,7 +123,7 @@ object TextAnalysis {
     */
   private[operators] def pmiPairs(documents: DataFrame): DataFrame = {
     val docs = documents
-      .select(filter(split(lower(col("text")), " "), w => length(w) > 0).as("w"))
+      .select(tokens(col("text")).as("w"))
     val toks = docs.select(explode(col("w")).as("tok"))
     val uni = toks.groupBy("tok").agg(count(lit(1)).as("c"))
     val tot = toks.agg(count(lit(1)).as("n"))
@@ -165,7 +164,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"),
         when(bucket < 80, "train").when(bucket < 90, "val")
           .otherwise("test").as("split"),
-        explode(filter(split(lower(col("text")), " "), w => length(w) > 0)).as("tok"))
+        explode(tokens(col("text"))).as("tok"))
     val freq = toks.filter(col("split") === "train")
       .groupBy("tok").agg(count(lit(1)).as("cf"))
     val tot = freq.agg(sum("cf").as("n"))
@@ -214,7 +213,7 @@ object TextAnalysis {
     */
   private[operators] def bpeMergeStep(docs: DataFrame, topK: Int): DataFrame = {
     val vocab = docs
-      .select(explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("w"))
+      .select(explode(alphaWords(col("text"))).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy("w").agg(count(lit(1)).as("wf"))
     val pairs = vocab
@@ -251,8 +250,7 @@ object TextAnalysis {
     */
   private[operators] def bpeApplyStep(docs: DataFrame): DataFrame = {
     val vocab = graft.Materialize(docs
-      .select(col("source"),
-        explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("w"))
+      .select(col("source"), explode(alphaWords(col("text"))).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("wf")))
     try {
       val win = vocab
@@ -321,7 +319,7 @@ object TextAnalysis {
     val S = "\u0001"
     val E = "\u0002"
     var vocab = graft.Materialize.toStorage(
-      docs.select(explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("w"))
+      docs.select(explode(alphaWords(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("wf"))
         .select(regexp_replace(col("w"), "(.)", S + "$1" + E).as("ws"), col("wf")),
       "bpe_v0")
@@ -370,8 +368,7 @@ object TextAnalysis {
     */
   private[operators] def bigramSurprisal(docs: DataFrame): DataFrame = {
     val bi = docs
-      .select(col("doc_id"),
-        filter(split(lower(col("text")), " "), w => length(w) > 0).as("toks"))
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(toks) - 1)," +
@@ -412,7 +409,7 @@ object TextAnalysis {
     */
   private[operators] def zipfSpectrum(docs: DataFrame): DataFrame = {
     val freq = docs
-      .select(explode(filter(split(lower(col("text")), " "), w => length(w) > 0)).as("tok"))
+      .select(explode(tokens(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cf"))
     val tot = freq.agg(sum("cf").as("t"))
     val spec = freq
@@ -456,8 +453,7 @@ object TextAnalysis {
     val dec = "decimal(38,0)"
     def d(c: Column) = c.cast(dec)
     val tf = docs
-      .select(col("source"),
-        explode(filter(split(lower(col("text")), " "), w => length(w) > 0)).as("tok"))
+      .select(col("source"), explode(tokens(col("text"))).as("tok"))
       .groupBy("source", "tok").agg(count(lit(1)).as("c"))
     val nt = tf.groupBy("source").agg(sum("c").as("n"))
     val a = tf.select(col("source").as("src_a"), col("tok"), col("c").as("ca"))
@@ -552,8 +548,7 @@ object TextAnalysis {
     */
   private[operators] def decontaminateSurgery(docs: DataFrame): DataFrame = {
     val toks = docs
-      .select(col("doc_id"),
-        filter(split(lower(col("text")), " "), w => length(w) > 0).as("w"))
+      .select(col("doc_id"), tokens(col("text")).as("w"))
       .select(col("doc_id"), col("w"), size(col("w")).cast("long").as("n_tokens"))
       .filter(col("n_tokens") > 0)
     val wins = toks.filter(col("n_tokens") >= 4)
@@ -622,9 +617,8 @@ object TextAnalysis {
     // Equality semantics (fp equal ⟺ normalized text equal) also
     // asserted in TextSpec.
     "t04_fingerprint" -> ((s, dir) => {
-      val norm = regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")
       val d = Tables.documents(s, dir)
-        .select(col("doc_id"), rolling_fingerprint(norm).as("fp"))
+        .select(col("doc_id"), rolling_fingerprint(normText(col("text"))).as("fp"))
       val groups = d.groupBy("fp").agg(count(lit(1)).as("group_size"))
       d.join(groups, "fp")
         .select(col("doc_id"), col("fp"), col("group_size"))
@@ -902,7 +896,7 @@ object TextAnalysis {
       val t = lower(col("text"))
       Tables.documents(s, dir)
         .select(col("doc_id"),
-          size(regexp_extract_all(t, lit("[a-z]+"), lit(0))).cast("long").as("n_alpha"),
+          size(alphaWords(col("text"))).cast("long").as("n_alpha"),
           size(regexp_extract_all(t, lit("[0-9]+"), lit(0))).cast("long").as("n_num"),
           size(regexp_extract_all(t, lit("[^a-z0-9 ]"), lit(0))).cast("long").as("n_punct"),
           tokenCountWs(col("text")).as("n_ws"))
@@ -972,8 +966,7 @@ object TextAnalysis {
 
     "t14_rare_token_ratio" -> ((s, dir) => {
       val toks = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          explode(filter(split(lower(col("text")), " "), w => length(w) > 0)).as("tok"))
+        .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       val freq = toks.groupBy("tok").agg(count(lit(1)).as("cf"))
       toks.join(freq, "tok")
         .groupBy("doc_id")
@@ -1014,8 +1007,7 @@ object TextAnalysis {
     // the join key is the span hash.
     "t18_boilerplate_spans" -> ((s, dir) => {
       boilerplateSpans(Tables.documents(s, dir)
-        .select(col("doc_id"),
-          expr("filter(split(lower(text), ' '), x -> length(x) > 0)").as("w")))
+        .select(col("doc_id"), tokens(col("text")).as("w")))
         .orderBy("doc_id")
     }),
 
@@ -1040,8 +1032,7 @@ object TextAnalysis {
     "t15_tfidf_topk" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val tf = docs
-        .select(col("doc_id"),
-          explode(expr("filter(split(lower(text), ' '), w -> length(w) > 0)")).as("tok"))
+        .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
       val df = tf.groupBy("tok").agg(count(lit(1)).as("df"))
       val nDocs = docs.select(count(lit(1)).as("n_docs"))
@@ -1132,8 +1123,7 @@ object TextAnalysis {
     // gate: counts are integers, ratios one IEEE division each.
     "t16_vocab_stats" -> ((s, dir) => {
       val tf = Tables.documents(s, dir)
-        .select(col("source"),
-          explode(expr("filter(split(lower(text), ' '), w -> length(w) > 0)")).as("tok"))
+        .select(col("source"), explode(tokens(col("text"))).as("tok"))
         .groupBy("source", "tok").agg(count(lit(1)).as("cnt"))
       val wTop = Window.partitionBy("source").orderBy(col("cnt").desc, col("tok").asc)
       val top = tf.withColumn("rn", row_number().over(wTop)).filter(col("rn") === 1)
@@ -1290,7 +1280,7 @@ object TextAnalysis {
     */
   private[graft] val duckSurprisalCtes: String =
     s"""toks AS (
-       |  SELECT doc_id, unnest(${DuckSql.tokens}) AS tok
+       |  SELECT doc_id, unnest(${DuckSql.tokens()}) AS tok
        |  FROM documents
        |), freq AS (
        |  SELECT tok, COUNT(*) AS cf FROM toks GROUP BY tok
@@ -1304,7 +1294,7 @@ object TextAnalysis {
   def oracles: Map[String, String] = Map(
     "t01_token_stats" ->
       s"""SELECT doc_id,
-         |  len(${DuckSql.tokens}) AS n_tokens_ws,
+         |  len(${DuckSql.tokens()}) AS n_tokens_ws,
          |  len(regexp_extract_all(lower(text), '${TextFunctions.BpeTokenPattern}')) AS n_tokens_bpe,
          |  n_chars
          |FROM documents
@@ -1313,7 +1303,7 @@ object TextAnalysis {
     "t02_quality_score" ->
       s"""WITH t AS (
          |  SELECT doc_id, text,
-         |    ${DuckSql.tokens} AS toks
+         |    ${DuckSql.tokens()} AS toks
          |  FROM documents
          |), c AS (
          |  SELECT doc_id,
@@ -1343,7 +1333,7 @@ object TextAnalysis {
       val caseExpr = langs.map(l => s"WHEN score_$l = $best THEN '$l'").mkString("CASE ", " ", " ELSE 'und' END")
       s"""WITH t AS (
          |  SELECT doc_id, lang AS lang_actual,
-         |    ${DuckSql.tokens} AS toks
+         |    ${DuckSql.tokens()} AS toks
          |  FROM documents
          |), sc AS (
          |  SELECT doc_id, lang_actual,
@@ -1360,7 +1350,7 @@ object TextAnalysis {
     "t15_tfidf_topk" ->
       s"""WITH toks AS (
         |  SELECT doc_id,
-        |    unnest(${DuckSql.tokens}) AS tok
+        |    unnest(${DuckSql.tokens()}) AS tok
         |  FROM documents
         |), tf AS (
         |  SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY doc_id, tok
@@ -1394,7 +1384,7 @@ object TextAnalysis {
     "t16_vocab_stats" ->
       s"""WITH toks AS (
         |  SELECT source,
-        |    unnest(${DuckSql.tokens}) AS tok
+        |    unnest(${DuckSql.tokens()}) AS tok
         |  FROM documents
         |), tf AS (
         |  SELECT source, tok, COUNT(*) AS cnt FROM toks GROUP BY source, tok
@@ -1468,7 +1458,7 @@ object TextAnalysis {
     // contaminated windows exploded to their 4 covered positions
     "t23_decontaminate_surgery" ->
       s"""WITH t AS (
-        |  SELECT doc_id, ${DuckSql.tokens} AS w
+        |  SELECT doc_id, ${DuckSql.tokens()} AS w
         |  FROM documents
         |), toks AS (
         |  SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens, w FROM t WHERE len(w) > 0
@@ -1499,7 +1489,7 @@ object TextAnalysis {
     // economy, answer-invisible modulo the accepted collision odds)
     "t24_ngram_novelty" ->
       s"""WITH t AS (
-        |  SELECT doc_id, ${DuckSql.tokens} AS w
+        |  SELECT doc_id, ${DuckSql.tokens()} AS w
         |  FROM documents
         |), sh AS (
         |  SELECT doc_id,
@@ -1536,7 +1526,7 @@ object TextAnalysis {
     // bigram formulation; ceil(n/1000) stated in integers on both sides
     "t19_heavy_hitters" ->
       s"""WITH t AS (
-         |  SELECT ${DuckSql.tokens} AS w
+         |  SELECT ${DuckSql.tokens()} AS w
          |  FROM documents
          |), g AS (
          |  SELECT unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS g
@@ -1550,7 +1540,7 @@ object TextAnalysis {
 
     "t05_ngram_topk" ->
       s"""WITH t AS (
-        |  SELECT ${DuckSql.tokens} AS w
+        |  SELECT ${DuckSql.tokens()} AS w
         |  FROM documents
         |), g AS (
         |  SELECT unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS ngram
@@ -1567,7 +1557,7 @@ object TextAnalysis {
     // boilerplate test stated as integers (df·20 > n_docs) on both sides
     "t18_boilerplate_spans" ->
       s"""WITH t AS (
-        |  SELECT doc_id, ${DuckSql.tokens} AS w
+        |  SELECT doc_id, ${DuckSql.tokens()} AS w
         |  FROM documents
         |), d AS (
         |  SELECT doc_id, w FROM t WHERE len(w) >= 2
@@ -1608,7 +1598,7 @@ object TextAnalysis {
     "t11_pack_sequences" ->
       s"""WITH t AS (
          |  SELECT doc_id, source,
-         |    len(${DuckSql.tokens}) AS n_tokens
+         |    len(${DuckSql.tokens()}) AS n_tokens
          |  FROM documents
          |), c AS (
          |  SELECT doc_id, source, n_tokens,
@@ -1649,18 +1639,18 @@ object TextAnalysis {
     // same three disjoint regex classes; counts BIGINT, one division
     "t26_pretokenize" ->
       s"""SELECT doc_id,
-        |  CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT) AS n_alpha,
+        |  CAST(len(${DuckSql.alphaWords}) AS BIGINT) AS n_alpha,
         |  CAST(len(regexp_extract_all(lower(text), '[0-9]+')) AS BIGINT) AS n_num,
         |  CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]')) AS BIGINT) AS n_punct,
-        |  CAST(len(${DuckSql.tokens}) AS BIGINT) AS n_ws,
-        |  CAST(len(regexp_extract_all(lower(text), '[a-z]+'))
+        |  CAST(len(${DuckSql.tokens()}) AS BIGINT) AS n_ws,
+        |  CAST(len(${DuckSql.alphaWords})
         |     + len(regexp_extract_all(lower(text), '[0-9]+'))
         |     + len(regexp_extract_all(lower(text), '[^a-z0-9 ]')) AS BIGINT) AS n_pre,
-        |  CASE WHEN len(${DuckSql.tokens}) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_extract_all(lower(text), '[a-z]+'))
+        |  CASE WHEN len(${DuckSql.tokens()}) = 0 THEN 0.0
+        |       ELSE CAST(len(${DuckSql.alphaWords})
         |               + len(regexp_extract_all(lower(text), '[0-9]+'))
         |               + len(regexp_extract_all(lower(text), '[^a-z0-9 ]')) AS DOUBLE)
-        |            / CAST(len(${DuckSql.tokens}) AS DOUBLE)
+        |            / CAST(len(${DuckSql.tokens()}) AS DOUBLE)
         |  END AS fertility
         |FROM documents
         |ORDER BY doc_id""".stripMargin,
@@ -1669,8 +1659,8 @@ object TextAnalysis {
     // pairs exploded per distinct word via the list-comprehension unnest,
     // counts BIGINT, the identical (count DESC, pair ASC) tie-break
     "t27_bpe_merge_step" ->
-      """WITH words AS (
-        |  SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w FROM documents
+      s"""WITH words AS (
+        |  SELECT unnest(${DuckSql.alphaWords}) AS w FROM documents
         |), vocab AS (
         |  SELECT w, COUNT(*) AS wf FROM words WHERE len(w) >= 2 GROUP BY w
         |), pairs AS (
@@ -1695,8 +1685,8 @@ object TextAnalysis {
     // winner re-aggregated from them, leftmost-non-overlapping replace
     // (identical semantics both engines), all counts BIGINT
     "t28_bpe_apply" ->
-      """WITH words AS (
-        |  SELECT source, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w FROM documents
+      s"""WITH words AS (
+        |  SELECT source, unnest(${DuckSql.alphaWords}) AS w FROM documents
         |), vocab AS MATERIALIZED (
         |  SELECT source, w, COUNT(*) AS wf FROM words GROUP BY source, w
         |), gv AS (
@@ -1747,7 +1737,7 @@ object TextAnalysis {
           s" cnt AS pair_count, (SELECT ta FROM t$r) AS tokens_after FROM w$r"
       }.mkString("\nUNION ALL\n")
       s"""WITH words AS (
-         |  SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w FROM documents
+         |  SELECT unnest(${DuckSql.alphaWords}) AS w FROM documents
          |), v0 AS MATERIALIZED (
          |  SELECT regexp_replace(w, '(.)', chr(1) || '\\1' || chr(2), 'g') AS ws, COUNT(*) AS wf
          |  FROM words GROUP BY w
@@ -1761,7 +1751,7 @@ object TextAnalysis {
     // (length(bin(pf)) − 1) − (length(bin(bf)) − 1), the −1s cancel
     "t30_bigram_surprisal" ->
       s"""WITH tk AS (
-        |  SELECT doc_id, ${DuckSql.tokens} AS toks
+        |  SELECT doc_id, ${DuckSql.tokens()} AS toks
         |  FROM documents
         |), bi AS (
         |  SELECT doc_id, u.p AS p, u.w AS w
@@ -1788,7 +1778,7 @@ object TextAnalysis {
     // so every aggregate is cast back to BIGINT (the a17/s21 discipline)
     "t31_zipf_spectrum" ->
       s"""WITH toks AS (
-        |  SELECT unnest(${DuckSql.tokens}) AS tok
+        |  SELECT unnest(${DuckSql.tokens()}) AS tok
         |  FROM documents
         |), freq AS (
         |  SELECT tok, COUNT(*) AS cf FROM toks GROUP BY tok
@@ -1816,7 +1806,7 @@ object TextAnalysis {
       s"""WITH tf AS (
         |  SELECT source, tok, COUNT(*) AS c FROM (
         |    SELECT source,
-        |      unnest(${DuckSql.tokens}) AS tok
+        |      unnest(${DuckSql.tokens()}) AS tok
         |    FROM documents)
         |  GROUP BY source, tok
         |), nt AS (
@@ -1876,7 +1866,7 @@ object TextAnalysis {
 
     "t34_pmi_pairs" ->
       s"""WITH wd AS (
-         |  SELECT list_filter(string_split(lower(text), ' '), x -> len(x) > 0) AS w
+         |  SELECT ${DuckSql.tokens()} AS w
          |  FROM documents
          |), toks AS MATERIALIZED (
          |  SELECT unnest(w) AS tok FROM wd
@@ -1918,7 +1908,7 @@ object TextAnalysis {
     "t33_split_shift" ->
       s"""WITH $duckSplitCtes, tk AS (
          |  SELECT d.doc_id, d.source, sp.split,
-         |    unnest(list_filter(string_split(lower(d.text), ' '), w -> len(w) > 0)) AS tok
+         |    unnest(${DuckSql.tokens("d.text")}) AS tok
          |  FROM documents d JOIN sp USING (doc_id)
          |), freq AS (
          |  SELECT tok, COUNT(*) AS cf FROM tk WHERE split = 'train' GROUP BY tok
@@ -1941,7 +1931,7 @@ object TextAnalysis {
 
     "t14_rare_token_ratio" ->
       s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${DuckSql.tokens}) AS tok
+         |  SELECT doc_id, unnest(${DuckSql.tokens()}) AS tok
          |  FROM documents
          |), freq AS (
          |  SELECT tok, COUNT(*) AS cf FROM toks GROUP BY tok
@@ -1960,7 +1950,7 @@ object TextAnalysis {
 
     "t09_repetition" ->
       s"""WITH t AS (
-        |  SELECT doc_id, ${DuckSql.tokens} AS w
+        |  SELECT doc_id, ${DuckSql.tokens()} AS w
         |  FROM documents
         |), g AS (
         |  SELECT doc_id,
@@ -1998,7 +1988,7 @@ object TextAnalysis {
          |  SELECT doc_id,
          |    list_reduce(list_prepend(CAST(0 AS HUGEINT),
          |      list_transform(
-         |        list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ''),
+         |        list_filter(string_split(${DuckSql.normText()}, ''),
          |                    c -> len(c) > 0),
          |        c -> CAST(unicode(c) AS HUGEINT))),
          |      (a, b) -> (a * 1315423911 + b) % ${DuckHash.T}) AS f
@@ -2216,18 +2206,27 @@ private[graft] object DuckHash {
 }
 
 /** DuckDB oracle fragments that several modules' statements restate —
-  * one copy of each, so a change to the tokenizer or the shingle rule
-  * reaches every oracle that uses it. Each fragment starts mid-WITH
-  * (compose as `WITH ${...}, next AS (`).
+  * one copy of each, so a change to the tokenizer, the normalizer or the
+  * shingle rule reaches every oracle that uses it. The CTE fragments start
+  * mid-WITH (compose as `WITH ${...}, next AS (`); the text rules are
+  * expressions over a text column, the twins of `TextFunctions`'.
   */
 private[graft] object DuckSql {
-  /** t01's whitespace tokens of `text`. */
-  val tokens = "list_filter(string_split(lower(text), ' '), w -> len(w) > 0)"
+  /** `TextFunctions.tokens`: the whitespace tokens of column `text`. */
+  def tokens(text: String = "text"): String =
+    s"list_filter(string_split(lower($text), ' '), w -> len(w) > 0)"
+
+  /** `TextFunctions.normText`: column `text`, normalized for exact dedup. */
+  def normText(text: String = "text"): String =
+    s"regexp_replace(lower($text), '[^a-z0-9 ]', '', 'g')"
+
+  /** `TextFunctions.alphaWords`: the letter runs of column `text`. */
+  val alphaWords = "regexp_extract_all(lower(text), '[a-z]+')"
 
   /** `t(doc_id, <cols> w)`: the tokens of each row of `from`. */
   def tokenCte(from: String = "documents", cols: String = ""): String =
     s"""t AS (
-       |  SELECT doc_id, $cols$tokens AS w
+       |  SELECT doc_id, $cols${tokens()} AS w
        |  FROM $from
        |)""".stripMargin
 

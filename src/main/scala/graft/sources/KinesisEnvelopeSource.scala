@@ -80,7 +80,7 @@ object KinesisEnvelopeSource {
   /** Kinesis sequence numbers are decimal strings of up to ~56 digits —
     * too wide for any fixed-width numeric type — but non-negative, so
     * (length, digits) lexicographic order IS numeric order. Folds that
-    * track a per-shard high-water mark (`shardProgress`, A4) order by this
+    * track a per-shard high-water mark (`Pipelines.perShardState`, A4) order by this
     * key on the live path where the synthetic path compares its long ids.
     */
   def seqOrderKey(seq: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

@@ -18,7 +18,9 @@ case class ShardRecord(shard_id: String, sequence_number: Long, id: Int)
 /** Streaming pipeline builders reproducing the reference's consumer
   * semantics (SURVEY.md §2) on Structured Streaming. Each takes the
   * envelope stream produced by [[ingest]] — the offline stand-in for a
-  * Kinesis connector source, with shard ⇒ source partition.
+  * Kinesis connector source, with shard ⇒ source partition — or by the
+  * DSv2 synthetic source. [[perShardState]] is the one per-shard fold:
+  * catalog query s06 and the ingest benchmark both run it.
   */
 object Pipelines {
 
@@ -40,20 +42,14 @@ object Pipelines {
   def runningCount(decoded: DataFrame): DataFrame =
     decoded.groupBy().count()
 
-  /** A2+A4 in one streaming aggregate: per-shard record count plus the
-    * last-processed position, the checkpointable high-water mark the
-    * reference tracks in `maybeLastProcessed`
-    * (`CheckpointOnChunkEndStreamClient.scala:52-61`). Two streaming aggs
-    * can't be joined post-hoc in complete mode — compose at the agg, not
-    * the join.
-    */
-  def shardProgress(decoded: DataFrame): DataFrame =
-    decoded.groupBy("shard_id")
-      .agg(count(lit(1)).as("count"), max("sequence_number").as("last_seq"))
-
-  /** A3/A4 as explicit user-visible state: per-shard running (count,
-    * lastSeq) via `mapGroupsWithState`. Update-mode emission per shard per
-    * micro-batch; state survives restart via the query checkpoint.
+  /** A2+A3+A4, the engine's one per-shard fold: per-shard running record
+    * count plus the last-processed position, the checkpointable high-water
+    * mark the reference tracks in `maybeLastProcessed`
+    * (`CheckpointOnChunkEndStreamClient.scala:52-61`), as explicit
+    * user-visible state via `mapGroupsWithState`. Update-mode emission per
+    * shard per micro-batch; the count only grows, so a shard's emission
+    * with the largest count is its final state. State survives restart via
+    * the query checkpoint.
     */
   def perShardState(decoded: DataFrame): Dataset[(String, Long, Long)] = {
     val spark = decoded.sparkSession

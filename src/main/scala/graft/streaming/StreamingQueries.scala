@@ -451,17 +451,18 @@ object StreamingQueries {
       runToTable(agg, OutputMode.Complete()).orderBy("n")
     }),
 
-    // A4 on the DSv2 source: per-shard record count + last sequence
-    // number (the per-shard "last processed" Ref of
-    // CheckpointOnChunkEndStreamClient.scala:52-85). Oracle = the same
-    // routing hash evaluated driver-side in plain Scala — independent of
-    // every distributed moving part under test (partition planning,
-    // offset ranges, batch assembly).
-    "s06_synth_source_shards" -> ((s, dir) => {
-      val agg = synthStream(s).groupBy("shard_id")
-        .agg(count(lit(1)).as("n"), max(col("sequence_number")).as("last_seq"))
-      runToTable(agg, OutputMode.Complete()).orderBy("shard_id")
-    }),
+    // A4 on the DSv2 source: the engine's per-shard fold
+    // (Pipelines.perShardState — record count + last sequence number, the
+    // per-shard "last processed" Ref of
+    // CheckpointOnChunkEndStreamClient.scala:52-85), its last emission per
+    // shard. Oracle = the same routing hash evaluated driver-side in plain
+    // Scala — independent of every distributed moving part under test
+    // (partition planning, offset ranges, batch assembly).
+    "s06_synth_source_shards" -> ((s, dir) =>
+      lastEmission(Pipelines.perShardState(Envelope.decoded(synthStream(s)))
+        .toDF("shard_id", "n", "last_seq"), "shard_id")
+        .select(col("shard_id"), col("last.n"), col("last.last_seq"))
+        .orderBy("shard_id")),
 
     // STREAMING CURATION GATES — p02's gate chain (quality → language →
     // deterministic mixture sampling) run as a structured stream over the
@@ -836,13 +837,19 @@ object StreamingQueries {
       .transformWithState(new UserStateProcessor, TimeMode.None(), OutputMode.Update()).toDF())
   }
 
-  /** s04/s14 output: drain the per-user state stream, max ts as text. The
-    * Update-mode sink keeps every micro-batch's emission; n_events grows
-    * with each one, so a user's largest is its final state.
+  /** Drain an Update-mode state stream and keep each `key`'s last emission:
+    * its other columns, as the struct `last`. The sink keeps every
+    * micro-batch's emission; the folds here lead those columns with a
+    * count that grows with each one, so a key's largest struct is its
+    * final state.
     */
-  private def userStateRows(stated: DataFrame): DataFrame =
+  private def lastEmission(stated: DataFrame, key: String): DataFrame =
     runToTable(stated, OutputMode.Update())
-      .groupBy("user_id").agg(max(struct("n_events", "min_event_id", "max_ts_sec")).as("last"))
+      .groupBy(key).agg(max(struct(stated.columns.filter(_ != key).map(col): _*)).as("last"))
+
+  /** s04/s14 output: each user's final state, max ts as text. */
+  private def userStateRows(stated: DataFrame): DataFrame =
+    lastEmission(stated, "user_id")
       .select(col("user_id"), col("last.n_events"), col("last.min_event_id"),
         date_format(timestamp_seconds(col("last.max_ts_sec")), "yyyy-MM-dd HH:mm:ss").as("max_ts"))
       .orderBy("user_id")
@@ -1149,7 +1156,7 @@ object StreamingQueries {
          |  SELECT doc_id, doc_id AS x FROM documents
          |), ${graft.operators.DuckHash.xxhash64LongCtes("doc_id")}, tk AS (
          |  SELECT doc_id, source,
-         |    CAST(len(${graft.operators.DuckSql.tokens}) AS BIGINT) AS nt
+         |    CAST(len(${graft.operators.DuckSql.tokens()}) AS BIGINT) AS nt
          |  FROM documents
          |), adm AS (
          |  SELECT t.source, t.nt

@@ -9,7 +9,7 @@ class TextSpec extends SparkSpec {
 
   test("rolling fingerprint: equal normalized text <=> equal fingerprint (on this corpus)") {
     import spark.implicits._
-    val norm = regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")
+    val norm = normText(col("text"))
     val d = Tables.documents(spark, sfDir)
       .select(norm.as("n"), rolling_fingerprint(norm).as("fp"))
     val groups = d.groupBy("fp").agg(countDistinct("n").as("texts")).collect()
@@ -31,18 +31,44 @@ class TextSpec extends SparkSpec {
   }
 
   test("token counts agree with a driver-side tokenizer on sample docs") {
-    val rows = Tables.documents(spark, sfDir).limit(20)
+    import spark.implicits._
+    // the shared text policies at their edges: runs of spaces, leading and
+    // trailing spaces, a tab, uppercase ASCII and a non-ASCII capital,
+    // punctuation
+    val edges = Seq("a  b   c", " lead and trail ", "tab\tinside  x", "UPPER Case ÉCOLE",
+      "don't stop, (ok)! 3.14", "   ", "")
+    val sample = Tables.documents(spark, sfDir).limit(20).select("text").as[String].collect()
+    val rows = (sample ++ edges).toSeq.toDF("text")
       .select(col("text"),
         tokenCountWs(col("text")).as("ws"),
-        tokenCountBpe(col("text")).as("bpe"))
+        tokenCountBpe(col("text")).as("bpe"),
+        tokens(col("text")).as("toks"),
+        normText(col("text")).as("norm"),
+        alphaWords(col("text")).as("alpha"))
       .collect()
     rows.foreach { r =>
-      val text = r.getString(0)
-      val expectedWs = text.toLowerCase.split(" ").count(_.nonEmpty)
-      val expectedBpe = BpeTokenPattern.r.findAllIn(text.toLowerCase).length
-      assert(r.getLong(1) === expectedWs.toLong)
-      assert(r.getLong(2) === expectedBpe.toLong)
+      val lowered = r.getString(0).toLowerCase(java.util.Locale.ROOT)
+      val expectedToks = lowered.split(" ").filter(_.nonEmpty).toSeq
+      assert(r.getLong(1) === expectedToks.length.toLong)
+      assert(r.getLong(2) === BpeTokenPattern.r.findAllIn(lowered).length.toLong)
+      assert(r.getSeq[String](3) === expectedToks)
+      assert(r.getString(4) === lowered.replaceAll("[^a-z0-9 ]", ""))
+      assert(r.getSeq[String](5) === "[a-z]+".r.findAllIn(lowered).toSeq)
     }
+    // the same policies spelled out: split on the space only (a tab stays
+    // in its token), spaces kept by the normalizer, É lowered but not ASCII
+    val pinned = rows.drop(sample.length).map(r => r.getString(0) ->
+      (r.getSeq[String](3), r.getString(4), r.getSeq[String](5))).toMap
+    assert(pinned("a  b   c") === ((Seq("a", "b", "c"), "a  b   c", Seq("a", "b", "c"))))
+    assert(pinned(" lead and trail ") ===
+      ((Seq("lead", "and", "trail"), " lead and trail ", Seq("lead", "and", "trail"))))
+    assert(pinned("tab\tinside  x") === ((Seq("tab\tinside", "x"), "tabinside  x", Seq("tab", "inside", "x"))))
+    assert(pinned("UPPER Case ÉCOLE") ===
+      ((Seq("upper", "case", "école"), "upper case cole", Seq("upper", "case", "cole"))))
+    assert(pinned("don't stop, (ok)! 3.14") ===
+      ((Seq("don't", "stop,", "(ok)!", "3.14"), "dont stop ok 314", Seq("don", "t", "stop", "ok"))))
+    assert(pinned("   ") === ((Seq.empty, "   ", Seq.empty)))
+    assert(pinned("") === ((Seq.empty, "", Seq.empty)))
   }
 
   test("quality score stays in [0,1] and lang-id emits only known codes") {

@@ -67,16 +67,20 @@ class StreamingPipelineSpec extends SparkSpec {
     val expected = (1L to n).groupBy(producer.shardOf)
       .map { case (s, ids) => (f"shardId-$s%012d", ids.size.toLong, ids.max) }
 
-    val decoded = Envelope.decoded(Pipelines.ingest(spark, dir))
-    val q = Pipelines.shardProgress(decoded)
+    val decoded = Envelope.decoded(Pipelines.ingest(spark, dir, maxFilesPerTrigger = Some(2)))
+    val q = Pipelines.perShardState(decoded)
       .writeStream.format("memory").queryName("per_shard")
-      .outputMode(OutputMode.Complete())
+      .outputMode(OutputMode.Update())
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
 
-    val got = spark.table("per_shard").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    // every micro-batch emits each shard it saw; the count only grows, so
+    // a shard's last emission is the one with the largest count
+    val emitted = spark.table("per_shard").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(emitted.length > expected.size, "expected emissions from more than one micro-batch")
+    val got = emitted.groupBy(_._1).values.map(_.maxBy(_._2)).toSet
     assert(got === expected.toSet)
   }
 
