@@ -729,9 +729,9 @@ object Curation {
 
   /** p01's quality scoring as DuckDB CTEs: `t` adds the whitespace
     * tokens `toks` to every document, `scored` the per-language marker
-    * scores and the stop-word and punctuation ratios.
+    * scores and the stop-word and punctuation ratios (t02 reports both).
     */
-  private val duckScoredCtes: String =
+  private[graft] val duckScoredCtes: String =
     s"""t AS (
        |  SELECT *, ${DuckSql.tokens()} AS toks
        |  FROM documents
@@ -745,8 +745,8 @@ object Curation {
        |  FROM t
        |)""".stripMargin
 
-  /** qualityScore over `scored`'s columns. */
-  private val duckQualityExpr: String =
+  /** qualityScore over `scored`'s columns (t02's `quality_score`). */
+  private[graft] val duckQualityExpr: String =
     """least(len(text)::DOUBLE / 400.0, 1.0) * 0.4
       |      + least(stop_ratio * 5.0, 1.0) * 0.3
       |      + (1.0 - least(p_ratio * 10.0, 1.0)) * 0.3""".stripMargin

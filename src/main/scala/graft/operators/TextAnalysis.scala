@@ -1239,8 +1239,6 @@ object TextAnalysis {
     })
   )
 
-  private val stopList = Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-
   /** t07's exact contamination join: every non-eval document sharing a
     * word 4-gram with an eval document (doc_id % 97 = 0). t13 gates on
     * the same statement — its bloom prefilter drops no true match.
@@ -1301,26 +1299,12 @@ object TextAnalysis {
          |ORDER BY doc_id""".stripMargin,
 
     "t02_quality_score" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, text,
-         |    ${DuckSql.tokens()} AS toks
-         |  FROM documents
-         |), c AS (
-         |  SELECT doc_id,
-         |    CASE WHEN len(toks) = 0 THEN 0.0 ELSE
-         |      len(list_filter(toks, w -> list_contains($stopList, w)))::DOUBLE / len(toks)::DOUBLE END AS stopword_ratio,
-         |    CASE WHEN len(text) = 0 THEN 0.0 ELSE
-         |      len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))::DOUBLE / len(text)::DOUBLE END AS punct_ratio,
-         |    CASE WHEN len(toks) = 0 THEN 0.0 ELSE
-         |      CAST(list_sum(list_transform(toks, w -> len(w))) AS DOUBLE) / len(toks)::DOUBLE END AS mean_token_len,
-         |    len(text) AS n_len
-         |  FROM t
-         |)
-         |SELECT doc_id, stopword_ratio, punct_ratio, mean_token_len,
-         |  least(n_len::DOUBLE / CAST(400.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.4 AS DOUBLE)
-         |    + least(stopword_ratio * CAST(5.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.3 AS DOUBLE)
-         |    + (CAST(1.0 AS DOUBLE) - least(punct_ratio * CAST(10.0 AS DOUBLE), CAST(1.0 AS DOUBLE))) * CAST(0.3 AS DOUBLE) AS quality_score
-         |FROM c
+      s"""WITH ${Curation.duckScoredCtes}
+         |SELECT doc_id, stop_ratio AS stopword_ratio, p_ratio AS punct_ratio,
+         |  CASE WHEN len(toks) = 0 THEN 0.0 ELSE
+         |    CAST(list_sum(list_transform(toks, w -> len(w))) AS DOUBLE) / len(toks)::DOUBLE END AS mean_token_len,
+         |  ${Curation.duckQualityExpr} AS quality_score
+         |FROM scored
          |ORDER BY doc_id""".stripMargin,
 
     "t03_lang_id" -> {

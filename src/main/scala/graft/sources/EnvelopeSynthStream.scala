@@ -16,7 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - Trigger.AvailableNow drains the backlog and stops (the bounded-test
   *    shape of FlattenChunksTest);
   *  - restart resumes from the committed offset: no loss, no duplication
-  *    (the partition layout is not in the offset log).
+  *    (the partition layout is not in the offset log). A restart may keep
+  *    or grow `records`, never shrink it below that offset.
   */
 class SynthMicroBatchStream(records: Long, shards: Int, maxPerBatch: Long, groups: Int)
     extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
@@ -28,6 +29,9 @@ class SynthMicroBatchStream(records: Long, shards: Int, maxPerBatch: Long, group
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[SeqOffset].seq
+    // an end below the start would be committed, and re-delivered later
+    if (records < s) throw new IllegalStateException(
+      s"EnvelopeSynthSource: records=$records is below the committed offset $s; a restart may not shrink records")
     val take = limit match {
       case _: ReadAllAvailable => records - s
       case m: ReadMaxRows => m.maxRows

@@ -7,8 +7,8 @@ import org.apache.spark.sql.streaming.DataStreamReader
 import org.apache.spark.sql.types._
 
 /** Opt-in PRODUCTION Kinesis source surface (SURVEY.md §2.1 S1) — the live
-  * counterpart of [[graft.sources.EnvelopeSynthSource]] and the file-stream
-  * ingest, matching the reference's consumer topology
+  * counterpart of [[graft.sources.EnvelopeSynthSource]], the offline
+  * sharded source, matching the reference's consumer topology
   * (`CheckpointOnChunkEndStreamClient.scala:19-22`: stream name + consumer
   * application + starting position, consumed per shard).
   *

@@ -14,9 +14,11 @@ case class TestMsg(id: Int)
   * producer partition key (`TestUtils.scala:80`), a per-shard monotonic
   * sequence number, arrival time, and the raw payload bytes-as-string.
   *
-  * In production this is the schema a Kinesis/Kafka connector source emits;
-  * offline it is produced by [[ShardedBatchProducer]] and consumed via a
-  * file stream — the shard is the unit of source parallelism either way.
+  * In production this is the schema a Kinesis/Kafka connector source emits
+  * (mapped by [[graft.sources.KinesisEnvelopeSource.envelope]]); offline
+  * it is generated by [[graft.sources.EnvelopeSynthSource]], the one
+  * offline sharded source — the shard is the unit of source parallelism
+  * either way.
   */
 object Envelope {
 

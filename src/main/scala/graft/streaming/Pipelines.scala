@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
@@ -16,24 +16,14 @@ case class ShardState(count: Long, lastSeq: Long)
 case class ShardRecord(shard_id: String, sequence_number: Long, id: Int)
 
 /** Streaming pipeline builders reproducing the reference's consumer
-  * semantics (SURVEY.md §2) on Structured Streaming. Each takes the
-  * envelope stream produced by [[ingest]] — the offline stand-in for a
-  * Kinesis connector source, with shard ⇒ source partition — or by the
-  * DSv2 synthetic source. [[perShardState]] is the one per-shard fold:
-  * catalog query s06 and the ingest benchmark both run it.
+  * semantics (SURVEY.md §2) on Structured Streaming. Each takes an
+  * envelope stream: offline the one produced by
+  * [[graft.sources.EnvelopeSynthSource]], the stand-in for a Kinesis
+  * connector source, live the one [[graft.sources.KinesisEnvelopeSource]]
+  * maps. [[perShardState]] is the one per-shard fold: catalog query s06
+  * and the ingest benchmark both run it.
   */
 object Pipelines {
-
-  /** S1 analog: the sharded source. File-stream over the producer's batch
-    * files; `maxFilesPerTrigger` bounds a micro-batch the way the KCL's
-    * chunking bounds a chunk.
-    */
-  def ingest(spark: SparkSession, dir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.schema(ShardedBatchProducer.wireSchema)
-    val r2 = maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n))
-    r2.json(dir)
-      .withColumn("arrival_ts", timestamp_millis(col("arrival_ts")))
-  }
 
   /** A1: the reference's one analytic — global running count
     * (`Ref[Int]`, asserted == 100000 at `FlattenChunksTest.scala:59`).

@@ -9,15 +9,9 @@ import graft.streaming.Envelope
   */
 class EnvelopeSynthSourceSpec extends SparkSpec {
 
-  private def load(records: Long, shards: Int) =
-    spark.read.format("graft.sources.EnvelopeSynthSource")
-      .option("records", records.toString)
-      .option("shards", shards.toString)
-      .load()
-
   /** (partition index, shard_id, sequence_number) of every row, in read order. */
   private def layout(records: Long, shards: Int) =
-    load(records, shards).select("shard_id", "sequence_number").rdd
+    synthBatch(records, shards).select("shard_id", "sequence_number").rdd
       .mapPartitionsWithIndex((p, it) => it.map(r => (p, r.getString(0), r.getLong(1))))
       .collect()
 
@@ -25,7 +19,7 @@ class EnvelopeSynthSourceSpec extends SparkSpec {
 
   test("min(shards, cores) input partitions, every record once") {
     shardCounts.foreach { shards =>
-      val df = load(records = 20000, shards = shards)
+      val df = synthBatch(records = 20000, shards = shards)
       assert(df.rdd.getNumPartitions === math.min(shards, spark.sparkContext.defaultParallelism),
         s"$shards shards pack onto one input partition per core")
       assert(df.count() === 20000L)
@@ -52,19 +46,18 @@ class EnvelopeSynthSourceSpec extends SparkSpec {
   }
 
   test("load rejects shards < 1") {
-    val e = intercept[IllegalArgumentException](load(records = 100, shards = 0))
+    val e = intercept[IllegalArgumentException](synthBatch(records = 100, shards = 0))
     assert(e.getMessage.contains("shards must be >= 1, got 0"))
   }
 
   test("load rejects records < 0") {
-    val e = intercept[IllegalArgumentException](load(records = -1, shards = 4))
+    val e = intercept[IllegalArgumentException](synthBatch(records = -1, shards = 4))
     assert(e.getMessage.contains("records must be >= 0, got -1"))
   }
 
   test("load rejects maxRecordsPerBatch < 1") {
     val e = intercept[IllegalArgumentException] {
-      spark.readStream.format("graft.sources.EnvelopeSynthSource")
-        .option("records", "100").option("maxRecordsPerBatch", "0").load()
+      synthStream(records = 100, shards = 4, maxRecordsPerBatch = 0)
     }
     assert(e.getMessage.contains("maxRecordsPerBatch must be >= 1, got 0"))
   }
@@ -74,9 +67,7 @@ class EnvelopeSynthSourceSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.Trigger
     def batches(trigger: Trigger): Map[Long, Seq[Long]] = {
       val got = scala.collection.concurrent.TrieMap.empty[Long, Seq[Long]]
-      val q = spark.readStream.format("graft.sources.EnvelopeSynthSource")
-        .option("records", "2100").option("shards", "8").option("maxRecordsPerBatch", "400")
-        .load()
+      val q = synthStream(records = 2100, shards = 8, maxRecordsPerBatch = 400)
         .writeStream
         .foreachBatch { (df: DataFrame, id: Long) =>
           got.put(id, df.select("sequence_number").collect().map(_.getLong(0)).toSeq)
@@ -101,7 +92,7 @@ class EnvelopeSynthSourceSpec extends SparkSpec {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     import graft.streaming.{Pipelines, SinkRetry}
-    val (records, shards) = (3000L, 7)
+    val shards = 7
     val ckpt = SparkSpec.tmpDir("synth-state-ckpt")
     val emitted = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
     val transientFired = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -114,11 +105,8 @@ class EnvelopeSynthSourceSpec extends SparkSpec {
         throw new IllegalStateException("injected fatal sink error") // kills the query
       rows.foreach(r => emitted.put(r.getString(0), (r.getLong(1), r.getLong(2))))
     }
-    def run(): Unit = {
-      val src = spark.readStream.format("graft.sources.EnvelopeSynthSource")
-        .option("records", records.toString).option("shards", shards.toString)
-        .option("maxRecordsPerBatch", "500").load()
-      val q = Pipelines.perShardState(Envelope.decoded(src)).toDF("shard_id", "count", "last_seq")
+    def run(records: Long): Unit = {
+      val q = Pipelines.perShardState(Envelope.decoded(synthStream(records, shards))).toDF("shard_id", "count", "last_seq")
         .writeStream
         .foreachBatch(sink)
         .outputMode(OutputMode.Update())
@@ -128,58 +116,55 @@ class EnvelopeSynthSourceSpec extends SparkSpec {
       q.awaitTermination()
     }
 
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](run(3000))
     assert(fatalFired.get && transientFired.get)
-    run() // restart: replays batch 3 from the offset log over the restored state
-    val oracle = (1L to records).groupBy(EnvelopeSynthSource.shardOf(_, shards)).map { case (s, ids) =>
-      f"shardId-$s%012d" -> ((ids.size.toLong, ids.max))
-    }
-    assert(emitted.toMap === oracle)
+    // restart over grown input: replays batch 3 from the offset log over
+    // the restored state, then extends that state with records 3001..5000
+    run(5000)
+    assert(emitted.toMap === SparkSpec.shardOracle(5000, shards))
+  }
+
+  /** One AvailableNow run of the decoded stream of records 1..`records`
+    * (8 shards, 400 per micro-batch) into the parquet `sink`, resuming from
+    * `ckpt`.
+    */
+  private def drainTo(ckpt: String, sink: String, records: Long): Unit = {
+    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+    val q = Envelope.decoded(synthStream(records, 8, maxRecordsPerBatch = 400)) // non-default: proves camelCase options resolve
+      .select("sequence_number", "shard_id", "id")
+      .writeStream.format("parquet")
+      .option("path", sink).option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append())
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
   }
 
   test("micro-batch stream: chunked batches, offsets are sequence checkpoints, restart resumes") {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val ckpt = SparkSpec.tmpDir("synth-stream-ckpt")
     val sink = SparkSpec.tmpDir("synth-stream-sink")
-
-    def run(records: Long): Unit = {
-      val q = spark.readStream.format("graft.sources.EnvelopeSynthSource")
-        .option("records", records.toString)
-        .option("shards", "8")
-        .option("maxRecordsPerBatch", "400") // non-default: proves camelCase options resolve
-        .load()
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-    run(2000)  // 5 batches of 400 (chunk-sized admission control)
-    run(5000)  // restart: offset log resumes at 2000, emits only 2001..5000
+    drainTo(ckpt, sink, 2000) // 5 batches of 400 (chunk-sized admission control)
+    drainTo(ckpt, sink, 5000) // restart over grown input: resumes at 2000, emits only 2001..5000
     val out = spark.read.parquet(sink)
     assert(out.count() === 5000L, "restart resumed from the committed offset")
     assert(out.select("sequence_number").distinct().count() === 5000L, "exactly once")
+    val ids = out.agg(min("id"), max("id")).head()
+    assert(ids.getInt(0) === 1 && ids.getInt(1) === 5000, "every payload decoded")
     // offsets in the checkpoint are human-readable sequence numbers
     val offsets = new java.io.File(ckpt, "offsets").listFiles().map(_.getName).sorted
     assert(offsets.length >= 5, s"chunked micro-batches expected, got ${offsets.length}")
   }
 
-  test("the reference count-conservation pipeline runs unchanged on the DSv2 source") {
-    // decode → count: same invariant as the file-stream path, same
-    // producer parameters as the reference (100k / 32 shards)
-    val decoded = Envelope.decoded(load(records = 100000, shards = 32))
-    assert(decoded.agg(count(lit(1))).head().getLong(0) === 100000L)
-    assert(decoded.agg(sum(col("id").cast("long"))).head().getLong(0) === 100000L * 100001L / 2)
-    // matches the offline producer's routing exactly
-    val producer = new graft.streaming.ShardedBatchProducer(
-      SparkSpec.tmpDir("synth-cmp"), 32, 500)
-    val expected = (1L to 1000L).groupBy(producer.shardOf).map { case (s, ids) =>
-      (f"shardId-$s%012d", ids.size.toLong)
-    }
-    val got = load(records = 1000, shards = 32).groupBy("shard_id").count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    expected.foreach { case (shard, n) => assert(got(shard) === n) }
+  test("a restart with fewer records than the committed offset fails, naming both, and commits nothing") {
+    val ckpt = SparkSpec.tmpDir("synth-shrink-ckpt")
+    val sink = SparkSpec.tmpDir("synth-shrink-sink")
+    drainTo(ckpt, sink, 2000)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](drainTo(ckpt, sink, 1000))
+    assert(e.getMessage.contains("records=1000 is below the committed offset 2000"), e.getMessage)
+    // the failed run moved no offset back, so growing input still resumes at 2000
+    drainTo(ckpt, sink, 3000)
+    val out = spark.read.parquet(sink)
+    assert(out.count() === 3000L, "no record re-delivered")
+    assert(out.select("sequence_number").distinct().count() === 3000L)
   }
 }

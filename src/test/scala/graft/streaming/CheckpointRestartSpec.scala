@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.SparkSpec
@@ -12,37 +11,6 @@ import graft.SparkSpec
   * idempotent (file) sink.
   */
 class CheckpointRestartSpec extends SparkSpec {
-
-  test("restart from checkpoint: two runs over a growing input produce exactly-once output") {
-    val src = SparkSpec.tmpDir("graft-src")
-    val ckpt = SparkSpec.tmpDir("graft-restart-ckpt")
-    val sink = SparkSpec.tmpDir("graft-restart-sink")
-    val producer = new ShardedBatchProducer(src, nrShards = 8, batchSize = 100)
-
-    def runOnce(): Unit = {
-      val q = Envelope.decoded(Pipelines.ingest(spark, src))
-        .select("sequence_number", "shard_id", "id")
-        .writeStream
-        .format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-    producer.emit(1, 1001)
-    runOnce() // consume batch 1, commit offsets, stop (graceful "crash")
-    producer.emit(1001, 2501)
-    runOnce() // restart from checkpoint: must pick up ONLY the new files
-
-    val out = spark.read.parquet(sink)
-    assert(out.count() === 2500L, "no loss, no duplication across restart")
-    assert(out.select("sequence_number").distinct().count() === 2500L)
-    val ids = out.agg(min("id"), max("id")).head()
-    assert(ids.getInt(0) === 1 && ids.getInt(1) === 2500)
-  }
 
   test("s19 dedup-state restart: a sketch admitted before the crash still blocks its duplicate after") {
     import graft.functions.TextFunctions.wordShingles
@@ -108,73 +76,23 @@ class CheckpointRestartSpec extends SparkSpec {
       "doc 4 (exact duplicate of pre-crash doc 1) must be dropped by the restored state")
   }
 
-  test("stateful restart: mapGroupsWithState per-shard counts survive a restart") {
-    val src = SparkSpec.tmpDir("graft-state-src")
-    val ckpt = SparkSpec.tmpDir("graft-state-ckpt")
-    val producer = new ShardedBatchProducer(src, nrShards = 4, batchSize = 100)
-
-    // memory sink can't recover from a checkpoint — foreachBatch can, and
-    // is the production sink shape anyway (SURVEY.md §2.5 C2).
-    val emissions = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-    def runOnce(): Unit = {
-      val stated = Pipelines.perShardState(Envelope.decoded(Pipelines.ingest(spark, src)))
-      val q = stated.toDF("shard_id", "running_count", "last_seq")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.collect().foreach(r =>
-            emissions.put(r.getString(0), (r.getLong(1), r.getLong(2))))
-        }
-        .outputMode(OutputMode.Update())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-    producer.emit(1, 801)
-    runOnce()
-    producer.emit(801, 2001)
-    runOnce() // state restored from checkpoint, then extended
-
-    val byShard = (1L to 2000L).groupBy(producer.shardOf)
-    val run2 = emissions.toMap
-    byShard.foreach { case (s, ids) =>
-      val (count, lastSeq) = run2(f"shardId-$s%012d")
-      assert(count === ids.size.toLong, s"shard $s running count spans both runs")
-      assert(lastSeq === ids.max)
-    }
-  }
-
-  test("chaos: repeated kill/restart under a live producer conserves the count exactly") {
+  test("chaos: repeated kill/restart over growing input conserves the count exactly") {
     // The reference's strongest evidence is the with-errors run
     // (log_output/chunkedCheckpointing100kWithErrors.log: 77 lease
-    // conflicts, count still conserved). Same shape here: a producer
-    // keeps emitting on its own thread while the consumer is killed and
-    // restarted mid-stream 3 times, then a final drain. The WAL-then-
-    // commit checkpoint + file-sink metadata log must deliver EXACTLY
-    // the emitted records — no loss from the kills, no duplication from
-    // re-run in-flight batches.
-    val src = SparkSpec.tmpDir("graft-chaos-src")
+    // conflicts, count still conserved). Same shape here: the consumer is
+    // killed mid-stream 3 times, each incarnation restarting over 2,500
+    // more records than the last in 100-record micro-batches (more than it
+    // drains before its kill), then a final drain in larger micro-batches
+    // (the offset log pins ranges, not their size). The WAL-then-commit
+    // checkpoint + file-sink metadata log must deliver EXACTLY the
+    // records — no loss from the kills, no duplication from re-run
+    // in-flight batches.
     val ckpt = SparkSpec.tmpDir("graft-chaos-ckpt")
     val sink = SparkSpec.tmpDir("graft-chaos-sink")
-    val producer = new ShardedBatchProducer(src, nrShards = 8, batchSize = 100)
     val total = 10000L
 
-    val writerError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val writer = new Thread(() => {
-      try {
-        var lo = 1L
-        while (lo <= total) {
-          val hi = math.min(lo + 1000L, total + 1L)
-          producer.emit(lo, hi)
-          lo = hi
-          Thread.sleep(200L)
-        }
-      } catch { case t: Throwable => writerError.set(t) }
-    }, "chaos-producer")
-
-    def start(trigger: Trigger) =
-      Envelope.decoded(Pipelines.ingest(spark, src, maxFilesPerTrigger = Some(3)))
+    def start(records: Long, trigger: Trigger, perBatch: Long = 100L) =
+      Envelope.decoded(synthStream(records, 8, maxRecordsPerBatch = perBatch))
         .select("sequence_number", "shard_id", "id")
         .writeStream
         .format("parquet")
@@ -184,15 +102,12 @@ class CheckpointRestartSpec extends SparkSpec {
         .trigger(trigger)
         .start()
 
-    writer.start()
     for (k <- 1 to 3) { // three kill cycles, each mid-flight
-      val q = start(Trigger.ProcessingTime(0L))
+      val q = start(2500L * k, Trigger.ProcessingTime(0L))
       Thread.sleep(800L + 400L * k)
       q.stop() // kill with batches in flight — not a graceful drain
     }
-    writer.join(60000L)
-    assert(writerError.get() === null, s"producer thread failed: ${writerError.get()}")
-    val drain = start(Trigger.AvailableNow())
+    val drain = start(total, Trigger.AvailableNow(), perBatch = 2500L)
     drain.awaitTermination(120000L)
 
     val out = spark.read.parquet(sink) // reads ONLY _spark_metadata-committed files
@@ -216,33 +131,31 @@ class CheckpointRestartSpec extends SparkSpec {
     //  - with takeover disabled: B's start() is REFUSED loudly ("same id
     //    is already active") and A is untouched — never two writers
     //    interleaving commits on one checkpoint.
-    val src = SparkSpec.tmpDir("graft-compete-src")
     val ckpt = SparkSpec.tmpDir("graft-compete-ckpt")
     val sink = SparkSpec.tmpDir("graft-compete-sink")
-    val producer = new ShardedBatchProducer(src, nrShards = 8, batchSize = 100)
 
-    def start(trigger: Trigger) =
-      Envelope.decoded(Pipelines.ingest(spark, src, maxFilesPerTrigger = Some(2)))
+    // each incarnation starts over more input than the one it displaces
+    def start(records: Long) =
+      Envelope.decoded(synthStream(records, 8, maxRecordsPerBatch = 100))
         .select("sequence_number", "shard_id", "id")
         .writeStream
         .format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt)
         .outputMode(OutputMode.Append())
-        .trigger(trigger)
+        .trigger(Trigger.ProcessingTime(0L))
         .start()
 
-    producer.emit(1, 2001)
-    val workerA = start(Trigger.ProcessingTime(0L))
+    val workerA = start(2000L)
     // wait until A owns the checkpoint (first batch committed)
     var deadline = System.currentTimeMillis() + 60000L
     while (workerA.lastProgress == null && System.currentTimeMillis() < deadline)
       Thread.sleep(100L)
     assert(workerA.lastProgress != null, "worker A never made progress")
 
-    // contention 1 — default takeover: B starts mid-stream, A must be
-    // stopped BY THE SYSTEM (incarnation 2 steals the lease)
-    val workerB = start(Trigger.ProcessingTime(0L))
+    // contention 1 — default takeover: B starts mid-stream over 1,000 more
+    // records, A must be stopped BY THE SYSTEM (incarnation 2 steals the lease)
+    val workerB = start(3000L)
     assert(workerA.awaitTermination(60000L),
       "takeover must stop the old incarnation")
     assert(workerB.isActive, "the new incarnation must be the live one")
@@ -251,7 +164,7 @@ class CheckpointRestartSpec extends SparkSpec {
     val old = spark.conf.getOption("spark.sql.streaming.stopActiveRunOnRestart")
     spark.conf.set("spark.sql.streaming.stopActiveRunOnRestart", "false")
     try {
-      val ex = intercept[Exception] { start(Trigger.ProcessingTime(0L)) }
+      val ex = intercept[Exception] { start(4000L) }
       assert(ex.getMessage != null && ex.getMessage.toLowerCase.contains("active"),
         s"expected a loud already-active refusal, got: ${ex.getMessage}")
       assert(workerB.isActive, "the refusal must not take down the survivor")
@@ -262,7 +175,6 @@ class CheckpointRestartSpec extends SparkSpec {
       }
     }
 
-    producer.emit(2001, 3001) // more arrivals AFTER both contentions
     deadline = System.currentTimeMillis() + 120000L
     while (spark.read.parquet(sink).count() < 3000L &&
            System.currentTimeMillis() < deadline)
@@ -278,33 +190,21 @@ class CheckpointRestartSpec extends SparkSpec {
 
   test("at-least-once to exactly-once: dropDuplicatesWithinWatermark collapses redelivery") {
     import spark.implicits._
-    val src = SparkSpec.tmpDir("graft-dedup-src")
-    val producer = new ShardedBatchProducer(src, nrShards = 4, batchSize = 100)
-    producer.emit(1, 501)
-    producer.emit(1, 501) // same ids again — simulated redelivery (C5)
+    // simulated redelivery (C5): the union of two reads of the same range,
+    // in different micro-batch sizes, so a record's second copy arrives
+    // in the same micro-batch as its first or in a later one
+    def redelivered() =
+      synthStream(500, 4, maxRecordsPerBatch = 100).union(synthStream(500, 4, maxRecordsPerBatch = 250))
 
     // non-deduped count sees the duplicates...
-    val q1 = Pipelines.runningCount(Envelope.decoded(Pipelines.ingest(spark, src)))
+    val q1 = Pipelines.runningCount(Envelope.decoded(redelivered()))
       .writeStream.format("memory").queryName("dup_raw")
       .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow()).start()
     q1.awaitTermination()
-    // second emit writes files with identical names — the producer is
-    // idempotent per batch id, so redelivery here = re-emitting NEW files
-    // with the same payload under a different batch range instead:
-    val raw = spark.table("dup_raw").head().getLong(0)
-    assert(raw === 500L, "same-name batch files are naturally idempotent")
+    assert(spark.table("dup_raw").head().getLong(0) === 1000L, "every record delivered twice")
 
-    // true redelivery: same sequence numbers in differently-named files
-    (1L to 500L).grouped(100).zipWithIndex.foreach { case (ids, k) =>
-      val dir2 = new java.io.File(src)
-      val lines = ids.map { i =>
-        s"""{"shard_id":"shardId-000000000000","partition_key":"key$i","sequence_number":$i,""" +
-          s""""arrival_ts":${1767225600000L + i},"data":"{ \\"id\\": $i }"}"""
-      }.mkString("", "\n", "\n")
-      Files.write(new java.io.File(dir2, f"redelivery_$k%03d.json").toPath, lines.getBytes)
-    }
-
-    val deduped = Pipelines.dedupedWithinWatermark(Pipelines.ingest(spark, src))
+    // ...the watermark-bounded dedup delivers each sequence number once
+    val deduped = Pipelines.dedupedWithinWatermark(redelivered())
     val q2 = deduped.select("sequence_number").writeStream
       .format("memory").queryName("dedup_out")
       .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()

@@ -14,9 +14,7 @@ import graft.SparkSpec
 class ObserveMetricsSpec extends SparkSpec {
 
   test("observe(): per-batch metrics count the stream without altering it") {
-    val dir = SparkSpec.tmpDir("graft-observe")
     val n = 3000L
-    new ShardedBatchProducer(dir, nrShards = 8, batchSize = 500).emit(1, n + 1)
 
     val seenRows = new AtomicLong(0)
     val seenIdSum = new AtomicLong(0)
@@ -33,7 +31,7 @@ class ObserveMetricsSpec extends SparkSpec {
     }
     spark.streams.addListener(listener)
     try {
-      val q = Envelope.decoded(Pipelines.ingest(spark, dir, maxFilesPerTrigger = Some(2)))
+      val q = Envelope.decoded(synthStream(n, 8, maxRecordsPerBatch = 1000))
         .observe("tap", count(lit(1)).as("n"), sum(col("id").cast("long")).as("id_sum"))
         .writeStream
         .format("noop")

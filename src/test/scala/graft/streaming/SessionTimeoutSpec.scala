@@ -1,12 +1,16 @@
 package graft.streaming
 
-import java.nio.file.Files
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.SparkSpec
+import graft.sources.EnvelopeSynthSource
 
 case class SessEv(shard_id: String, arrival_ts: java.sql.Timestamp, ts_ms: Long)
 case class SessAcc(n: Long, minTs: Long, maxTs: Long)
+/** One row of `Envelope.schema`. */
+case class EnvelopeRow(shard_id: String, partition_key: String, sequence_number: Long,
+    arrival_ts: java.sql.Timestamp, data: String)
 
 /** True streaming sessionization: flatMapGroupsWithState with
   * EventTimeTimeout — sessions are emitted when the WATERMARK passes
@@ -18,32 +22,25 @@ case class SessAcc(n: Long, minTs: Long, maxTs: Long)
 class SessionTimeoutSpec extends SparkSpec {
 
   test("event-time timeout emits closed sessions once the watermark passes") {
-    val dir = SparkSpec.tmpDir("graft-sess")
-    val producer = new ShardedBatchProducer(dir, nrShards = 4, batchSize = 1000)
-    // burst 1: seqs 1..100 → ts base+1..base+100 ms (one session per shard)
-    producer.emit(1, 101)
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[EnvelopeRow]
+    // burst 1: the source's records 1..100 over 4 shards, ts base+1..base+100 ms
+    // (one session per shard)
+    val burst = synthBatch(100, 4).as[EnvelopeRow].collect().toSeq
     // watermark drivers on DISJOINT keys (same-key data would extend the
-    // open sessions instead of letting them time out): one file two hours
-    // of event time ahead advances the watermark, and one more file after
+    // open sessions instead of letting them time out): one row two hours
+    // of event time ahead advances the watermark, and one more row after
     // it gives the engine a batch that RUNS with that watermark — timeouts
     // fire during batch processing, and the watermark lags one batch.
-    // the file source orders by modification time with unspecified tie
-    // order — force strictly-later mtimes so the watermark drivers are
-    // processed after every burst-1 batch file
-    def lateFile(name: String, shard: String, seq: Long, mtimeOffsetMs: Long): Unit = {
-      val line = s"""{"shard_id":"$shard","partition_key":"late$seq","sequence_number":$seq,""" +
-        s""""arrival_ts":${1767225600000L + seq},"data":"{ \\"id\\": $seq }"}""" + "\n"
-      val f = new java.io.File(dir, name)
-      Files.write(f.toPath, line.getBytes)
-      f.setLastModified(System.currentTimeMillis() + mtimeOffsetMs)
-    }
-    lateFile("zz_wm_1.json", "wm-driver-1", 7200000L, 60000L)
-    lateFile("zz_wm_2.json", "wm-driver-2", 7300000L, 120000L)
+    // Each lands in its own micro-batch, after every burst-1 row.
+    def driver(shard: String, seq: Long) = burst.head.copy(shard_id = shard, sequence_number = seq,
+      arrival_ts = new java.sql.Timestamp(EnvelopeSynthSource.BaseTsMicros / 1000 + seq))
+    val arrivals = Seq(burst, Seq(driver("wm-driver-1", 7200000L)), Seq(driver("wm-driver-2", 7300000L)))
 
-    import spark.implicits._
     val gapMs = 60000L
     // the watermark column must remain visible to the stateful operator
-    val typed = Pipelines.ingest(spark, dir, maxFilesPerTrigger = Some(1))
+    val typed = mem.toDF()
       .withWatermark("arrival_ts", "10 seconds")
       .select(col("shard_id"), col("arrival_ts"), unix_millis(col("arrival_ts")).as("ts_ms"))
       .as[SessEv]
@@ -74,23 +71,22 @@ class SessionTimeoutSpec extends SparkSpec {
     val q = sessions.writeStream
       .format("memory").queryName("sessions_out")
       .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    try arrivals.foreach { rows => mem.addData(rows); q.processAllAvailable() }
+    finally q.stop()
 
     val got = spark.table("sessions_out").collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     // burst-1 sessions (one per shard) closed by the watermark, and so did
     // wm-driver-1's (driver-2 pushed the watermark past its gap); only the
     // last session standing (wm-driver-2) is open and correctly NOT emitted
-    val expected = (1L to 100L).groupBy(producer.shardOf)
+    val expected = burst.groupBy(_.shard_id).map { case (shard, rows) =>
+      val seqs = rows.map(_.sequence_number)
+      shard -> ((seqs.size.toLong, seqs.max - seqs.min)) // session span = ms span of its seqs
+    }
     assert(got.size === expected.size + 1, s"4 shard sessions + wm-driver-1: $got")
     assert(got.contains("wm-driver-1") && !got.contains("wm-driver-2"))
-    expected.foreach { case (shard, ids) =>
-      val (n, duration) = got(f"shardId-$shard%012d")
-      assert(n === ids.size.toLong)
-      assert(duration === ids.max - ids.min, "session span = ms span of its seqs")
-    }
+    assert(got - "wm-driver-1" === expected)
   }
 
   test("s12 session fold: strict-1800s boundary, order-freeness, degenerate inputs") {

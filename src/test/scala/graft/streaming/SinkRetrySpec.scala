@@ -63,13 +63,11 @@ class SinkRetrySpec extends SparkSpec {
   }
 
   test("foreachBatch wrapper rides out an injected transient sink outage end-to-end") {
-    val src = SparkSpec.tmpDir("graft-retry-src")
     val sink = SparkSpec.tmpDir("graft-retry-sink")
-    new ShardedBatchProducer(src, nrShards = 4, batchSize = 100).emit(1, 401)
 
     val failuresLeft = new java.util.concurrent.atomic.AtomicInteger(2)
     val sleeps = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = Envelope.decoded(Pipelines.ingest(spark, src))
+    val q = Envelope.decoded(synthStream(400, 4))
       .select("sequence_number", "shard_id", "id")
       .writeStream
       .foreachBatch(SinkRetry.foreachBatchWithRetry(sleep = _ => sleeps.incrementAndGet()) {

@@ -3,24 +3,22 @@ package graft.streaming
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.SparkSpec
 
-/** E2E mirror of the reference's FlattenChunksTest: produce N records in
-  * batches across 32 shards, consume as a stream, assert exact count
-  * conservation (the reference's single invariant,
+/** E2E mirror of the reference's FlattenChunksTest: N records across 32
+  * shards from the offline sharded source, consumed as a stream, with
+  * exact count conservation asserted (the reference's single invariant,
   * FlattenChunksTest.scala:59).
   */
 class StreamingPipelineSpec extends SparkSpec {
 
   test("count conservation at reference scale: 100k records == 100k counted across 32 shards") {
-    // exact reference workload parameters: nrRecords = 100000, batchSize =
-    // 500, nrShards = 32 (FlattenChunksTest.scala:25-27), same invariant
-    // (:59) — processed count conserved across all shards.
-    val dir = SparkSpec.tmpDir("graft-ingest")
+    import org.apache.spark.sql.functions._
+    // exact reference workload parameters: nrRecords = 100000, nrShards =
+    // 32 (FlattenChunksTest.scala:25-27), same invariant (:59) — processed
+    // count conserved across all shards, streamed in 4 micro-batches
     val ckpt = SparkSpec.tmpDir("graft-ckpt")
     val n = 100000L
-    val producer = new ShardedBatchProducer(dir, nrShards = 32, batchSize = 500)
-    producer.emit(1, n + 1)
 
-    val counts = Pipelines.runningCount(Envelope.decoded(Pipelines.ingest(spark, dir)))
+    val counts = Pipelines.runningCount(Envelope.decoded(synthStream(n, 32, maxRecordsPerBatch = 25000)))
     val q = counts.writeStream
       .format("memory").queryName("conservation")
       .outputMode(OutputMode.Complete())
@@ -30,6 +28,14 @@ class StreamingPipelineSpec extends SparkSpec {
     q.awaitTermination()
 
     assert(spark.table("conservation").head().getLong(0) === n)
+
+    // the batch read of the same records: every payload id once, and each
+    // shard holds exactly the records its routing hash assigns it
+    val decoded = Envelope.decoded(synthBatch(n, 32))
+    assert(decoded.agg(sum(col("id").cast("long"))).head().getLong(0) === n * (n + 1) / 2)
+    val perShard = decoded.groupBy("shard_id").count()
+      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    assert(perShard === SparkSpec.shardOracle(n, 32).map { case (s, (c, _)) => s -> c })
   }
 
   test("s17 observe: metrics fold across real micro-batch boundaries to the batch answer") {
@@ -59,15 +65,10 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("per-shard counts and last-seq match the producer's deterministic routing") {
-    val dir = SparkSpec.tmpDir("graft-shards")
     val n = 2000L
-    val producer = new ShardedBatchProducer(dir, nrShards = 8, batchSize = 250)
-    producer.emit(1, n + 1)
+    val expected = SparkSpec.shardOracle(n, 8).map { case (s, (c, last)) => (s, c, last) }
 
-    val expected = (1L to n).groupBy(producer.shardOf)
-      .map { case (s, ids) => (f"shardId-$s%012d", ids.size.toLong, ids.max) }
-
-    val decoded = Envelope.decoded(Pipelines.ingest(spark, dir, maxFilesPerTrigger = Some(2)))
+    val decoded = Envelope.decoded(synthStream(n, 8, maxRecordsPerBatch = 500))
     val q = Pipelines.perShardState(decoded)
       .writeStream.format("memory").queryName("per_shard")
       .outputMode(OutputMode.Update())
@@ -139,17 +140,13 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("stream-stream interval join: two sharded streams join on key within a time bound") {
     import org.apache.spark.sql.functions._
-    val dirA = SparkSpec.tmpDir("graft-ss-a")
-    val dirB = SparkSpec.tmpDir("graft-ss-b")
-    new ShardedBatchProducer(dirA, nrShards = 4, batchSize = 200).emit(1, 1001)
-    new ShardedBatchProducer(dirB, nrShards = 4, batchSize = 200).emit(500, 1501)
-
     // watermarks on both sides bound the join state (the 100 TB-safe
-    // form); producer arrival_ts is base+seq ms, so matching keys land
-    // inside the interval.
-    val a = Pipelines.ingest(spark, dirA).withWatermark("arrival_ts", "1 hour")
+    // form); the source's arrival_ts is base+seq ms, so matching keys land
+    // inside the interval. Side A holds records 1..1000, side B 500..1500.
+    val a = synthStream(1000, 4, maxRecordsPerBatch = 200).withWatermark("arrival_ts", "1 hour")
       .select(col("sequence_number").as("k"), col("arrival_ts").as("ts_a"))
-    val b = Pipelines.ingest(spark, dirB).withWatermark("arrival_ts", "1 hour")
+    val b = synthStream(1500, 4, maxRecordsPerBatch = 200).filter(col("sequence_number") >= 500L)
+      .withWatermark("arrival_ts", "1 hour")
       .select(col("sequence_number").as("k2"), col("arrival_ts").as("ts_b"))
     val joined = a.join(b,
       col("k") === col("k2") &&
@@ -202,16 +199,12 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("stream limit: listener stops the query once >= N records are ingested") {
-    val dir = SparkSpec.tmpDir("graft-limit")
     val n = 5000L
     val limit = 1200L
-    val producer = new ShardedBatchProducer(dir, nrShards = 4, batchSize = 100)
-    producer.emit(1, n + 1) // 50 files of 100
 
     val lim = new StreamLimit(spark, limit)
-    // 5 files (500 rows) per micro-batch; listener should stop after ~3 batches.
-    val src = Pipelines.ingest(spark, dir, maxFilesPerTrigger = Some(5))
-    val q = Envelope.decoded(src).writeStream
+    // 500 records per micro-batch; listener should stop after ~3 batches.
+    val q = Envelope.decoded(synthStream(n, 4, maxRecordsPerBatch = 500)).writeStream
       .format("noop")
       .trigger(Trigger.ProcessingTime(0L))
       .start()
