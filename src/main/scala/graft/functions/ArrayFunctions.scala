@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -15,7 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * to take its length — at 1.2 M edges × ~120-element adjacency arrays
   * that is millions of transient OpenHashSets + UnsafeArrayData per pass.
   * The merge does the same Σ min(|a|,|b|)-ish element walk with zero
-  * allocation; measured ~2× on the g01 intersect stage at sf0.1.
+  * allocation; measured ~2× on the g01 intersect stage at sf0.1. It is
+  * one Scala kernel, [[count]], that `nullSafeEval` and the generated
+  * code both call (as does [[SortedIntersect.intersect]] for its sibling).
   *
   * PRECONDITIONS (caller's contract, asserted nowhere at runtime — this
   * is a hot-loop primitive): both arrays ascending-sorted, elements
@@ -32,10 +34,12 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "sorted_intersect_count"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (nx, ny) = (x.numElements(), y.numElements())
+  override def nullSafeEval(a: Any, b: Any): Any =
+    count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  /** The merge walk; also invoked from generated code (public on purpose). */
+  def count(x: ArrayData, y: ArrayData): Long = {
+    val nx = x.numElements(); val ny = y.numElements()
     var i = 0; var j = 0; var c = 0L
     while (i < nx && j < ny) {
       val xv = x.getLong(i); val yv = y.getLong(j)
@@ -46,28 +50,10 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val c = ctx.freshName("c")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $nx = $a.numElements(), $ny = $b.numElements();
-         |int $i = 0, $j = 0;
-         |long $c = 0L;
-         |while ($i < $nx && $j < $ny) {
-         |  long $xv = $a.getLong($i);
-         |  long $yv = $b.getLong($j);
-         |  if ($xv == $yv) { $c++; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("sortedIntersectCount", this, classOf[SortedIntersectCount].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.count($a, $b);")
+  }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -90,10 +76,12 @@ case class SortedIntersect(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "sorted_intersect"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (nx, ny) = (x.numElements(), y.numElements())
+  override def nullSafeEval(a: Any, b: Any): Any =
+    intersect(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  /** The merge walk; also invoked from generated code (public on purpose). */
+  def intersect(x: ArrayData, y: ArrayData): ArrayData = {
+    val nx = x.numElements(); val ny = y.numElements()
     val tmp = new Array[Long](math.min(nx, ny))
     var i = 0; var j = 0; var c = 0
     while (i < nx && j < ny) {
@@ -102,34 +90,13 @@ case class SortedIntersect(left: Expression, right: Expression)
       else if (xv < yv) i += 1
       else j += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(java.util.Arrays.copyOf(tmp, c))
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(tmp, c))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val c = ctx.freshName("c")
-      val tmp = ctx.freshName("tmp")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $nx = $a.numElements(), $ny = $b.numElements();
-         |int $i = 0, $j = 0, $c = 0;
-         |long[] $tmp = new long[Math.min($nx, $ny)];
-         |while ($i < $nx && $j < $ny) {
-         |  long $xv = $a.getLong($i);
-         |  long $yv = $b.getLong($j);
-         |  if ($xv == $yv) { $tmp[$c++] = $xv; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray(java.util.Arrays.copyOf($tmp, $c));
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("sortedIntersect", this, classOf[SortedIntersect].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.intersect($a, $b);")
+  }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)

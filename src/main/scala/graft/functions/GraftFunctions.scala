@@ -35,14 +35,14 @@ object GraftFunctions {
   /** (name, builder) for every SQL-exposed expression. */
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "minhash_signature" -> {
-      case Seq(c, k) => MinHashSignature(c, intArg("minhash_signature", k), 42L)
+      case Seq(c, k) => MinHashSignature(c, intArg("minhash_signature", k), MinHashSignature.DefaultSeed)
       case Seq(c, k, s) => MinHashSignature(c, intArg("minhash_signature", k),
         intArg("minhash_signature", s).toLong)
       case args => throw new IllegalArgumentException(
         s"minhash_signature(shingles, k[, seed]) got ${args.length} args")
     },
     "simhash64" -> {
-      case Seq(c) => SimHash64(c, 42L)
+      case Seq(c) => SimHash64(c, MinHashSignature.DefaultSeed)
       case args => throw new IllegalArgumentException(
         s"simhash64(tokens) got ${args.length} args")
     },

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.functions._
@@ -10,10 +10,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Cosine similarity over two `array<float>` embedding columns.
   *
-  * A native Catalyst expression (with `doGenCode`) rather than a UDF so the
-  * hot loop stays inside whole-stage codegen — no boxing, no Row
-  * materialization, no codegen-fence. At 100 TB this expression sits inside
-  * an O(candidates) inner loop of every ANN/near-dup job, so it is the one
+  * A native Catalyst expression rather than a UDF so the hot loop stays
+  * inside whole-stage codegen — no boxing, no Row materialization, no
+  * codegen-fence. Like every expression in this file it has one kernel
+  * ([[cos]]) that `nullSafeEval` and the generated code both call, so the
+  * loop is spelled once. At 100 TB this expression sits inside an
+  * O(candidates) inner loop of every ANN/near-dup job, so it is the one
   * scalar that must be cheap.
   *
   * Accumulation is sequential double (left→right), matching the DuckDB
@@ -33,9 +35,11 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "cosine_similarity"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    cos(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  /** Also invoked from generated code (public on purpose). */
+  def cos(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
@@ -49,27 +53,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
     else dot / math.sqrt(nx) / math.sqrt(ny)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = (double) $a.getFloat($i);
-         |  double $yv = (double) $b.getFloat($i);
-         |  $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-         |}
-         |${ev.value} = ($nx == 0.0 || $ny == 0.0)
-         |  ? 0.0 : $dot / java.lang.Math.sqrt($nx) / java.lang.Math.sqrt($ny);
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("cosineSimilarity", this, classOf[CosineSimilarity].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.cos($a, $b);")
+  }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -96,9 +83,11 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "dot_product"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  /** Also invoked from generated code (public on purpose). */
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0
     var i = 0
@@ -109,20 +98,10 @@ case class DotProduct(left: Expression, right: Expression)
     dot
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("dotProduct", this, classOf[DotProduct].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.dot($a, $b);")
+  }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -137,8 +116,10 @@ case class SquaredNorm(child: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "squared_norm"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any = sumSquares(a.asInstanceOf[ArrayData])
+
+  /** Also invoked from generated code (public on purpose). */
+  def sumSquares(x: ArrayData): Double = {
     val n = x.numElements()
     var s = 0.0
     var i = 0
@@ -150,22 +131,10 @@ case class SquaredNorm(child: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $a.numElements();
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $v = (double) $a.getFloat($i);
-         |  $s += $v * $v;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("squaredNorm", this, classOf[SquaredNorm].getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.sumSquares($a);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -230,7 +199,9 @@ object VectorFunctions {
   */
 case class HyperplaneLsh(child: Expression, bits: Int, tables: Int, dim: Int, seed: Long)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes {
-  require(bits > 0 && bits <= 63 && tables > 0 && tables <= 64)
+  require(bits > 0 && bits <= 63, s"hyperplane_lsh_multi: bits must be in 1..63, got $bits")
+  require(tables > 0 && tables <= 64, s"hyperplane_lsh_multi: tables must be in 1..64, got $tables")
+  require(dim > 0, s"hyperplane_lsh_multi: dim must be positive, got $dim")
 
   override def inputTypes = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
@@ -245,15 +216,18 @@ case class HyperplaneLsh(child: Expression, bits: Int, tables: Int, dim: Int, se
       (z >>> 11).toDouble / (1L << 52).toDouble - 1.0
     }
 
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
+  override def nullSafeEval(v: Any): Any = signature(v.asInstanceOf[ArrayData])
+
+  /** Also invoked from generated code (public on purpose). */
+  def signature(arr: ArrayData): ArrayData = {
+    val ps = planes
     val out = new Array[Long](tables)
     var t = 0
     while (t < tables) {
       var sig = 0L
       var j = 0
       while (j < bits) {
-        val p = planes(t * bits + j)
+        val p = ps(t * bits + j)
         val n = math.min(arr.numElements(), p.length)
         var dot = 0.0
         var d = 0
@@ -264,36 +238,13 @@ case class HyperplaneLsh(child: Expression, bits: Int, tables: Int, dim: Int, se
       out(t) = sig
       t += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val ps = ctx.addReferenceObj("planes", planes, "double[][]")
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t")
-      val j = ctx.freshName("j")
-      val d = ctx.freshName("d")
-      val n = ctx.freshName("n")
-      val p = ctx.freshName("p")
-      val dot = ctx.freshName("dot")
-      val sig = ctx.freshName("sig")
-      s"""
-         |long[] $out = new long[$tables];
-         |for (int $t = 0; $t < $tables; $t++) {
-         |  long $sig = 0L;
-         |  for (int $j = 0; $j < $bits; $j++) {
-         |    double[] $p = $ps[$t * $bits + $j];
-         |    int $n = java.lang.Math.min($a.numElements(), $p.length);
-         |    double $dot = 0.0;
-         |    for (int $d = 0; $d < $n; $d++) { $dot += (double) $a.getFloat($d) * $p[$d]; }
-         |    if ($dot >= 0.0) $sig |= (1L << $j);
-         |  }
-         |  $out[$t] = $sig;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("hyperplaneLsh", this, classOf[HyperplaneLsh].getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.signature($a);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.HashingFunctions._
+import graft.functions.MinHashSignature
 import graft.functions.TextFunctions._
 
 /** Document deduplication — the core curation operator family of a
@@ -105,13 +106,8 @@ object Dedup {
     * SAME keys as literals and restate the sketch hash-for-hash.
     */
   val CalibK = 16
-  private[operators] lazy val calibMixKeys: Seq[String] = {
-    var s = 42L
-    (0 until CalibK).map { _ =>
-      s = graft.functions.VectorFunctions.splitmix64(s)
-      java.lang.Long.toUnsignedString(s)
-    }
-  }
+  private[operators] lazy val calibMixKeys: Seq[String] =
+    MinHashSignature.mixKeys(CalibK, MinHashSignature.DefaultSeed).toSeq.map(java.lang.Long.toUnsignedString)
 
   /** Bucket-width cap for every LSH/SimHash bucket stage: a degenerate
     * band key (boilerplate-heavy corpus, constant field) would otherwise
@@ -1124,9 +1120,7 @@ object Dedup {
     // shingle UNIVERSES of en-language sources. The pair discovery is a
     // join on the shingle (shuffle keyed by shingle — scales with corpus
     // size, not with source-pair count); only intersecting source pairs
-    // surface. The MinHashMergeAggregator estimates this same quantity
-    // from constant-size sketches — DedupSpec asserts the estimate tracks
-    // this exact answer.
+    // surface.
     "d06_source_shingle_jaccard" -> ((s, dir) => {
       val sh = Tables.documents(s, dir)
         .filter(col("lang") === "en")

@@ -83,6 +83,15 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(ex.getMessage.contains("minhash_signature"))
   }
 
+  test("SQL hyperplane_lsh_multi rejects a non-positive dim, naming the function") {
+    GraftFunctions.register(spark)
+    Tables.embeddings(spark, sfDir).createOrReplaceTempView("emb_sqlfn2")
+    val ex = intercept[Exception] {
+      spark.sql("SELECT hyperplane_lsh_multi(embedding, 4, 2, 0) FROM emb_sqlfn2").collect()
+    }
+    assert(ex.getMessage.contains("hyperplane_lsh_multi"), ex.getMessage)
+  }
+
   test("SQL sorted_intersect_count matches the DSL") {
     GraftFunctions.register(spark)
     val viaSql = spark.sql(

@@ -98,32 +98,6 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.queries("d02_dedup_normalized")(spark, sfDir).count() === normGroups)
   }
 
-  test("MinHashMergeAggregator: union-signature jaccard estimate tracks d06's exact answer") {
-    import graft.functions.HashingFunctions._
-    import graft.functions.MinHashMergeAggregator.minhash_union
-    import graft.functions.TextFunctions._
-    val k = 128
-    // constant-size sketch per source via partial+final aggregation
-    val sigs = Tables.documents(spark, sfDir)
-      .filter(col("lang") === "en")
-      .select(col("source"), wordShingles(col("text"), 3).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("source"), minhash_signature(col("sh"), k).as("sig"))
-      .groupBy("source")
-      .agg(minhash_union(col("sig"), k).as("usig"))
-      .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toArray).toMap
-
-    val exact = Dedup.queries("d06_source_shingle_jaccard")(spark, sfDir)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(5)).toMap
-    assert(exact.nonEmpty)
-    exact.foreach { case ((a, b), j) =>
-      val (sa, sb) = (sigs(a), sigs(b))
-      val est = sa.zip(sb).count { case (x, y) => x == y }.toDouble / k
-      assert(math.abs(est - j) <= 0.15,
-        s"sources ($a,$b): estimate $est vs exact $j (k=$k, stderr ~ 0.044)")
-    }
-  }
-
   test("bucket cap: a corpus of identical docs cannot explode LSH pair generation") {
     import spark.implicits._
     // 600 identical docs: every band funnels ALL of them into ONE bucket —
